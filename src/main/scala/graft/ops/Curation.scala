@@ -308,8 +308,7 @@ object Curation {
     * `graft.pipeline.reliableCheckpoint` via [[scopeFor]]; suite-run
     * under a temp checkpoint dir (mode equality pinned).
     */
-  private final class ChkScope(reliable: Boolean = false,
-      parallel: Boolean = true, exactStats: Boolean = true) {
+  private final class ChkScope(reliable: Boolean) {
     private val rdds = scala.collection.mutable.ListBuffer
       .empty[org.apache.spark.rdd.RDD[_]]
     def chk(df: DataFrame): DataFrame =
@@ -327,49 +326,15 @@ object Curation {
         // planned sort-merge and only rescued by AQE after both map
         // stages ran. Exact size keeps the decision scale-correct: a
         // genuinely large boundary still reports large and sort-merges.
-        if (exactStats)
-          org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(out)
-        else out
-      }
-    /** Materialize several INDEPENDENT stage boundaries CONCURRENTLY
-      * (optimization guide §2.6 — actions are only sequential because
-      * the driver calls them sequentially; submitting independent jobs
-      * from a small pool lets the next job's tasks back-fill executors
-      * idled by the current job's tail). Each frame's CONTENT is
-      * identical to a sequential `chk` — only job submission overlaps;
-      * Spark's FIFO scheduler gives the earlier job resources first,
-      * which is exactly the back-fill behavior. Callers own the
-      * independence claim (no frame in one call may read another's
-      * boundary). Serial under `graft.pipeline.parallelBoundaries =
-      * false` (the pre-r20 shape, kept for A/B timing and debugging;
-      * ExtensionsSpec pins mode equality).
-      */
-    def chkAll(dfs: Seq[DataFrame]): Seq[DataFrame] =
-      if (!parallel || Curation.onBoundaryPool ||
-          dfs.lengthCompare(2) < 0) dfs.map(chk)
-      else {
-        import scala.concurrent.{Await, Future}
-        implicit val ec = Curation.boundaryPool
-        try Await.result(Future.sequence(dfs.map(df => Future(chk(df)))),
-          Curation.boundaryAwaitTimeout)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            // rethrow FROM THE SUBMITTING STACK with the group named —
-            // an executor-side hang otherwise blocks a pool thread
-            // forever with no diagnosis (r20 verdict #7)
-            throw new java.util.concurrent.TimeoutException(
-              s"chkAll(${dfs.length} stage boundaries) did not complete " +
-                s"within ${Curation.boundaryAwaitTimeout} — likely an " +
-                "executor-side hang in one boundary job")
-        }
+        org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(out)
       }
     def release(): Unit =
       rdds.synchronized { rdds.foreach(_.unpersist(blocking = false)) }
   }
 
-  /** Fixed 4-wide daemon pool for [[ChkScope.chkAll]] / [[writeAll]] —
-    * the guide's "2-3 jobs in flight is plenty" sized one up for the
-    * three-modality probe trios plus one straggler; jobs beyond the
+  /** Fixed 4-wide daemon pool for [[runAll]] / [[writeAll]] — the
+    * guide's "2-3 jobs in flight is plenty" sized one up for the
+    * three-modality landing builds plus one straggler; jobs beyond the
     * width queue in submission order. Driver-side threads only (each
     * just blocks on a job); executor-side parallelism is unchanged.
     */
@@ -402,20 +367,21 @@ object Curation {
   private def onBoundaryPool: Boolean =
     Thread.currentThread().getName.startsWith("graft-boundary-")
 
-  /** Run several INDEPENDENT driver-side jobs, CONCURRENTLY when
-    * `parallel` (the [[ChkScope.chkAll]] rationale generalized: each
-    * thunk submits its own Spark job(s); serial submission leaves the
-    * box idle between them). Callers own the independence claim — no
-    * thunk may read state another writes. Content is mode-independent
-    * by construction; the serial order is the Seq order. Nested calls
-    * from a pool thread degrade to serial ([[onBoundaryPool]]); the
-    * await is bounded by `timeout` and rethrows naming `label`.
+  /** Run several INDEPENDENT driver-side jobs CONCURRENTLY (optimization
+    * guide §2.6 — actions are only sequential because the driver calls
+    * them sequentially; submitting independent jobs from a small pool
+    * lets the next job's tasks back-fill executors idled by the current
+    * job's tail, and Spark's FIFO scheduler gives the earlier job
+    * resources first). Callers own the independence claim — no thunk
+    * may read state another writes. Nested calls from a pool thread run
+    * serially in Seq order ([[onBoundaryPool]]); the await is bounded by
+    * `timeout` and rethrows naming `label`.
     */
-  private[graft] def runAll(parallel: Boolean,
-      jobs: Seq[() => Unit], label: String = "boundary group",
+  private[graft] def runAll(jobs: Seq[() => Unit],
+      label: String = "boundary group",
       timeout: scala.concurrent.duration.FiniteDuration =
         boundaryAwaitTimeout): Unit =
-    if (!parallel || onBoundaryPool || jobs.lengthCompare(2) < 0)
+    if (onBoundaryPool || jobs.lengthCompare(2) < 0)
       jobs.foreach(_())
     else {
       import scala.concurrent.{Await, Future}
@@ -431,15 +397,12 @@ object Curation {
     }
 
   /** Write several independent (name → frame) parquet outputs under
-    * `base`, CONCURRENTLY when `parallel` (the [[ChkScope.chkAll]]
-    * rationale applied to the absorb/compact keys' batch-sized census
-    * writes: each write is its own small job; serial submission leaves
-    * the box idle between them). Distinct subdirectories, so the
-    * writes cannot interfere; content identical either way.
+    * `base` concurrently via [[runAll]]: each write is its own small
+    * job. Distinct subdirectories, so the writes cannot interfere.
     */
   private[graft] def writeAll(parts: Seq[(String, DataFrame)],
-      base: String, parallel: Boolean): Unit =
-    runAll(parallel, parts.map { case (name, df) =>
+      base: String): Unit =
+    runAll(parts.map { case (name, df) =>
       () => df.write.mode("overwrite").parquet(s"$base/$name")
     }, label = s"writeAll(${parts.map(_._1).mkString(",")})")
 
@@ -476,44 +439,6 @@ object Curation {
     */
   private[graft] val ReliableChkConf = "graft.pipeline.reliableCheckpoint"
 
-  /** Session conf key for CONCURRENT materialization of independent
-    * stage boundaries / census writes in the composed keys (default
-    * true — the r20 optimization; `false` restores the serial pre-r20
-    * submission order for A/B timing and debugging). Semantics are
-    * mode-independent by construction (each job's content is its own
-    * plan's) and ExtensionsSpec pins it.
-    */
-  private[graft] val ParallelBoundariesConf =
-    "graft.pipeline.parallelBoundaries"
-
-  /** Session conf key for EXACT boundary statistics (default true — the
-    * r21 optimization: each eager localCheckpoint boundary reports its
-    * true materialized size to the planner instead of the origin plan's
-    * compounding estimate; `false` restores the estimate-carrying
-    * boundaries for A/B timing and debugging). Semantics are
-    * stats-independent — statistics only steer join strategy/plan shape,
-    * never content — and ExtensionsSpec pins mode equality.
-    */
-  private[graft] val ExactBoundaryStatsConf = "graft.stats.exactBoundaries"
-
-  /** Session conf key for FUSED multi-family boundaries (default true —
-    * the r21 verdict-#2 optimization): the four per-family census/member
-    * boundary jobs of a state materialization or day-2 merge collapse
-    * into ONE multi-family boundary whose three census merges share a
-    * single exchange; the absorb/compact keys' four per-family delta
-    * writes collapse into one family-partitioned write; the media keys'
-    * per-modality drop/band trios collapse into one boundary each.
-    * `false` restores the per-family/per-modality concurrent boundaries
-    * and writes for A/B timing and debugging. Semantics are
-    * mode-independent — the fused groupBy over (family, key) applies
-    * exactly the per-family additive laws, family-disjoint by the tag —
-    * and ExtensionsSpec pins mode equality on the composed keys.
-    */
-  private[graft] val FusedBoundariesConf = "graft.pipeline.fusedBoundaries"
-
-  private[graft] def fusedFor(spark: SparkSession): Boolean =
-    boolConf(spark, FusedBoundariesConf, default = true)
-
   /** Strict true/false conf parse (the [[scopeFor]] discipline). */
   private def boolConf(spark: SparkSession, key: String,
       default: Boolean): Boolean =
@@ -525,9 +450,6 @@ object Curation {
         s"$key must be 'true' or 'false', got '$v'")
     }
 
-  private[graft] def parallelFor(spark: SparkSession): Boolean =
-    boolConf(spark, ParallelBoundariesConf, default = true)
-
   private def scopeFor(spark: SparkSession): ChkScope = {
     // explicit true/false parse (ADVICE r16): a mistyped value ('1',
     // 'yes') fails with a message naming the conf key, not a bare
@@ -538,8 +460,7 @@ object Curation {
       spark.sparkContext.getCheckpointDir.isDefined,
       s"$ReliableChkConf=true requires sparkContext.setCheckpointDir " +
         "(the durable stage-boundary filesystem)")
-    new ChkScope(reliable, parallelFor(spark),
-      boolConf(spark, ExactBoundaryStatsConf, default = true))
+    new ChkScope(reliable)
   }
 
   /** The checkpointed stage boundaries of one full-pipeline run — the
@@ -860,16 +781,8 @@ object Curation {
 
   private def checkMergeDisjointness(st: PipelineStates,
       br: BatchRun): Unit = {
-    val spark = br.unblocked.sparkSession
-    // strict true/false parse — the scopeFor discipline
-    val check = spark.conf.getOption(CheckDisjointConf) match {
-      case None => false
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"$CheckDisjointConf must be 'true' or 'false', got '$v'")
-    }
-    if (check) {
+    if (boolConf(br.unblocked.sparkSession, CheckDisjointConf,
+        default = false)) {
       val batchIds = br.unblocked.select(col("doc_id"))
         .unionByName(br.stripped.select(col("doc_id"))).distinct()
       val absorbed = st.urlCensus.select(col("min_doc").as("doc_id"))
@@ -890,11 +803,10 @@ object Curation {
 
   /** THE DAY-2 STATE MERGE as a materialized stage boundary: the guard
     * above, then every family absorbed by its additive law through
-    * [[materializeStates]] — ONE fused multi-family boundary by default
-    * (r21 verdict #2), per-family concurrent boundaries under
-    * [[FusedBoundariesConf]] = false. `cursor` is NOT merged here: it
-    * derives from the post-append manifest (or arithmetically), the
-    * artifact that already absorbed the batch.
+    * [[materializeStates]] — ONE fused multi-family boundary (r21
+    * verdict #2). `cursor` is NOT merged here: it derives from the
+    * post-append manifest (or arithmetically), the artifact that
+    * already absorbed the batch.
     */
   private def mergeStatesBoundary(st: PipelineStates, br: BatchRun,
       embeddings: DataFrame, cursor: DataFrame,
@@ -1038,118 +950,84 @@ object Curation {
       .select(col("vec_id"), col("unit"), col("cell")),
     cursor)
 
-  /** Materialize the four family frames as stage boundaries: FUSED into
-    * one multi-family boundary by default (one job, one exchange for
-    * the three census merges — r21 verdict #2; guide §2.4/§2.6),
-    * per-family concurrent boundaries under [[FusedBoundariesConf]] =
-    * false (the r20 shape, kept for A/B — ExtensionsSpec pins mode
-    * equality). Each family may pass one input (plain materialization)
-    * or two (state + batch delta — the day-2 merge; the additive laws
-    * apply either way).
+  /** Materialize the four family frames as ONE multi-family stage
+    * boundary (one job, one exchange for the three census merges — r21
+    * verdict #2; guide §2.4/§2.6). Each family may pass one input
+    * (plain materialization) or two (state + batch delta — the day-2
+    * merge; the additive laws apply either way).
     */
   private def materializeStates(scope: ChkScope, urls: Seq[DataFrame],
       lines: Seq[DataFrame], spans: Seq[DataFrame],
       members: Seq[DataFrame], cursor: DataFrame): PipelineStates =
-    if (fusedFor(cursor.sparkSession))
-      sliceStates(scope.chk(fuseStates(urls, lines, spans, members)),
-        cursor)
-    else {
-      val Seq(u, l, s, m) = scope.chkAll(Seq(
-        urls.reduce(mergeUrlCensus),
-        lines.reduce(mergeHashCensus(_, _, "lh")),
-        spans.reduce(mergeHashCensus(_, _, "gh")),
-        members.reduce(_ unionByName _)))
-      PipelineStates(u, l, s, m, cursor)
-    }
+    sliceStates(scope.chk(fuseStates(urls, lines, spans, members)), cursor)
 
-  /** Write a batch's census deltas: ONE family-partitioned parquet job
-    * when fused (production appends one bucketed (family, key) state
-    * table, not four), the four per-family concurrent writes otherwise.
+  /** Write a batch's census deltas as ONE family-partitioned parquet job
+    * under `base/states` (production appends one bucketed (family, key)
+    * state table, not four).
     */
-  private def writeCensusDeltas(d: BatchCensuses, base: String,
-      fused: Boolean, parallel: Boolean): Unit =
-    if (fused)
-      fusedCensusRows(d).write.mode("overwrite")
-        .partitionBy("family").parquet(s"$base/states")
-    else writeAll(
-      Seq("url_census" -> d.urlCensus, "line_census" -> d.lineCensus,
-        "span_census" -> d.spanCensus, "sem_members" -> d.semMembers),
-      base, parallel)
+  private def writeCensusDeltas(d: BatchCensuses, base: String): Unit =
+    fusedCensusRows(d).write.mode("overwrite")
+      .partitionBy("family").parquet(s"$base/states")
 
   /** Read [[writeCensusDeltas]]' layout back — family-pruned scans of
-    * the fused table, or the four per-family dirs.
+    * the one delta table.
     */
-  private def readCensusDeltas(spark: SparkSession, base: String,
-      fused: Boolean): BatchCensuses =
-    if (fused) {
-      val f = spark.read.parquet(s"$base/states")
-      BatchCensuses(
-        f.filter(col("family") === "url")
-          .select(col("url_norm"), col("n_variants"), col("min_doc")),
-        f.filter(col("family") === "line")
-          .select(col("lh"), col("n_docs")),
-        f.filter(col("family") === "span")
-          .select(col("gh"), col("n_docs")),
-        f.filter(col("family") === "sem")
-          .select(col("vec_id"), col("unit"), col("cell")))
-    } else BatchCensuses(
-      spark.read.parquet(s"$base/url_census"),
-      spark.read.parquet(s"$base/line_census"),
-      spark.read.parquet(s"$base/span_census"),
-      spark.read.parquet(s"$base/sem_members"))
+  private def readCensusDeltas(spark: SparkSession,
+      base: String): BatchCensuses = {
+    val f = spark.read.parquet(s"$base/states")
+    BatchCensuses(
+      f.filter(col("family") === "url")
+        .select(col("url_norm"), col("n_variants"), col("min_doc")),
+      f.filter(col("family") === "line")
+        .select(col("lh"), col("n_docs")),
+      f.filter(col("family") === "span")
+        .select(col("gh"), col("n_docs")),
+      f.filter(col("family") === "sem")
+        .select(col("vec_id"), col("unit"), col("cell")))
+  }
 
-  /** The three modality drop frames as ONE boundary when fused: their
+  /** The three modality drop frames as ONE boundary: their
     * union-distinct is what every consumer reads, so materialize THAT
     * (one job whose three probe subplans' independent stages AQE runs
-    * concurrently) instead of three separate boundaries. Per-modality
-    * boundaries + lazy union under [[FusedBoundariesConf]] = false (the
-    * r20 shape).
+    * concurrently).
     */
   private def mediaDropBoundary(scope: ChkScope,
       drops: Seq[DataFrame]): DataFrame =
-    if (fusedFor(drops.head.sparkSession))
-      scope.chk(drops.reduce(_ unionByName _).distinct())
-    else scope.chkAll(drops).reduce(_ unionByName _).distinct()
+    scope.chk(drops.reduce(_ unionByName _).distinct())
 
-  /** The three modality band tables as ONE boundary when fused: the
-    * per-modality frames union modality-tagged (frame_idx/seg_idx
-    * unified into one index column, type round-tripped), materialize
-    * once, and slice back per modality — one job instead of three.
-    * Per-modality concurrent boundaries under [[FusedBoundariesConf]] =
-    * false.
+  /** The three modality band tables as ONE boundary: the per-modality
+    * frames union modality-tagged (frame_idx/seg_idx unified into one
+    * index column, type round-tripped), materialize once, and slice
+    * back per modality — one job instead of three.
     */
   private def materializeBands(scope: ChkScope, video: DataFrame,
-      audio: DataFrame, image: DataFrame): MediaBands =
-    if (fusedFor(video.sparkSession)) {
-      def tagged(modality: String, idx: Column, df: DataFrame) =
-        df.select(lit(modality).as("modality"), col("doc_id"),
-          idx.cast("long").as("midx"), col("dhash"), col("band_idx"),
-          col("band_val"))
-      val fusedF = scope.chk(
-        tagged("video", col("frame_idx"), video)
-          .unionByName(tagged("audio", col("seg_idx"), audio))
-          .unionByName(tagged("image", lit(null), image)))
-      def slice(modality: String, idxAs: Option[(String,
-          org.apache.spark.sql.types.DataType)]) = {
-        val m = fusedF.filter(col("modality") === modality)
-        idxAs match {
-          case Some((name, t)) => m.select(col("doc_id"),
-            col("midx").cast(t).as(name), col("dhash"),
-            col("band_idx"), col("band_val"))
-          case None => m.select(col("doc_id"), col("dhash"),
-            col("band_idx"), col("band_val"))
-        }
+      audio: DataFrame, image: DataFrame): MediaBands = {
+    def tagged(modality: String, idx: Column, df: DataFrame) =
+      df.select(lit(modality).as("modality"), col("doc_id"),
+        idx.cast("long").as("midx"), col("dhash"), col("band_idx"),
+        col("band_val"))
+    val fusedF = scope.chk(
+      tagged("video", col("frame_idx"), video)
+        .unionByName(tagged("audio", col("seg_idx"), audio))
+        .unionByName(tagged("image", lit(null), image)))
+    def slice(modality: String, idxAs: Option[(String,
+        org.apache.spark.sql.types.DataType)]) = {
+      val m = fusedF.filter(col("modality") === modality)
+      idxAs match {
+        case Some((name, t)) => m.select(col("doc_id"),
+          col("midx").cast(t).as(name), col("dhash"),
+          col("band_idx"), col("band_val"))
+        case None => m.select(col("doc_id"), col("dhash"),
+          col("band_idx"), col("band_val"))
       }
-      MediaBands(
-        slice("video", Some(("frame_idx",
-          video.schema("frame_idx").dataType))),
-        slice("audio", Some(("seg_idx",
-          audio.schema("seg_idx").dataType))),
-        slice("image", None))
-    } else {
-      val Seq(v, a, i) = scope.chkAll(Seq(video, audio, image))
-      MediaBands(v, a, i)
     }
+    MediaBands(
+      slice("video", Some(("frame_idx",
+        video.schema("frame_idx").dataType))),
+      slice("audio", Some(("seg_idx",
+        audio.schema("seg_idx").dataType))),
+      slice("image", None))
+  }
 
   /** One crawl batch through the incremental chain against EXPLICIT
     * state frames — the factored batch side of
@@ -1325,8 +1203,7 @@ object Curation {
     val cman = chk(run.manifest)
     val st1raw = statesOf(run, cman, embeddings)
     // the four family censuses are independent reads of the run's
-    // checkpointed stage frames — ONE fused boundary (r21 #2;
-    // per-family concurrent boundaries under fusedBoundaries=false)
+    // checkpointed stage frames — ONE fused boundary (r21 #2)
     val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
       Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
       Seq(st1raw.semMembers), st1raw.cursor)
@@ -1348,7 +1225,7 @@ object Curation {
     val r1 = runBatch(st1, batch1, benchmark, embeddings, scope)
     val b1man = chk(r1.manifest)
     // the day-2 merge, materialized as ONE fused multi-family boundary
-    // (r21 #2) — flat state leaves either mode
+    // (r21 #2) — flat state leaves
     val st2 = mergeStatesBoundary(st1, r1, embeddings,
       cursorOf(cman.unionByName(b1man)), scope)
     // day 2: batch-2 against the UPDATED states
@@ -1457,7 +1334,7 @@ object Curation {
         "sem_members" -> st.semMembers,
         "cursor" -> st.cursor,
         "clean" -> run.clean,
-        "manifest" -> cman), tmp, parallelFor(spark))
+        "manifest" -> cman), tmp)
       // the STREAMING TEXT-INGEST GATE's probe rows (batch/ side, v2 —
       // the mediaBandLanding batch-side discipline on the text axis):
       // the replica-0 batch run through the incremental chain against
@@ -1490,7 +1367,7 @@ object Curation {
       // replay-order contract rides the mtimes, not write order)
       writeAll(familySides.map { case (n, rows) =>
         s"work_$n" -> rows.coalesce(1)
-      }, tmp, parallelFor(spark))
+      }, tmp)
       promoteReplayFiles(familySides.map(_._1), tmp,
         new File(tmp, "batch"))
       scope.release()
@@ -1637,11 +1514,9 @@ object Curation {
       keep = work, ttlMs = 60L * 60 * 1000)
     graft.LocalFs.deleteOnExit(work)
     val d = batchCensusesOf(r1, embeddings)
-    // THE ABSORB WRITE: one family-partitioned batch-sized job when
-    // fused (r21 #2 — production appends ONE bucketed (family, key)
-    // state table); four concurrent per-family writes otherwise (§2.6)
-    val fused = fusedFor(spark)
-    writeCensusDeltas(d, work.getPath, fused, parallelFor(spark))
+    // THE ABSORB WRITE: one family-partitioned batch-sized job (r21 #2
+    // — production appends ONE bucketed (family, key) state table)
+    writeCensusDeltas(d, work.getPath)
     // day-2 states: landing ∪ appended delta, merged at probe build by
     // the shared additive laws; cursor advanced arithmetically
     val cursor2 = b1man
@@ -1651,7 +1526,7 @@ object Curation {
       .select(greatest(col("b_max"), col("c_max_shard"))
           .as("c_max_shard"),
         (col("b_n") + col("c_n_docs")).as("c_n_docs"))
-    val dRead = readCensusDeltas(spark, work.getPath, fused)
+    val dRead = readCensusDeltas(spark, work.getPath)
     val st2 = PipelineStates(
       mergeUrlCensus(st1.urlCensus, dRead.urlCensus),
       mergeHashCensus(st1.lineCensus, dRead.lineCensus, "lh"),
@@ -1731,10 +1606,8 @@ object Curation {
       keep = work, ttlMs = 60L * 60 * 1000)
     graft.LocalFs.deleteOnExit(work)
     val d = batchCensusesOf(r1, embeddings)
-    // THE DELTA APPEND: one family-partitioned batch-sized job when
-    // fused (r21 #2); four concurrent per-family writes otherwise (§2.6)
-    val fused = fusedFor(spark)
-    writeCensusDeltas(d, work.getPath, fused, parallelFor(spark))
+    // THE DELTA APPEND: one family-partitioned batch-sized job (r21 #2)
+    writeCensusDeltas(d, work.getPath)
     // THE GENERATION BUMP: landing ∪ delta folded into the gen-1 state
     // landing by the shared additive laws, written once; the cursor
     // advances arithmetically (the absorb key's rule) and lands too
@@ -1746,43 +1619,22 @@ object Curation {
       .select(greatest(col("b_max"), col("c_max_shard"))
           .as("c_max_shard"),
         (col("b_n") + col("c_n_docs")).as("c_n_docs"))
-    val dRead = readCensusDeltas(spark, work.getPath, fused)
-    if (fused) {
-      // fused fold: the three census merges share ONE exchange and the
-      // whole generation-1 state lands in ONE family-partitioned write
-      // + the one-row cursor (r21 #2); reads the published delta table
-      fuseStates(
-        Seq(st1.urlCensus, dRead.urlCensus),
-        Seq(st1.lineCensus, dRead.lineCensus),
-        Seq(st1.spanCensus, dRead.spanCensus),
-        Seq(st1.semMembers, dRead.semMembers))
-        .write.mode("overwrite").partitionBy("family")
-        .parquet(s"$gen1/states")
-      cursor2.write.mode("overwrite").parquet(s"$gen1/cursor")
-    } else
-      // five independent fold writes (landing ∪ delta per family + the
-      // one-row cursor), concurrent (§2.6); they read the delta files
-      // the write above has already published
-      writeAll(Seq(
-        "url_census" -> mergeUrlCensus(st1.urlCensus, dRead.urlCensus),
-        "line_census" -> mergeHashCensus(st1.lineCensus,
-          dRead.lineCensus, "lh"),
-        "span_census" -> mergeHashCensus(st1.spanCensus,
-          dRead.spanCensus, "gh"),
-        "sem_members" -> st1.semMembers.unionByName(dRead.semMembers),
-        "cursor" -> cursor2
-      ), gen1, parallelFor(spark))
+    val dRead = readCensusDeltas(spark, work.getPath)
+    // the fold: the three census merges share ONE exchange and the whole
+    // generation-1 state lands in ONE family-partitioned write + the
+    // one-row cursor (r21 #2); reads the published delta table
+    fuseStates(
+      Seq(st1.urlCensus, dRead.urlCensus),
+      Seq(st1.lineCensus, dRead.lineCensus),
+      Seq(st1.spanCensus, dRead.spanCensus),
+      Seq(st1.semMembers, dRead.semMembers))
+      .write.mode("overwrite").partitionBy("family")
+      .parquet(s"$gen1/states")
+    cursor2.write.mode("overwrite").parquet(s"$gen1/cursor")
     // day 2: batch-2 against the COMPACTED landing alone — every state
-    // a (family-pruned) parquet scan of the generation-1 tables
-    val st2 =
-      if (fused) sliceStates(spark.read.parquet(s"$gen1/states"),
-        spark.read.parquet(s"$gen1/cursor"))
-      else PipelineStates(
-        spark.read.parquet(s"$gen1/url_census"),
-        spark.read.parquet(s"$gen1/line_census"),
-        spark.read.parquet(s"$gen1/span_census"),
-        spark.read.parquet(s"$gen1/sem_members"),
-        spark.read.parquet(s"$gen1/cursor"))
+    // a family-pruned parquet scan of the generation-1 table
+    val st2 = sliceStates(spark.read.parquet(s"$gen1/states"),
+      spark.read.parquet(s"$gen1/cursor"))
     val r2 = runBatch(st2,
       live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
       benchmark, embeddings, scope)
@@ -2717,7 +2569,7 @@ object Curation {
     val b2 = live.filter(col("doc_id") % 4 === 3)
     // per-modality landed slices are independent parquet-scan +
     // semi-join subplans — each side's trio fuses into ONE boundary
-    // (r21 #2; per-modality concurrent boundaries when unfused, §2.6)
+    // (r21 #2)
     def bandsOf(side: String, pop: DataFrame) = materializeBands(scope,
       Multimodal.landedBandsOf(spark, landingM, side, "video", pop),
       Multimodal.landedBandsOf(spark, landingM, side, "audio", pop),

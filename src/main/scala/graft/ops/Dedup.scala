@@ -350,8 +350,14 @@ object Dedup {
     */
   private[graft] def clusterLabels(pairs: DataFrame): DataFrame = {
     val session = pairs.sparkSession
-    val reliable = session.conf.getOption("graft.cluster.checkpoint")
-      .contains("reliable")
+    // strict parse: a mistyped mode fails loudly instead of silently
+    // running executor-local (the Curation.scopeFor discipline)
+    val reliable = session.conf.getOption("graft.cluster.checkpoint") match {
+      case None | Some("local") => false
+      case Some("reliable") => true
+      case Some(v) => throw new IllegalArgumentException(
+        s"graft.cluster.checkpoint must be 'reliable' or 'local', got '$v'")
+    }
     if (reliable) require(session.sparkContext.getCheckpointDir.isDefined,
       "graft.cluster.checkpoint=reliable needs sparkContext.setCheckpointDir")
     val edges = pairs.select(col("doc_a").as("s"), col("doc_b").as("t"))

@@ -1937,11 +1937,10 @@ object Multimodal {
       // through tasks), so their six writes submit CONCURRENTLY after
       // the video phase (guide §2.6 via Curation.runAll — the landing
       // is rep-1-only wall-clock, but the driver's bench pays it once);
-      // each write's content is its own plan's, mode-independent by
-      // construction. The batch side's replay order rides EXPLICIT
-      // ascending mtimes (promoteReplayFiles), never write order.
+      // each write's content is its own plan's. The batch side's replay
+      // order rides EXPLICIT ascending mtimes (promoteReplayFiles),
+      // never write order.
       val odd = docs.filter(col("doc_id") % 2 === 1)
-      val parallel = Curation.parallelFor(spark)
       def writeWork(name: String, bands: DataFrame): Unit =
         bands.coalesce(1).write.mode("overwrite")
           .parquet(s"$tmp/work_$name")
@@ -1958,7 +1957,7 @@ object Multimodal {
       videoBandState(ovids, CutFrameBytes, CutThresholdMilli)
         .write.mode("overwrite").parquet(s"$tmp/odd/video")
       ovids.unpersist(blocking = false)
-      Curation.runAll(parallel, Seq(
+      Curation.runAll(Seq(
         () => writeBucketed(
           audioBandState(audioStructured(corpus), AudioFpWin,
             AudioSegWin), "audio"),

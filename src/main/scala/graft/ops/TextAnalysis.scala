@@ -1634,9 +1634,8 @@ object TextAnalysis {
         spark.sql(s"DROP TABLE $stage")
       }
       // three independent derivations of the same source scan —
-      // submitted concurrently (guide §2.6 via Curation.runAll; content
-      // per table unchanged from the serial form)
-      Curation.runAll(Curation.parallelFor(spark), Seq(
+      // submitted concurrently (guide §2.6 via Curation.runAll)
+      Curation.runAll(Seq(
         () => writeBucketed(
           tok.groupBy(col("token"), col("doc_id"))
             .agg(count(lit(1)).as("tf"))

@@ -18,11 +18,7 @@ object BatchChainProbeMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 2
-    val flags = args.drop(2).toSet
-    val explain = flags("explain")
-    // "noexact" restores the estimate-carrying boundaries — the r21
-    // before/after contrast for plans/r21
-    val exact = !flags("noexact")
+    val explain = args.drop(2).contains("explain")
     val spark = SparkSession.builder()
       .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
@@ -68,10 +64,8 @@ object BatchChainProbeMain {
       var t0 = System.nanoTime()
       def lap(name: String, df: DataFrame): DataFrame = {
         planStats(df, name)
-        val chk = df.localCheckpoint(true)
-        val out = if (exact)
-          org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(chk)
-        else chk
+        val out = org.apache.spark.sql.graftbridge.StatsBridge
+          .withExactSize(df.localCheckpoint(true))
         val s = out.queryExecution.optimizedPlan.stats
         println(f"  STAGE $name: ${(System.nanoTime() - t0) / 1e9}%.2f s " +
           s"(carried stats: sizeInBytes=${s.sizeInBytes} rowCount=${s.rowCount})")
@@ -111,12 +105,8 @@ object BatchChainProbeMain {
           Seq("vec_id"), "left_semi"), 64)
       val semDrop = Dedup.dedupSemanticIncrementalOnState(
           states._4, bAssigned, 64, Dedup.IncrementalEmbedTau,
-          materialize = df => {
-            val c = df.localCheckpoint(true)
-            if (exact)
-              org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(c)
-            else c
-          })
+          materialize = df => org.apache.spark.sql.graftbridge.StatsBridge
+            .withExactSize(df.localCheckpoint(true)))
         .filter(!col("keep"))
         .select(col("vec_id").as("doc_id"))
       val bdocs2 = lap("bdocs2",

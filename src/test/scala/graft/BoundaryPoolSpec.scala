@@ -16,7 +16,7 @@ class BoundaryPoolSpec extends SparkSpec {
       "group label, thrown from the submitting stack") {
     import scala.concurrent.duration._
     val ex = intercept[TimeoutException] {
-      Curation.runAll(parallel = true, Seq(
+      Curation.runAll(Seq(
         () => Thread.sleep(5000),
         () => Thread.sleep(5000)
       ), label = "slow-census-group", timeout = 200.millis)
@@ -33,9 +33,9 @@ class BoundaryPoolSpec extends SparkSpec {
     // Without the re-entry guard the inner awaits can never be served
     // and the outer await times out — the 30s bound keeps the failure
     // mode a test failure, not a hang.
-    Curation.runAll(parallel = true,
+    Curation.runAll(
       (1 to 4).map { _ => () =>
-        Curation.runAll(parallel = true, Seq(
+        Curation.runAll(Seq(
           () => { ran.incrementAndGet(); () },
           () => { ran.incrementAndGet(); () }
         ), label = "nested-inner")

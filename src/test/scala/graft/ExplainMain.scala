@@ -19,7 +19,7 @@ object ExplainMain {
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.01"
     // optional session confs: leading args of the form conf:key=value
-    // (e.g. conf:graft.stats.exactBoundaries=false for the r21 A/B)
+    // (e.g. conf:spark.sql.adaptive.enabled=false)
     val (confs, keyArgs) = args.toSeq.partition(_.startsWith("conf:"))
     confs.foreach { c =>
       val kv = c.stripPrefix("conf:").split("=", 2)

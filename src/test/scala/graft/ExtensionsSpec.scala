@@ -1332,6 +1332,13 @@ class ExtensionsSpec extends SparkSpec {
       emb).collect()
     spark.catalog.clearCache()
     eq("corpus_pipeline_incremental", gotI, wantI)
+    // the state generation bump: compact's fused delta write, gen-1 fold
+    // and read-back must equal absorb's union read (identical by design)
+    val gotSC = Curation.corpusStatesCompact(spark, sf).collect()
+    spark.catalog.clearCache()
+    val wantSC = Curation.corpusStatesAbsorbOnState(spark, sf).collect()
+    spark.catalog.clearCache()
+    eq("corpus_states_compact", gotSC, wantSC)
   }
 
   test("media onstate keys: landed-slice batch bands equal in-key " +
@@ -1380,162 +1387,6 @@ class ExtensionsSpec extends SparkSpec {
     assert(flipped.nonEmpty,
       "day-2 corpus-dup verdicts vanished — the absorbed delta no " +
         "longer reaches the union read")
-  }
-
-  test("parallel stage boundaries: the composed keys are mode-equal " +
-      "(graft.pipeline.parallelBoundaries toggles job submission " +
-      "overlap, never content — the r20 §2.6 optimization)") {
-    import graft.ops.Curation
-    def key(r: org.apache.spark.sql.Row) = r.toSeq.toList
-    def run(name: String, q: => org.apache.spark.sql.DataFrame): Unit = {
-      val par = q.collect()
-      spark.catalog.clearCache()
-      spark.conf.set(Curation.ParallelBoundariesConf, "false")
-      val ser = try { q.collect() } finally {
-        spark.conf.unset(Curation.ParallelBoundariesConf)
-      }
-      spark.catalog.clearCache()
-      assert(par.nonEmpty, s"$name: parallel mode returned nothing")
-      assert(par.map(key).toSet == ser.map(key).toSet,
-        s"$name: parallel-boundary mode drifted from serial")
-    }
-    // covers every chkAll group (band slices, probe trios, census
-    // merges) and both writeAll sites (delta append + gen-1 fold)
-    run("corpus_multimodal_generation_cycle",
-      Curation.corpusMultimodalGenerationCycle(spark, sf))
-    run("corpus_states_compact",
-      Curation.corpusStatesCompact(spark, sf))
-  }
-
-  test("fused state boundaries: the composed state keys are mode-equal " +
-      "(graft.pipeline.fusedBoundaries toggles boundary/write fusion, " +
-      "never content — the r21 verdict-#2 optimization)") {
-    import graft.ops.Curation
-    def key(r: org.apache.spark.sql.Row) = r.toSeq.toList
-    def run(name: String, q: => org.apache.spark.sql.DataFrame): Unit = {
-      // pin BOTH legs' modes explicitly (the ADVICE-r20 landing-test
-      // rule: relying on the session default makes the pin vacuous if
-      // the default moves)
-      spark.conf.set(Curation.FusedBoundariesConf, "true")
-      val fused = try { q.collect() } finally {
-        spark.conf.unset(Curation.FusedBoundariesConf)
-      }
-      spark.catalog.clearCache()
-      spark.conf.set(Curation.FusedBoundariesConf, "false")
-      val split = try { q.collect() } finally {
-        spark.conf.unset(Curation.FusedBoundariesConf)
-      }
-      spark.catalog.clearCache()
-      assert(fused.nonEmpty, s"$name: fused mode returned nothing")
-      assert(fused.map(key).toSet == split.map(key).toSet,
-        s"$name: fused-boundary mode drifted from per-family boundaries")
-    }
-    // covers every fusion site: the day-2 in-memory merge boundary
-    // (update), the family-partitioned delta write + read-back + fused
-    // gen-1 fold (compact), and the media band-slice trios + drop trios
-    // + day-3 merge boundary (multimodal cycle)
-    run("corpus_states_update", Curation.corpusStatesUpdate(spark, sf))
-    run("corpus_states_compact", Curation.corpusStatesCompact(spark, sf))
-    run("corpus_multimodal_generation_cycle",
-      Curation.corpusMultimodalGenerationCycle(spark, sf))
-  }
-
-  test("landing builds: parallel write submission is mode-equal on " +
-      "every landed table (r20 §2.6 on the write-once landings — " +
-      "overlap moves wall-clock, never content)") {
-    import java.io.File
-    import graft.ops.{Curation, Multimodal, TextAnalysis}
-    // two fingerprint-distinct copies of the suite corpus, so each mode
-    // builds its landings FRESH (the caches are write-once per
-    // fingerprint; fresh copy mtimes give fresh fingerprints)
-    def copyCorpus(dst: File): Unit = {
-      def cp(src: File, dest: File): Unit =
-        if (src.isDirectory) {
-          require(dest.mkdirs() || dest.isDirectory, s"mkdir $dest failed")
-          Option(src.listFiles).getOrElse(Array.empty[File])
-            .foreach(f => cp(f, new File(dest, f.getName)))
-        } else {
-          java.nio.file.Files.copy(src.toPath, dest.toPath,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          ()
-        }
-      LocalFs.deleteRecursively(dst)
-      require(dst.mkdirs(), s"mkdir $dst failed")
-      Seq("documents.parquet", "embeddings.parquet").foreach { n =>
-        cp(new File(sf, n), new File(dst, n))
-      }
-    }
-    val root = new File(sys.props("java.io.tmpdir"))
-    val dirA = new File(root, "graft_landing_modeeq_par")
-    val dirB = new File(root, "graft_landing_modeeq_ser")
-    copyCorpus(dirA); copyCorpus(dirB)
-    def landings(d: String) = Seq(
-      Curation.textStatesLanding(spark, d),
-      Multimodal.mediaBandLanding(spark, d),
-      TextAnalysis.postingsLanding(spark, d))
-    // pin BOTH legs' modes explicitly (ADVICE r20: relying on the
-    // session default for the parallel leg makes the comparison
-    // silently vacuous if the default moves or prior test state leaks),
-    // and clean up in finally so a failed assert doesn't strand the
-    // corpus copies and landings in /tmp
-    val built = scala.collection.mutable.ListBuffer.empty[String]
-    try {
-      spark.conf.set(Curation.ParallelBoundariesConf, "true")
-      val la = try landings(dirA.getPath) finally {
-        spark.conf.unset(Curation.ParallelBoundariesConf)
-      }
-      built ++= la
-      spark.conf.set(Curation.ParallelBoundariesConf, "false")
-      val lb = try landings(dirB.getPath) finally {
-        spark.conf.unset(Curation.ParallelBoundariesConf)
-      }
-      built ++= lb
-      // multiset row compare per table (order within a parquet dir is
-      // not part of the landing contract; row multiplicity is). Values
-      // are normalized — binary cells to hex — so a future BinaryType
-      // column can't reduce the compare to Array identity toString
-      // (ADVICE r20)
-      def rowsOf(path: String): Map[String, Long] = {
-        def norm(v: Any): Any = v match {
-          case b: Array[Byte] => b.map("%02x".format(_)).mkString
-          case s: Seq[_] => s.map(norm)
-          case other => other
-        }
-        spark.read.parquet(path).collect()
-          .groupBy(_.toSeq.map(norm).toList.toString)
-          .view.mapValues(_.length.toLong).toMap
-      }
-      val tables = Seq(
-        0 -> Seq("url_census", "line_census", "span_census", "sem_members",
-          "cursor", "clean", "manifest"),
-        1 -> Seq("corpus/video", "corpus/audio", "corpus/image",
-          "odd/video", "odd/audio", "odd/image"),
-        2 -> Seq("postings", "census", "stats"))
-      tables.foreach { case (i, names) =>
-        names.foreach { n =>
-          assert(rowsOf(s"${la(i)}/$n") == rowsOf(s"${lb(i)}/$n"),
-            s"landing table $n drifted between parallel and serial builds")
-        }
-      }
-      // the replay batch sides: same file names in the same MTIME order
-      // (the paced streams' replay contract), same rows per file
-      Seq(la(0) -> lb(0), la(1) -> lb(1)).foreach { case (a, b) =>
-        def files(p: String) = Option(new File(p, "batch").listFiles)
-          .getOrElse(Array.empty[File]).sortBy(_.lastModified)
-          .map(_.getName).toSeq
-        assert(files(a).nonEmpty && files(a) == files(b),
-          s"batch replay order drifted between parallel and serial builds")
-        files(a).foreach { n =>
-          assert(rowsOf(s"$a/batch/$n") == rowsOf(s"$b/batch/$n"),
-            s"batch file $n drifted between parallel and serial builds")
-        }
-      }
-    } finally {
-      // keep /tmp tidy even on assert failure: the copies and their
-      // landings are test-scoped
-      built.foreach(p => LocalFs.deleteRecursively(new File(p)))
-      LocalFs.deleteRecursively(dirA); LocalFs.deleteRecursively(dirB)
-    }
   }
 
   test("corpus_pipeline_learned_bpe: manifest equals the flagship except " +
@@ -1992,6 +1843,13 @@ class ExtensionsSpec extends SparkSpec {
       .toDF("doc_a", "doc_b")
     val baseline = Dedup.clusterLabels(pairs).as[(Long, Long)].collect().toMap
     val ckDir = java.nio.file.Files.createTempDirectory("graft_reliable_ck")
+    // a mistyped mode fails loudly, naming the key — never a silent
+    // fallback to executor-local blocks
+    spark.conf.set("graft.cluster.checkpoint", "Reliable")
+    val bad = try intercept[IllegalArgumentException] {
+      Dedup.clusterLabels(pairs)
+    } finally spark.conf.unset("graft.cluster.checkpoint")
+    assert(bad.getMessage.contains("graft.cluster.checkpoint"))
     spark.conf.set("graft.cluster.checkpoint", "reliable")
     try {
       // misconfiguration fails loudly BEFORE any work, never a silent

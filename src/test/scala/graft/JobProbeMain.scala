@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * Spark job's (start offset, duration, task count, call site), so a
   * composed key's wall-clock is attributable to its stage-boundary jobs
   * and the DRIVER GAPS between them (planning/submission overhead shows
-  * up as wall-clock no job covers). Overlapping offsets show chkAll
+  * up as wall-clock no job covers). Overlapping offsets show runAll
   * concurrency. Not part of the graded surface.
   * Run: sbt "Test/runMain graft.JobProbeMain <key> <sfDir> <reps>"
   */

@@ -9,8 +9,7 @@ import org.apache.spark.sql.graftbridge.StatsBridge
   * localCheckpoint boundary hands the planner its TRUE materialized size
   * instead of the origin plan's compounding estimate, so downstream
   * broadcast decisions are made at plan time — and NOTHING else moves
-  * (rows, schema, partitioning). The conf gate
-  * (`graft.stats.exactBoundaries`) is mode-equal on the composed keys.
+  * (rows, schema, partitioning).
   */
 class StatsBridgeSpec extends SparkSpec {
 
@@ -98,30 +97,5 @@ class StatsBridgeSpec extends SparkSpec {
       "released blocks must not report a materialized size")
     assert(StatsBridge.withExactSize(chk) eq chk,
       "a boundary with no stored blocks must be returned as-is")
-  }
-
-  test("exact boundary stats are mode-equal on the composed keys " +
-      "(graft.stats.exactBoundaries steers plan shape, never content)") {
-    import graft.ops.Curation
-    def key(r: org.apache.spark.sql.Row) = r.toSeq.toList
-    def run(name: String, q: => DataFrame): Unit = {
-      spark.conf.set(Curation.ExactBoundaryStatsConf, "true")
-      val exact = try { q.collect() } finally {
-        spark.conf.unset(Curation.ExactBoundaryStatsConf)
-      }
-      spark.catalog.clearCache()
-      spark.conf.set(Curation.ExactBoundaryStatsConf, "false")
-      val est = try { q.collect() } finally {
-        spark.conf.unset(Curation.ExactBoundaryStatsConf)
-      }
-      spark.catalog.clearCache()
-      assert(exact.nonEmpty, s"$name: exact-stats mode returned nothing")
-      assert(exact.map(key).toSet == est.map(key).toSet,
-        s"$name: exact-stats mode drifted from estimate mode")
-    }
-    run("corpus_pipeline",
-      Curation.corpusPipeline(spark, sf))
-    run("corpus_states_onstate",
-      Curation.corpusStatesOnState(spark, sf))
   }
 }
