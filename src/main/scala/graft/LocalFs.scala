@@ -20,39 +20,48 @@ object LocalFs {
     * landing was deleted between its `_SUCCESS` check and the stream read.
     * Call sites MUST take names from here; [[sweepAged]] refuses any
     * prefix that could reach a published cache, and LocalFsSpec pins the
-    * registry's pairwise disjointness.
+    * registry's pairwise disjointness. The tmpdir protocol itself (tmp
+    * names, the `_SUCCESS` marker, publish, sweeps) lives only in this
+    * object — LocalFsSpec fails if any other main source spells it out.
     *
-    * | family            | kind            | prefix                   | TTL  | created at                |
+    * | family            | kind            | prefix                   | TTL  | created at (via)          |
     * |-------------------|-----------------|--------------------------|------|---------------------------|
-    * | CSV landing       | published cache | graft_scan_csv_v1        | none | Sources.scanCsvTyped      |
-    * | bucketed layout   | published cache | graft_bucketed_v2        | none | Sources.bucketedJoin      |
-    * | IVF quantizer     | published cache | graft_ivf_quantizer_v2   | none | Similarity (ivfModel)     |
-    * | CDC landing       | published cache | graft_cdc_landing_v1     | none | Streams.landedEvents      |
-    * | CDC sorted landing| published cache | graft_cdc_sorted_v1      | none | Streams.landedEventsSorted|
-    * | CDC flush landing | published cache | graft_cdc_flush_v1       | none | Streams.landedEventsFlush |
-    * | image fixture     | published cache | graft_img_fixture_v1     | none | Multimodal.imageFixture   |
-    * | noise-img fixture | published cache | graft_img_noise_v2       | none | Multimodal.noiseFixture   |
-    * | media band tables | published cache | graft_media_bands_v4     | none | Multimodal.mediaBandLanding|
-    * | text state tables | published cache | graft_text_states_v3     | none | Curation.textStatesLanding|
-    * | landed postings   | published cache | graft_postings_v1        | none | TextAnalysis.postingsLanding|
-    * | CSV sink          | session dir     | graft_sink_csv_          | 1h   | Sources.sinkCsvRoundTrip  |
-    * | parquet sink      | session dir     | graft_sink_parquet_      | 1h   | Sources.sinkParquetPartitioned |
-    * | CDC replay work   | session dir     | graft_cdcrun_            | 1h   | Streams.replayToFeed      |
-    * | state-absorb work | session dir     | graft_states_absorb_     | 1h   | Curation.corpusStatesAbsorbOnState |
-    * | state-compact work| session dir     | graft_states_compact_    | 1h   | Curation.corpusStatesCompact |
-    * | media-absorb work | session dir     | graft_media_absorb_      | 1h   | Multimodal.dedupMediaAbsorbOnState |
+    * | CSV landing       | published cache | graft_scan_csv_v1        | none | Sources.scanCsvTyped (landOnce) |
+    * | bucketed layout   | published cache | graft_bucketed_v3        | none | Sources.bucketedJoin (landOnce) |
+    * | IVF quantizer     | published cache | graft_ivf_quantizer_v2   | none | Similarity.ivfQuantizer (landOnce) |
+    * | CDC landing       | published cache | graft_cdc_landing_v1     | none | Streams.landedEvents (landOnce) |
+    * | CDC sorted landing| published cache | graft_cdc_sorted_v1      | none | Streams.landedEventsSorted (landOnce) |
+    * | CDC flush landing | published cache | graft_cdc_flush_v1       | none | Streams.landedEventsFlush (landOnce) |
+    * | image fixture     | published cache | graft_img_fixture_v1     | none | Multimodal.imageFixture (landOnce) |
+    * | jpeg fixture      | published cache | graft_jpeg_fixture_v1    | none | Multimodal.jpegFixture (landOnce) |
+    * | noise-img fixture | published cache | graft_img_noise_v2       | none | Multimodal.noiseFixture (landOnce) |
+    * | media band tables | published cache | graft_media_bands_v4     | none | Multimodal.mediaBandLanding (landOnce) |
+    * | text state tables | published cache | graft_text_states_v3     | none | Curation.textStatesLanding (landOnce) |
+    * | landed postings   | published cache | graft_postings_v1        | none | TextAnalysis.postingsLanding (landOnce) |
+    * | CSV sink          | session dir     | graft_sink_csv_          | 1h   | Sources.sinkCsvRoundTrip (sessionDir) |
+    * | parquet sink      | session dir     | graft_sink_parquet_      | 1h   | Sources.sinkParquetPartitioned (sessionDir) |
+    * | JSONL sink        | session dir     | graft_sink_jsonl_        | 1h   | Sources.sinkJsonlRoundTrip (sessionDir) |
+    * | CDC replay work   | session dir     | graft_cdcrun_            | 1h   | Streams.replayToFeed (workDir) |
+    * | state-absorb work | session dir     | graft_states_absorb_     | 1h   | Curation.corpusStatesAbsorbOnState (workDir) |
+    * | state-compact work| session dir     | graft_states_compact_    | 1h   | Curation.corpusStatesCompact (workDir) |
+    * | media-absorb work | session dir     | graft_media_absorb_      | 1h   | Multimodal.dedupMediaAbsorbOnState (workDir) |
     *
-    * Published caches (`<prefix><sfTag>_<fp>`, `_SUCCESS`-guarded) have no
-    * TTL: they are deleted only by [[cachePath]]'s superseded-fingerprint
-    * sweep (same prefix+sfTag, different fp) and their `.tmp.` orphans by
-    * [[publishDir]] (the `.tmp.` infix can never appear in a published
-    * name, so that sweep is structurally cache-safe). Session dirs are
-    * swept by prefix+TTL at allocation; their prefixes must stay disjoint
-    * from every published cache name — enforced below.
+    * Published caches (`<prefix><sfTag>_<fp>`) are built and published by
+    * [[landOnce]] alone, which writes the `_SUCCESS` marker into every one
+    * of them (the IVF quantizer included: a quantizer dir without it is
+    * rebuilt, never loaded). They have no TTL: they are deleted only by
+    * [[cachePath]]'s superseded-fingerprint sweep (same prefix+sfTag,
+    * different fp) and their `.tmp.` orphans by [[publishDir]] (the
+    * `.tmp.` infix can never appear in a published name, so that sweep is
+    * structurally cache-safe). Session dirs come from [[sessionDir]] /
+    * [[workDir]], which sweep by prefix+TTL at allocation; their prefixes
+    * must stay disjoint from every published cache name — enforced below.
     */
   object Names {
     val ScanCsvCache = "graft_scan_csv_v1"
-    val BucketedCache = "graft_bucketed_v2"
+    // v3: one landing holding both bucketed tables under one marker (v2
+    // published `lineitem/` and `orders/` as two separate landings)
+    val BucketedCache = "graft_bucketed_v3"
     val IvfQuantizerCache = "graft_ivf_quantizer_v2"
     val CdcLandingCache = "graft_cdc_landing_v1"
     val CdcSortedCache = "graft_cdc_sorted_v1"
@@ -112,6 +121,23 @@ object LocalFs {
           sweepPrefix.drop(cachePrefix.length).matches("[A-Za-z0-9_]*"))
   }
 
+  /** The tmpdir root, read per call: a host process may repoint
+    * `java.io.tmpdir` between sessions of one JVM.
+    */
+  private def tmpRoot: File = new File(sys.props("java.io.tmpdir"))
+
+  /** Validity marker of a published landing, written last into its tmp dir. */
+  private val Marker = "_SUCCESS"
+
+  private def landed(dir: File): Boolean = new File(dir, Marker).exists()
+
+  /** The session-private staging sibling `<dest>.tmp.<appId>` a session
+    * writes before a rename publishes it at `dest` ([[publishDir]],
+    * [[replaceDir]]); its `.tmp.` infix is what the orphan sweep keys on.
+    */
+  def stagingDir(dest: File, appId: String): File =
+    new File(s"${dest.getPath}.tmp.$appId")
+
   def deleteRecursively(f: File): Unit = {
     if (f.isDirectory)
       Option(f.listFiles).getOrElse(Array.empty[File]).foreach(deleteRecursively)
@@ -154,7 +180,7 @@ object LocalFs {
     val sfTag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
     val fp = sourceFingerprint(sources: _*)
     val name = s"$prefix${sfTag}_$fp"
-    val dir = new File(sys.props("java.io.tmpdir"))
+    val dir = tmpRoot
     Option(dir.listFiles).getOrElse(Array.empty[File])
       .filter(f => f.getName.startsWith(s"$prefix${sfTag}_") &&
         f.getName != name && !f.getName.contains(".tmp."))
@@ -179,13 +205,45 @@ object LocalFs {
     */
   def publishDir(tmp: File, dest: File, destValid: () => Boolean): Boolean = {
     if (dest.exists() && !destValid()) {
-      new File(dest, "_SUCCESS").delete()
+      new File(dest, Marker).delete()
       deleteRecursively(dest)
     }
     val won = tmp.renameTo(dest)
     if (!won) deleteRecursively(tmp)
     sweepOrphans(dest, keep = tmp)
     won
+  }
+
+  /** THE write-once landing: the published cache for `sources` under
+    * `prefix` (path from [[cachePath]]). If it lacks its marker, `build`
+    * fills this session's staging dir ([[stagingDir]]; cleared first, so a
+    * build that died earlier in the session leaves nothing behind), the
+    * marker is written last and the dir is published by [[publishDir]]
+    * with the marker as validity guard — so a marker-less dest (a crashed
+    * or pre-marker writer's) is repaired, never served. A throwing `build`
+    * publishes nothing and discards its staging dir. The landing's mtime
+    * is refreshed on every call, so its age counts from last use and no
+    * TTL sweeper could see a live landing as dead. Returns the path.
+    */
+  def landOnce(appId: String, prefix: String, sfDir: String,
+      sources: File*)(build: File => Unit): String = {
+    val dest = new File(cachePath(prefix, sfDir, sources: _*))
+    if (!landed(dest)) {
+      val tmp = stagingDir(dest, appId)
+      deleteRecursively(tmp)
+      try {
+        build(tmp)
+        require(tmp.isDirectory, s"landing build wrote nothing at $tmp")
+        val marker = new File(tmp, Marker)
+        require(marker.createNewFile() || marker.exists(),
+          s"could not create landing marker $marker")
+      } catch {
+        case e: Throwable => deleteRecursively(tmp); throw e
+      }
+      publishDir(tmp, dest, destValid = () => landed(dest))
+    }
+    dest.setLastModified(System.currentTimeMillis())
+    dest.getPath
   }
 
   /** Atomically REPLACE `dest` with `tmp` — the overwrite-semantics
@@ -263,4 +321,70 @@ object LocalFs {
       sys.addShutdownHook(deleteRecursively(f))
       ()
     }
+
+  /** Age after which another session's work dir is presumed dead. Work
+    * dirs are written and read WITHIN one session (the appId in the name
+    * only keeps concurrent runs apart), so an hour-old sibling can only be
+    * a crashed session's leftover.
+    */
+  private val SessionTtlMs = 60L * 60 * 1000
+
+  /** The session's own dir `<tmpdir>/<prefix><name>`: aged siblings under
+    * `prefix` (crashed sessions) are swept, the dir is created, deleted at
+    * JVM exit, and TOUCHED on every allocation. A dir's mtime tracks only
+    * direct-child churn, so a session older than the TTL that reuses its
+    * dir late (e.g. a Bench anomaly retry) would otherwise look dead to a
+    * concurrent session's sweep between allocation and the write.
+    */
+  def sessionDir(prefix: String, name: String): File = {
+    val parent = tmpRoot
+    val self = new File(parent, s"$prefix$name")
+    sweepAged(parent, prefix, keep = self, ttlMs = SessionTtlMs)
+    self.mkdirs()
+    self.setLastModified(System.currentTimeMillis())
+    deleteOnExit(self)
+    self
+  }
+
+  private val workSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A FRESH [[sessionDir]] per call (`<prefix><appId>_<seq>`): a key
+    * re-executed within one session (a bench retry) starts from an empty
+    * dir, never from the previous run's files.
+    */
+  def workDir(prefix: String, appId: String): File =
+    sessionDir(prefix, s"${appId}_${workSeq.incrementAndGet()}")
+
+  /** mtime step between [[promoteOrdered]] files — whole seconds, so the
+    * order survives filesystems with coarse mtime resolution.
+    */
+  private val ReplayMtimeStepMs = 2000L
+
+  /** Promote single-file work dirs into ORDERED replay files: for each
+    * `(work, dest)` pair (paths relative to `root`), the one
+    * `part-*.parquet` file `work` holds (a `coalesce(1)` write) is renamed
+    * to `dest` and `work` is deleted; the files then get ascending mtimes
+    * in pair order. A paced file stream (`maxFilesPerTrigger = 1`)
+    * replays by mtime, so the order rides these stamps — never write
+    * completion order, which is what lets the work dirs be written
+    * concurrently. An unordered replay would drop later files' rows as
+    * late behind the watermark.
+    */
+  def promoteOrdered(root: File, moves: Seq[(String, String)]): Unit = {
+    val base = System.currentTimeMillis()
+    moves.zipWithIndex.foreach { case ((workName, destName), i) =>
+      val work = new File(root, workName)
+      val dest = new File(root, destName)
+      val part = Option(work.listFiles).getOrElse(Array.empty[File])
+        .find(f => f.getName.startsWith("part-") &&
+          f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no part file written in $work"))
+      val dir = dest.getParentFile
+      require(dir.mkdirs() || dir.isDirectory, s"could not create $dir")
+      require(part.renameTo(dest), s"rename failed: $part -> $dest")
+      deleteRecursively(work)
+      require(dest.setLastModified(base + i * ReplayMtimeStepMs),
+        s"setLastModified failed for $dest")
+    }
+  }
 }

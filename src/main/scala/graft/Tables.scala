@@ -37,6 +37,29 @@ object Tables {
     spark.read.format("csv").option("header", "true")
       .options(csvOptions).load(path)
 
+  /** Write `df` as 8 buckets on `cols` (sorted by the same) at `path`,
+    * through a throwaway external catalog table — bucketing is only
+    * reachable via `saveAsTable`, and dropping an external table keeps
+    * its files. The files stay plain parquet, so a later session registers
+    * them metadata-only (`CREATE TABLE … CLUSTERED BY … LOCATION`) or reads
+    * them schema-only. The stage table is named `graft_stage_<name>_<appId>`:
+    * two sessions racing on a first build each stage under their own name,
+    * and `name` must be distinct among concurrent writes of one session.
+    */
+  def writeBucketed(df: DataFrame, path: String, name: String,
+      cols: String*): Unit = {
+    val spark = df.sparkSession
+    val app = spark.sparkContext.applicationId.replaceAll("[^A-Za-z0-9_]", "_")
+    val stage = s"graft_stage_${name}_$app"
+    spark.sql(s"DROP TABLE IF EXISTS $stage")
+    df.write.mode("overwrite")
+      .option("path", path)
+      .bucketBy(8, cols.head, cols.tail: _*)
+      .sortBy(cols.head, cols.tail: _*)
+      .saveAsTable(stage)
+    spark.sql(s"DROP TABLE $stage")
+  }
+
   /** `events` with its timestamp normalized to a plain µs-precision
     * `TimestampType` `ts`, whatever physical shape the harness parquet
     * carries this round. One chokepoint for every consumer — the harness

@@ -406,33 +406,6 @@ object Curation {
       () => df.write.mode("overwrite").parquet(s"$base/$name")
     }, label = s"writeAll(${parts.map(_._1).mkString(",")})")
 
-  /** Promote single-file replay work dirs (`<tmp>/work_<name>`, written
-    * via [[writeAll]] with `coalesce(1)` frames) into `dir/b<i>_<name>
-    * .parquet` with EXPLICIT ascending mtimes — shared by the landing
-    * batch sides (media bands, text probe keys). The paced file
-    * streams' replay order is carried by these mtimes, never by write
-    * completion order, which is what makes the work-dir writes safe to
-    * submit concurrently (r20 §2.6 on the landing builds).
-    */
-  private[graft] def promoteReplayFiles(names: Seq[String], tmp: String,
-      dir: java.io.File): Unit = {
-    import java.io.File
-    require(dir.mkdirs() || dir.isDirectory, s"could not create $dir")
-    val base = System.currentTimeMillis()
-    names.zipWithIndex.foreach { case (name, i) =>
-      val work = new File(tmp, s"work_$name")
-      val part = Option(work.listFiles).getOrElse(Array.empty[File])
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no part file written for $name"))
-      val dest = new File(dir, f"b$i%02d_$name.parquet")
-      require(part.renameTo(dest), s"rename failed for $name")
-      graft.LocalFs.deleteRecursively(work)
-      require(dest.setLastModified(base + i * 1000),
-        s"mtime set failed for $dest")
-    }
-  }
-
   /** Session conf key selecting reliable stage boundaries for every
     * composed pipeline in this object (default false = localCheckpoint,
     * the single-JVM harness shape).
@@ -1306,12 +1279,11 @@ object Curation {
   private[graft] def textStatesLanding(spark: SparkSession,
       sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
       graft.LocalFs.Names.TextStatesCache, sfDir,
       new File(s"$sfDir/documents.parquet"),
-      new File(s"$sfDir/embeddings.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
+      new File(s"$sfDir/embeddings.parquet")) { tmpDir =>
+      val tmp = tmpDir.getPath
       val docs0 = table(spark, sfDir, "documents")
       val live = docs0
         .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
@@ -1368,18 +1340,20 @@ object Curation {
       writeAll(familySides.map { case (n, rows) =>
         s"work_$n" -> rows.coalesce(1)
       }, tmp)
-      promoteReplayFiles(familySides.map(_._1), tmp,
-        new File(tmp, "batch"))
+      graft.LocalFs.promoteOrdered(tmpDir, batchFiles(familySides.map(_._1)))
       scope.release()
-      val marker = new File(tmp, "_SUCCESS")
-      require(marker.createNewFile() || marker.exists(),
-        s"could not create landing marker $marker")
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
+
+  /** The `batch/` side of a landing: work dir `work_<name>` of each
+    * replay file promoted to `batch/b<i>_<name>.parquet`, in `names`
+    * order ([[graft.LocalFs.promoteOrdered]]) — shared by the media band
+    * and text state landings.
+    */
+  private[graft] def batchFiles(names: Seq[String]): Seq[(String, String)] =
+    names.zipWithIndex.map { case (n, i) =>
+      s"work_$n" -> f"batch/b$i%02d_$n.parquet"
+    }
 
   /** The landed day-0 world, read back: the maintained text states, the
     * shipped clean corpus and its manifest — [[runPipeline]]'s outputs
@@ -1448,8 +1422,6 @@ object Curation {
     out.orderBy(col("shard_id"))
   }
 
-  private val absorbSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** `corpus_states_absorb_onstate` checked key — THE DAY LOOP ON
     * STORAGE, the last state-axis asymmetry: [[corpusStatesUpdateOn]]
     * grades the merge IN MEMORY and [[corpusStatesOnState]] grades the
@@ -1486,7 +1458,6 @@ object Curation {
     */
   def corpusStatesAbsorbOnState(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import java.io.File
     val docs0 = table(spark, sfDir, "documents")
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
@@ -1505,14 +1476,8 @@ object Curation {
     // THE ABSORB: batch census deltas appended as parquet — a session
     // work dir (the replayToFeed allocation discipline; production:
     // an append to the bucketed state table)
-    val parent = new File(sys.props("java.io.tmpdir"))
-    val work = new File(parent,
-      s"${graft.LocalFs.Names.StatesAbsorb}" +
-        s"${spark.sparkContext.applicationId}_" +
-        absorbSeq.incrementAndGet())
-    graft.LocalFs.sweepAged(parent, graft.LocalFs.Names.StatesAbsorb,
-      keep = work, ttlMs = 60L * 60 * 1000)
-    graft.LocalFs.deleteOnExit(work)
+    val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesAbsorb,
+      spark.sparkContext.applicationId)
     val d = batchCensusesOf(r1, embeddings)
     // THE ABSORB WRITE: one family-partitioned batch-sized job (r21 #2
     // — production appends ONE bucketed (family, key) state table)
@@ -1547,8 +1512,6 @@ object Curation {
     out.orderBy(col("shard_id"))
   }
 
-  private val compactSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** `corpus_states_compact` checked key — THE STATE-LANDING GENERATION
     * BUMP (r19 verdict #2), closing the absorb key's own docstring
     * contract ("production appends to the bucketed census table and
@@ -1580,7 +1543,6 @@ object Curation {
     */
   def corpusStatesCompact(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import java.io.File
     val docs0 = table(spark, sfDir, "documents")
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
@@ -1597,14 +1559,8 @@ object Curation {
       live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
       benchmark, embeddings, scope)
     val b1man = chk(r1.manifest)
-    val parent = new File(sys.props("java.io.tmpdir"))
-    val work = new File(parent,
-      s"${graft.LocalFs.Names.StatesCompact}" +
-        s"${spark.sparkContext.applicationId}_" +
-        compactSeq.incrementAndGet())
-    graft.LocalFs.sweepAged(parent, graft.LocalFs.Names.StatesCompact,
-      keep = work, ttlMs = 60L * 60 * 1000)
-    graft.LocalFs.deleteOnExit(work)
+    val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesCompact,
+      spark.sparkContext.applicationId)
     val d = batchCensusesOf(r1, embeddings)
     // THE DELTA APPEND: one family-partitioned batch-sized job (r21 #2)
     writeCensusDeltas(d, work.getPath)

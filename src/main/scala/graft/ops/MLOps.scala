@@ -440,8 +440,9 @@ object MLOps {
     * model. Fits the standard pipeline (indexer → assembler → seeded RF)
     * on the deterministic train slice and publishes it at `path` with the
     * IVF quantizer's atomic-publish discipline ([[Similarity]]): the model
-    * is written to a session-private `<path>.tmp.<appId>` directory and
-    * atomically renamed into place, so `path` only ever holds a COMPLETE
+    * is written to a session-private staging directory
+    * ([[graft.LocalFs.stagingDir]]) and atomically renamed into place,
+    * so `path` only ever holds a COMPLETE
     * model — spark.ml writers land metadata before data, and a crash
     * mid-save must not poison the path for every later session. At 100 TB
     * the same move works on any HDFS-compatible FS (rename is the
@@ -460,15 +461,15 @@ object MLOps {
     val model = fullPipeline().fit(train)
     train.unpersist()
     val dest = new java.io.File(path)
-    val tmp = s"$path.tmp.${spark.sparkContext.applicationId}"
-    model.write.overwrite().save(tmp)
+    val tmp = graft.LocalFs.stagingDir(dest, spark.sparkContext.applicationId)
+    model.write.overwrite().save(tmp.getPath)
     // An explicit SAVE has overwrite semantics (unlike the quantizer
     // cache, where first-writer-wins is the contract), but the swap must
     // not be delete-then-rename: that could destroy the old model and then
     // fail the rename, leaving nothing published. replaceDir renames the
     // old model ASIDE first, restores it on a failed swap, and throws
     // rather than returning with the publish silently lost.
-    graft.LocalFs.replaceDir(new java.io.File(tmp), dest)
+    graft.LocalFs.replaceDir(tmp, dest)
   }
 
   /** Load a [[saveFittedPipeline]]-published model and score the full
@@ -495,9 +496,10 @@ object MLOps {
     */
   def saveCvModel(spark: SparkSession, sfDir: String, path: String): Unit = {
     val (model, _) = fitCv(spark, sfDir)
-    val tmp = s"$path.tmp.${spark.sparkContext.applicationId}"
-    model.write.overwrite().save(tmp)
-    graft.LocalFs.replaceDir(new java.io.File(tmp), new java.io.File(path))
+    val dest = new java.io.File(path)
+    val tmp = graft.LocalFs.stagingDir(dest, spark.sparkContext.applicationId)
+    model.write.overwrite().save(tmp.getPath)
+    graft.LocalFs.replaceDir(tmp, dest)
   }
 
   /** Load a [[saveCvModel]]-published CrossValidatorModel and score the

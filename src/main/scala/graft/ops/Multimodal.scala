@@ -119,12 +119,11 @@ object Multimodal {
     */
   private def imageFixture(spark: SparkSession, sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(graft.LocalFs.Names.ImageFixtureCache,
-      sfDir, new File(s"$sfDir/documents.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.ImageFixtureCache, sfDir,
+      new File(s"$sfDir/documents.parquet")) { tmp =>
       val spark2 = spark
       import spark2.implicits._
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
       table(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
         .mapPartitions { ids =>
@@ -134,12 +133,8 @@ object Multimodal {
           }
         }
         .toDF("doc_id", "png")
-        .write.mode("overwrite").parquet(tmp)
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+        .write.mode("overwrite").parquet(tmp.getPath)
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** The harness image-asset relation: `(doc_id, png binary)`. */
@@ -180,12 +175,11 @@ object Multimodal {
     */
   private def jpegFixture(spark: SparkSession, sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(graft.LocalFs.Names.JpegFixtureCache,
-      sfDir, new File(s"$sfDir/documents.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.JpegFixtureCache, sfDir,
+      new File(s"$sfDir/documents.parquet")) { tmp =>
       val spark2 = spark
       import spark2.implicits._
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
       table(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
         .mapPartitions { ids =>
@@ -210,12 +204,8 @@ object Multimodal {
           }
         }
         .toDF("doc_id", "jpeg")
-        .write.mode("overwrite").parquet(tmp)
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+        .write.mode("overwrite").parquet(tmp.getPath)
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** The harness JPEG-asset relation: `(doc_id, jpeg binary)`. */
@@ -343,12 +333,11 @@ object Multimodal {
     */
   private def noiseFixture(spark: SparkSession, sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(graft.LocalFs.Names.ImgNoiseCache,
-      sfDir, new File(s"$sfDir/documents.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.ImgNoiseCache, sfDir,
+      new File(s"$sfDir/documents.parquet")) { tmp =>
       val spark2 = spark
       import spark2.implicits._
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
       table(spark, sfDir, "documents")
         .select(col("doc_id")).as[Long]
         .mapPartitions { ids =>
@@ -398,12 +387,8 @@ object Multimodal {
           }
         }
         .toDF("img_id", "role", "payload")
-        .write.mode("overwrite").parquet(tmp)
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+        .write.mode("overwrite").parquet(tmp.getPath)
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** The harness noise-image relation: `(img_id, role, payload)` with
@@ -1896,11 +1881,9 @@ object Multimodal {
   private[graft] def mediaBandLanding(spark: SparkSession,
       sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
       graft.LocalFs.Names.MediaBandCache, sfDir,
-      new File(s"$sfDir/documents.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
+      new File(s"$sfDir/documents.parquet")) { tmp =>
       val docs = table(spark, sfDir, "documents").select(col("doc_id"))
       val corpus = docs.filter(col("doc_id") % 2 === 0)
       val batch = docs
@@ -1913,21 +1896,9 @@ object Multimodal {
       // ZERO Exchange and ZERO Sort on the corpus side; the files stay
       // plain parquet, so schema-only readers (the batch OnState
       // probes) read the same paths unchanged
-      def writeBucketed(df: DataFrame, modality: String): Unit = {
-        // appId-suffixed: two sessions racing on first materialization
-        // each stage under their own name (the publish rename decides
-        // the winner; the loser's tmp dir is discarded)
-        val app = spark.sparkContext.applicationId
-          .replaceAll("[^A-Za-z0-9_]", "_")
-        val stage = s"graft_media_bands_stage_${modality}_$app"
-        spark.sql(s"DROP TABLE IF EXISTS $stage")
-        df.write.mode("overwrite")
-          .option("path", s"$tmp/corpus/$modality")
-          .bucketBy(8, "band_idx", "band_val")
-          .sortBy("band_idx", "band_val")
-          .saveAsTable(stage)
-        spark.sql(s"DROP TABLE $stage")
-      }
+      def writeBucketed(df: DataFrame, modality: String): Unit =
+        graft.Tables.writeBucketed(df, s"$tmp/corpus/$modality",
+          s"media_bands_$modality", "band_idx", "band_val")
       // VIDEO ladders first, serial — video plants are the PERSISTED
       // ones (one plant in memory at a time, the
       // corpusPipelineMultimodalOn memory discipline; the video plant
@@ -1974,16 +1945,9 @@ object Multimodal {
       // the batch side: one file per modality, mtimes ascending so a
       // paced file stream replays modality-by-modality (coalesce(1) is
       // harness landing plumbing, not an operator plan)
-      Curation.promoteReplayFiles(Seq("video", "audio", "image"), tmp,
-        new File(tmp, "batch"))
-      val marker = new File(tmp, "_SUCCESS")
-      require(marker.createNewFile() || marker.exists(),
-        s"could not create landing marker $marker")
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+      graft.LocalFs.promoteOrdered(tmp,
+        Curation.batchFiles(Seq("video", "audio", "image")))
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** One landed band table restricted to `pop`'s doc_ids (left-semi; the
@@ -2116,8 +2080,6 @@ object Multimodal {
       .orderBy(col("modality"), col("doc_id"))
   }
 
-  private val mediaAbsorbSeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** `dedup_media_absorb_onstate` checked key — THE MEDIA ABSORB
     * THROUGH STORAGE, completing the state-axis triangle on the media
     * family (the `corpus_states_absorb_onstate` discipline applied to
@@ -2151,16 +2113,9 @@ object Multimodal {
     */
   def dedupMediaAbsorbOnState(spark: SparkSession,
       sfDir: String): DataFrame = {
-    import java.io.File
     val landing = mediaBandLanding(spark, sfDir)
-    val parent = new File(sys.props("java.io.tmpdir"))
-    val work = new File(parent,
-      s"${graft.LocalFs.Names.MediaAbsorb}" +
-        s"${spark.sparkContext.applicationId}_" +
-        mediaAbsorbSeq.incrementAndGet())
-    graft.LocalFs.sweepAged(parent, graft.LocalFs.Names.MediaAbsorb,
-      keep = work, ttlMs = 60L * 60 * 1000)
-    graft.LocalFs.deleteOnExit(work)
+    val work = graft.LocalFs.workDir(graft.LocalFs.Names.MediaAbsorb,
+      spark.sparkContext.applicationId)
     val landedV = spark.read.parquet(s"$landing/corpus/video")
     val landedA = spark.read.parquet(s"$landing/corpus/audio")
     val landedI = spark.read.parquet(s"$landing/corpus/image")

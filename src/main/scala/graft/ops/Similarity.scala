@@ -155,25 +155,21 @@ object Similarity {
     */
   private[ops] def ivfQuantizer(spark: SparkSession, sfDir: String,
       v: DataFrame): org.apache.spark.ml.clustering.KMeansModel = {
-    val modelPath = graft.LocalFs.cachePath(
-      graft.LocalFs.Names.IvfQuantizerCache, sfDir,
-      new java.io.File(s"$sfDir/embeddings.parquet"))
-    // saved to a session-private path, then atomically renamed into place:
-    // the stable path only ever holds a COMPLETE model (ML writers land
+    // fitted and saved inside a LocalFs.landOnce build: the stable path
+    // only ever holds a COMPLETE model under its marker (ML writers land
     // metadata before data, so guarding on the writer's own files would
     // let a crash mid-save poison the cache for every later session)
-    val dest = new java.io.File(modelPath)
-    if (dest.exists())
-      org.apache.spark.ml.clustering.KMeansModel.load(modelPath)
-    else {
+    var fitted: Option[org.apache.spark.ml.clustering.KMeansModel] = None
+    val modelPath = graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.IvfQuantizerCache, sfDir,
+      new java.io.File(s"$sfDir/embeddings.parquet")) { tmp =>
       val m = new KMeans().setK(IvfClusters).setSeed(42L)
         .setFeaturesCol("vec").setPredictionCol("cluster").fit(v)
-      val tmp = s"$modelPath.tmp.${spark.sparkContext.applicationId}"
-      m.write.overwrite().save(tmp)
-      graft.LocalFs.publishDir(new java.io.File(tmp), dest,
-        destValid = () => dest.exists())
-      m
+      m.write.overwrite().save(tmp.getPath)
+      fitted = Some(m)
     }
+    fitted.getOrElse(
+      org.apache.spark.ml.clustering.KMeansModel.load(modelPath))
   }
 
   /** The corpus in IVF layout: every [[unitVectors]] column plus the

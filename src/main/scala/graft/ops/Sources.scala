@@ -19,40 +19,13 @@ import graft.Tables
   */
 object Sources {
 
-  /** Age after which another session's sink directory is presumed dead.
-    * Sink outputs are written and read WITHIN one session (the per-appId
-    * name exists only so concurrent runs can't tear each other's files), so
-    * an hour-old sibling can only be a crashed session's leftover.
-    */
-  private val SinkTtlMs = 60L * 60 * 1000
-
-  /** Per-session sink path under tmp: unique per appId (concurrent runs
-    * stay isolated), deleted on JVM exit, with aged crashed-session
-    * siblings swept on allocation — repeated sessions leave at most the
-    * live session's directory behind.
+  /** Per-session sink path under tmp ([[graft.LocalFs.sessionDir]]):
+    * unique per appId (concurrent runs stay isolated), deleted on JVM
+    * exit, with aged crashed-session siblings swept on allocation —
+    * repeated sessions leave at most the live session's directory behind.
     */
   private def sessionSinkPath(spark: SparkSession, prefix: String): String =
-    sessionSinkPath(spark.sparkContext.applicationId, prefix)
-
-  /** AppId-keyed core of the per-session sink allocation (split out so the
-    * sweep/touch race discipline is testable without a SparkSession —
-    * LocalFsSpec covers the stale-mtime-but-live-session case).
-    */
-  private[graft] def sessionSinkPath(appId: String, prefix: String): String = {
-    val parent = new java.io.File(sys.props("java.io.tmpdir"))
-    val self = new java.io.File(parent, s"$prefix$appId")
-    graft.LocalFs.sweepAged(parent, prefix, keep = self, ttlMs = SinkTtlMs)
-    // Defuse the sweep's mtime race for LONG-lived sessions: a directory's
-    // mtime tracks only direct-child churn, so a session older than the TTL
-    // whose sink key re-executes later (e.g. a Bench anomaly retry) could
-    // look dead to a CONCURRENT session's sweep between allocation and the
-    // write. Touch the directory itself at every allocation/reuse so its
-    // age is measured from the last use, not the first.
-    self.mkdirs()
-    self.setLastModified(System.currentTimeMillis())
-    graft.LocalFs.deleteOnExit(self)
-    self.getPath
-  }
+    graft.LocalFs.sessionDir(prefix, spark.sparkContext.applicationId).getPath
 
   /** Plain parquet scan. Catalyst prunes `ReadSchema` to the projected
     * columns — on a wide 100 TB table this is the difference between reading
@@ -93,21 +66,17 @@ object Sources {
     */
   def scanCsvTyped(spark: SparkSession, sfDir: String): DataFrame = {
     // the CSV stand-in for the reference's source file is materialized once
-    // per corpus (stable path, _SUCCESS-guarded) — the key's point is the
+    // per corpus (a LocalFs.landOnce landing) — the key's point is the
     // all-string SCAN + post-hoc cast, not the write. The tag includes a
     // source-content fingerprint (LocalFs.cachePath): regenerating the
     // corpus at the same path changes the tag, so a stale CSV can never be
     // served.
-    val out = graft.LocalFs.cachePath(graft.LocalFs.Names.ScanCsvCache, sfDir,
-      new java.io.File(s"$sfDir/customer.parquet"))
-    if (!new java.io.File(s"$out/_SUCCESS").exists()) {
-      // write session-private, publish by atomic rename (no two sessions
-      // ever interleave files in the stable path — see LocalFs)
-      val tmp = s"$out.tmp.${spark.sparkContext.applicationId}"
+    val out = graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.ScanCsvCache, sfDir,
+      new java.io.File(s"$sfDir/customer.parquet")) { tmp =>
       Tables.table(spark, sfDir, "customer")
-        .write.mode("overwrite").format("csv").option("header", "true").options(Tables.csvOptions).save(tmp)
-      graft.LocalFs.publishDir(new java.io.File(tmp), new java.io.File(out),
-        destValid = () => new java.io.File(s"$out/_SUCCESS").exists())
+        .write.mode("overwrite").format("csv").option("header", "true")
+        .options(Tables.csvOptions).save(tmp.getPath)
     }
     Tables.csv(spark, out) // all-string schema, the reference's entry shape
       .select(
@@ -285,42 +254,31 @@ object Sources {
     // Write-once layout, keyed by corpus + layout version + source content
     // fingerprint (NOT per session): at 100 TB the whole point of bucketing
     // is paying the clustered write once and reusing it for every
-    // subsequent join on that key. A later JVM re-registers the existing
+    // subsequent join on that key. Both tables land under one
+    // LocalFs.landOnce marker; a later JVM re-registers the existing
     // bucketed files with a metadata-only CREATE TABLE ... CLUSTERED BY and
     // skips the rewrite; a regenerated corpus changes the fingerprint and
     // provably rebuilds.
-    val base = graft.LocalFs.cachePath(graft.LocalFs.Names.BucketedCache, sfDir,
+    val tables = Seq("lineitem" -> "l_orderkey", "orders" -> "o_orderkey")
+    val base = graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.BucketedCache, sfDir,
       new java.io.File(s"$sfDir/lineitem.parquet"),
-      new java.io.File(s"$sfDir/orders.parquet"))
-    def bucketize(name: String, key: String): Unit = {
-      val tbl = s"graft_bucketed_$name"
-      val path = s"$base/$name"
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      if (!new java.io.File(s"$path/_SUCCESS").exists()) {
-        // bucketed write goes to a session-private path via a throwaway
-        // external table (dropping an external table keeps its files),
-        // then the directory is atomically renamed into the stable path —
-        // concurrent first-runs can't interleave part files
-        val tmp = s"$path.tmp.${spark.sparkContext.applicationId}"
-        spark.sql(s"DROP TABLE IF EXISTS ${tbl}_stage")
-        Tables.table(spark, sfDir, name)
-          .write.mode("overwrite")
-          .option("path", tmp)
-          .bucketBy(8, key).sortBy(key)
-          .saveAsTable(s"${tbl}_stage")
-        spark.sql(s"DROP TABLE ${tbl}_stage")
-        graft.LocalFs.publishDir(new java.io.File(tmp), new java.io.File(path),
-          destValid = () => new java.io.File(s"$path/_SUCCESS").exists())
+      new java.io.File(s"$sfDir/orders.parquet")) { tmp =>
+      tables.foreach { case (name, key) =>
+        Tables.writeBucketed(Tables.table(spark, sfDir, name),
+          s"$tmp/$name", s"bucketed_$name", key)
       }
-      // metadata-only registration of the (now-complete) bucketed files
+    }
+    // metadata-only registration of the (complete) bucketed files
+    tables.foreach { case (name, key) =>
+      val tbl = s"graft_bucketed_$name"
       val schemaDdl = Tables.table(spark, sfDir, name).schema.toDDL
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
       spark.sql(
         s"""CREATE TABLE $tbl ($schemaDdl) USING parquet
            |CLUSTERED BY ($key) SORTED BY ($key) INTO 8 BUCKETS
-           |LOCATION '$path'""".stripMargin)
+           |LOCATION '$base/$name'""".stripMargin)
     }
-    bucketize("lineitem", "l_orderkey")
-    bucketize("orders", "o_orderkey")
     val li = spark.table("graft_bucketed_lineitem")
     val o = spark.table("graft_bucketed_orders")
     // MERGE hint: at harness scale Catalyst would broadcast the small

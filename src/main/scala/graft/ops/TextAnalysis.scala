@@ -1610,29 +1610,18 @@ object TextAnalysis {
   private[graft] def postingsLanding(spark: SparkSession,
       sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
       graft.LocalFs.Names.PostingsCache, sfDir,
-      new File(s"$sfDir/documents.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
+      new File(s"$sfDir/documents.parquet")) { tmp =>
       val d = table(spark, sfDir, "documents")
         .filter(col("text").isNotNull)
       val dl = d.select(col("doc_id"),
         size(split(col("text"), " ")).cast(LongType).as("dl"))
       val tok = d.select(col("doc_id"),
         explode(split(col("text"), " ")).as("token"))
-      val app = spark.sparkContext.applicationId
-        .replaceAll("[^A-Za-z0-9_]", "_")
-      def writeBucketed(df: DataFrame, name: String): Unit = {
-        val stage = s"graft_postings_stage_${name}_$app"
-        spark.sql(s"DROP TABLE IF EXISTS $stage")
-        df.write.mode("overwrite")
-          .option("path", s"$tmp/$name")
-          .bucketBy(8, "token")
-          .sortBy("token")
-          .saveAsTable(stage)
-        spark.sql(s"DROP TABLE $stage")
-      }
+      def writeBucketed(df: DataFrame, name: String): Unit =
+        graft.Tables.writeBucketed(df, s"$tmp/$name", s"postings_$name",
+          "token")
       // three independent derivations of the same source scan —
       // submitted concurrently (guide §2.6 via Curation.runAll)
       Curation.runAll(Seq(
@@ -1646,14 +1635,7 @@ object TextAnalysis {
         () => dl.agg(sum(col("dl")).as("s_total"),
             count(lit(1)).as("n_total"))
           .write.mode("overwrite").parquet(s"$tmp/stats")))
-      val marker = new File(tmp, "_SUCCESS")
-      require(marker.createNewFile() || marker.exists(),
-        s"could not create landing marker $marker")
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** `search_bm25_onstate` checked key — BM25 SERVED FROM THE LANDED

@@ -557,12 +557,6 @@ object Streams {
         else GroupStateTimeout.NoTimeout)(update)
   }
 
-  /** Monotonic per-invocation sequence for the replay keys' work dirs: a
-    * bench retry re-executes a key within one session, and each replay
-    * must start from an EMPTY feed + checkpoint.
-    */
-  private val replaySeq = new java.util.concurrent.atomic.AtomicLong()
-
   /** The harness change log landed ONCE per corpus as µs-timestamp parquet
     * (the raw file stores TIMESTAMP(NANOS), which the stream source can't
     * consume directly) — content-fingerprinted + atomically published like
@@ -570,24 +564,18 @@ object Streams {
     */
   private def landedEvents(spark: SparkSession, sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(graft.LocalFs.Names.CdcLandingCache,
-      sfDir, new File(s"$sfDir/events.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
-      val tmp = s"$landing.tmp.${spark.sparkContext.applicationId}"
+    // landOnce refreshes the landing's mtime on every reuse, so its age
+    // counts from last USE: even a hypothetical future sweeper with an
+    // overlapping prefix sees a young directory. Defense in depth only —
+    // the replay GC's prefix is disjoint by construction (LocalFs.Names)
+    // and sweepAged refuses cache-reaching prefixes outright.
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.CdcLandingCache, sfDir,
+      new File(s"$sfDir/events.parquet")) { tmp =>
       graft.Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .write.mode("overwrite").parquet(tmp)
-      graft.LocalFs.publishDir(new File(tmp), new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+        .write.mode("overwrite").parquet(tmp.getPath)
     }
-    // Touch on every reuse (the Sources.sessionSinkPath discipline): the
-    // landing's age is then measured from last USE, so even a hypothetical
-    // future sweeper with an overlapping prefix sees a young directory.
-    // Defense in depth only — the replay GC's prefix is disjoint by
-    // construction (LocalFs.Names) and sweepAged refuses cache-reaching
-    // prefixes outright.
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** Run a streaming Dataset to completion (AvailableNow) into a fresh
@@ -618,13 +606,10 @@ object Streams {
       check: org.apache.spark.sql.streaming.StreamingQuery => Unit =
         _ => ()): DataFrame = {
     import java.io.File
-    val parent = new File(sys.props("java.io.tmpdir"))
-    val work = new File(parent,
-      s"${graft.LocalFs.Names.CdcReplay}${spark.sparkContext.applicationId}_" +
-        replaySeq.incrementAndGet())
-    graft.LocalFs.sweepAged(parent, graft.LocalFs.Names.CdcReplay,
-      keep = work, ttlMs = 60L * 60 * 1000)
-    graft.LocalFs.deleteOnExit(work)
+    // fresh per invocation: a bench retry re-executes a key within one
+    // session, and each replay must start from an EMPTY feed + checkpoint
+    val work = graft.LocalFs.workDir(graft.LocalFs.Names.CdcReplay,
+      spark.sparkContext.applicationId)
     val feedDir = new File(work, "feed").getPath
     val partKey = "spark.sql.shuffle.partitions"
     val prev = spark.conf.getOption(partKey)
@@ -787,11 +772,9 @@ object Streams {
     */
   private def landedEventsSorted(spark: SparkSession, sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(graft.LocalFs.Names.CdcSortedCache,
-      sfDir, new File(s"$sfDir/events.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
-      val tmp = new File(s"$landing.tmp.${spark.sparkContext.applicationId}")
-      tmp.mkdirs()
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.CdcSortedCache, sfDir,
+      new File(s"$sfDir/events.parquet")) { tmp =>
       // persisted for the build: the bounds pass + one filtered write per
       // slice would otherwise re-scan the raw table 1 + TtlSlices times
       val e = graft.Tables.events(spark, sfDir)
@@ -802,32 +785,16 @@ object Streams {
       val lo = bounds.getLong(0)
       val span = bounds.getLong(1) - lo + 1 // +1: max ts maps to the last slice
       val slice = expr(s"(unix_micros(ts) - ${lo}L) * ${TtlSlices}L div ${span}L")
-      val base = System.currentTimeMillis()
       (0 until TtlSlices).foreach { i =>
-        val work = new File(tmp, s"work_$i")
         e.filter(slice === i).coalesce(1)
-          .write.mode("overwrite").parquet(work.getPath)
-        val part = Option(work.listFiles).getOrElse(Array.empty[File])
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written for slice $i"))
-        val dest = new File(tmp, f"s$i%02d.parquet")
-        require(part.renameTo(dest), s"rename failed for slice $i")
-        graft.LocalFs.deleteRecursively(work)
-        // ascending mtimes pin the file source's replay order (paths
-        // s00..s03 agree, as a tiebreak within one mtime tick) — as
-        // load-bearing as the rename: an unordered replay drops later
-        // slices' rows as late behind the watermark
-        require(dest.setLastModified(base + i * 2000L),
-          s"setLastModified failed for slice $i")
+          .write.mode("overwrite").parquet(s"$tmp/work_$i")
       }
       e.unpersist()
-      new File(tmp, "_SUCCESS").createNewFile()
-      graft.LocalFs.publishDir(tmp, new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+      // ascending mtimes pin the file source's replay order (paths
+      // s00..s03 agree, as a tiebreak within one mtime tick)
+      graft.LocalFs.promoteOrdered(tmp,
+        (0 until TtlSlices).map(i => s"work_$i" -> f"s$i%02d.parquet"))
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** `cdc_snapshot_ttl` checked key: the TTL-EVICTING streaming upsert
@@ -1023,11 +990,9 @@ object Streams {
     */
   private def landedEventsFlush(spark: SparkSession, sfDir: String): String = {
     import java.io.File
-    val landing = graft.LocalFs.cachePath(graft.LocalFs.Names.CdcFlushCache,
-      sfDir, new File(s"$sfDir/events.parquet"))
-    if (!new File(s"$landing/_SUCCESS").exists()) {
-      val tmp = new File(s"$landing.tmp.${spark.sparkContext.applicationId}")
-      tmp.mkdirs()
+    graft.LocalFs.landOnce(spark.sparkContext.applicationId,
+      graft.LocalFs.Names.CdcFlushCache, sfDir,
+      new File(s"$sfDir/events.parquet")) { tmp =>
       val e = graft.Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value", "props")
       val bounds = e.agg(max(col("ts"))).head()
@@ -1040,29 +1005,15 @@ object Streams {
         new java.sql.Timestamp(maxTs.getTime + 365L * 24 * 3600 * 1000),
         -1L, "sentinel", 0.0, null.asInstanceOf[String]))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      val base = System.currentTimeMillis()
-      Seq(e -> 0, sentinel -> 1).foreach { case (df, i) =>
-        val work = new File(tmp, s"work_$i")
-        df.coalesce(1).write.mode("overwrite").parquet(work.getPath)
-        val part = Option(work.listFiles).getOrElse(Array.empty[File])
-          .find(f => f.getName.startsWith("part-") &&
-            f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error(s"no part file written for flush file $i"))
-        val dest = new File(tmp, f"e$i%02d.parquet")
-        require(part.renameTo(dest), s"rename failed for flush file $i")
-        graft.LocalFs.deleteRecursively(work)
-        // ascending mtimes pin the paced replay order: corpus first,
-        // sentinel second — a sentinel landing FIRST would stamp the
-        // watermark past the corpus and drop every real row as late
-        require(dest.setLastModified(base + i * 2000L),
-          s"setLastModified failed for flush file $i")
+      Seq(e, sentinel).zipWithIndex.foreach { case (df, i) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/work_$i")
       }
-      new File(tmp, "_SUCCESS").createNewFile()
-      graft.LocalFs.publishDir(tmp, new File(landing),
-        destValid = () => new File(s"$landing/_SUCCESS").exists())
+      // ascending mtimes pin the paced replay order: corpus first,
+      // sentinel second — a sentinel landing FIRST would stamp the
+      // watermark past the corpus and drop every real row as late
+      graft.LocalFs.promoteOrdered(tmp,
+        Seq(0, 1).map(i => s"work_$i" -> f"e$i%02d.parquet"))
     }
-    new File(landing).setLastModified(System.currentTimeMillis())
-    landing
   }
 
   /** `sessionize_stream` checked key: the STREAMING gap sessionization

@@ -149,35 +149,180 @@ class LocalFsSpec extends AnyFunSuite {
     assert(Files.readString(new File(dest, "data").toPath) == "winner")
   }
 
-  test("sink allocation touches its own dir so a concurrent sweep spares a live session") {
-    // the sink-GC race: a session OLDER than the sweep TTL whose sink key
-    // re-executes late has a stale-looking dir mtime exactly when a
-    // concurrent session allocates (and sweeps). sessionSinkPath defuses
-    // it by touching the dir at every allocation/reuse — age is measured
-    // from last USE, not first creation.
+  test("sessionDir touches its own dir so a concurrent sweep spares a live session") {
+    // the session-dir GC race: a session OLDER than the sweep TTL whose
+    // sink key re-executes late has a stale-looking dir mtime exactly when
+    // a concurrent session allocates (and sweeps). sessionDir defuses it
+    // by touching the dir at every allocation/reuse — age is measured from
+    // last USE, not first creation.
     val prefix = s"graft_fs_sink_${System.nanoTime()}_"
     val parent = new File(sys.props("java.io.tmpdir"))
     try {
-      val mine = new File(ops.Sources.sessionSinkPath("app-live", prefix))
-      assert(mine.exists())
+      val mine = LocalFs.sessionDir(prefix, "app-live")
+      assert(mine.isDirectory)
       // an hour of session idling: the dir's mtime goes stale
       mine.setLastModified(System.currentTimeMillis() - 2L * 3600 * 1000)
       // late re-execution of the sink key in the SAME session refreshes it
-      assert(ops.Sources.sessionSinkPath("app-live", prefix) == mine.getPath)
+      assert(LocalFs.sessionDir(prefix, "app-live") == mine)
       assert(mine.lastModified() > System.currentTimeMillis() - 60 * 1000)
       // so a concurrent session's allocation sweep must spare it...
-      ops.Sources.sessionSinkPath("app-other", prefix)
-      assert(mine.exists(), "live session's sink dir was swept")
+      LocalFs.sessionDir(prefix, "app-other")
+      assert(mine.exists(), "live session's dir was swept")
       // ...while a genuinely dead sibling (stale mtime, never re-touched)
       // is collected by the same sweep
       val dead = new File(parent, prefix + "app-dead")
       dead.mkdirs()
       dead.setLastModified(System.currentTimeMillis() - 2L * 3600 * 1000)
-      ops.Sources.sessionSinkPath("app-other2", prefix)
-      assert(!dead.exists(), "dead session's sink dir survived the sweep")
+      LocalFs.sessionDir(prefix, "app-other2")
+      assert(!dead.exists(), "dead session's dir survived the sweep")
+      // workDir hands out a FRESH dir per call within one session
+      val w1 = LocalFs.workDir(prefix, "app-live")
+      val w2 = LocalFs.workDir(prefix, "app-live")
+      assert(w1 != w2 && w1.isDirectory && w2.isDirectory)
+      assert(w1.getName.startsWith(prefix + "app-live_"))
     } finally {
       parent.listFiles().filter(_.getName.startsWith(prefix))
         .foreach(LocalFs.deleteRecursively)
     }
+  }
+
+  /** A throwaway source + landing prefix under the tmpdir, removed after. */
+  private def withLanding(body: (String, String, File) => Unit): Unit = {
+    val sfDir = mkTmp()
+    val src = new File(sfDir, "t.parquet")
+    Files.writeString(src.toPath, "rows")
+    val prefix = s"graft_fs_land_${System.nanoTime()}_"
+    try body(prefix, sfDir.getPath, src)
+    finally {
+      new File(sys.props("java.io.tmpdir")).listFiles()
+        .filter(_.getName.startsWith(prefix))
+        .foreach(LocalFs.deleteRecursively)
+      LocalFs.deleteRecursively(sfDir)
+    }
+  }
+
+  test("landOnce builds once, marks and publishes, and refreshes the mtime on reuse") {
+    withLanding { (prefix, sfDir, src) =>
+      var builds = 0
+      def land(): String = LocalFs.landOnce("app-a", prefix, sfDir, src) {
+        tmp =>
+          builds += 1
+          tmp.mkdirs()
+          Files.writeString(new File(tmp, "data").toPath, "v")
+      }
+      val path = land()
+      val dest = new File(path)
+      assert(path == LocalFs.cachePath(prefix, sfDir, src))
+      assert(builds == 1)
+      assert(new File(dest, "data").exists())
+      assert(new File(dest, "_SUCCESS").exists(), "landing published unmarked")
+      assert(!LocalFs.stagingDir(dest, "app-a").exists(),
+        "staging dir survived the publish")
+      // an idle landing's mtime goes stale; the next use must not rebuild,
+      // and must refresh it
+      dest.setLastModified(System.currentTimeMillis() - 2L * 3600 * 1000)
+      assert(land() == path)
+      assert(builds == 1, "second landOnce call rebuilt a marked landing")
+      assert(dest.lastModified() > System.currentTimeMillis() - 60 * 1000,
+        "reuse did not refresh the landing's mtime")
+    }
+  }
+
+  test("landOnce rebuilds a dest that exists without its marker") {
+    withLanding { (prefix, sfDir, src) =>
+      // a crashed or pre-marker writer's dir at the stable path
+      val dest = new File(LocalFs.cachePath(prefix, sfDir, src))
+      dest.mkdirs()
+      Files.writeString(new File(dest, "partial").toPath, "junk")
+      var builds = 0
+      LocalFs.landOnce("app-a", prefix, sfDir, src) { tmp =>
+        builds += 1
+        tmp.mkdirs()
+        Files.writeString(new File(tmp, "data").toPath, "good")
+      }
+      assert(builds == 1, "marker-less dest was served instead of rebuilt")
+      assert(!new File(dest, "partial").exists())
+      assert(Files.readString(new File(dest, "data").toPath) == "good")
+      assert(new File(dest, "_SUCCESS").exists())
+    }
+  }
+
+  test("a throwing landOnce build publishes nothing and the next call builds cleanly") {
+    withLanding { (prefix, sfDir, src) =>
+      val dest = new File(LocalFs.cachePath(prefix, sfDir, src))
+      val boom = intercept[IllegalStateException] {
+        LocalFs.landOnce("app-a", prefix, sfDir, src) { tmp =>
+          tmp.mkdirs()
+          Files.writeString(new File(tmp, "half").toPath, "written")
+          throw new IllegalStateException("build died")
+        }
+      }
+      assert(boom.getMessage == "build died")
+      assert(!dest.exists(), "a failed build published a landing")
+      assert(!LocalFs.stagingDir(dest, "app-a").exists(),
+        "a failed build left its staging dir behind")
+      LocalFs.landOnce("app-a", prefix, sfDir, src) { tmp =>
+        // a clean staging dir: nothing of the failed attempt leaks in
+        assert(!new File(tmp, "half").exists())
+        tmp.mkdirs()
+        Files.writeString(new File(tmp, "data").toPath, "good")
+      }
+      assert(new File(dest, "_SUCCESS").exists())
+      assert(!new File(dest, "half").exists())
+      assert(new File(dest, "data").exists())
+    }
+  }
+
+  test("promoteOrdered renames each work dir's part file and stamps ascending mtimes") {
+    val root = mkTmp()
+    try {
+      // work dirs written in REVERSE order: the replay order must come
+      // from the promotion order, not from write time
+      Seq("c", "b", "a").foreach { n =>
+        val w = new File(root, s"work_$n")
+        w.mkdirs()
+        Files.writeString(new File(w, s"part-00000-$n.snappy.parquet").toPath, n)
+        Files.writeString(new File(w, "_SUCCESS").toPath, "")
+      }
+      LocalFs.promoteOrdered(root, Seq("a", "b", "c").zipWithIndex.map {
+        case (n, i) => s"work_$n" -> f"out/f$i%02d_$n.parquet"
+      })
+      val out = Seq("a", "b", "c").zipWithIndex
+        .map { case (n, i) => new File(root, f"out/f$i%02d_$n.parquet") }
+      assert(out.map(f => Files.readString(f.toPath)) == Seq("a", "b", "c"))
+      assert(out.map(_.lastModified()).sliding(2).forall(p => p(0) < p(1)),
+        "replay files' mtimes are not ascending in promotion order")
+      assert(!root.listFiles().exists(_.getName.startsWith("work_")),
+        "work dirs survived the promotion")
+      // a work dir without a part file fails loudly
+      new File(root, "work_empty").mkdirs()
+      intercept[RuntimeException] {
+        LocalFs.promoteOrdered(root, Seq("work_empty" -> "out/x.parquet"))
+      }
+    } finally LocalFs.deleteRecursively(root)
+  }
+
+  test("the tmpdir protocol is spelled out only in LocalFs") {
+    // every landing, session dir and replay promotion goes through
+    // LocalFs; a second hand-written copy of the protocol would drift
+    // (different marker checks, missing touches, no repair) — so no other
+    // main source may name the tmpdir, the marker, the publish/sweep
+    // primitives or a `.tmp.` staging name
+    val banned = Seq("java.io.tmpdir", "_SUCCESS", "publishDir(",
+      "sweepAged(", ".tmp.")
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (no $root)")
+    def sources(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val all = sources(root)
+    assert(all.exists(_.getName == "LocalFs.scala"))
+    val hits = for {
+      f <- all if f.getName != "LocalFs.scala"
+      (line, n) <- Files.readAllLines(f.toPath).toArray.toSeq
+        .map(_.toString).zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"${f.getPath}:${n + 1} contains '$b'"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -186,4 +186,29 @@ class MLSpec extends SparkSpec {
         "re-saved cv model predictions differ (same data, same seeds)")
     } finally LocalFs.deleteRecursively(dir.toFile)
   }
+
+  test("ivf quantizer dir without its marker is rebuilt, not loaded") {
+    // the quantizer cache is a LocalFs.landOnce landing: its validity is
+    // the marker, not the directory's existence. A dir at the stable path
+    // holding no marker (a crashed or pre-marker writer's) must be
+    // replaced by a fresh fit — KMeansModel.load on it would fail or
+    // serve whatever partial model it holds.
+    val emb = new java.io.File(s"$sf/embeddings.parquet")
+    val dest = new java.io.File(LocalFs.cachePath(
+      LocalFs.Names.IvfQuantizerCache, sf, emb))
+    LocalFs.deleteRecursively(dest)
+    dest.mkdirs()
+    java.nio.file.Files.writeString(new java.io.File(dest, "partial").toPath,
+      "not a model")
+    val hits = graft.ops.Similarity.simSearchIvf(spark, sf).collect()
+    assert(hits.nonEmpty)
+    assert(new java.io.File(dest, "_SUCCESS").exists(),
+      "rebuilt quantizer published without its marker")
+    assert(!new java.io.File(dest, "partial").exists(),
+      "marker-less quantizer dir was not replaced")
+    assert(new java.io.File(dest, "metadata").isDirectory)
+    // and the published model serves the next session's load path
+    assert(graft.ops.Similarity.simSearchIvf(spark, sf).collect()
+      .sameElements(hits))
+  }
 }

@@ -838,7 +838,7 @@ class StreamingSpec extends SparkSpec {
     assert(new File(landing, "_SUCCESS").exists(),
       "aged landing cache was swept by the replay GC")
     // defense in depth is live too: reuse refreshed the landing's mtime
-    // (the sessionSinkPath touch discipline), so even a hypothetical
+    // (LocalFs.landOnce touches on every use), so even a hypothetical
     // overlapping sweeper would see a young directory
     assert(landing.lastModified() > System.currentTimeMillis() - 600L * 1000,
       "landing mtime was not refreshed on reuse")
