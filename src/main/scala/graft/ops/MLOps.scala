@@ -1,11 +1,18 @@
 package graft.ops
 
+import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
-import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.ml.graftbridge.CvBridge
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.tuning.{CrossValidatorModel, ParamGridBuilder}
+import org.apache.spark.mllib.util.MLUtils
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -29,7 +36,10 @@ import graft.Tables
   *  - ParamGridBuilder maxDepth × impurity (`:192-194`)
   *  - CrossValidator 3-fold (`:217-221`; "12 models" =
   *    3 folds × 2 depth × 2 impurity,
-  *    `/root/reference/RandomeForestAnalysisOnUSElectionPrediction.txt:189`)
+  *    `/root/reference/RandomeForestAnalysisOnUSElectionPrediction.txt:189`):
+  *    the folds come from `MLUtils.kFold` with CrossValidator's seed, and
+  *    the per-ParamMap metrics are pinned (MLSpec) to a stock
+  *    `CrossValidator` fit on the same slice ([[selectForest]])
   *  - fit → transform → evaluate end-to-end (`:237,253,268-270`)
   *
   * Scale notes: indexer fit = one distinct-count aggregate; RF induction is
@@ -42,8 +52,15 @@ import graft.Tables
   */
 object MLOps {
 
-  private val SplitSeed = 754L // /root/reference/MarchineLearningAlgorithm.txt:91
+  private[graft] val SplitSeed = 754L // /root/reference/MarchineLearningAlgorithm.txt:91
   private val RfSeed = 1234L   // /root/reference/MarchineLearningAlgorithm.txt:130
+
+  /** The reference's CV shape: 3 folds over maxDepth × impurity
+    * (`/root/reference/MarchineLearningAlgorithm.txt:192-194,217-221`).
+    */
+  private[graft] val NumFolds = 3
+  private val MaxDepths = Array(3, 4)
+  private val Impurities = Array("entropy", "gini")
 
   /** Deterministic row cap for cross-validation (model selection only). */
   private val cvCap = 20000
@@ -103,11 +120,11 @@ object MLOps {
     .setFeaturesCol("features").setLabelCol("label_idx")
     .setSeed(RfSeed).setMaxDepth(maxDepth).setNumTrees(10)
 
-  private def evaluator = new MulticlassClassificationEvaluator()
+  private[graft] def evaluator = new MulticlassClassificationEvaluator()
     .setLabelCol("label_idx").setPredictionCol("prediction")
     .setMetricName("accuracy")
 
-  private def fullPipeline(maxDepth: Int = 4) = new Pipeline()
+  private[graft] def fullPipeline(maxDepth: Int = 4) = new Pipeline()
     .setStages(Array(labelIndexer, assembler, rf(maxDepth)))
 
   // ------------------------------------------------------------- queries ----
@@ -256,59 +273,156 @@ object MLOps {
     */
   def paramGrid(spark: SparkSession, sfDir: String): DataFrame = {
     val rfEst = rf()
-    val grid = new ParamGridBuilder()
-      .addGrid(rfEst.maxDepth, Array(3, 4))
-      .addGrid(rfEst.impurity, Array("entropy", "gini"))
-      .build()
-    val rows = grid.toSeq.map { pm =>
-      (pm(rfEst.maxDepth), pm(rfEst.impurity))
-    }
-    spark.createDataFrame(rows).toDF("max_depth", "impurity")
+    spark.createDataFrame(gridRows(rfEst, forestGrid(rfEst)))
+      .toDF("max_depth", "impurity")
       .orderBy(col("max_depth"), col("impurity"))
   }
 
-  /** 3-fold CrossValidator over the pipeline, 2×2 grid = 12 model fits
-    * (`/root/reference/MarchineLearningAlgorithm.txt:217-221`;
-    * `/root/reference/RandomeForestAnalysisOnUSElectionPrediction.txt:189`).
-    * Emits avg CV accuracy per ParamMap. Input capped to a deterministic
-    * prefix — selection, not training, so a bounded sample is the
-    * scale-correct choice.
+  /** The maxDepth × impurity grid over `rfEst`'s params. ParamGridBuilder
+    * orders the maps by its hash map's iteration, so read each row back
+    * with [[gridRows]] rather than assuming an order.
     */
-  /** The shared 3-fold × 2×2-grid CV fit — returns the fitted
-    * CrossValidatorModel plus the grid's (maxDepth, impurity) rows in
-    * ParamMap order (aligned with `avgMetrics`). Factored out so the
-    * checked key and the persistence surface run the IDENTICAL seeded
-    * selection.
-    */
-  private[graft] def fitCv(spark: SparkSession, sfDir: String)
-      : (org.apache.spark.ml.tuning.CrossValidatorModel, Seq[(Int, String)]) = {
-    // cache the capped slice: CV materializes 3 fold splits (each persisting
-    // train+validation) from this lineage, then refits the winner on the
-    // full slice — without the cache the parquet+JSON parse reruns each time
-    val data = labeledEvents(spark, sfDir)
-      .filter(col("event_id") < cvCap).persist()
-    val pipe = fullPipeline()
-    val rfStage = pipe.getStages(2).asInstanceOf[RandomForestClassifier]
-    val grid = new ParamGridBuilder()
-      .addGrid(rfStage.maxDepth, Array(3, 4))
-      .addGrid(rfStage.impurity, Array("entropy", "gini"))
+  private[graft] def forestGrid(rfEst: RandomForestClassifier): Array[ParamMap] =
+    new ParamGridBuilder()
+      .addGrid(rfEst.maxDepth, MaxDepths)
+      .addGrid(rfEst.impurity, Impurities)
       .build()
-    val cv = new CrossValidator()
-      .setEstimator(pipe)
-      .setEvaluator(evaluator)
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(3)
-      .setParallelism(8)
-      .setSeed(SplitSeed)
-    val model = cv.fit(data)
-    data.unpersist()
-    (model, grid.toSeq.map(pm =>
-      (pm(rfStage.maxDepth), pm(rfStage.impurity))))
+
+  /** (maxDepth, impurity) of each ParamMap, in `grid` order. */
+  private[graft] def gridRows(rfEst: RandomForestClassifier,
+      grid: Array[ParamMap]): Seq[(Int, String)] =
+    grid.toSeq.map(pm => (pm(rfEst.maxDepth), pm(rfEst.impurity)))
+
+  /** The capped selection slice: the rows with `event_id < cvCap` that
+    * survive cleaning — selection, not training, so a bounded sample is
+    * the scale-correct choice.
+    */
+  private[graft] def cvSlice(spark: SparkSession, sfDir: String): DataFrame =
+    labeledEvents(spark, sfDir).filter(col("event_id") < cvCap)
+
+  /** Run `body` over the persisted [[cvSlice]]: every fold split and the
+    * winner's refit read it, so the parquet + JSON parse runs once.
+    */
+  private def withCvSlice[T](spark: SparkSession, sfDir: String)
+      (body: DataFrame => T): T = {
+    val data = cvSlice(spark, sfDir).persist()
+    try body(data) finally data.unpersist()
   }
 
+  /** One seeded model selection: the pipeline whose RF stage the grid's
+    * ParamMaps address, the evaluator, and the average metric per
+    * ParamMap in grid order.
+    */
+  private[graft] final case class Selection(pipe: Pipeline,
+      rfStage: RandomForestClassifier,
+      eval: MulticlassClassificationEvaluator, grid: Array[ParamMap],
+      avgMetrics: Array[Double]) {
+    def rows: Seq[(Int, String)] = gridRows(rfStage, grid)
+  }
+
+  /** Driver threads for [[selectForest]]: one per fold × ParamMap fit, so
+    * all of them are in flight at once. Long-lived, so the fits' driver
+    * CPU stays on live threads; every thread only runs its own fit and
+    * never waits on another task, and calls beyond the width queue.
+    */
+  private lazy val fitPool: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(
+      NumFolds * MaxDepths.length * Impurities.length,
+      new java.util.concurrent.ThreadFactory {
+        private val n = new java.util.concurrent.atomic.AtomicInteger()
+        def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"graft-cv-fit-${n.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
+
+  /** 3-fold cross-validation of the pipeline over [[forestGrid]], giving
+    * the per-ParamMap metrics `CrossValidator.fit` gives on `data`:
+    *  - the same split (`MLUtils.kFold` over `data.rdd` with [[SplitSeed]],
+    *    so fold rows and partitioning are CrossValidator's);
+    *  - per fold, the label indexer is fit ONCE on the training frame and
+    *    both frames are featurized and cached once, where the pipeline
+    *    fit inside CrossValidator refits the indexer for every ParamMap
+    *    (the fold-local fit matters: one indexer over the whole slice
+    *    changes the metrics);
+    *  - all folds × ParamMaps fits are submitted together on [[fitPool]],
+    *    each carrying the caller's local properties (job group, session);
+    *  - `avgMetrics` = per-ParamMap `sum / NumFolds` in fold order,
+    *    CrossValidator's arithmetic.
+    * A failed fit rethrows naming the key, fold and ParamMap; the fold
+    * caches are released on every path. No best-model refit: [[fitCv]]
+    * does that for the callers that need the model.
+    */
+  private[graft] def selectForest(spark: SparkSession,
+      data: DataFrame): Selection = {
+    val pipe = fullPipeline()
+    val rfStage = pipe.getStages(2).asInstanceOf[RandomForestClassifier]
+    val grid = forestGrid(rfStage)
+    val eval = evaluator
+    val caches = mutable.ArrayBuffer.empty[DataFrame]
+    def failed(what: String, e: Throwable) =
+      new IllegalStateException(s"ml_cross_validator: $what failed: $e", e)
+    try {
+      val folds = MLUtils.kFold(data.rdd, NumFolds, SplitSeed).zipWithIndex
+        .map { case ((train, valid), fold) =>
+          val trainDf = spark.createDataFrame(train, data.schema)
+          val indexer = try labelIndexer.fit(trainDf) catch {
+            case e: Exception => throw failed(s"fold $fold label indexer fit", e)
+          }
+          def featurize(df: DataFrame): DataFrame = {
+            val out = assembler.transform(indexer.transform(df)).persist()
+            caches += out
+            out
+          }
+          (featurize(trainDf),
+            featurize(spark.createDataFrame(valid, data.schema)))
+        }
+      val session = spark.asInstanceOf[classic.SparkSession]
+      val fits = for ((train, valid) <- folds; pm <- grid) yield
+        SQLExecution.withThreadLocalCaptured(session, fitPool) {
+          eval.evaluate(rfStage.fit(train, pm).transform(valid, pm))
+        }
+      // join every fit, failed or not, before the caches go
+      val metrics = fits.map(f => Try(f.join())).zipWithIndex.map {
+        case (Success(m), _) => m
+        case (Failure(e), i) =>
+          val pm = grid(i % grid.length).toSeq
+            .map(p => s"${p.param.name}=${p.value}").mkString("{", ", ", "}")
+          throw failed(s"fold ${i / grid.length} fit with $pm",
+            Option(e.getCause).getOrElse(e))
+      }
+      Selection(pipe, rfStage, eval, grid,
+        metrics.grouped(grid.length).toArray.transpose.map(_.sum / NumFolds))
+    } finally caches.foreach(_.unpersist())
+  }
+
+  /** [[selectForest]] plus CrossValidator's refit of the winning ParamMap
+    * (first best on ties) on the whole slice, wrapped in the
+    * CrossValidatorModel that `CrossValidator.fit` returns (estimator,
+    * evaluator, ParamMaps, numFolds and seed set) — the artifact
+    * [[saveCvModel]] publishes. Also returns the grid's (maxDepth,
+    * impurity) rows aligned with `avgMetrics`.
+    */
+  private[graft] def fitCv(spark: SparkSession, sfDir: String)
+      : (CrossValidatorModel, Seq[(Int, String)]) =
+    withCvSlice(spark, sfDir) { data =>
+      val s = selectForest(spark, data)
+      val best = s.avgMetrics.zipWithIndex.maxBy(_._1)._2
+      val model = CvBridge.cvModel(s.pipe, s.eval, s.grid, NumFolds,
+        SplitSeed, s.pipe.fit(data, s.grid(best)), s.avgMetrics)
+      (model, s.rows)
+    }
+
+  /** 3-fold cross-validation over the pipeline, 2×2 grid = 12 model fits
+    * (`/root/reference/MarchineLearningAlgorithm.txt:217-221`;
+    * `/root/reference/RandomeForestAnalysisOnUSElectionPrediction.txt:189`).
+    * Emits avg CV accuracy per ParamMap from [[selectForest]] over the
+    * capped [[cvSlice]]; the key reads no model, so nothing is refit.
+    */
   def crossValidator(spark: SparkSession, sfDir: String): DataFrame = {
-    val (model, gridRows) = fitCv(spark, sfDir)
-    val rows = gridRows.zip(model.avgMetrics.toSeq).map { case ((d, i), m) =>
+    val s = withCvSlice(spark, sfDir)(selectForest(spark, _))
+    val rows = s.rows.zip(s.avgMetrics.toSeq).map { case ((d, i), m) =>
       (d, i, m)
     }
     spark.createDataFrame(rows)
@@ -334,23 +448,6 @@ object MLOps {
     out
   }
 
-  /** EP3 composed class-rebalance pipeline, the reference's third transcript
-    * end-to-end (`/root/reference/A related code.txt:57-212`): filter to the
-    * two outcome classes → minority/majority count ratio → seeded undersample
-    * of the majority → unionAll → multi-column StringIndexer + label indexer →
-    * integer-cast index projection → OneHotEncoder → VectorAssembler over
-    * the one-hot vectors plus index columns (each column once — the
-    * transcript's duplicated inputs at `:139-140` are a bug, per SURVEY §0)
-    * → seeded RF fit on the 80/20 train split → predictions on test.
-    *
-    * Harness mapping: outcome FATAL/RESOLVED → event_type purchase/view;
-    * the four categorical features are derived buckets (hour-of-day,
-    * day-of-week, user decile, k mod 5). Scale notes: the two class counts
-    * and the sample run over a cached pruned projection; `sample` is a
-    * per-partition Bernoulli draw (no shuffle); the union is append-only.
-    * Output (label index, feature indexes, prediction per test row) follows
-    * the reference's final CSV projection (`:196-207`).
-    */
   /** The rebalance pipeline's post-union frame: filtered two-class events,
     * majority undersampled to the minority's expected size, unioned with
     * the minority. Split out (package-private) so the class-balance
@@ -397,6 +494,23 @@ object MLOps {
     balanced
   }
 
+  /** EP3 composed class-rebalance pipeline, the reference's third transcript
+    * end-to-end (`/root/reference/A related code.txt:57-212`): filter to the
+    * two outcome classes → minority/majority count ratio → seeded undersample
+    * of the majority → unionAll → multi-column StringIndexer + label indexer →
+    * integer-cast index projection → OneHotEncoder → VectorAssembler over
+    * the one-hot vectors plus index columns (each column once — the
+    * transcript's duplicated inputs at `:139-140` are a bug, per SURVEY §0)
+    * → seeded RF fit on the 80/20 train split → predictions on test.
+    *
+    * Harness mapping: outcome FATAL/RESOLVED → event_type purchase/view;
+    * the four categorical features are derived buckets (hour-of-day,
+    * day-of-week, user decile, k mod 5). Scale notes: the two class counts
+    * and the sample run over a cached pruned projection; `sample` is a
+    * per-partition Bernoulli draw (no shuffle); the union is append-only.
+    * Output (label index, feature indexes, prediction per test row) follows
+    * the reference's final CSV projection (`:196-207`).
+    */
   def rebalanceFit(spark: SparkSession, sfDir: String): DataFrame = {
     val catCols = Array("hour_cat", "dow_cat", "user_cat", "k_cat")
     val idxCols = catCols.map(_ + "_idx")

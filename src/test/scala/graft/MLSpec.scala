@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
+import org.apache.spark.ml.tuning.CrossValidator
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ops.MLOps
@@ -35,12 +37,82 @@ class MLSpec extends SparkSpec {
     assert(acc >= 0.0 && acc <= 1.0)
   }
 
-  test("cross validator emits one avg metric per grid point, all in [0,1]") {
-    val rows = MLOps.crossValidator(spark, sf).collect()
-    assert(rows.length == 4)
-    assert(rows.forall { r =>
-      val m = r.getDouble(2); m >= 0.0 && m <= 1.0
-    })
+  test("cross validation equals stock CrossValidator: avgMetrics and bestModel") {
+    assert(MLOps.crossValidator(spark, sf).collect().length == 4)
+    // the oracle: a stock CrossValidator over the same pipeline, grid,
+    // fold count and seed, fit on the same capped slice
+    val data = MLOps.cvSlice(spark, sf).persist()
+    try {
+      val sel = MLOps.selectForest(spark, data)
+      val stock = new CrossValidator()
+        .setEstimator(sel.pipe).setEvaluator(sel.eval)
+        .setEstimatorParamMaps(sel.grid)
+        .setNumFolds(MLOps.NumFolds).setSeed(MLOps.SplitSeed)
+        .setParallelism(4)
+        .fit(data)
+      assert(sel.avgMetrics.toSeq == stock.avgMetrics.toSeq,
+        s"${sel.avgMetrics.toSeq} != stock ${stock.avgMetrics.toSeq}")
+      def scored(m: org.apache.spark.ml.Model[_]) =
+        m.transform(MLOps.labeledEvents(spark, sf))
+          .select("event_id", "label_idx", "prediction")
+          .orderBy("event_id").collect()
+      val (model, _) = MLOps.fitCv(spark, sf)
+      val direct = scored(model.bestModel)
+      assert(direct.nonEmpty)
+      assert(direct.sameElements(scored(stock.bestModel)),
+        "fitCv's bestModel predicts differently from the stock bestModel")
+    } finally data.unpersist()
+  }
+
+  test("cross validation leaves the persisted RDDs as it found them, on failure too") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    MLOps.crossValidator(spark, sf).collect()
+    assert(sc.getPersistentRDDs.keySet == before)
+    // one null feature fails every fit (the assembler rejects it): the
+    // rethrow names the key, the fold and the ParamMap, and the fold
+    // caches still go
+    val firstId = MLOps.cvSlice(spark, sf).agg(min("event_id")).first().get(0)
+    val bad = MLOps.cvSlice(spark, sf).withColumn("value",
+      when(col("event_id") === firstId, lit(null)).otherwise(col("value")))
+    val e = intercept[IllegalStateException](MLOps.selectForest(spark, bad))
+    assert(e.getMessage.contains("ml_cross_validator: fold 0 fit with {"),
+      e.getMessage)
+    assert(e.getMessage.contains("maxDepth="), e.getMessage)
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
+
+  test("cross validation jobs carry the caller's job group, call after call") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse("<none>"))
+    }
+    // the groups of every job started since the last call: a fence job
+    // under its own group drains the in-order listener queue up to here
+    def drained(): Seq[String] = {
+      val fence = s"fence-${java.util.UUID.randomUUID()}"
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      Iterator.continually(
+        groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .map(g => { assert(g != null, "fence job never reached the listener"); g })
+        .takeWhile(_ != fence).toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      drained()
+      for (group <- Seq("cv-call-a", "cv-call-b")) {
+        sc.setJobGroup(group, group)
+        try MLOps.crossValidator(spark, sf).collect() finally sc.clearJobGroup()
+        val seen = drained()
+        assert(seen.nonEmpty)
+        assert(seen.forall(_ == group), s"$group: ${seen.distinct}")
+      }
+    } finally sc.removeSparkListener(listener)
   }
 
   test("pipeline fit-then-transform == eager stagewise fit/transform") {
