@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every `SparkEntry.queries` key at the given scale
   * factor and prints ONE JSON line the driver grades against BASELINE.md.
@@ -230,23 +229,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val restSec = sys.env.getOrElse("SPARK_GRAFT_REST_SEC", "60").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     require(reps >= 1, s"SPARK_GRAFT_REPS must be >= 1, got $reps")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC is load-bearing, not cosmetic: Tables.normalizeTs's
-      // NTZ→TIMESTAMP cast is instant-preserving only under a UTC session
-      // zone, so a non-UTC host would bench temporal keys over shifted
-      // instants — different rows than the Verify-graded plan (ADVICE r8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // production config: native SQL functions registered here too
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.builder(cpus).getOrCreate()
     // ERROR, not WARN (r19 verdict #1b): the driver grades the LAST
     // ~2000 chars of stdout, and benign per-execution WARNs (WindowExec
     // on the pinned ≤256-row global frames, CacheManager) flooded the

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Boundaries
 import graft.Tables.table
 
 /** The composed training-data curation pipeline — the end-to-end flow the
@@ -291,151 +292,6 @@ object Curation {
       table(spark, sfDir, "embeddings"))
       .orderBy(col("shard_id"))
 
-  /** Tracks the localCheckpoint RDDs a composed-pipeline run allocates,
-    * so they can be released after the catalog-managed result
-    * materializes (checkpoint blocks are invisible to clearCache — the
-    * clusterLabels discipline).
-    *
-    * RELIABLE MODE (`reliable = true` — the executable form of the r14
-    * caveat): stage boundaries become `checkpoint()` files under the
-    * session's checkpoint dir instead of executor-memory blocks, so a
-    * lost executor RECOMPUTES from durable leaves instead of failing —
-    * the cluster deployment shape. Durability trades write cost (each
-    * boundary persists to the checkpoint filesystem) and `release()`
-    * is a no-op for reliable boundaries: the files outlive the query
-    * by design (production reclaims them at compaction, exactly like
-    * intermediate tables). Gated per-session by
-    * `graft.pipeline.reliableCheckpoint` via [[scopeFor]]; suite-run
-    * under a temp checkpoint dir (mode equality pinned).
-    */
-  private final class ChkScope(reliable: Boolean) {
-    private val rdds = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def chk(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = true)
-      else {
-        val out = df.localCheckpoint(eager = true)
-        out.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            rdds.synchronized { rdds += lr.rdd }
-        }
-        // hand the planner the boundary's TRUE materialized size (guide
-        // §3.1/§7.2): the origin plan's ESTIMATE compounds through the
-        // composed chains (observed 10^20 bytes on ~100 KB frames), so
-        // without this every downstream join against a boundary is
-        // planned sort-merge and only rescued by AQE after both map
-        // stages ran. Exact size keeps the decision scale-correct: a
-        // genuinely large boundary still reports large and sort-merges.
-        org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(out)
-      }
-    def release(): Unit =
-      rdds.synchronized { rdds.foreach(_.unpersist(blocking = false)) }
-  }
-
-  /** Fixed 4-wide daemon pool for [[runAll]] / [[writeAll]] — the
-    * guide's "2-3 jobs in flight is plenty" sized one up for the
-    * three-modality landing builds plus one straggler; jobs beyond the
-    * width queue in submission order. Driver-side threads only (each
-    * just blocks on a job); executor-side parallelism is unchanged.
-    */
-  private lazy val boundaryPool: scala.concurrent.ExecutionContext =
-    scala.concurrent.ExecutionContext.fromExecutor(
-      java.util.concurrent.Executors.newFixedThreadPool(4,
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger()
-          def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"graft-boundary-${n.incrementAndGet()}")
-            t.setDaemon(true)
-            t
-          }
-        }))
-
-  /** Await ceiling for one concurrent boundary/write group — generous
-    * (no graded group takes minutes, let alone hours) but FINITE, so an
-    * executor-side hang surfaces as a named rethrow on the submitting
-    * stack instead of silently wedging a pool thread (r20 verdict #7).
-    */
-  private[graft] val boundaryAwaitTimeout: scala.concurrent.duration
-    .FiniteDuration = scala.concurrent.duration.Duration(2,
-      java.util.concurrent.TimeUnit.HOURS)
-
-  /** True when the calling thread IS a [[boundaryPool]] worker — a
-    * nested parallel group must then run serially: all 4 pool threads
-    * blocked awaiting work only the same pool can run is a deadlock
-    * (ADVICE r20; no current call site nests, this is the guard).
-    */
-  private def onBoundaryPool: Boolean =
-    Thread.currentThread().getName.startsWith("graft-boundary-")
-
-  /** Run several INDEPENDENT driver-side jobs CONCURRENTLY (optimization
-    * guide §2.6 — actions are only sequential because the driver calls
-    * them sequentially; submitting independent jobs from a small pool
-    * lets the next job's tasks back-fill executors idled by the current
-    * job's tail, and Spark's FIFO scheduler gives the earlier job
-    * resources first). Callers own the independence claim — no thunk
-    * may read state another writes. Nested calls from a pool thread run
-    * serially in Seq order ([[onBoundaryPool]]); the await is bounded by
-    * `timeout` and rethrows naming `label`.
-    */
-  private[graft] def runAll(jobs: Seq[() => Unit],
-      label: String = "boundary group",
-      timeout: scala.concurrent.duration.FiniteDuration =
-        boundaryAwaitTimeout): Unit =
-    if (onBoundaryPool || jobs.lengthCompare(2) < 0)
-      jobs.foreach(_())
-    else {
-      import scala.concurrent.{Await, Future}
-      implicit val ec = boundaryPool
-      try Await.result(Future.sequence(jobs.map(j => Future(j()))),
-        timeout)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new java.util.concurrent.TimeoutException(
-            s"$label (${jobs.length} jobs) did not complete within " +
-              s"$timeout — likely an executor-side hang in one job")
-      }
-    }
-
-  /** Write several independent (name → frame) parquet outputs under
-    * `base` concurrently via [[runAll]]: each write is its own small
-    * job. Distinct subdirectories, so the writes cannot interfere.
-    */
-  private[graft] def writeAll(parts: Seq[(String, DataFrame)],
-      base: String): Unit =
-    runAll(parts.map { case (name, df) =>
-      () => df.write.mode("overwrite").parquet(s"$base/$name")
-    }, label = s"writeAll(${parts.map(_._1).mkString(",")})")
-
-  /** Session conf key selecting reliable stage boundaries for every
-    * composed pipeline in this object (default false = localCheckpoint,
-    * the single-JVM harness shape).
-    */
-  private[graft] val ReliableChkConf = "graft.pipeline.reliableCheckpoint"
-
-  /** Strict true/false conf parse (the [[scopeFor]] discipline). */
-  private def boolConf(spark: SparkSession, key: String,
-      default: Boolean): Boolean =
-    spark.conf.getOption(key) match {
-      case None => default
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"$key must be 'true' or 'false', got '$v'")
-    }
-
-  private def scopeFor(spark: SparkSession): ChkScope = {
-    // explicit true/false parse (ADVICE r16): a mistyped value ('1',
-    // 'yes') fails with a message naming the conf key, not a bare
-    // toBoolean "For input string" — a silently-defaulted durability
-    // mode is the one misconfiguration this gate exists to prevent
-    val reliable = boolConf(spark, ReliableChkConf, default = false)
-    if (reliable) require(
-      spark.sparkContext.getCheckpointDir.isDefined,
-      s"$ReliableChkConf=true requires sparkContext.setCheckpointDir " +
-        "(the durable stage-boundary filesystem)")
-    new ChkScope(reliable)
-  }
-
   /** The checkpointed stage boundaries of one full-pipeline run — the
     * frames the incremental composition reads its corpus-side states
     * from (each is the INPUT population of the stage whose state it
@@ -459,24 +315,9 @@ object Curation {
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val benchmark = docs0
       .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val scope = scopeFor(docs0.sparkSession)
-    val manifest = runPipeline(corpus, benchmark, embeddings, scope)
-      .manifest.persist()
-    // materialize the catalog-managed result BEFORE dropping the
-    // checkpoints it was computed from, then release every block this
-    // operator allocated outside the catalog (the clusterLabels
-    // discipline — clearCache alone cannot see checkpoint blocks).
-    // RELIABLE-MODE CAVEAT (ADVICE r14): after the release below, the
-    // manifest's only copies are its own cache blocks — if those are
-    // later evicted/lost, recomputation walks back to LogicalRDD leaves
-    // whose data is gone and the job FAILS rather than recomputes.
-    // Acceptable in the single-JVM harness (blocks outlive the query);
-    // a cluster deployment must make the boundary durable first — write
-    // the manifest to a table, or use reliable checkpoint() instead of
-    // localCheckpoint — before releasing the stage blocks.
-    manifest.queryExecution.toRdd.count()
-    scope.release()
-    manifest
+    Boundaries.scoped(docs0.sparkSession) { scope =>
+      scope.keep(runPipeline(corpus, benchmark, embeddings, scope).manifest)
+    }
   }
 
   /** The manifest pricing columns of the flagship tail —
@@ -503,8 +344,8 @@ object Curation {
       size(split(col("text"), " ")).cast("long").as("nt"))
 
   /** The stage chain shared by the batch and incremental flagships.
-    * LINEAGE-TRUNCATED STAGE BOUNDARIES: each macro-stage output is
-    * localCheckpoint'ed (eager), so every stage is planned over a flat
+    * LINEAGE-TRUNCATED STAGE BOUNDARIES: each macro-stage output is an
+    * eager [[Boundaries]] boundary, so every stage is planned over a flat
     * LogicalRDD leaf instead of the whole upstream lineage. This is
     * load-bearing twice over, both measured (r14): (a) without ANY
     * barrier, Catalyst inlines the producers' expression trees into
@@ -515,11 +356,11 @@ object Curation {
     * checkpointed form reads ~17 s doing identical work. A real 100 TB
     * pipeline materializes between macro-stages for the same reasons
     * (re-deriving a stage per consumer = re-scanning the corpus); on a
-    * cluster the same boundaries become reliable checkpoints or
-    * intermediate tables (the clusterLabels reliable-mode discipline).
+    * cluster the same boundaries become reliable checkpoints
+    * ([[Boundaries]] reliable mode) or intermediate tables.
     */
   private def runPipeline(corpus: DataFrame, benchmark: DataFrame,
-      embeddings: DataFrame, scope: ChkScope,
+      embeddings: DataFrame, scope: Boundaries.Scope,
       props: DataFrame => DataFrame = defaultManifestProps): PipelineRun = {
     import scope.chk
     // 2. URL surface: deny-list → URL dedup → per-host cap
@@ -754,7 +595,7 @@ object Curation {
 
   private def checkMergeDisjointness(st: PipelineStates,
       br: BatchRun): Unit = {
-    if (boolConf(br.unblocked.sparkSession, CheckDisjointConf,
+    if (Boundaries.boolConf(br.unblocked.sparkSession, CheckDisjointConf,
         default = false)) {
       val batchIds = br.unblocked.select(col("doc_id"))
         .unionByName(br.stripped.select(col("doc_id"))).distinct()
@@ -783,7 +624,7 @@ object Curation {
     */
   private def mergeStatesBoundary(st: PipelineStates, br: BatchRun,
       embeddings: DataFrame, cursor: DataFrame,
-      scope: ChkScope): PipelineStates = {
+      scope: Boundaries.Scope): PipelineStates = {
     checkMergeDisjointness(st, br)
     val d = batchCensusesOf(br, embeddings)
     materializeStates(scope,
@@ -929,7 +770,7 @@ object Curation {
     * (plain materialization) or two (state + batch delta — the day-2
     * merge; the additive laws apply either way).
     */
-  private def materializeStates(scope: ChkScope, urls: Seq[DataFrame],
+  private def materializeStates(scope: Boundaries.Scope, urls: Seq[DataFrame],
       lines: Seq[DataFrame], spans: Seq[DataFrame],
       members: Seq[DataFrame], cursor: DataFrame): PipelineStates =
     sliceStates(scope.chk(fuseStates(urls, lines, spans, members)), cursor)
@@ -964,7 +805,7 @@ object Curation {
     * (one job whose three probe subplans' independent stages AQE runs
     * concurrently).
     */
-  private def mediaDropBoundary(scope: ChkScope,
+  private def mediaDropBoundary(scope: Boundaries.Scope,
       drops: Seq[DataFrame]): DataFrame =
     scope.chk(drops.reduce(_ unionByName _).distinct())
 
@@ -973,7 +814,7 @@ object Curation {
     * index column, type round-tripped), materialize once, and slice
     * back per modality — one job instead of three.
     */
-  private def materializeBands(scope: ChkScope, video: DataFrame,
+  private def materializeBands(scope: Boundaries.Scope, video: DataFrame,
       audio: DataFrame, image: DataFrame): MediaBands = {
     def tagged(modality: String, idx: Column, df: DataFrame) =
       df.select(lit(modality).as("modality"), col("doc_id"),
@@ -1010,7 +851,7 @@ object Curation {
     */
   private def runBatch(states: PipelineStates, batch: DataFrame,
       benchmark: DataFrame, embeddings: DataFrame,
-      scope: ChkScope): BatchRun = {
+      scope: Boundaries.Scope): BatchRun = {
     import scope.chk
     // 1-2. deny list + frontier screen vs the URL census
     val burls = chk(Web.urlStructured(batch))
@@ -1082,22 +923,15 @@ object Curation {
   }
 
   def corpusPipelineIncrementalOn(corpus: DataFrame, batch: DataFrame,
-      benchmark: DataFrame, embeddings: DataFrame): DataFrame = {
-    val scope = scopeFor(corpus.sparkSession)
-    import scope.chk
-    val run = runPipeline(corpus, benchmark, embeddings, scope)
-    val cman = chk(run.manifest)
-    val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
-      embeddings, scope)
-    val out = cman.withColumn("is_batch", lit(0))
-      .unionByName(br.manifest.withColumn("is_batch", lit(1)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out
-  }
+      benchmark: DataFrame, embeddings: DataFrame): DataFrame =
+    Boundaries.scoped(corpus.sparkSession) { scope =>
+      val run = runPipeline(corpus, benchmark, embeddings, scope)
+      val cman = scope.chk(run.manifest)
+      val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
+        embeddings, scope)
+      scope.keep(cman.withColumn("is_batch", lit(0))
+        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+    }
 
   /** `corpus_pipeline_incremental` checked key: the family parity split
     * over the held-out-adjusted corpus (even doc_id ≥ 20 = shipped
@@ -1116,19 +950,14 @@ object Curation {
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val day0 = landedDay0(spark, sfDir)
-    val scope = scopeFor(spark)
-    val br = runBatch(day0.states,
-      live.filter(col("doc_id") % 2 === 1),
-      docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-      table(spark, sfDir, "embeddings"), scope)
-    val out = day0.manifest.withColumn("is_batch", lit(0))
-      .unionByName(br.manifest.withColumn("is_batch", lit(1)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      val br = runBatch(day0.states,
+        live.filter(col("doc_id") % 2 === 1),
+        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
+        table(spark, sfDir, "embeddings"), scope)
+      scope.keep(day0.manifest.withColumn("is_batch", lit(0))
+        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+    }.orderBy(col("shard_id"))
   }
 
   /** THE DAY-2 COMPOSED FLAGSHIP — the state-UPDATE loop production
@@ -1165,34 +994,33 @@ object Curation {
     */
   def corpusStatesUpdateOn(corpus: DataFrame, batch1: DataFrame,
       batch2: DataFrame, benchmark: DataFrame,
-      embeddings: DataFrame): DataFrame = {
-    val scope = scopeFor(corpus.sparkSession)
-    import scope.chk
-    // day 0: the corpus run and its day-1 states — materialized per
-    // family up front: each census is consumed TWICE (batch-1's probe
-    // and the day-2 merge's union side), so the flat leaves compute it
-    // once; these ARE the maintained state tables of the day loop
-    val run = runPipeline(corpus, benchmark, embeddings, scope)
-    val cman = chk(run.manifest)
-    val st1raw = statesOf(run, cman, embeddings)
-    // the four family censuses are independent reads of the run's
-    // checkpointed stage frames — ONE fused boundary (r21 #2)
-    val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
-      Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
-      Seq(st1raw.semMembers), st1raw.cursor)
-    statesUpdateFromDay0(st1, cman, batch1, batch2, benchmark,
-      embeddings, scope)
-  }
+      embeddings: DataFrame): DataFrame =
+    Boundaries.scoped(corpus.sparkSession) { scope =>
+      // day 0: the corpus run and its day-1 states — materialized per
+      // family up front: each census is consumed TWICE (batch-1's probe
+      // and the day-2 merge's union side), so the flat leaves compute it
+      // once; these ARE the maintained state tables of the day loop
+      val run = runPipeline(corpus, benchmark, embeddings, scope)
+      val cman = scope.chk(run.manifest)
+      val st1raw = statesOf(run, cman, embeddings)
+      // the four family censuses are independent reads of the run's
+      // checkpointed stage frames — ONE fused boundary (r21 #2)
+      val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
+        Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
+        Seq(st1raw.semMembers), st1raw.cursor)
+      statesUpdateFromDay0(st1, cman, batch1, batch2, benchmark,
+        embeddings, scope)
+    }
 
   /** Days 1-2 of the update loop over an EXPLICIT day-0 world — the
     * [[generationCycleFromDay0]] factoring discipline: the
     * self-contained [[corpusStatesUpdateOn]] derivation and the graded
     * landed form share one code path, so the two formulations cannot
-    * drift. Releases `scope` after the output manifest materializes.
+    * drift. Returns the output manifest kept in `scope`.
     */
   private def statesUpdateFromDay0(st1: PipelineStates, cman: DataFrame,
       batch1: DataFrame, batch2: DataFrame, benchmark: DataFrame,
-      embeddings: DataFrame, scope: ChkScope): DataFrame = {
+      embeddings: DataFrame, scope: Boundaries.Scope): DataFrame = {
     import scope.chk
     // day 1: batch-1 against the day-1 states
     val r1 = runBatch(st1, batch1, benchmark, embeddings, scope)
@@ -1203,15 +1031,9 @@ object Curation {
       cursorOf(cman.unionByName(b1man)), scope)
     // day 2: batch-2 against the UPDATED states
     val r2 = runBatch(st2, batch2, benchmark, embeddings, scope)
-    val out = cman.withColumn("day", lit(0))
+    scope.keep(cman.withColumn("day", lit(0))
       .unionByName(b1man.withColumn("day", lit(1)))
-      .unionByName(r2.manifest.withColumn("day", lit(2)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out
+      .unionByName(r2.manifest.withColumn("day", lit(2))))
   }
 
   /** `corpus_states_update` checked key: the three-way parity split of
@@ -1230,12 +1052,13 @@ object Curation {
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val day0 = landedDay0(spark, sfDir)
-    statesUpdateFromDay0(day0.states, day0.manifest,
-      live.filter(col("doc_id") % 4 === 1),
-      live.filter(col("doc_id") % 4 === 3),
-      docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-      table(spark, sfDir, "embeddings"), scopeFor(spark))
-      .orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      statesUpdateFromDay0(day0.states, day0.manifest,
+        live.filter(col("doc_id") % 4 === 1),
+        live.filter(col("doc_id") % 4 === 3),
+        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
+        table(spark, sfDir, "embeddings"), scope)
+    }.orderBy(col("shard_id"))
   }
 
   /** THE MAINTAINED TEXT STATE TABLES AS TABLES — the
@@ -1291,57 +1114,56 @@ object Curation {
       val benchmark = docs0
         .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
       val embeddings = table(spark, sfDir, "embeddings")
-      val scope = scopeFor(spark)
-      import scope.chk
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = chk(run.manifest)
-      val st = statesOf(run, cman, embeddings)
-      // seven independent reads of the run's checkpointed boundaries —
-      // submitted concurrently (guide §2.6 via writeAll; the landing is
-      // rep-1-only wall-clock, but the driver's bench pays it once)
-      writeAll(Seq(
-        "url_census" -> st.urlCensus,
-        "line_census" -> st.lineCensus,
-        "span_census" -> st.spanCensus,
-        "sem_members" -> st.semMembers,
-        "cursor" -> st.cursor,
-        "clean" -> run.clean,
-        "manifest" -> cman), tmp)
-      // the STREAMING TEXT-INGEST GATE's probe rows (batch/ side, v2 —
-      // the mediaBandLanding batch-side discipline on the text axis):
-      // the replica-0 batch run through the incremental chain against
-      // the JUST-WRITTEN states (read back, so each probe scans the
-      // landed parquet exactly as the graded keys do), each hash
-      // family's stage-input keys landed ONE FILE PER FAMILY with
-      // ascending mtimes — probe keys are computed where text is
-      // processed (ingest); the streaming gate consumes key rows
-      val stLanded = PipelineStates(
-        spark.read.parquet(s"$tmp/url_census"),
-        spark.read.parquet(s"$tmp/line_census"),
-        spark.read.parquet(s"$tmp/span_census"),
-        spark.read.parquet(s"$tmp/sem_members"),
-        spark.read.parquet(s"$tmp/cursor"))
-      val batch = live.filter(col("doc_id") % 2 === 1 &&
-        col("doc_id") < Multimodal.ReplicaBound)
-      val br = runBatch(stLanded, batch, benchmark, embeddings, scope)
-      val familySides = Seq(
-        "url" -> Web.urlNormalizeOn(br.unblocked)
-          .select(lit("url").as("family"), col("doc_id"),
-            col("url_norm").as("k")).distinct(),
-        "line" -> Dedup.lineProbeRows(br.extracted)
-          .select(lit("line").as("family"), col("doc_id"),
-            col("lh").as("k")),
-        "span" -> Dedup.spanProbeRows(br.gated, Dedup.SpanGram)
-          .select(lit("span").as("family"), col("doc_id"),
-            col("gh").cast("string").as("k")))
-      // three independent probe-key frames: concurrent work-dir writes,
-      // then serial promotion with explicit ascending mtimes (the
-      // replay-order contract rides the mtimes, not write order)
-      writeAll(familySides.map { case (n, rows) =>
-        s"work_$n" -> rows.coalesce(1)
-      }, tmp)
-      graft.LocalFs.promoteOrdered(tmpDir, batchFiles(familySides.map(_._1)))
-      scope.release()
+      Boundaries.scoped(spark) { scope =>
+        val run = runPipeline(corpus, benchmark, embeddings, scope)
+        val cman = scope.chk(run.manifest)
+        val st = statesOf(run, cman, embeddings)
+        // seven independent reads of the run's checkpointed boundaries —
+        // submitted concurrently (guide §2.6 via writeAll; the landing is
+        // rep-1-only wall-clock, but the graded bench pays it once)
+        Boundaries.writeAll(spark, Seq(
+          "url_census" -> st.urlCensus,
+          "line_census" -> st.lineCensus,
+          "span_census" -> st.spanCensus,
+          "sem_members" -> st.semMembers,
+          "cursor" -> st.cursor,
+          "clean" -> run.clean,
+          "manifest" -> cman), tmp)
+        // the STREAMING TEXT-INGEST GATE's probe rows (batch/ side, v2 —
+        // the mediaBandLanding batch-side discipline on the text axis):
+        // the replica-0 batch run through the incremental chain against
+        // the JUST-WRITTEN states (read back, so each probe scans the
+        // landed parquet exactly as the graded keys do), each hash
+        // family's stage-input keys landed ONE FILE PER FAMILY with
+        // ascending mtimes — probe keys are computed where text is
+        // processed (ingest); the streaming gate consumes key rows
+        val stLanded = PipelineStates(
+          spark.read.parquet(s"$tmp/url_census"),
+          spark.read.parquet(s"$tmp/line_census"),
+          spark.read.parquet(s"$tmp/span_census"),
+          spark.read.parquet(s"$tmp/sem_members"),
+          spark.read.parquet(s"$tmp/cursor"))
+        val batch = live.filter(col("doc_id") % 2 === 1 &&
+          col("doc_id") < Multimodal.ReplicaBound)
+        val br = runBatch(stLanded, batch, benchmark, embeddings, scope)
+        val familySides = Seq(
+          "url" -> Web.urlNormalizeOn(br.unblocked)
+            .select(lit("url").as("family"), col("doc_id"),
+              col("url_norm").as("k")).distinct(),
+          "line" -> Dedup.lineProbeRows(br.extracted)
+            .select(lit("line").as("family"), col("doc_id"),
+              col("lh").as("k")),
+          "span" -> Dedup.spanProbeRows(br.gated, Dedup.SpanGram)
+            .select(lit("span").as("family"), col("doc_id"),
+              col("gh").cast("string").as("k")))
+        // three independent probe-key frames: concurrent work-dir writes,
+        // then serial promotion with explicit ascending mtimes (the
+        // replay-order contract rides the mtimes, not write order)
+        Boundaries.writeAll(spark, familySides.map { case (n, rows) =>
+          s"work_$n" -> rows.coalesce(1)
+        }, tmp)
+        graft.LocalFs.promoteOrdered(tmpDir, batchFiles(familySides.map(_._1)))
+      }
     }
   }
 
@@ -1408,18 +1230,13 @@ object Curation {
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val states = landedDay0(spark, sfDir).states
-    val scope = scopeFor(spark)
-    val br = runBatch(states,
-      live.filter(col("doc_id") % 2 === 1 &&
-        col("doc_id") < Multimodal.ReplicaBound),
-      docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-      table(spark, sfDir, "embeddings"), scope)
-    val out = br.manifest.persist()
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      scope.keep(runBatch(states,
+        live.filter(col("doc_id") % 2 === 1 &&
+          col("doc_id") < Multimodal.ReplicaBound),
+        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
+        table(spark, sfDir, "embeddings"), scope).manifest)
+    }.orderBy(col("shard_id"))
   }
 
   /** `corpus_states_absorb_onstate` checked key — THE DAY LOOP ON
@@ -1466,50 +1283,44 @@ object Curation {
     val embeddings = table(spark, sfDir, "embeddings")
     val bound = Multimodal.ReplicaBound
     val st1 = landedDay0(spark, sfDir).states
-    val scope = scopeFor(spark)
-    import scope.chk
-    // day 1: batch-1 against the landed states
-    val r1 = runBatch(st1,
-      live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
-      benchmark, embeddings, scope)
-    val b1man = chk(r1.manifest)
-    // THE ABSORB: batch census deltas appended as parquet — a session
-    // work dir (the replayToFeed allocation discipline; production:
-    // an append to the bucketed state table)
-    val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesAbsorb,
-      spark.sparkContext.applicationId)
-    val d = batchCensusesOf(r1, embeddings)
-    // THE ABSORB WRITE: one family-partitioned batch-sized job (r21 #2
-    // — production appends ONE bucketed (family, key) state table)
-    writeCensusDeltas(d, work.getPath)
-    // day-2 states: landing ∪ appended delta, merged at probe build by
-    // the shared additive laws; cursor advanced arithmetically
-    val cursor2 = b1man
-      .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
-        coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
-      .crossJoin(broadcast(st1.cursor))
-      .select(greatest(col("b_max"), col("c_max_shard"))
-          .as("c_max_shard"),
-        (col("b_n") + col("c_n_docs")).as("c_n_docs"))
-    val dRead = readCensusDeltas(spark, work.getPath)
-    val st2 = PipelineStates(
-      mergeUrlCensus(st1.urlCensus, dRead.urlCensus),
-      mergeHashCensus(st1.lineCensus, dRead.lineCensus, "lh"),
-      mergeHashCensus(st1.spanCensus, dRead.spanCensus, "gh"),
-      st1.semMembers.unionByName(dRead.semMembers),
-      cursor2)
-    // day 2: batch-2 against the union-read states
-    val r2 = runBatch(st2,
-      live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
-      benchmark, embeddings, scope)
-    val out = b1man.withColumn("day", lit(1))
-      .unionByName(r2.manifest.withColumn("day", lit(2)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      // day 1: batch-1 against the landed states
+      val r1 = runBatch(st1,
+        live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
+        benchmark, embeddings, scope)
+      val b1man = scope.chk(r1.manifest)
+      // THE ABSORB: batch census deltas appended as parquet — a session
+      // work dir (the replayToFeed allocation discipline; production:
+      // an append to the bucketed state table)
+      val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesAbsorb,
+        spark.sparkContext.applicationId)
+      val d = batchCensusesOf(r1, embeddings)
+      // THE ABSORB WRITE: one family-partitioned batch-sized job (r21 #2
+      // — production appends ONE bucketed (family, key) state table)
+      writeCensusDeltas(d, work.getPath)
+      // day-2 states: landing ∪ appended delta, merged at probe build by
+      // the shared additive laws; cursor advanced arithmetically
+      val cursor2 = b1man
+        .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
+          coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
+        .crossJoin(broadcast(st1.cursor))
+        .select(greatest(col("b_max"), col("c_max_shard"))
+            .as("c_max_shard"),
+          (col("b_n") + col("c_n_docs")).as("c_n_docs"))
+      val dRead = readCensusDeltas(spark, work.getPath)
+      val st2 = PipelineStates(
+        mergeUrlCensus(st1.urlCensus, dRead.urlCensus),
+        mergeHashCensus(st1.lineCensus, dRead.lineCensus, "lh"),
+        mergeHashCensus(st1.spanCensus, dRead.spanCensus, "gh"),
+        st1.semMembers.unionByName(dRead.semMembers),
+        cursor2)
+      // day 2: batch-2 against the union-read states
+      val r2 = runBatch(st2,
+        live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
+        benchmark, embeddings, scope)
+      scope.keep(b1man.withColumn("day", lit(1))
+        .unionByName(r2.manifest.withColumn("day", lit(2))))
+    }.orderBy(col("shard_id"))
   }
 
   /** `corpus_states_compact` checked key — THE STATE-LANDING GENERATION
@@ -1551,57 +1362,51 @@ object Curation {
     val embeddings = table(spark, sfDir, "embeddings")
     val bound = Multimodal.ReplicaBound
     val st1 = landedDay0(spark, sfDir).states
-    val scope = scopeFor(spark)
-    import scope.chk
-    // day 1: batch-1 against the landed states, deltas appended
-    // (the corpusStatesAbsorbOnState shape)
-    val r1 = runBatch(st1,
-      live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
-      benchmark, embeddings, scope)
-    val b1man = chk(r1.manifest)
-    val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesCompact,
-      spark.sparkContext.applicationId)
-    val d = batchCensusesOf(r1, embeddings)
-    // THE DELTA APPEND: one family-partitioned batch-sized job (r21 #2)
-    writeCensusDeltas(d, work.getPath)
-    // THE GENERATION BUMP: landing ∪ delta folded into the gen-1 state
-    // landing by the shared additive laws, written once; the cursor
-    // advances arithmetically (the absorb key's rule) and lands too
-    val gen1 = s"$work/gen1"
-    val cursor2 = b1man
-      .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
-        coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
-      .crossJoin(broadcast(st1.cursor))
-      .select(greatest(col("b_max"), col("c_max_shard"))
-          .as("c_max_shard"),
-        (col("b_n") + col("c_n_docs")).as("c_n_docs"))
-    val dRead = readCensusDeltas(spark, work.getPath)
-    // the fold: the three census merges share ONE exchange and the whole
-    // generation-1 state lands in ONE family-partitioned write + the
-    // one-row cursor (r21 #2); reads the published delta table
-    fuseStates(
-      Seq(st1.urlCensus, dRead.urlCensus),
-      Seq(st1.lineCensus, dRead.lineCensus),
-      Seq(st1.spanCensus, dRead.spanCensus),
-      Seq(st1.semMembers, dRead.semMembers))
-      .write.mode("overwrite").partitionBy("family")
-      .parquet(s"$gen1/states")
-    cursor2.write.mode("overwrite").parquet(s"$gen1/cursor")
-    // day 2: batch-2 against the COMPACTED landing alone — every state
-    // a family-pruned parquet scan of the generation-1 table
-    val st2 = sliceStates(spark.read.parquet(s"$gen1/states"),
-      spark.read.parquet(s"$gen1/cursor"))
-    val r2 = runBatch(st2,
-      live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
-      benchmark, embeddings, scope)
-    val out = b1man.withColumn("day", lit(1))
-      .unionByName(r2.manifest.withColumn("day", lit(2)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      // day 1: batch-1 against the landed states, deltas appended
+      // (the corpusStatesAbsorbOnState shape)
+      val r1 = runBatch(st1,
+        live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
+        benchmark, embeddings, scope)
+      val b1man = scope.chk(r1.manifest)
+      val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesCompact,
+        spark.sparkContext.applicationId)
+      val d = batchCensusesOf(r1, embeddings)
+      // THE DELTA APPEND: one family-partitioned batch-sized job (r21 #2)
+      writeCensusDeltas(d, work.getPath)
+      // THE GENERATION BUMP: landing ∪ delta folded into the gen-1 state
+      // landing by the shared additive laws, written once; the cursor
+      // advances arithmetically (the absorb key's rule) and lands too
+      val gen1 = s"$work/gen1"
+      val cursor2 = b1man
+        .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
+          coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
+        .crossJoin(broadcast(st1.cursor))
+        .select(greatest(col("b_max"), col("c_max_shard"))
+            .as("c_max_shard"),
+          (col("b_n") + col("c_n_docs")).as("c_n_docs"))
+      val dRead = readCensusDeltas(spark, work.getPath)
+      // the fold: the three census merges share ONE exchange and the whole
+      // generation-1 state lands in ONE family-partitioned write + the
+      // one-row cursor (r21 #2); reads the published delta table
+      fuseStates(
+        Seq(st1.urlCensus, dRead.urlCensus),
+        Seq(st1.lineCensus, dRead.lineCensus),
+        Seq(st1.spanCensus, dRead.spanCensus),
+        Seq(st1.semMembers, dRead.semMembers))
+        .write.mode("overwrite").partitionBy("family")
+        .parquet(s"$gen1/states")
+      cursor2.write.mode("overwrite").parquet(s"$gen1/cursor")
+      // day 2: batch-2 against the COMPACTED landing alone — every state
+      // a family-pruned parquet scan of the generation-1 table
+      val st2 = sliceStates(spark.read.parquet(s"$gen1/states"),
+        spark.read.parquet(s"$gen1/cursor"))
+      val r2 = runBatch(st2,
+        live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
+        benchmark, embeddings, scope)
+      scope.keep(b1man.withColumn("day", lit(1))
+        .unionByName(r2.manifest.withColumn("day", lit(2))))
+    }.orderBy(col("shard_id"))
   }
 
   /** THE LEARNED-TOKENIZER FLAGSHIP — [[corpusPipelineOn]] with the
@@ -1627,17 +1432,14 @@ object Curation {
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val benchmark = docs0
       .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val scope = scopeFor(docs0.sparkSession)
-    val manifest = runPipeline(corpus, benchmark, embeddings, scope,
-      clean => TextAnalysis
-        .bpePipelineOn(clean, TextAnalysis.BpeTrainRounds)
-        .select(col("doc_id"), col("n_tokens"))
-        .join(ntOf(clean), Seq("doc_id")))
-      .manifest.persist()
-    // the corpusPipelineOn materialize-then-release discipline applies
-    manifest.queryExecution.toRdd.count()
-    scope.release()
-    manifest
+    Boundaries.scoped(docs0.sparkSession) { scope =>
+      scope.keep(runPipeline(corpus, benchmark, embeddings, scope,
+        clean => TextAnalysis
+          .bpePipelineOn(clean, TextAnalysis.BpeTrainRounds)
+          .select(col("doc_id"), col("n_tokens"))
+          .join(ntOf(clean), Seq("doc_id")))
+        .manifest)
+    }
   }
 
   /** `corpus_pipeline_learned_bpe` checked key: the flagship split with
@@ -1683,27 +1485,23 @@ object Curation {
     */
   def corpusCompactOn(corpus: DataFrame, batch: DataFrame,
       benchmark: DataFrame, embeddings: DataFrame,
-      hostCap: Int): DataFrame = {
-    val scope = scopeFor(corpus.sparkSession)
-    import scope.chk
-    // the shipped world: the corpus run + one absorbed daily batch
-    val run = runPipeline(corpus, benchmark, embeddings, scope)
-    val cman = chk(run.manifest)
-    val r1 = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
-      embeddings, scope)
-    val kept = chk(run.clean.unionByName(r1.clean))
-    // re-enforce the per-host budget over the union's canonical URLs
-    // (unique across days: within-day keep-min + the frontier screen)
-    val capped = chk(kept.join(
-      Web.capPerHostOn(Web.urlStructured(kept), hostCap)
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi"))
-    // generation bump: survivors re-shard from position 0
-    val out = manifestTail(capped, defaultManifestProps).persist()
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out
-  }
+      hostCap: Int): DataFrame =
+    Boundaries.scoped(corpus.sparkSession) { scope =>
+      // the shipped world: the corpus run + one absorbed daily batch
+      val run = runPipeline(corpus, benchmark, embeddings, scope)
+      val cman = scope.chk(run.manifest)
+      val r1 = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
+        embeddings, scope)
+      val kept = scope.chk(run.clean.unionByName(r1.clean))
+      // re-enforce the per-host budget over the union's canonical URLs
+      // (unique across days: within-day keep-min + the frontier screen)
+      val capped = scope.chk(kept.join(
+        Web.capPerHostOn(Web.urlStructured(kept), hostCap)
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi"))
+      // generation bump: survivors re-shard from position 0
+      scope.keep(manifestTail(capped, defaultManifestProps))
+    }
 
   /** `corpus_compact` checked key: the incremental flagship's parity
     * split (even = shipped corpus, odd = the absorbed batch) compacted
@@ -1719,21 +1517,18 @@ object Curation {
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val day0 = landedDay0(spark, sfDir)
-    val scope = scopeFor(spark)
-    import scope.chk
-    val r1 = runBatch(day0.states,
-      live.filter(col("doc_id") % 2 === 1),
-      docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-      table(spark, sfDir, "embeddings"), scope)
-    val kept = chk(day0.clean.unionByName(r1.clean))
-    val capped = chk(kept.join(
-      Web.capPerHostOn(Web.urlStructured(kept), CompactHostCap)
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi"))
-    val out = manifestTail(capped, defaultManifestProps).persist()
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      val r1 = runBatch(day0.states,
+        live.filter(col("doc_id") % 2 === 1),
+        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
+        table(spark, sfDir, "embeddings"), scope)
+      val kept = scope.chk(day0.clean.unionByName(r1.clean))
+      val capped = scope.chk(kept.join(
+        Web.capPerHostOn(Web.urlStructured(kept), CompactHostCap)
+          .select(col("doc_id")),
+        Seq("doc_id"), "left_semi"))
+      scope.keep(manifestTail(capped, defaultManifestProps))
+    }.orderBy(col("shard_id"))
   }
 
   /** The generation cycle's suite-pinned contract frames. Carried
@@ -1816,21 +1611,20 @@ object Curation {
   private[graft] def generationCycleOn(corpus: DataFrame,
       batch1: DataFrame, batch2: DataFrame, benchmark: DataFrame,
       embeddings: DataFrame, hostCap: Int,
-      materializeContract: Boolean): GenerationCycle = {
-    val scope = scopeFor(corpus.sparkSession)
-    import scope.chk
-    // day 0: the corpus run and its day-1 states (the
-    // corpusStatesUpdateOn discipline: each census is consumed twice —
-    // batch-1's probe and the merge's union side)
-    val run = runPipeline(corpus, benchmark, embeddings, scope)
-    val cman = chk(run.manifest)
-    val st1raw = statesOf(run, cman, embeddings)
-    val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
-      Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
-      Seq(st1raw.semMembers), st1raw.cursor)
-    generationCycleFromDay0(st1, run.clean, batch1, batch2, benchmark,
-      embeddings, hostCap, materializeContract, scope)
-  }
+      materializeContract: Boolean): GenerationCycle =
+    Boundaries.scoped(corpus.sparkSession) { scope =>
+      // day 0: the corpus run and its day-1 states (the
+      // corpusStatesUpdateOn discipline: each census is consumed twice —
+      // batch-1's probe and the merge's union side)
+      val run = runPipeline(corpus, benchmark, embeddings, scope)
+      val cman = scope.chk(run.manifest)
+      val st1raw = statesOf(run, cman, embeddings)
+      val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
+        Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
+        Seq(st1raw.semMembers), st1raw.cursor)
+      generationCycleFromDay0(st1, run.clean, batch1, batch2, benchmark,
+        embeddings, hostCap, materializeContract, scope)
+    }
 
   /** The cycle's days 1-3 over an EXPLICIT day-0 world — the factored
     * core [[generationCycleOn]] (self-contained derivation) and the
@@ -1838,13 +1632,14 @@ object Curation {
     * formulations cannot drift (the mergeUrlCensus/mergeHashCensus
     * shared-law discipline applied to the whole cycle). `st1` members
     * must be stable leaves (checkpointed frames or parquet scans);
-    * `clean0` is day-0's kept (doc_id, text). Releases `scope` after
-    * the output manifest materializes.
+    * `clean0` is day-0's kept (doc_id, text). The output manifest (and
+    * the contract frames, when materialized) are kept in `scope`.
     */
   private def generationCycleFromDay0(st1: PipelineStates,
       clean0: DataFrame, batch1: DataFrame, batch2: DataFrame,
       benchmark: DataFrame, embeddings: DataFrame, hostCap: Int,
-      materializeContract: Boolean, scope: ChkScope): GenerationCycle = {
+      materializeContract: Boolean,
+      scope: Boundaries.Scope): GenerationCycle = {
     import scope.chk
     // day 1: batch-1 against the day-1 states, then absorbed into the
     // maintained states BEFORE compaction — retirement must not erase
@@ -1864,30 +1659,17 @@ object Curation {
     val st2 = mergeStatesBoundary(st1, r1, embeddings, cursorOf(g1man),
       scope)
     val r2 = runBatch(st2, batch2, benchmark, embeddings, scope)
-    val out = g1man.withColumn("phase", lit(0))
-      .unionByName(r2.manifest.withColumn("phase", lit(1)))
-      .persist()
-    val shipped = kept.select(col("doc_id"))
-    val retained = capped.select(col("doc_id"))
-    val census = st2.urlCensus
-    val bkept = r2.clean
-    // the corpusPipelineOn materialize-then-release discipline (and its
-    // reliable-mode caveat) applies unchanged
-    out.queryExecution.toRdd.count()
-    if (materializeContract) {
-      // suite path only (ADVICE r17): the contract frames are id/census-
-      // sized — materializing them re-reads flat checkpointed leaves,
-      // never corpus text — but they are four extra materializations the
-      // graded manifest does not need
-      Seq(shipped, retained, census, bkept).foreach { f =>
-        f.persist()
-        f.queryExecution.toRdd.count()
-      }
-    }
-    scope.release()
+    val out = scope.keep(g1man.withColumn("phase", lit(0))
+      .unionByName(r2.manifest.withColumn("phase", lit(1))))
+    // suite path only (ADVICE r17): the contract frames are id/census-
+    // sized — materializing them re-reads flat checkpointed leaves,
+    // never corpus text — but they are four extra materializations the
+    // graded manifest does not need
     GenerationCycle(out,
       if (materializeContract)
-        Some(CycleContract(shipped, retained, census, bkept))
+        Some(CycleContract(scope.keep(kept.select(col("doc_id"))),
+          scope.keep(capped.select(col("doc_id"))),
+          scope.keep(st2.urlCensus), scope.keep(r2.clean)))
       else None)
   }
 
@@ -1922,14 +1704,14 @@ object Curation {
     val live = docs0
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val day0 = landedDay0(spark, sfDir)
-    generationCycleFromDay0(day0.states, day0.clean,
-      live.filter(col("doc_id") % 4 === 1),
-      live.filter(col("doc_id") % 4 === 3),
-      docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-      table(spark, sfDir, "embeddings"),
-      CompactHostCap, materializeContract = false, scopeFor(spark))
-      .manifest
-      .orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      generationCycleFromDay0(day0.states, day0.clean,
+        live.filter(col("doc_id") % 4 === 1),
+        live.filter(col("doc_id") % 4 === 3),
+        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
+        table(spark, sfDir, "embeddings"),
+        CompactHostCap, materializeContract = false, scope).manifest
+    }.orderBy(col("shard_id"))
   }
 
   /** THE MIXED-MODALITY FLAGSHIP — [[corpusPipelineOn]] with the media
@@ -1976,40 +1758,36 @@ object Curation {
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val benchmark = docs0
       .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val scope = scopeFor(docs0.sparkSession)
-    import scope.chk
-    // the media side-ladders at ingest, each materialized to an
-    // id-sized checkpointed drop frame and its payload cache RELEASED
-    // before the next ladder runs: the plants are the memory-heavy
-    // frames (full payloads), and holding all three across the text
-    // chain measurably destabilizes the run (eviction → re-synthesis);
-    // serial eager boundaries bound peak storage to one modality's
-    // plant (the rungs' internal hash-stage persists are hash-sized and
-    // release with the caller's clearCache)
-    val vids = Multimodal.videoStructured(corpus0).persist()
-    val vDrop = chk(Multimodal.dedupVideoOn(vids,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-      .filter(col("is_dup_video")).select(col("doc_id")))
-    vids.unpersist(blocking = false)
-    val clips = Multimodal.audioStructured(corpus0).persist()
-    val aDrop = chk(Multimodal.dedupAudioOn(clips,
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-      .filter(col("is_dup_audio")).select(col("doc_id")))
-    clips.unpersist(blocking = false)
-    val iDrop = chk(Multimodal.dedupImageDocsOn(
-        Multimodal.pairImages(corpus0), hamMax = 3L)
-      .filter(col("is_dup_image")).select(col("doc_id")))
-    val mmDrop = vDrop.unionByName(aDrop).unionByName(iDrop).distinct()
-    val corpus = chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
-    // the text flagship over the media survivors
-    val manifest = runPipeline(corpus, benchmark, embeddings, scope)
-      .manifest.persist()
-    // the corpusPipelineOn materialize-then-release discipline applies
-    manifest.queryExecution.toRdd.count()
-    scope.release()
-    manifest
+    Boundaries.scoped(docs0.sparkSession) { scope =>
+      // the media side-ladders at ingest, each materialized to an
+      // id-sized checkpointed drop frame and its payload cache RELEASED
+      // before the next ladder runs: the plants are the memory-heavy
+      // frames (full payloads), and holding all three across the text
+      // chain measurably destabilizes the run (eviction → re-synthesis);
+      // serial eager boundaries bound peak storage to one modality's
+      // plant (the rungs' internal hash-stage persists are hash-sized and
+      // release with the caller's clearCache)
+      val vids = Multimodal.videoStructured(corpus0).persist()
+      val vDrop = scope.chk(Multimodal.dedupVideoOn(vids,
+          Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
+          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
+        .filter(col("is_dup_video")).select(col("doc_id")))
+      vids.unpersist(blocking = false)
+      val clips = Multimodal.audioStructured(corpus0).persist()
+      val aDrop = scope.chk(Multimodal.dedupAudioOn(clips,
+          Multimodal.AudioFpWin, Multimodal.AudioSegWin,
+          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
+        .filter(col("is_dup_audio")).select(col("doc_id")))
+      clips.unpersist(blocking = false)
+      val iDrop = scope.chk(Multimodal.dedupImageDocsOn(
+          Multimodal.pairImages(corpus0), hamMax = 3L)
+        .filter(col("is_dup_image")).select(col("doc_id")))
+      val mmDrop = vDrop.unionByName(aDrop).unionByName(iDrop).distinct()
+      val corpus = scope.chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
+      // the text flagship over the media survivors
+      scope.keep(runPipeline(corpus, benchmark, embeddings, scope)
+        .manifest)
+    }
   }
 
   /** `corpus_pipeline_multimodal` checked key: the flagship split with
@@ -2034,37 +1812,33 @@ object Curation {
       .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
     val benchmark = docs0
       .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val scope = scopeFor(spark)
-    import scope.chk
-    // full-population band tables: even corpus side ∪ odd ingest side,
-    // restricted to the live corpus (text.isNotNull is not an id
-    // predicate, so the slice is the landedBandsOf semi-join); the
-    // three slices and then the three verdicts are independent (§2.6)
-    def bands(modality: String): DataFrame =
-      Multimodal.landedBandsOf(spark, landingM, "corpus", modality,
-          corpus0)
-        .unionByName(Multimodal.landedBandsOf(spark, landingM, "odd",
-          modality, corpus0))
-    // the three band slices fuse into ONE boundary, then the three
-    // self-verdicts into ONE drop boundary (r21 #2)
-    val MediaBands(vBands, aBands, iBands) = materializeBands(scope,
-      bands("video"), bands("audio"), bands("image"))
-    val mmDrop = mediaDropBoundary(scope, Seq(
-      Multimodal.dedupVideoFromBands(vBands,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(col("is_dup_video")).select(col("doc_id")),
-      Multimodal.dedupAudioFromBands(aBands,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(col("is_dup_audio")).select(col("doc_id")),
-      Multimodal.dedupImageDocsFromBands(iBands, 3L)
-        .filter(col("is_dup_image")).select(col("doc_id"))))
-    val corpus = chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
-    val manifest = runPipeline(corpus, benchmark, embeddings, scope)
-      .manifest.persist()
-    // the corpusPipelineOn materialize-then-release discipline applies
-    manifest.queryExecution.toRdd.count()
-    scope.release()
-    manifest.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      // full-population band tables: even corpus side ∪ odd ingest side,
+      // restricted to the live corpus (text.isNotNull is not an id
+      // predicate, so the slice is the landedBandsOf semi-join); the
+      // three slices and then the three verdicts are independent (§2.6)
+      def bands(modality: String): DataFrame =
+        Multimodal.landedBandsOf(spark, landingM, "corpus", modality,
+            corpus0)
+          .unionByName(Multimodal.landedBandsOf(spark, landingM, "odd",
+            modality, corpus0))
+      // the three band slices fuse into ONE boundary, then the three
+      // self-verdicts into ONE drop boundary (r21 #2)
+      val MediaBands(vBands, aBands, iBands) = materializeBands(scope,
+        bands("video"), bands("audio"), bands("image"))
+      val mmDrop = mediaDropBoundary(scope, Seq(
+        Multimodal.dedupVideoFromBands(vBands,
+          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
+          .filter(col("is_dup_video")).select(col("doc_id")),
+        Multimodal.dedupAudioFromBands(aBands,
+          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
+          .filter(col("is_dup_audio")).select(col("doc_id")),
+        Multimodal.dedupImageDocsFromBands(iBands, 3L)
+          .filter(col("is_dup_image")).select(col("doc_id"))))
+      val corpus = scope.chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
+      scope.keep(runPipeline(corpus, benchmark, embeddings, scope)
+        .manifest)
+    }.orderBy(col("shard_id"))
   }
 
   /** THE MIXED-MODALITY CRAWL-BATCH FLAGSHIP —
@@ -2096,73 +1870,67 @@ object Curation {
     */
   def corpusMultimodalIncrementalOn(corpus0: DataFrame,
       batch0: DataFrame, benchmark: DataFrame,
-      embeddings: DataFrame): DataFrame = {
-    val scope = scopeFor(corpus0.sparkSession)
-    import scope.chk
-    // corpus media gates + the maintained band tables (one hash pass
-    // per modality serves both the self-verdict and the state the
-    // batch probes; serial ladders, plants released — the
-    // corpusPipelineMultimodalOn memory discipline)
-    val vids0 = Multimodal.videoStructured(corpus0).persist()
-    val vBands = chk(Multimodal.videoBandState(vids0,
-      Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-    val vDropC = chk(Multimodal.dedupVideoOn(vids0,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-      .filter(col("is_dup_video")).select(col("doc_id")))
-    vids0.unpersist(blocking = false)
-    val clips0 = Multimodal.audioStructured(corpus0).persist()
-    val aBands = chk(Multimodal.audioBandState(clips0,
-      Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-    val aDropC = chk(Multimodal.dedupAudioOn(clips0,
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-      .filter(col("is_dup_audio")).select(col("doc_id")))
-    clips0.unpersist(blocking = false)
-    val iBands = chk(Multimodal.imageBandState(
-      Multimodal.pairImages(corpus0)))
-    val iDropC = chk(Multimodal.dedupImageDocsFromBands(iBands, 3L)
-      .filter(col("is_dup_image")).select(col("doc_id")))
-    val mmDropC = vDropC.unionByName(aDropC).unionByName(iDropC)
-      .distinct()
-    val corpus = chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
-    // the corpus text run and its day-1 states
-    val run = runPipeline(corpus, benchmark, embeddings, scope)
-    val cman = chk(run.manifest)
-    // the batch's media screens against the MAINTAINED band tables
-    // (the batch VIDEO plant persists across its two consumers — cut
-    // detection + the keyframe slice — and releases once its drop
-    // frame is checkpointed, the corpus-side discipline; the audio and
-    // image plants have single consumers)
-    val bvids = Multimodal.videoStructured(batch0).persist()
-    val vDropB = chk(Multimodal.dedupVideoIncrementalOnState(vBands,
-        bvids,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-      .filter(!col("keep")).select(col("doc_id")))
-    bvids.unpersist(blocking = false)
-    val aDropB = chk(Multimodal.dedupAudioIncrementalOnState(aBands,
-        Multimodal.audioStructured(batch0),
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-      .filter(!col("keep")).select(col("doc_id")))
-    val iDropB = chk(Multimodal.dedupImageDocsIncrementalOnState(iBands,
-        Multimodal.pairImages(batch0), 3L)
-      .filter(!col("keep")).select(col("doc_id")))
-    val mmDropB = vDropB.unionByName(aDropB).unionByName(iDropB)
-      .distinct()
-    val batch = chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
-    // the text incremental chain over the media survivors
-    val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
-      embeddings, scope)
-    val out = cman.withColumn("is_batch", lit(0))
-      .unionByName(br.manifest.withColumn("is_batch", lit(1)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline applies
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out
-  }
+      embeddings: DataFrame): DataFrame =
+    Boundaries.scoped(corpus0.sparkSession) { scope =>
+      // corpus media gates + the maintained band tables (one hash pass
+      // per modality serves both the self-verdict and the state the
+      // batch probes; serial ladders, plants released — the
+      // corpusPipelineMultimodalOn memory discipline)
+      val vids0 = Multimodal.videoStructured(corpus0).persist()
+      val vBands = scope.chk(Multimodal.videoBandState(vids0,
+        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
+      val vDropC = scope.chk(Multimodal.dedupVideoOn(vids0,
+          Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
+          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
+        .filter(col("is_dup_video")).select(col("doc_id")))
+      vids0.unpersist(blocking = false)
+      val clips0 = Multimodal.audioStructured(corpus0).persist()
+      val aBands = scope.chk(Multimodal.audioBandState(clips0,
+        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
+      val aDropC = scope.chk(Multimodal.dedupAudioOn(clips0,
+          Multimodal.AudioFpWin, Multimodal.AudioSegWin,
+          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
+        .filter(col("is_dup_audio")).select(col("doc_id")))
+      clips0.unpersist(blocking = false)
+      val iBands = scope.chk(Multimodal.imageBandState(
+        Multimodal.pairImages(corpus0)))
+      val iDropC = scope.chk(Multimodal.dedupImageDocsFromBands(iBands, 3L)
+        .filter(col("is_dup_image")).select(col("doc_id")))
+      val mmDropC = vDropC.unionByName(aDropC).unionByName(iDropC)
+        .distinct()
+      val corpus = scope.chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
+      // the corpus text run and its day-1 states
+      val run = runPipeline(corpus, benchmark, embeddings, scope)
+      val cman = scope.chk(run.manifest)
+      // the batch's media screens against the MAINTAINED band tables
+      // (the batch VIDEO plant persists across its two consumers — cut
+      // detection + the keyframe slice — and releases once its drop
+      // frame is checkpointed, the corpus-side discipline; the audio and
+      // image plants have single consumers)
+      val bvids = Multimodal.videoStructured(batch0).persist()
+      val vDropB = scope.chk(Multimodal.dedupVideoIncrementalOnState(vBands,
+          bvids,
+          Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
+          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
+        .filter(!col("keep")).select(col("doc_id")))
+      bvids.unpersist(blocking = false)
+      val aDropB = scope.chk(Multimodal.dedupAudioIncrementalOnState(aBands,
+          Multimodal.audioStructured(batch0),
+          Multimodal.AudioFpWin, Multimodal.AudioSegWin,
+          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
+        .filter(!col("keep")).select(col("doc_id")))
+      val iDropB = scope.chk(Multimodal.dedupImageDocsIncrementalOnState(iBands,
+          Multimodal.pairImages(batch0), 3L)
+        .filter(!col("keep")).select(col("doc_id")))
+      val mmDropB = vDropB.unionByName(aDropB).unionByName(iDropB)
+        .distinct()
+      val batch = scope.chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
+      // the text incremental chain over the media survivors
+      val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
+        embeddings, scope)
+      scope.keep(cman.withColumn("is_batch", lit(0))
+        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+    }
 
   /** `corpus_multimodal_incremental` checked key: the family parity
     * split (even = shipped mixed corpus, odd = incoming crawl batch).
@@ -2191,45 +1959,40 @@ object Curation {
     // row-equal to the self-contained corpusMultimodalIncrementalOn)
     val landingM = Multimodal.mediaBandLanding(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
-    val scope = scopeFor(spark)
-    import scope.chk
-    val corpusPop = live.filter(col("doc_id") % 2 === 0)
-    val batch0 = live.filter(col("doc_id") % 2 === 1)
-    // corpus band tables: single-consumer probes — lazy reads suffice;
-    // batch bands feed three joins each ([[dedupVideoIncrementalFromBands]]
-    // contract) — checkpointed
-    def corpusBandsOf(modality: String) =
-      Multimodal.landedBandsOf(spark, landingM, "corpus", modality,
-        corpusPop)
-    // the three batch band slices fuse into ONE boundary, then the
-    // three modality probes into ONE drop boundary (r21 #2)
-    val MediaBands(vBandsB, aBandsB, iBandsB) = materializeBands(scope,
-      Multimodal.landedBandsOf(spark, landingM, "odd", "video", batch0),
-      Multimodal.landedBandsOf(spark, landingM, "odd", "audio", batch0),
-      Multimodal.landedBandsOf(spark, landingM, "odd", "image", batch0))
-    val mmDropB = mediaDropBoundary(scope, Seq(
-      Multimodal.dedupVideoIncrementalFromBands(
-        corpusBandsOf("video"), vBandsB,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(!col("keep")).select(col("doc_id")),
-      Multimodal.dedupAudioIncrementalFromBands(
-        corpusBandsOf("audio"), aBandsB,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(!col("keep")).select(col("doc_id")),
-      Multimodal.dedupImageDocsIncrementalFromBands(
-        corpusBandsOf("image"), iBandsB, 3L)
-        .filter(!col("keep")).select(col("doc_id"))))
-    val batch = chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
-    // the text incremental chain over the media survivors, appending
-    // after the landed corpus manifest
-    val br = runBatch(day0.states, batch, benchmark, embeddings, scope)
-    val out = day0.manifest.withColumn("is_batch", lit(0))
-      .unionByName(br.manifest.withColumn("is_batch", lit(1)))
-      .persist()
-    // the corpusPipelineOn materialize-then-release discipline applies
-    out.queryExecution.toRdd.count()
-    scope.release()
-    out.orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      val corpusPop = live.filter(col("doc_id") % 2 === 0)
+      val batch0 = live.filter(col("doc_id") % 2 === 1)
+      // corpus band tables: single-consumer probes — lazy reads suffice;
+      // batch bands feed three joins each ([[dedupVideoIncrementalFromBands]]
+      // contract) — checkpointed
+      def corpusBandsOf(modality: String) =
+        Multimodal.landedBandsOf(spark, landingM, "corpus", modality,
+          corpusPop)
+      // the three batch band slices fuse into ONE boundary, then the
+      // three modality probes into ONE drop boundary (r21 #2)
+      val MediaBands(vBandsB, aBandsB, iBandsB) = materializeBands(scope,
+        Multimodal.landedBandsOf(spark, landingM, "odd", "video", batch0),
+        Multimodal.landedBandsOf(spark, landingM, "odd", "audio", batch0),
+        Multimodal.landedBandsOf(spark, landingM, "odd", "image", batch0))
+      val mmDropB = mediaDropBoundary(scope, Seq(
+        Multimodal.dedupVideoIncrementalFromBands(
+          corpusBandsOf("video"), vBandsB,
+          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
+          .filter(!col("keep")).select(col("doc_id")),
+        Multimodal.dedupAudioIncrementalFromBands(
+          corpusBandsOf("audio"), aBandsB,
+          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
+          .filter(!col("keep")).select(col("doc_id")),
+        Multimodal.dedupImageDocsIncrementalFromBands(
+          corpusBandsOf("image"), iBandsB, 3L)
+          .filter(!col("keep")).select(col("doc_id"))))
+      val batch = scope.chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
+      // the text incremental chain over the media survivors, appending
+      // after the landed corpus manifest
+      val br = runBatch(day0.states, batch, benchmark, embeddings, scope)
+      scope.keep(day0.manifest.withColumn("is_batch", lit(0))
+        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+    }.orderBy(col("shard_id"))
   }
 
   /** The mixed cycle's suite-pinned contract frames — carried inside
@@ -2330,71 +2093,70 @@ object Curation {
   private[graft] def multimodalGenerationCycleOn(corpus0: DataFrame,
       batch1a: DataFrame, batch2a: DataFrame, benchmark: DataFrame,
       embeddings: DataFrame, hostCap: Int,
-      materializeContract: Boolean): MultimodalGenerationCycle = {
-    val scope = scopeFor(corpus0.sparkSession)
-    import scope.chk
-    // day 0: corpus media gates + the maintained band tables (one hash
-    // pass per modality serves the self-verdict, the batch probes and
-    // the day-2 merge; serial ladders, plants released)
-    val vids0 = Multimodal.videoStructured(corpus0).persist()
-    val vBands = chk(Multimodal.videoBandState(vids0,
-      Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-    vids0.unpersist(blocking = false)
-    val vDropC = chk(Multimodal.dedupVideoFromBands(vBands,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-      .filter(col("is_dup_video")).select(col("doc_id")))
-    val clips0 = Multimodal.audioStructured(corpus0).persist()
-    val aBands = chk(Multimodal.audioBandState(clips0,
-      Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-    clips0.unpersist(blocking = false)
-    val aDropC = chk(Multimodal.dedupAudioFromBands(aBands,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-      .filter(col("is_dup_audio")).select(col("doc_id")))
-    val iBands = chk(Multimodal.imageBandState(
-      Multimodal.pairImages(corpus0)))
-    val iDropC = chk(Multimodal.dedupImageDocsFromBands(iBands, 3L)
-      .filter(col("is_dup_image")).select(col("doc_id")))
-    val mmDropC = vDropC.unionByName(aDropC).unionByName(iDropC)
-      .distinct()
-    val corpus = chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
-    // the corpus text run and its day-1 states (each census consumed
-    // twice — batch-1's probe and the merge's union side)
-    val run = runPipeline(corpus, benchmark, embeddings, scope)
-    val cman = chk(run.manifest)
-    val st1raw = statesOf(run, cman, embeddings)
-    // the family censuses over checkpointed run frames — ONE fused
-    // boundary (r21 #2; no media plants are live here, so memory is
-    // batch-sized)
-    val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
-      Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
-      Seq(st1raw.semMembers), st1raw.cursor)
-    // the batch band frames are hashed ONCE in-key (the self-contained
-    // formulation's ingest; the graded key reads the landed plants) —
-    // each feeds its probe AND the day-2 band-state merge
-    val bvids1 = Multimodal.videoStructured(batch1a).persist()
-    val vBandsB1 = chk(Multimodal.videoBandState(bvids1,
-      Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-    bvids1.unpersist(blocking = false)
-    val aBandsB1 = chk(Multimodal.audioBandState(
-      Multimodal.audioStructured(batch1a),
-      Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-    val iBandsB1 = chk(Multimodal.imageBandState(
-      Multimodal.pairImages(batch1a)))
-    val bvids2 = Multimodal.videoStructured(batch2a).persist()
-    val vBandsB2 = chk(Multimodal.videoBandState(bvids2,
-      Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-    bvids2.unpersist(blocking = false)
-    val aBandsB2 = chk(Multimodal.audioBandState(
-      Multimodal.audioStructured(batch2a),
-      Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-    val iBandsB2 = chk(Multimodal.imageBandState(
-      Multimodal.pairImages(batch2a)))
-    multimodalGenerationCycleFromDay0(st1, run.clean,
-      MediaBands(vBands, aBands, iBands),
-      batch1a, MediaBands(vBandsB1, aBandsB1, iBandsB1),
-      batch2a, MediaBands(vBandsB2, aBandsB2, iBandsB2),
-      benchmark, embeddings, hostCap, materializeContract, scope)
-  }
+      materializeContract: Boolean): MultimodalGenerationCycle =
+    Boundaries.scoped(corpus0.sparkSession) { scope =>
+      // day 0: corpus media gates + the maintained band tables (one hash
+      // pass per modality serves the self-verdict, the batch probes and
+      // the day-2 merge; serial ladders, plants released)
+      val vids0 = Multimodal.videoStructured(corpus0).persist()
+      val vBands = scope.chk(Multimodal.videoBandState(vids0,
+        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
+      vids0.unpersist(blocking = false)
+      val vDropC = scope.chk(Multimodal.dedupVideoFromBands(vBands,
+          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
+        .filter(col("is_dup_video")).select(col("doc_id")))
+      val clips0 = Multimodal.audioStructured(corpus0).persist()
+      val aBands = scope.chk(Multimodal.audioBandState(clips0,
+        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
+      clips0.unpersist(blocking = false)
+      val aDropC = scope.chk(Multimodal.dedupAudioFromBands(aBands,
+          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
+        .filter(col("is_dup_audio")).select(col("doc_id")))
+      val iBands = scope.chk(Multimodal.imageBandState(
+        Multimodal.pairImages(corpus0)))
+      val iDropC = scope.chk(Multimodal.dedupImageDocsFromBands(iBands, 3L)
+        .filter(col("is_dup_image")).select(col("doc_id")))
+      val mmDropC = vDropC.unionByName(aDropC).unionByName(iDropC)
+        .distinct()
+      val corpus = scope.chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
+      // the corpus text run and its day-1 states (each census consumed
+      // twice — batch-1's probe and the merge's union side)
+      val run = runPipeline(corpus, benchmark, embeddings, scope)
+      val cman = scope.chk(run.manifest)
+      val st1raw = statesOf(run, cman, embeddings)
+      // the family censuses over checkpointed run frames — ONE fused
+      // boundary (r21 #2; no media plants are live here, so memory is
+      // batch-sized)
+      val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
+        Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
+        Seq(st1raw.semMembers), st1raw.cursor)
+      // the batch band frames are hashed ONCE in-key (the self-contained
+      // formulation's ingest; the graded key reads the landed plants) —
+      // each feeds its probe AND the day-2 band-state merge
+      val bvids1 = Multimodal.videoStructured(batch1a).persist()
+      val vBandsB1 = scope.chk(Multimodal.videoBandState(bvids1,
+        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
+      bvids1.unpersist(blocking = false)
+      val aBandsB1 = scope.chk(Multimodal.audioBandState(
+        Multimodal.audioStructured(batch1a),
+        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
+      val iBandsB1 = scope.chk(Multimodal.imageBandState(
+        Multimodal.pairImages(batch1a)))
+      val bvids2 = Multimodal.videoStructured(batch2a).persist()
+      val vBandsB2 = scope.chk(Multimodal.videoBandState(bvids2,
+        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
+      bvids2.unpersist(blocking = false)
+      val aBandsB2 = scope.chk(Multimodal.audioBandState(
+        Multimodal.audioStructured(batch2a),
+        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
+      val iBandsB2 = scope.chk(Multimodal.imageBandState(
+        Multimodal.pairImages(batch2a)))
+      multimodalGenerationCycleFromDay0(st1, run.clean,
+        MediaBands(vBands, aBands, iBands),
+        batch1a, MediaBands(vBandsB1, aBandsB1, iBandsB1),
+        batch2a, MediaBands(vBandsB2, aBandsB2, iBandsB2),
+        benchmark, embeddings, hostCap, materializeContract, scope)
+    }
 
   /** The mixed cycle's days 1-3 over an EXPLICIT day-0 world — the
     * factored core the self-contained [[multimodalGenerationCycleOn]]
@@ -2402,8 +2164,8 @@ object Curation {
     * ([[corpusMultimodalGenerationCycle]]) share (the
     * [[generationCycleFromDay0]] discipline on the media axis). All
     * band frames must be stable ([[MediaBands]]); `st1`/`clean0` as in
-    * [[generationCycleFromDay0]]. Releases `scope` after the output
-    * manifest materializes.
+    * [[generationCycleFromDay0]]. The output manifest (and the
+    * contract frames, when materialized) are kept in `scope`.
     */
   private def multimodalGenerationCycleFromDay0(st1: PipelineStates,
       clean0: DataFrame, corpusBands: MediaBands,
@@ -2411,7 +2173,7 @@ object Curation {
       batch2a: DataFrame, bands2: MediaBands,
       benchmark: DataFrame, embeddings: DataFrame, hostCap: Int,
       materializeContract: Boolean,
-      scope: ChkScope): MultimodalGenerationCycle = {
+      scope: Boundaries.Scope): MultimodalGenerationCycle = {
     import scope.chk
     // day 1: batch-1 media against the maintained band tables — the
     // three modality probes fused into ONE drop boundary (r21 #2; AQE
@@ -2465,24 +2227,14 @@ object Curation {
     val st2 = mergeStatesBoundary(st1, r1, embeddings, cursorOf(g1man),
       scope)
     val r2 = runBatch(st2, batch2, benchmark, embeddings, scope)
-    val out = g1man.withColumn("phase", lit(0))
-      .unionByName(r2.manifest.withColumn("phase", lit(1)))
-      .persist()
-    val shipped = kept.select(col("doc_id"))
-    val retained = capped.select(col("doc_id"))
-    val bkept = r2.clean
-    out.queryExecution.toRdd.count()
-    if (materializeContract) {
-      // suite path only — the generationCycleOn discipline
-      Seq(shipped, retained, mmDropB2, bkept).foreach { f =>
-        f.persist()
-        f.queryExecution.toRdd.count()
-      }
-    }
-    scope.release()
+    val out = scope.keep(g1man.withColumn("phase", lit(0))
+      .unionByName(r2.manifest.withColumn("phase", lit(1))))
+    // suite path only — the generationCycleFromDay0 discipline
     MultimodalGenerationCycle(out,
       if (materializeContract)
-        Some(MediaCycleContract(shipped, retained, mmDropB2, bkept))
+        Some(MediaCycleContract(scope.keep(kept.select(col("doc_id"))),
+          scope.keep(capped.select(col("doc_id"))), scope.keep(mmDropB2),
+          scope.keep(r2.clean)))
       else None)
   }
 
@@ -2518,27 +2270,25 @@ object Curation {
     // [[multimodalGenerationCycleOn]] derivation.
     val landingM = Multimodal.mediaBandLanding(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
-    val scope = scopeFor(spark)
-    import scope.chk
     val corpusPop = live.filter(col("doc_id") % 2 === 0)
     val b1 = live.filter(col("doc_id") % 4 === 1)
     val b2 = live.filter(col("doc_id") % 4 === 3)
-    // per-modality landed slices are independent parquet-scan +
-    // semi-join subplans — each side's trio fuses into ONE boundary
-    // (r21 #2)
-    def bandsOf(side: String, pop: DataFrame) = materializeBands(scope,
-      Multimodal.landedBandsOf(spark, landingM, side, "video", pop),
-      Multimodal.landedBandsOf(spark, landingM, side, "audio", pop),
-      Multimodal.landedBandsOf(spark, landingM, side, "image", pop))
-    multimodalGenerationCycleFromDay0(day0.states, day0.clean,
-      bandsOf("corpus", corpusPop),
-      b1, bandsOf("odd", b1),
-      b2, bandsOf("odd", b2),
-      docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-      table(spark, sfDir, "embeddings"),
-      CompactHostCap, materializeContract = false, scope)
-      .manifest
-      .orderBy(col("shard_id"))
+    Boundaries.scoped(spark) { scope =>
+      // per-modality landed slices are independent parquet-scan +
+      // semi-join subplans — each side's trio fuses into ONE boundary
+      // (r21 #2)
+      def bandsOf(side: String, pop: DataFrame) = materializeBands(scope,
+        Multimodal.landedBandsOf(spark, landingM, side, "video", pop),
+        Multimodal.landedBandsOf(spark, landingM, side, "audio", pop),
+        Multimodal.landedBandsOf(spark, landingM, side, "image", pop))
+      multimodalGenerationCycleFromDay0(day0.states, day0.clean,
+        bandsOf("corpus", corpusPop),
+        b1, bandsOf("odd", b1),
+        b2, bandsOf("odd", b2),
+        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
+        table(spark, sfDir, "embeddings"),
+        CompactHostCap, materializeContract = false, scope).manifest
+    }.orderBy(col("shard_id"))
   }
 
   /** SEEN-NESS TTL — the state-growth contract's bounding policy as an

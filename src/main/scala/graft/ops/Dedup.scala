@@ -8,6 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Boundaries
 import graft.Tables.table
 
 /** §2j deduplication operators for LLM training-data pipelines
@@ -332,111 +333,62 @@ object Dedup {
     * shortcut self-join), so carrying the logical plan forward would grow
     * it 4× per round — `persist` does NOT truncate lineage, and by round 8
     * plan-tree stringification alone (AQE emits a plan description per
-    * query) dominates runtime. `localCheckpoint(eager)` materializes each
-    * round's labels as a flat `LogicalRDD`, keeping every iteration's plan
-    * constant-size.
-    *
-    * CLUSTER DEPLOYMENT: localCheckpoint stores blocks on executors — an
-    * executor loss mid-loop kills the lineage it truncated. Set
-    * `graft.cluster.checkpoint=reliable` (plus
-    * `sparkContext.setCheckpointDir` to a fault-tolerant path) and every
-    * loop round checkpoints RELIABLY instead: same plan-flattening, state
-    * survives executor loss, at the cost of one distributed-FS round-trip
-    * per iteration — the right default on a 1000-executor run where a
-    * 10-round loop WILL see preemption. Reliable checkpoint files clean up
-    * via Spark's ContextCleaner
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints=true`) or with the
-    * checkpoint dir itself; the suite exercises the loop under both modes.
+    * query) dominates runtime. Each round's labels are a lazy
+    * [[graft.Boundaries]] boundary (`loopChk`): a flat `LogicalRDD` that
+    * keeps every iteration's plan constant-size and materializes inside
+    * the round's one `moved`-count job. Under
+    * `graft.pipeline.reliableCheckpoint=true` every round checkpoints
+    * reliably instead — state survives executor loss, at one
+    * distributed-FS round-trip per iteration.
     */
-  private[graft] def clusterLabels(pairs: DataFrame): DataFrame = {
-    val session = pairs.sparkSession
-    // strict parse: a mistyped mode fails loudly instead of silently
-    // running executor-local (the Curation.scopeFor discipline)
-    val reliable = session.conf.getOption("graft.cluster.checkpoint") match {
-      case None | Some("local") => false
-      case Some("reliable") => true
-      case Some(v) => throw new IllegalArgumentException(
-        s"graft.cluster.checkpoint must be 'reliable' or 'local', got '$v'")
-    }
-    if (reliable) require(session.sparkContext.getCheckpointDir.isDefined,
-      "graft.cluster.checkpoint=reliable needs sparkContext.setCheckpointDir")
-    val edges = pairs.select(col("doc_a").as("s"), col("doc_b").as("t"))
-      .union(pairs.select(col("doc_b").as("s"), col("doc_a").as("t")))
-      .persist()
-    // every localCheckpoint of the loop, released before return: checkpoint
-    // blocks are NOT catalog-managed, so leaving them would silently break
-    // the engine's clearCache cache-lifetime contract (suite-locked).
-    // (Reliable-mode files are not storage blocks; ContextCleaner or the
-    // checkpoint dir's owner reclaims them — see the scaladoc.)
-    val loopChk = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    // LAZY checkpoints: the plan is truncated immediately (a flat
-    // LogicalRDD), but the blocks materialize inside the iteration's one
-    // `moved`-count job — eager would add a separate blocking job per
-    // checkpoint per iteration (measured +0.7s steady on the corpus).
-    def chk(df: DataFrame): DataFrame = {
-      if (reliable) df.checkpoint(eager = false)
-      else {
-        val out = df.localCheckpoint(eager = false)
-        out.queryExecution.analyzed.collectFirst {
-          case lr: org.apache.spark.sql.execution.LogicalRDD =>
-            loopChk += lr.rdd
-        }
-        out
-      }
-    }
-    var labels = chk(edges.select(col("s").as("id")).distinct()
-      .withColumn("lbl", col("id")))
-    var iters = 0
-    var converged = false
-    while (!converged && iters < 50) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("t"), col("lbl").as("nlbl")), "t")
-        .groupBy(col("s").as("id")).agg(min(col("nlbl")).as("nbr"))
-      // prop needs no checkpoint of its own: labels is a flat LogicalRDD,
-      // so this plan is constant-size even when the jump below references
-      // it twice (the cost there is recomputing nbrMin once more in the
-      // rare jumping rounds, not plan growth)
-      val prop = labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"))
-      // pointer-jump (path doubling): shortcut every label to its label's
-      // label. Labels are always node ids of the same component (they
-      // start as self-ids and only ever adopt other nodes' ids), so the
-      // self-join resolves; each jumping round at least HALVES the
-      // remaining label distance to the component minimum — convergence in
-      // O(log diameter) instead of O(diameter). Engaged only from round 4:
-      // near-dup components are near-cliques that converge in ≤3 plain
-      // rounds (the common case pays zero extra joins), while a
-      // pathological chain graph flips into doubling and still finishes
-      // far inside the 50-round loud cap (≈ 3 + log₂(diameter) rounds).
-      val next = chk(
-        if (iters < 3) prop
-        else prop.join(
-            prop.select(col("id").as("lbl"), col("lbl").as("lbl2")),
-            Seq("lbl"), "left")
+  private[graft] def clusterLabels(pairs: DataFrame): DataFrame =
+    Boundaries.scoped(pairs.sparkSession) { scope =>
+      val edges = pairs.select(col("doc_a").as("s"), col("doc_b").as("t"))
+        .union(pairs.select(col("doc_b").as("s"), col("doc_a").as("t")))
+        .persist()
+      var labels = scope.loopChk(edges.select(col("s").as("id")).distinct()
+        .withColumn("lbl", col("id")))
+      var iters = 0
+      var converged = false
+      while (!converged && iters < 50) {
+        val nbrMin = edges
+          .join(labels.select(col("id").as("t"), col("lbl").as("nlbl")), "t")
+          .groupBy(col("s").as("id")).agg(min(col("nlbl")).as("nbr"))
+        // prop needs no checkpoint of its own: labels is a flat LogicalRDD,
+        // so this plan is constant-size even when the jump below references
+        // it twice (the cost there is recomputing nbrMin once more in the
+        // rare jumping rounds, not plan growth)
+        val prop = labels.join(nbrMin, Seq("id"), "left")
           .select(col("id"),
-            least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl")))
-      // one action per iteration: count of labels that still moved
-      val moved = next.join(labels.withColumnRenamed("lbl", "old"), "id")
-        .filter(col("lbl") =!= col("old")).count()
-      labels = next
-      converged = moved == 0
-      iters += 1
+            least(col("lbl"), coalesce(col("nbr"), col("lbl"))).as("lbl"))
+        // pointer-jump (path doubling): shortcut every label to its label's
+        // label. Labels are always node ids of the same component (they
+        // start as self-ids and only ever adopt other nodes' ids), so the
+        // self-join resolves; each jumping round at least HALVES the
+        // remaining label distance to the component minimum — convergence in
+        // O(log diameter) instead of O(diameter). Engaged only from round 4:
+        // near-dup components are near-cliques that converge in ≤3 plain
+        // rounds (the common case pays zero extra joins), while a
+        // pathological chain graph flips into doubling and still finishes
+        // far inside the 50-round loud cap (≈ 3 + log₂(diameter) rounds).
+        val next = scope.loopChk(
+          if (iters < 3) prop
+          else prop.join(
+              prop.select(col("id").as("lbl"), col("lbl").as("lbl2")),
+              Seq("lbl"), "left")
+            .select(col("id"),
+              least(col("lbl"), coalesce(col("lbl2"), col("lbl"))).as("lbl")))
+        // one action per iteration: count of labels that still moved
+        val moved = next.join(labels.withColumnRenamed("lbl", "old"), "id")
+          .filter(col("lbl") =!= col("old")).count()
+        labels = next
+        converged = moved == 0
+        iters += 1
+      }
+      require(converged, s"clusterLabels did not converge in $iters iterations")
+      edges.unpersist()
+      scope.keep(labels)
     }
-    require(converged, s"clusterLabels did not converge in $iters iterations")
-    edges.unpersist()
-    // Hand the result back as a CATALOG-managed cache and drop every loop
-    // checkpoint: the caller's clearCache() then releases everything this
-    // operator allocated (the suite-locked lifetime contract). The copy is
-    // materialized BEFORE the checkpoints are released — after clearCache
-    // the output is consumed and done (re-running the OPERATOR rebuilds
-    // from scratch; a stale handle to this frame is outside the contract).
-    val out = labels.persist()
-    out.count()
-    loopChk.foreach(_.unpersist(false))
-    out
-  }
 
   /** Near-duplicate CLUSTERS: every document labeled with the minimum
     * doc_id of its connected component in the `dedupNgram` pair graph

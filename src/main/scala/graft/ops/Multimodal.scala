@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Boundaries
 import graft.Tables.table
 
 /** §2j multimodal column plumbing (SURVEY §2j).
@@ -1906,7 +1907,7 @@ object Multimodal {
       // its band state derives). The three populations' audio/image
       // ladders have NO persisted plants (single consumers, streamed
       // through tasks), so their six writes submit CONCURRENTLY after
-      // the video phase (guide §2.6 via Curation.runAll — the landing
+      // the video phase (guide §2.6 via Boundaries.runAll — the landing
       // is rep-1-only wall-clock, but the driver's bench pays it once);
       // each write's content is its own plan's. The batch side's replay
       // order rides EXPLICIT ascending mtimes (promoteReplayFiles),
@@ -1928,7 +1929,7 @@ object Multimodal {
       videoBandState(ovids, CutFrameBytes, CutThresholdMilli)
         .write.mode("overwrite").parquet(s"$tmp/odd/video")
       ovids.unpersist(blocking = false)
-      Curation.runAll(Seq(
+      Boundaries.runAll(spark, Seq(
         () => writeBucketed(
           audioBandState(audioStructured(corpus), AudioFpWin,
             AudioSegWin), "audio"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Boundaries
 import graft.Tables.table
 
 /** §2j text analysis for training-data curation (SURVEY §2j `text_stats`
@@ -661,53 +662,38 @@ object TextAnalysis {
     */
   def bpeTrainOn(docs: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val chkRdds = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def chk(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(eager = true)
-      out.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          chkRdds += lr.rdd
+    Boundaries.scoped(docs.sparkSession) { scope =>
+      import scope.chk
+      var syms = chk(docs.filter(col("text").isNotNull)
+        .select(explode(preTokenPieces(lower(col("text")))).as("piece"))
+        .groupBy(col("piece")).agg(count(lit(1)).as("w"))
+        .filter(length(col("piece")) >= 2)
+        .select(expr(
+          """transform(sequence(1, length(piece)),
+            |  i -> substring(piece, i, 1))""".stripMargin).as("cs"),
+          col("w")))
+      val bests = scala.collection.mutable.ListBuffer.empty[DataFrame]
+      (1 to rounds).foreach { rd =>
+        val best = chk(syms
+          .select(explode(bpePairsExpr).as("p"), col("w"))
+          .groupBy(col("p.l").as("left_sym"), col("p.r").as("right_sym"))
+          .agg(sum(col("w")).as("pair_count"))
+          .orderBy(col("pair_count").desc, col("left_sym"),
+            col("right_sym"))
+          .limit(1)
+          .select(lit(rd).as("round"), col("left_sym"), col("right_sym"),
+            col("pair_count")))
+        bests += best
+        if (rd < rounds)
+          syms = chk(syms
+            .crossJoin(broadcast(best.select(col("left_sym").as("ml"),
+              col("right_sym").as("mr"))))
+            .withColumn("mg", bpeMergedExpr)
+            .select(bpeAppliedExpr.as("cs"), col("w"))
+            .filter(size(col("cs")) >= 2))
       }
-      // true materialized size for the planner (the ChkScope.chk
-      // exact-stats discipline): the dictionary/symbol frames are
-      // vocab-sized, so downstream joins broadcast at PLAN time
-      org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(out)
+      scope.keep(bests.reduce(_ unionAll _))
     }
-    var syms = chk(docs.filter(col("text").isNotNull)
-      .select(explode(preTokenPieces(lower(col("text")))).as("piece"))
-      .groupBy(col("piece")).agg(count(lit(1)).as("w"))
-      .filter(length(col("piece")) >= 2)
-      .select(expr(
-        """transform(sequence(1, length(piece)),
-          |  i -> substring(piece, i, 1))""".stripMargin).as("cs"),
-        col("w")))
-    val bests = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    (1 to rounds).foreach { rd =>
-      val best = chk(syms
-        .select(explode(bpePairsExpr).as("p"), col("w"))
-        .groupBy(col("p.l").as("left_sym"), col("p.r").as("right_sym"))
-        .agg(sum(col("w")).as("pair_count"))
-        .orderBy(col("pair_count").desc, col("left_sym"),
-          col("right_sym"))
-        .limit(1)
-        .select(lit(rd).as("round"), col("left_sym"), col("right_sym"),
-          col("pair_count")))
-      bests += best
-      if (rd < rounds)
-        syms = chk(syms
-          .crossJoin(broadcast(best.select(col("left_sym").as("ml"),
-            col("right_sym").as("mr"))))
-          .withColumn("mg", bpeMergedExpr)
-          .select(bpeAppliedExpr.as("cs"), col("w"))
-          .filter(size(col("cs")) >= 2))
-    }
-    val out = bests.reduce(_ unionAll _).persist()
-    // materialize the k-row merge table, then release every checkpoint
-    // this operator allocated outside the catalog (the cache contract)
-    out.queryExecution.toRdd.count()
-    chkRdds.foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** THE TOKENIZER CHAIN COMPOSED — train → encode with the LEARNED
@@ -737,59 +723,44 @@ object TextAnalysis {
     */
   def bpePipelineOn(docs: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val chkRdds = scala.collection.mutable.ListBuffer
-      .empty[org.apache.spark.rdd.RDD[_]]
-    def chk(df: DataFrame): DataFrame = {
-      val out = df.localCheckpoint(eager = true)
-      out.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          chkRdds += lr.rdd
-      }
-      // true materialized size for the planner (the ChkScope.chk
-      // exact-stats discipline): the dictionary/symbol frames are
-      // vocab-sized, so downstream joins broadcast at PLAN time
-      org.apache.spark.sql.graftbridge.StatsBridge.withExactSize(out)
-    }
     val base = docs.filter(col("text").isNotNull)
-    // the piece-tracked dictionary: ALL distinct pieces (1-symbol ones
-    // must be encodable even though they never train)
-    var dict = chk(base
-      .select(explode(preTokenPieces(lower(col("text")))).as("piece"))
-      .groupBy(col("piece")).agg(count(lit(1)).as("w"))
-      .select(col("piece"), col("w"), expr(
-        """transform(sequence(1, length(piece)),
-          |  i -> substring(piece, i, 1))""".stripMargin).as("cs")))
-    (1 to rounds).foreach { _ =>
-      val best = chk(dict
-        .select(explode(bpePairsExpr).as("p"), col("w"))
-        .groupBy(col("p.l").as("ml"), col("p.r").as("mr"))
-        .agg(sum(col("w")).as("c"))
-        .orderBy(col("c").desc, col("ml"), col("mr"))
-        .limit(1)
-        .select(col("ml"), col("mr")))
-      dict = chk(dict.crossJoin(broadcast(best))
-        .withColumn("mg", bpeMergedExpr)
-        .select(col("piece"), col("w"), bpeAppliedExpr.as("cs")))
+    Boundaries.scoped(docs.sparkSession) { scope =>
+      import scope.chk
+      // the piece-tracked dictionary: ALL distinct pieces (1-symbol ones
+      // must be encodable even though they never train)
+      var dict = chk(base
+        .select(explode(preTokenPieces(lower(col("text")))).as("piece"))
+        .groupBy(col("piece")).agg(count(lit(1)).as("w"))
+        .select(col("piece"), col("w"), expr(
+          """transform(sequence(1, length(piece)),
+            |  i -> substring(piece, i, 1))""".stripMargin).as("cs")))
+      (1 to rounds).foreach { _ =>
+        val best = chk(dict
+          .select(explode(bpePairsExpr).as("p"), col("w"))
+          .groupBy(col("p.l").as("ml"), col("p.r").as("mr"))
+          .agg(sum(col("w")).as("c"))
+          .orderBy(col("c").desc, col("ml"), col("mr"))
+          .limit(1)
+          .select(col("ml"), col("mr")))
+        dict = chk(dict.crossJoin(broadcast(best))
+          .withColumn("mg", bpeMergedExpr)
+          .select(col("piece"), col("w"), bpeAppliedExpr.as("cs")))
+      }
+      scope.keep(base
+        .select(col("doc_id"),
+          posexplode(preTokenPieces(lower(col("text"))))
+            .as(Seq("pi", "piece")))
+        .join(dict.select(col("piece"), col("cs")), Seq("piece"))
+        .groupBy(col("doc_id"))
+        .agg(
+          count(lit(1)).as("n_pieces"),
+          sum(size(col("cs")).cast(LongType)).as("n_tokens"),
+          array_join(
+            flatten(transform(
+              array_sort(collect_list(struct(col("pi"), col("cs")))),
+              x => x.getField("cs"))),
+            " ").as("tokens")))
     }
-    val out = base
-      .select(col("doc_id"),
-        posexplode(preTokenPieces(lower(col("text"))))
-          .as(Seq("pi", "piece")))
-      .join(dict.select(col("piece"), col("cs")), Seq("piece"))
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_pieces"),
-        sum(size(col("cs")).cast(LongType)).as("n_tokens"),
-        array_join(
-          flatten(transform(
-            array_sort(collect_list(struct(col("pi"), col("cs")))),
-            x => x.getField("cs"))),
-          " ").as("tokens"))
-      .persist()
-    // the bpe_train materialize-then-release cache discipline
-    out.queryExecution.toRdd.count()
-    chkRdds.foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** `bpe_pipeline` checked key: the corpus encoded by its own
@@ -1623,8 +1594,8 @@ object TextAnalysis {
         graft.Tables.writeBucketed(df, s"$tmp/$name", s"postings_$name",
           "token")
       // three independent derivations of the same source scan —
-      // submitted concurrently (guide §2.6 via Curation.runAll)
-      Curation.runAll(Seq(
+      // submitted concurrently (guide §2.6 via Boundaries.runAll)
+      Boundaries.runAll(spark, Seq(
         () => writeBucketed(
           tok.groupBy(col("token"), col("doc_id"))
             .agg(count(lit(1)).as("tf"))

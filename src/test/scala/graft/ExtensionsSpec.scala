@@ -1414,9 +1414,22 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("composed pipeline runs identically under reliable checkpointing") {
+    import spark.implicits._
     import graft.ops.Curation
-    val baseline = Curation.corpusPipeline(spark, sf).collect()
-    spark.catalog.clearCache()
+    // one key governs every boundary: the composed pipeline's eager
+    // stages, clusterLabels' lazy loop rounds (on a chain that runs the
+    // plain rounds AND the jump, plus a separate pair) and the BPE rounds
+    val pairs = ((0L until 20L).map(i => (i, i + 1)) :+ (40L, 41L))
+      .toDF("doc_a", "doc_b")
+    def rows(): Seq[Set[List[Any]]] = {
+      val out = Seq(Curation.corpusPipeline(spark, sf),
+          Dedup.clusterLabels(pairs), TextAnalysis.bpeTrain(spark, sf))
+        .map(_.collect().map(_.toSeq.toList).toSet)
+      spark.catalog.clearCache()
+      out
+    }
+    val local = rows()
+    assert(local.forall(_.nonEmpty))
     // under the build's target/ (swept by clean), not the system tmpdir:
     // the dir must outlive the test (SparkContext has no unsetCheckpointDir
     // — see the finally below), and an aborted JVM skips shutdown hooks,
@@ -1427,12 +1440,12 @@ class ExtensionsSpec extends SparkSpec {
     val ckDir =
       java.nio.file.Files.createTempDirectory(ckRoot, "graft_reliable_cp")
     // a mistyped conf value fails loudly, naming the key (ADVICE r16)
-    spark.conf.set(Curation.ReliableChkConf, "yes")
-    val bad = intercept[IllegalArgumentException] {
+    spark.conf.set(Boundaries.ReliableChkConf, "yes")
+    val bad = try intercept[IllegalArgumentException] {
       Curation.corpusPipeline(spark, sf)
-    }
-    assert(bad.getMessage.contains(Curation.ReliableChkConf))
-    spark.conf.set(Curation.ReliableChkConf, "true")
+    } finally spark.conf.unset(Boundaries.ReliableChkConf)
+    assert(bad.getMessage.contains(Boundaries.ReliableChkConf))
+    spark.conf.set(Boundaries.ReliableChkConf, "true")
     try {
       // misconfiguration fails loudly BEFORE any work, never a silent
       // fallback to executor-local blocks
@@ -1441,15 +1454,12 @@ class ExtensionsSpec extends SparkSpec {
           Curation.corpusPipeline(spark, sf)
         }
       spark.sparkContext.setCheckpointDir(ckDir.toString)
-      val reliable = Curation.corpusPipeline(spark, sf).collect()
-      spark.catalog.clearCache()
-      def key(r: org.apache.spark.sql.Row) = r.toSeq.toList
-      assert(reliable.map(key).toSet == baseline.map(key).toSet)
-      // the stage boundaries really checkpointed durably
+      assert(rows() == local)
+      // the boundaries really checkpointed durably
       assert(ckDir.toFile.listFiles != null &&
         ckDir.toFile.listFiles.nonEmpty)
     } finally {
-      spark.conf.unset(Curation.ReliableChkConf)
+      spark.conf.unset(Boundaries.ReliableChkConf)
       // do NOT delete ckDir here: SparkContext has no unsetCheckpointDir,
       // so the shared session keeps pointing at it for the rest of the
       // suite — deleting a still-registered checkpoint location would
@@ -1831,41 +1841,6 @@ class ExtensionsSpec extends SparkSpec {
     val paired = corpusPairs.flatMap(p => Seq(p._1, p._2)).toSet
     clusters.foreach { case (d, c) =>
       if (!paired.contains(d)) assert(c == d, s"singleton $d got label $c")
-    }
-  }
-
-  test("cluster labels run identically under reliable checkpointing") {
-    import spark.implicits._
-    // the cluster-deployment escape hatch: same loop, reliable checkpoint
-    // per round instead of executor-local blocks — must produce identical
-    // labels (here on a shape that exercises plain rounds AND the jump)
-    val pairs = ((0L until 20L).map(i => (i, i + 1)) :+ (40L, 41L))
-      .toDF("doc_a", "doc_b")
-    val baseline = Dedup.clusterLabels(pairs).as[(Long, Long)].collect().toMap
-    val ckDir = java.nio.file.Files.createTempDirectory("graft_reliable_ck")
-    // a mistyped mode fails loudly, naming the key — never a silent
-    // fallback to executor-local blocks
-    spark.conf.set("graft.cluster.checkpoint", "Reliable")
-    val bad = try intercept[IllegalArgumentException] {
-      Dedup.clusterLabels(pairs)
-    } finally spark.conf.unset("graft.cluster.checkpoint")
-    assert(bad.getMessage.contains("graft.cluster.checkpoint"))
-    spark.conf.set("graft.cluster.checkpoint", "reliable")
-    try {
-      // misconfiguration fails loudly BEFORE any work, never a silent
-      // fallback to executor-local blocks (checked while no checkpoint
-      // dir is set on the shared context)
-      if (spark.sparkContext.getCheckpointDir.isEmpty)
-        intercept[IllegalArgumentException] { Dedup.clusterLabels(pairs) }
-      spark.sparkContext.setCheckpointDir(ckDir.toString)
-      val reliable = Dedup.clusterLabels(pairs)
-        .as[(Long, Long)].collect().toMap
-      assert(reliable == baseline)
-      // the loop really checkpointed reliably: rdd files landed in the dir
-      assert(ckDir.toFile.listFiles != null && ckDir.toFile.listFiles.nonEmpty)
-    } finally {
-      spark.conf.unset("graft.cluster.checkpoint")
-      graft.LocalFs.deleteRecursively(ckDir.toFile)
     }
   }
 

@@ -4,7 +4,6 @@ import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
 import org.apache.spark.ml.tuning.CrossValidator
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.ops.MLOps
@@ -84,35 +83,14 @@ class MLSpec extends SparkSpec {
 
   test("cross validation jobs carry the caller's job group, call after call") {
     val sc = spark.sparkContext
-    val groups = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        groups.add(Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse("<none>"))
-    }
-    // the groups of every job started since the last call: a fence job
-    // under its own group drains the in-order listener queue up to here
-    def drained(): Seq[String] = {
-      val fence = s"fence-${java.util.UUID.randomUUID()}"
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      Iterator.continually(
-        groups.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .map(g => { assert(g != null, "fence job never reached the listener"); g })
-        .takeWhile(_ != fence).toSeq
-    }
-    sc.addSparkListener(listener)
-    try {
-      drained()
-      for (group <- Seq("cv-call-a", "cv-call-b")) {
+    for (group <- Seq("cv-call-a", "cv-call-b")) {
+      val seen = jobGroupsOf {
         sc.setJobGroup(group, group)
         try MLOps.crossValidator(spark, sf).collect() finally sc.clearJobGroup()
-        val seen = drained()
-        assert(seen.nonEmpty)
-        assert(seen.forall(_ == group), s"$group: ${seen.distinct}")
       }
-    } finally sc.removeSparkListener(listener)
+      assert(seen.nonEmpty)
+      assert(seen.forall(_ == group), s"$group: ${seen.distinct}")
+    }
   }
 
   test("pipeline fit-then-transform == eager stagewise fit/transform") {

@@ -1193,6 +1193,9 @@ class PropertiesSpec extends SparkSpec {
     val bench = docs.filter(col("doc_id") < 20 && col("text").isNotNull)
     val emb = Tables.table(spark, sf, "embeddings")
     val corpus = live.filter(col("doc_id") % 2 === 0)
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
     try {
       spark.conf.set(Curation.CheckDisjointConf, "true")
       // batch-1 = a subset of the corpus itself: the day-1 state merge
@@ -1206,8 +1209,10 @@ class PropertiesSpec extends SparkSpec {
       assert(err.getMessage.contains("disjointness"),
         s"unexpected message: ${err.getMessage}")
       spark.catalog.clearCache()
-      // a mistyped value fails loudly, naming the key (the scopeFor
-      // strict-parse discipline — never a silent guard-off)
+      // the failed run's stage boundaries were released with it
+      assert(sc.getPersistentRDDs.keySet == before)
+      // a mistyped value fails loudly, naming the key (the strict
+      // Boundaries.boolConf parse — never a silent guard-off)
       spark.conf.set(Curation.CheckDisjointConf, "1")
       val bad = intercept[IllegalArgumentException] {
         Curation.corpusStatesUpdateOn(corpus,
@@ -1219,6 +1224,23 @@ class PropertiesSpec extends SparkSpec {
       spark.conf.unset(Curation.CheckDisjointConf)
       spark.catalog.clearCache()
     }
+  }
+
+  test("a composed pipeline that fails mid-chain releases its stage " +
+      "boundaries") {
+    import graft.ops.Curation
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    // a string embedding column passes the URL/text stages and fails
+    // at the semantic stage, after several boundaries were made
+    val emb = Tables.table(spark, sf, "embeddings")
+      .withColumn("embedding", lit("x"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Curation.corpusPipelineOn(Tables.table(spark, sf, "documents"), emb)
+    }
+    spark.catalog.clearCache()
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("postings census: merge equals recompute-over-union, heads are " +

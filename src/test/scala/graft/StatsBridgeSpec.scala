@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.StatsBridge
 
 /** Pins the r21 exact-boundary-statistics optimization
-  * ([[StatsBridge.withExactSize]] + the `ChkScope.chk` wiring): an eager
-  * localCheckpoint boundary hands the planner its TRUE materialized size
-  * instead of the origin plan's compounding estimate, so downstream
-  * broadcast decisions are made at plan time — and NOTHING else moves
-  * (rows, schema, partitioning).
+  * ([[StatsBridge.withExactSize]] + the `Boundaries.Scope.chk` wiring):
+  * an eager localCheckpoint boundary hands the planner its TRUE
+  * materialized size instead of the origin plan's compounding estimate,
+  * so downstream broadcast decisions are made at plan time — and
+  * NOTHING else moves (rows, schema, partitioning).
   */
 class StatsBridgeSpec extends SparkSpec {
 
@@ -86,7 +86,7 @@ class StatsBridgeSpec extends SparkSpec {
     // a LogicalRDD whose blocks are gone has no stored size — the
     // rewrap must decline rather than invent a zero. (Dataset.unpersist
     // does NOT release a localCheckpoint's RDD blocks; the underlying
-    // RDD must be unpersisted, the ChkScope.release discipline.)
+    // RDD must be unpersisted, as Boundaries.scoped does on exit.)
     val chk = spark.range(0, 10).toDF("id").localCheckpoint(true)
     chk.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
