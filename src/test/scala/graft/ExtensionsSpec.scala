@@ -1856,6 +1856,51 @@ class ExtensionsSpec extends SparkSpec {
     assert(labels.forall(_._2 == 0L), "chain must collapse to the head label")
   }
 
+  test("cluster labels run identically under reliable checkpointing") {
+    import spark.implicits._
+    // the cluster-deployment escape hatch: same loop, reliable checkpoint
+    // per round instead of executor-local blocks — must produce identical
+    // labels (here on a shape that exercises plain rounds AND the jump)
+    val pairs = ((0L until 20L).map(i => (i, i + 1)) :+ (40L, 41L))
+      .toDF("doc_a", "doc_b")
+    val baseline = Dedup.clusterLabels(pairs).as[(Long, Long)].collect().toMap
+    spark.catalog.clearCache()
+    // a mistyped mode fails loudly, naming the key — never a silent
+    // fallback to executor-local blocks
+    spark.conf.set(Boundaries.ReliableChkConf, "Reliable")
+    val bad = try intercept[IllegalArgumentException] {
+      Dedup.clusterLabels(pairs)
+    } finally spark.conf.unset(Boundaries.ReliableChkConf)
+    assert(bad.getMessage.contains(Boundaries.ReliableChkConf))
+    spark.conf.set(Boundaries.ReliableChkConf, "true")
+    try {
+      // misconfiguration fails loudly BEFORE any work (checked while no
+      // checkpoint dir is set on the shared context)
+      if (spark.sparkContext.getCheckpointDir.isEmpty) {
+        intercept[IllegalArgumentException] { Dedup.clusterLabels(pairs) }
+        // under target/ and swept at JVM exit, never deleted here: the
+        // context has no unsetCheckpointDir, so later tests still use it
+        val ckRoot = java.nio.file.Paths.get("target", "tmp")
+        java.nio.file.Files.createDirectories(ckRoot)
+        val ckDir =
+          java.nio.file.Files.createTempDirectory(ckRoot, "graft_reliable_ck")
+        spark.sparkContext.setCheckpointDir(ckDir.toString)
+        sys.addShutdownHook(graft.LocalFs.deleteRecursively(ckDir.toFile))
+      }
+      val ckDir = new java.io.File(new org.apache.hadoop.fs.Path(
+        spark.sparkContext.getCheckpointDir.get).toUri.getPath)
+      def rddDirs(): Int =
+        Option(ckDir.listFiles).map(_.count(_.getName.startsWith("rdd-")))
+          .getOrElse(0)
+      val before = rddDirs()
+      val reliable = Dedup.clusterLabels(pairs)
+        .as[(Long, Long)].collect().toMap
+      assert(reliable == baseline)
+      // the loop really checkpointed reliably: new rdd files in the dir
+      assert(rddDirs() > before)
+    } finally spark.conf.unset(Boundaries.ReliableChkConf)
+  }
+
   test("dedup_incremental keeps exactly the clean incoming representatives") {
     import spark.implicits._
     // independent reconstruction from the suite-pinned cluster assignment:
