@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Boundaries
 import graft.Tables.table
+import graft.ops.Multimodal.MediaBands
 
 /** The composed training-data curation pipeline — the end-to-end flow the
   * individual §2j operators exist for, as ONE declarative plan:
@@ -809,39 +810,13 @@ object Curation {
       drops: Seq[DataFrame]): DataFrame =
     scope.chk(drops.reduce(_ unionByName _).distinct())
 
-  /** The three modality band tables as ONE boundary: the per-modality
-    * frames union modality-tagged (frame_idx/seg_idx unified into one
-    * index column, type round-tripped), materialize once, and slice
-    * back per modality — one job instead of three.
+  /** The three modality band tables as ONE boundary: their
+    * modality-tagged union materializes once and slices back per
+    * modality — one job instead of three.
     */
-  private def materializeBands(scope: Boundaries.Scope, video: DataFrame,
-      audio: DataFrame, image: DataFrame): MediaBands = {
-    def tagged(modality: String, idx: Column, df: DataFrame) =
-      df.select(lit(modality).as("modality"), col("doc_id"),
-        idx.cast("long").as("midx"), col("dhash"), col("band_idx"),
-        col("band_val"))
-    val fusedF = scope.chk(
-      tagged("video", col("frame_idx"), video)
-        .unionByName(tagged("audio", col("seg_idx"), audio))
-        .unionByName(tagged("image", lit(null), image)))
-    def slice(modality: String, idxAs: Option[(String,
-        org.apache.spark.sql.types.DataType)]) = {
-      val m = fusedF.filter(col("modality") === modality)
-      idxAs match {
-        case Some((name, t)) => m.select(col("doc_id"),
-          col("midx").cast(t).as(name), col("dhash"),
-          col("band_idx"), col("band_val"))
-        case None => m.select(col("doc_id"), col("dhash"),
-          col("band_idx"), col("band_val"))
-      }
-    }
-    MediaBands(
-      slice("video", Some(("frame_idx",
-        video.schema("frame_idx").dataType))),
-      slice("audio", Some(("seg_idx",
-        audio.schema("seg_idx").dataType))),
-      slice("image", None))
-  }
+  private def materializeBands(scope: Boundaries.Scope,
+      bands: MediaBands): MediaBands =
+    bands.unfuse(scope.chk(bands.fused))
 
   /** One crawl batch through the incremental chain against EXPLICIT
     * state frames — the factored batch side of
@@ -1721,11 +1696,12 @@ object Curation {
     * where media arrive alongside text), and the three rungs' verdicts
     * gate the corpus BEFORE the text chain runs:
     *
-    *   1. media side-ladders at INGEST — [[Multimodal.dedupImageDocsOn]]
-    *      over the planted pair images, [[Multimodal.dedupVideoOn]] and
-    *      [[Multimodal.dedupAudioOn]] over the planted clips — each the
-    *      checked single-operator implementation; a doc whose image,
-    *      video OR audio near-duplicates a smaller doc's drops
+    *   1. media side-ladders at INGEST — the planted pair images and
+    *      clips hashed into band states ([[Multimodal.MediaBands]]) and
+    *      each rung's self-verdict, the body behind
+    *      [[Multimodal.dedupImageDocsOn]], [[Multimodal.dedupVideoOn]]
+    *      and [[Multimodal.dedupAudioOn]]; a doc whose image, video OR
+    *      audio near-duplicates a smaller doc's drops
     *   2. the survivors run the full text flagship chain
     *      ([[corpusPipelineOn]]'s stages 1-9, unchanged) to the shard
     *      manifest.
@@ -1759,30 +1735,13 @@ object Curation {
     val benchmark = docs0
       .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
     Boundaries.scoped(docs0.sparkSession) { scope =>
-      // the media side-ladders at ingest, each materialized to an
-      // id-sized checkpointed drop frame and its payload cache RELEASED
-      // before the next ladder runs: the plants are the memory-heavy
-      // frames (full payloads), and holding all three across the text
-      // chain measurably destabilizes the run (eviction → re-synthesis);
-      // serial eager boundaries bound peak storage to one modality's
-      // plant (the rungs' internal hash-stage persists are hash-sized and
-      // release with the caller's clearCache)
-      val vids = Multimodal.videoStructured(corpus0).persist()
-      val vDrop = scope.chk(Multimodal.dedupVideoOn(vids,
-          Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
-          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(col("is_dup_video")).select(col("doc_id")))
-      vids.unpersist(blocking = false)
-      val clips = Multimodal.audioStructured(corpus0).persist()
-      val aDrop = scope.chk(Multimodal.dedupAudioOn(clips,
-          Multimodal.AudioFpWin, Multimodal.AudioSegWin,
-          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(col("is_dup_audio")).select(col("doc_id")))
-      clips.unpersist(blocking = false)
-      val iDrop = scope.chk(Multimodal.dedupImageDocsOn(
-          Multimodal.pairImages(corpus0), hamMax = 3L)
-        .filter(col("is_dup_image")).select(col("doc_id")))
-      val mmDrop = vDrop.unionByName(aDrop).unionByName(iDrop).distinct()
+      // the media side-ladders at ingest: each modality's band state
+      // materialized in turn with its payload plant RELEASED before the
+      // next (holding the plants across the text chain measurably
+      // destabilizes the run: eviction → re-synthesis), then the three
+      // self-verdicts as ONE drop boundary
+      val mmDrop = mediaDropBoundary(scope,
+        MediaBands.hashed(corpus0, scope.chk).selfDrops)
       val corpus = scope.chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
       // the text flagship over the media survivors
       scope.keep(runPipeline(corpus, benchmark, embeddings, scope)
@@ -1817,24 +1776,12 @@ object Curation {
       // restricted to the live corpus (text.isNotNull is not an id
       // predicate, so the slice is the landedBandsOf semi-join); the
       // three slices and then the three verdicts are independent (§2.6)
-      def bands(modality: String): DataFrame =
-        Multimodal.landedBandsOf(spark, landingM, "corpus", modality,
-            corpus0)
-          .unionByName(Multimodal.landedBandsOf(spark, landingM, "odd",
-            modality, corpus0))
+      def bands(side: String) = MediaBands.of(
+        Multimodal.landedBandsOf(spark, landingM, side, _, corpus0))
       // the three band slices fuse into ONE boundary, then the three
       // self-verdicts into ONE drop boundary (r21 #2)
-      val MediaBands(vBands, aBands, iBands) = materializeBands(scope,
-        bands("video"), bands("audio"), bands("image"))
-      val mmDrop = mediaDropBoundary(scope, Seq(
-        Multimodal.dedupVideoFromBands(vBands,
-          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-          .filter(col("is_dup_video")).select(col("doc_id")),
-        Multimodal.dedupAudioFromBands(aBands,
-          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-          .filter(col("is_dup_audio")).select(col("doc_id")),
-        Multimodal.dedupImageDocsFromBands(iBands, 3L)
-          .filter(col("is_dup_image")).select(col("doc_id"))))
+      val mmDrop = mediaDropBoundary(scope, materializeBands(scope,
+        bands("corpus").merge(bands("odd"))).selfDrops)
       val corpus = scope.chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
       scope.keep(runPipeline(corpus, benchmark, embeddings, scope)
         .manifest)
@@ -1874,56 +1821,16 @@ object Curation {
     Boundaries.scoped(corpus0.sparkSession) { scope =>
       // corpus media gates + the maintained band tables (one hash pass
       // per modality serves both the self-verdict and the state the
-      // batch probes; serial ladders, plants released — the
-      // corpusPipelineMultimodalOn memory discipline)
-      val vids0 = Multimodal.videoStructured(corpus0).persist()
-      val vBands = scope.chk(Multimodal.videoBandState(vids0,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-      val vDropC = scope.chk(Multimodal.dedupVideoOn(vids0,
-          Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
-          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(col("is_dup_video")).select(col("doc_id")))
-      vids0.unpersist(blocking = false)
-      val clips0 = Multimodal.audioStructured(corpus0).persist()
-      val aBands = scope.chk(Multimodal.audioBandState(clips0,
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-      val aDropC = scope.chk(Multimodal.dedupAudioOn(clips0,
-          Multimodal.AudioFpWin, Multimodal.AudioSegWin,
-          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(col("is_dup_audio")).select(col("doc_id")))
-      clips0.unpersist(blocking = false)
-      val iBands = scope.chk(Multimodal.imageBandState(
-        Multimodal.pairImages(corpus0)))
-      val iDropC = scope.chk(Multimodal.dedupImageDocsFromBands(iBands, 3L)
-        .filter(col("is_dup_image")).select(col("doc_id")))
-      val mmDropC = vDropC.unionByName(aDropC).unionByName(iDropC)
-        .distinct()
+      // batch probes; serial ladders, plants released)
+      val corpusBands = MediaBands.hashed(corpus0, scope.chk)
+      val mmDropC = mediaDropBoundary(scope, corpusBands.selfDrops)
       val corpus = scope.chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
       // the corpus text run and its day-1 states
       val run = runPipeline(corpus, benchmark, embeddings, scope)
       val cman = scope.chk(run.manifest)
       // the batch's media screens against the MAINTAINED band tables
-      // (the batch VIDEO plant persists across its two consumers — cut
-      // detection + the keyframe slice — and releases once its drop
-      // frame is checkpointed, the corpus-side discipline; the audio and
-      // image plants have single consumers)
-      val bvids = Multimodal.videoStructured(batch0).persist()
-      val vDropB = scope.chk(Multimodal.dedupVideoIncrementalOnState(vBands,
-          bvids,
-          Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli,
-          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(!col("keep")).select(col("doc_id")))
-      bvids.unpersist(blocking = false)
-      val aDropB = scope.chk(Multimodal.dedupAudioIncrementalOnState(aBands,
-          Multimodal.audioStructured(batch0),
-          Multimodal.AudioFpWin, Multimodal.AudioSegWin,
-          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(!col("keep")).select(col("doc_id")))
-      val iDropB = scope.chk(Multimodal.dedupImageDocsIncrementalOnState(iBands,
-          Multimodal.pairImages(batch0), 3L)
-        .filter(!col("keep")).select(col("doc_id")))
-      val mmDropB = vDropB.unionByName(aDropB).unionByName(iDropB)
-        .distinct()
+      val mmDropB = mediaDropBoundary(scope,
+        corpusBands.probeDrops(MediaBands.hashed(batch0, scope.chk)))
       val batch = scope.chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
       // the text incremental chain over the media survivors
       val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
@@ -1963,29 +1870,13 @@ object Curation {
       val corpusPop = live.filter(col("doc_id") % 2 === 0)
       val batch0 = live.filter(col("doc_id") % 2 === 1)
       // corpus band tables: single-consumer probes — lazy reads suffice;
-      // batch bands feed three joins each ([[dedupVideoIncrementalFromBands]]
-      // contract) — checkpointed
-      def corpusBandsOf(modality: String) =
-        Multimodal.landedBandsOf(spark, landingM, "corpus", modality,
-          corpusPop)
-      // the three batch band slices fuse into ONE boundary, then the
-      // three modality probes into ONE drop boundary (r21 #2)
-      val MediaBands(vBandsB, aBandsB, iBandsB) = materializeBands(scope,
-        Multimodal.landedBandsOf(spark, landingM, "odd", "video", batch0),
-        Multimodal.landedBandsOf(spark, landingM, "odd", "audio", batch0),
-        Multimodal.landedBandsOf(spark, landingM, "odd", "image", batch0))
-      val mmDropB = mediaDropBoundary(scope, Seq(
-        Multimodal.dedupVideoIncrementalFromBands(
-          corpusBandsOf("video"), vBandsB,
-          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-          .filter(!col("keep")).select(col("doc_id")),
-        Multimodal.dedupAudioIncrementalFromBands(
-          corpusBandsOf("audio"), aBandsB,
-          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-          .filter(!col("keep")).select(col("doc_id")),
-        Multimodal.dedupImageDocsIncrementalFromBands(
-          corpusBandsOf("image"), iBandsB, 3L)
-          .filter(!col("keep")).select(col("doc_id"))))
+      // batch bands feed three joins each ([[Multimodal.bandProbe]]) —
+      // the three slices fuse into ONE boundary, then the three modality
+      // probes into ONE drop boundary (r21 #2)
+      def bandsOf(side: String, pop: DataFrame) = MediaBands.of(
+        Multimodal.landedBandsOf(spark, landingM, side, _, pop))
+      val mmDropB = mediaDropBoundary(scope, bandsOf("corpus", corpusPop)
+        .probeDrops(materializeBands(scope, bandsOf("odd", batch0))))
       val batch = scope.chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
       // the text incremental chain over the media survivors, appending
       // after the landed corpus manifest
@@ -2082,14 +1973,6 @@ object Curation {
     * executable (r18 verdict #5), with the trade's visible cost — a
     * TTL'd re-upload RE-ENTERS — pinned negatively in PropertiesSpec.
     */
-  /** The three modalities' band tables as one unit — the frames the
-    * mixed compositions probe and carry. Members must be STABLE
-    * (checkpointed frames or parquet-scan-rooted): each feeds multiple
-    * joins downstream.
-    */
-  private[graft] final case class MediaBands(
-      video: DataFrame, audio: DataFrame, image: DataFrame)
-
   private[graft] def multimodalGenerationCycleOn(corpus0: DataFrame,
       batch1a: DataFrame, batch2a: DataFrame, benchmark: DataFrame,
       embeddings: DataFrame, hostCap: Int,
@@ -2098,26 +1981,8 @@ object Curation {
       // day 0: corpus media gates + the maintained band tables (one hash
       // pass per modality serves the self-verdict, the batch probes and
       // the day-2 merge; serial ladders, plants released)
-      val vids0 = Multimodal.videoStructured(corpus0).persist()
-      val vBands = scope.chk(Multimodal.videoBandState(vids0,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-      vids0.unpersist(blocking = false)
-      val vDropC = scope.chk(Multimodal.dedupVideoFromBands(vBands,
-          Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(col("is_dup_video")).select(col("doc_id")))
-      val clips0 = Multimodal.audioStructured(corpus0).persist()
-      val aBands = scope.chk(Multimodal.audioBandState(clips0,
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-      clips0.unpersist(blocking = false)
-      val aDropC = scope.chk(Multimodal.dedupAudioFromBands(aBands,
-          Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(col("is_dup_audio")).select(col("doc_id")))
-      val iBands = scope.chk(Multimodal.imageBandState(
-        Multimodal.pairImages(corpus0)))
-      val iDropC = scope.chk(Multimodal.dedupImageDocsFromBands(iBands, 3L)
-        .filter(col("is_dup_image")).select(col("doc_id")))
-      val mmDropC = vDropC.unionByName(aDropC).unionByName(iDropC)
-        .distinct()
+      val corpusBands = MediaBands.hashed(corpus0, scope.chk)
+      val mmDropC = mediaDropBoundary(scope, corpusBands.selfDrops)
       val corpus = scope.chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
       // the corpus text run and its day-1 states (each census consumed
       // twice — batch-1's probe and the merge's union side)
@@ -2133,28 +1998,10 @@ object Curation {
       // the batch band frames are hashed ONCE in-key (the self-contained
       // formulation's ingest; the graded key reads the landed plants) —
       // each feeds its probe AND the day-2 band-state merge
-      val bvids1 = Multimodal.videoStructured(batch1a).persist()
-      val vBandsB1 = scope.chk(Multimodal.videoBandState(bvids1,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-      bvids1.unpersist(blocking = false)
-      val aBandsB1 = scope.chk(Multimodal.audioBandState(
-        Multimodal.audioStructured(batch1a),
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-      val iBandsB1 = scope.chk(Multimodal.imageBandState(
-        Multimodal.pairImages(batch1a)))
-      val bvids2 = Multimodal.videoStructured(batch2a).persist()
-      val vBandsB2 = scope.chk(Multimodal.videoBandState(bvids2,
-        Multimodal.CutFrameBytes, Multimodal.CutThresholdMilli))
-      bvids2.unpersist(blocking = false)
-      val aBandsB2 = scope.chk(Multimodal.audioBandState(
-        Multimodal.audioStructured(batch2a),
-        Multimodal.AudioFpWin, Multimodal.AudioSegWin))
-      val iBandsB2 = scope.chk(Multimodal.imageBandState(
-        Multimodal.pairImages(batch2a)))
-      multimodalGenerationCycleFromDay0(st1, run.clean,
-        MediaBands(vBands, aBands, iBands),
-        batch1a, MediaBands(vBandsB1, aBandsB1, iBandsB1),
-        batch2a, MediaBands(vBandsB2, aBandsB2, iBandsB2),
+      val bands1 = MediaBands.hashed(batch1a, scope.chk)
+      val bands2 = MediaBands.hashed(batch2a, scope.chk)
+      multimodalGenerationCycleFromDay0(st1, run.clean, corpusBands,
+        batch1a, bands1, batch2a, bands2,
         benchmark, embeddings, hostCap, materializeContract, scope)
     }
 
@@ -2178,27 +2025,13 @@ object Curation {
     // day 1: batch-1 media against the maintained band tables — the
     // three modality probes fused into ONE drop boundary (r21 #2; AQE
     // runs the probes' independent stages concurrently inside the job)
-    val mmDropB1 = mediaDropBoundary(scope, Seq(
-      Multimodal.dedupVideoIncrementalFromBands(
-        corpusBands.video, bands1.video,
-        Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(!col("keep")).select(col("doc_id")),
-      Multimodal.dedupAudioIncrementalFromBands(
-        corpusBands.audio, bands1.audio,
-        Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(!col("keep")).select(col("doc_id")),
-      Multimodal.dedupImageDocsIncrementalFromBands(
-        corpusBands.image, bands1.image, 3L)
-        .filter(!col("keep")).select(col("doc_id"))))
+    val mmDropB1 = mediaDropBoundary(scope, corpusBands.probeDrops(bands1))
     val batch1 = chk(batch1a.join(mmDropB1, Seq("doc_id"), "left_anti"))
     // batch-1 through the text incremental chain, absorbed into BOTH
     // state families: text censuses by the additive merges, band tables
     // by the union-merge laws (over batch-1's media INPUT population —
     // seen-ness counts what a stage SAW, media-dropped docs included)
     val r1 = runBatch(st1, batch1, benchmark, embeddings, scope)
-    val vBands2 = corpusBands.video.unionByName(bands1.video)
-    val aBands2 = corpusBands.audio.unionByName(bands1.audio)
-    val iBands2 = corpusBands.image.unionByName(bands1.image)
     // the generation bump: per-host budget over the shipped union,
     // survivors re-sharded from position 0; the band tables are
     // CARRIED, not recomputed over the retained set
@@ -2210,16 +2043,8 @@ object Curation {
     val g1man = chk(manifestTail(capped, defaultManifestProps))
     // day 3: batch-2 media against the CARRIED (merged) band tables —
     // the three probes fused into ONE drop boundary (r21 #2)
-    val mmDropB2 = mediaDropBoundary(scope, Seq(
-      Multimodal.dedupVideoIncrementalFromBands(vBands2,
-        bands2.video, Multimodal.VideoTauMilli, Multimodal.VideoHamMax)
-        .filter(!col("keep")).select(col("doc_id")),
-      Multimodal.dedupAudioIncrementalFromBands(aBands2,
-        bands2.audio, Multimodal.AudioTauMilli, Multimodal.AudioHamMax)
-        .filter(!col("keep")).select(col("doc_id")),
-      Multimodal.dedupImageDocsIncrementalFromBands(
-        iBands2, bands2.image, 3L)
-        .filter(!col("keep")).select(col("doc_id"))))
+    val mmDropB2 = mediaDropBoundary(scope,
+      corpusBands.merge(bands1).probeDrops(bands2))
     val batch2 = chk(batch2a.join(mmDropB2, Seq("doc_id"), "left_anti"))
     // batch-2 through the text chain against batch-1 absorbed into the
     // CARRIED censuses — ONE fused merge boundary (r21 #2) — plus the
@@ -2278,9 +2103,8 @@ object Curation {
       // semi-join subplans — each side's trio fuses into ONE boundary
       // (r21 #2)
       def bandsOf(side: String, pop: DataFrame) = materializeBands(scope,
-        Multimodal.landedBandsOf(spark, landingM, side, "video", pop),
-        Multimodal.landedBandsOf(spark, landingM, side, "audio", pop),
-        Multimodal.landedBandsOf(spark, landingM, side, "image", pop))
+        MediaBands.of(Multimodal.landedBandsOf(spark, landingM, side, _,
+          pop)))
       multimodalGenerationCycleFromDay0(day0.states, day0.clean,
         bandsOf("corpus", corpusPop),
         b1, bandsOf("odd", b1),
@@ -3081,197 +2905,18 @@ object Curation {
     */
   private def multimodalGenerationCycleSql: String = {
     val livePop = s"doc_id >= $ContamBenchDocs AND text IS NOT NULL"
-    val vTau = Multimodal.VideoTauMilli
-    val vHam = Multimodal.VideoHamMax
-    val aTau = Multimodal.AudioTauMilli
-    val aHam = Multimodal.AudioHamMax
     val g1states = OracleStates("u2", "l2", "s2", "mem2", "m2mm",
       "g1stat")
     // concatenated head (see pipelineSql's stripMargin note)
     "WITH mpop AS (SELECT doc_id FROM documents WHERE " + livePop +
       "),\n" +
-      Multimodal.videoChainSqlCtes("v", "mpop") + ",\n" +
-    s"""vmtc AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM vbands a JOIN vbands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vvc AS (
-       |  SELECT k.doc_id,
-       |    CAST(count(vmtc.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS dup_frac_milli,
-       |    min(vmtc.min_partner) AS min_partner
-       |  FROM vkfs k LEFT JOIN vmtc
-       |    ON vmtc.doc_a = k.doc_id AND vmtc.kf_a = k.kf
-       |  WHERE k.doc_id % 2 = 0
-       |  GROUP BY k.doc_id),
-       |vdropc AS (
-       |  SELECT doc_id FROM vvc
-       |  WHERE coalesce(dup_frac_milli >= $vTau
-       |    AND min_partner < doc_id, false)),
-       |vmcb1 AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a, true AS hit
-       |  FROM vbands a JOIN vbands c ON a.band_idx = c.band_idx
-       |    AND a.band_val = c.band_val
-       |  WHERE a.doc_id % 4 = 1 AND c.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, c.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vmbb1 AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM vbands a JOIN vbands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 4 = 1 AND b.doc_id % 4 = 1
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vvb1 AS (
-       |  SELECT k.doc_id,
-       |    CAST(count(vmcb1.hit) AS BIGINT) * 1000 // count(*)
-       |      AS corpus_frac_milli,
-       |    CAST(count(vmbb1.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS batch_frac_milli,
-       |    min(vmbb1.min_partner) AS min_batch_partner
-       |  FROM vkfs k
-       |  LEFT JOIN vmcb1 ON vmcb1.doc_a = k.doc_id AND vmcb1.kf_a = k.kf
-       |  LEFT JOIN vmbb1 ON vmbb1.doc_a = k.doc_id AND vmbb1.kf_a = k.kf
-       |  WHERE k.doc_id % 4 = 1
-       |  GROUP BY k.doc_id),
-       |vdropb1 AS (
-       |  SELECT doc_id FROM vvb1
-       |  WHERE corpus_frac_milli >= $vTau
-       |     OR (corpus_frac_milli < $vTau AND coalesce(
-       |       batch_frac_milli >= $vTau
-       |         AND min_batch_partner < doc_id, false))),
-       |vmcb2 AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a, true AS hit
-       |  FROM vbands a JOIN vbands c ON a.band_idx = c.band_idx
-       |    AND a.band_val = c.band_val
-       |  WHERE a.doc_id % 4 = 3 AND c.doc_id % 4 != 3
-       |    AND bit_count(xor(a.dhash, c.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vmbb2 AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM vbands a JOIN vbands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 = 3
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vvb2 AS (
-       |  SELECT k.doc_id,
-       |    CAST(count(vmcb2.hit) AS BIGINT) * 1000 // count(*)
-       |      AS corpus_frac_milli,
-       |    CAST(count(vmbb2.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS batch_frac_milli,
-       |    min(vmbb2.min_partner) AS min_batch_partner
-       |  FROM vkfs k
-       |  LEFT JOIN vmcb2 ON vmcb2.doc_a = k.doc_id AND vmcb2.kf_a = k.kf
-       |  LEFT JOIN vmbb2 ON vmbb2.doc_a = k.doc_id AND vmbb2.kf_a = k.kf
-       |  WHERE k.doc_id % 4 = 3
-       |  GROUP BY k.doc_id),
-       |vdropb2 AS (
-       |  SELECT doc_id FROM vvb2
-       |  WHERE corpus_frac_milli >= $vTau
-       |     OR (corpus_frac_milli < $vTau AND coalesce(
-       |       batch_frac_milli >= $vTau
-       |         AND min_batch_partner < doc_id, false))),""".stripMargin +
-      "\n" +
-      Multimodal.audioChainSqlCtes("x", "mpop") + ",\n" +
-    s"""xmtc AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM xabands a JOIN xabands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xvc AS (
-       |  SELECT h.doc_id,
-       |    CAST(count(xmtc.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS dup_frac_milli,
-       |    min(xmtc.min_partner) AS min_partner
-       |  FROM xah h LEFT JOIN xmtc
-       |    ON xmtc.doc_a = h.doc_id AND xmtc.seg_a = h.seg_idx
-       |  WHERE h.doc_id % 2 = 0
-       |  GROUP BY h.doc_id),
-       |xdropc AS (
-       |  SELECT doc_id FROM xvc
-       |  WHERE coalesce(dup_frac_milli >= $aTau
-       |    AND min_partner < doc_id, false)),
-       |xmcb1 AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a, true AS hit
-       |  FROM xabands a JOIN xabands c ON a.band_idx = c.band_idx
-       |    AND a.band_val = c.band_val
-       |  WHERE a.doc_id % 4 = 1 AND c.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, c.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xmbb1 AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM xabands a JOIN xabands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 4 = 1 AND b.doc_id % 4 = 1
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xvb1 AS (
-       |  SELECT h.doc_id,
-       |    CAST(count(xmcb1.hit) AS BIGINT) * 1000 // count(*)
-       |      AS corpus_frac_milli,
-       |    CAST(count(xmbb1.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS batch_frac_milli,
-       |    min(xmbb1.min_partner) AS min_batch_partner
-       |  FROM xah h
-       |  LEFT JOIN xmcb1 ON xmcb1.doc_a = h.doc_id
-       |    AND xmcb1.seg_a = h.seg_idx
-       |  LEFT JOIN xmbb1 ON xmbb1.doc_a = h.doc_id
-       |    AND xmbb1.seg_a = h.seg_idx
-       |  WHERE h.doc_id % 4 = 1
-       |  GROUP BY h.doc_id),
-       |xdropb1 AS (
-       |  SELECT doc_id FROM xvb1
-       |  WHERE corpus_frac_milli >= $aTau
-       |     OR (corpus_frac_milli < $aTau AND coalesce(
-       |       batch_frac_milli >= $aTau
-       |         AND min_batch_partner < doc_id, false))),
-       |xmcb2 AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a, true AS hit
-       |  FROM xabands a JOIN xabands c ON a.band_idx = c.band_idx
-       |    AND a.band_val = c.band_val
-       |  WHERE a.doc_id % 4 = 3 AND c.doc_id % 4 != 3
-       |    AND bit_count(xor(a.dhash, c.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xmbb2 AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM xabands a JOIN xabands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 4 = 3 AND b.doc_id % 4 = 3
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xvb2 AS (
-       |  SELECT h.doc_id,
-       |    CAST(count(xmcb2.hit) AS BIGINT) * 1000 // count(*)
-       |      AS corpus_frac_milli,
-       |    CAST(count(xmbb2.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS batch_frac_milli,
-       |    min(xmbb2.min_partner) AS min_batch_partner
-       |  FROM xah h
-       |  LEFT JOIN xmcb2 ON xmcb2.doc_a = h.doc_id
-       |    AND xmcb2.seg_a = h.seg_idx
-       |  LEFT JOIN xmbb2 ON xmbb2.doc_a = h.doc_id
-       |    AND xmbb2.seg_a = h.seg_idx
-       |  WHERE h.doc_id % 4 = 3
-       |  GROUP BY h.doc_id),
-       |xdropb2 AS (
-       |  SELECT doc_id FROM xvb2
-       |  WHERE corpus_frac_milli >= $aTau
-       |     OR (corpus_frac_milli < $aTau AND coalesce(
-       |       batch_frac_milli >= $aTau
-       |         AND min_batch_partner < doc_id, false))),
-       |idropb1 AS (
+      Multimodal.mediaChainSqlCtes + ",\n" +
+      Multimodal.selfDropSqlCtes("c", d => s"$d % 2 = 0") + ",\n" +
+      Multimodal.probeDropSqlCtes("b1", d => s"$d % 4 = 1",
+        d => s"$d % 2 = 0") + ",\n" +
+      Multimodal.probeDropSqlCtes("b2", d => s"$d % 4 = 3",
+        d => s"$d % 4 != 3") + ",\n" +
+    s"""idropb1 AS (
        |  SELECT doc_id FROM mpop
        |  WHERE doc_id % 4 = 1 AND doc_id % 10 = 3
        |    AND (doc_id - 1) IN (SELECT doc_id FROM mpop)),
@@ -3342,49 +2987,9 @@ object Curation {
     val pop = s"doc_id >= $ContamBenchDocs AND text IS NOT NULL"
     // concatenated head (see pipelineSql's stripMargin note)
     "WITH mpop AS (SELECT doc_id FROM documents WHERE " + pop + "),\n" +
-      Multimodal.videoChainSqlCtes("v", "mpop") + ",\n" +
-    s"""vmt AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM vbands a JOIN vbands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE bit_count(xor(a.dhash, b.dhash))
-       |    <= ${Multimodal.VideoHamMax}
-       |  GROUP BY a.doc_id, a.kf),
-       |vv AS (
-       |  SELECT k.doc_id,
-       |    CAST(count(vmt.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS dup_frac_milli,
-       |    min(vmt.min_partner) AS min_partner
-       |  FROM vkfs k LEFT JOIN vmt
-       |    ON vmt.doc_a = k.doc_id AND vmt.kf_a = k.kf
-       |  GROUP BY k.doc_id),
-       |vdrop AS (
-       |  SELECT doc_id FROM vv
-       |  WHERE coalesce(dup_frac_milli >= ${Multimodal.VideoTauMilli}
-       |    AND min_partner < doc_id, false)),""".stripMargin + "\n" +
-      Multimodal.audioChainSqlCtes("x", "mpop") + ",\n" +
-    s"""xmt AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM xabands a JOIN xabands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE bit_count(xor(a.dhash, b.dhash))
-       |    <= ${Multimodal.AudioHamMax}
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xv AS (
-       |  SELECT h.doc_id,
-       |    CAST(count(xmt.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS dup_frac_milli,
-       |    min(xmt.min_partner) AS min_partner
-       |  FROM xah h LEFT JOIN xmt
-       |    ON xmt.doc_a = h.doc_id AND xmt.seg_a = h.seg_idx
-       |  GROUP BY h.doc_id),
-       |xdrop AS (
-       |  SELECT doc_id FROM xv
-       |  WHERE coalesce(dup_frac_milli >= ${Multimodal.AudioTauMilli}
-       |    AND min_partner < doc_id, false)),
-       |idrop AS (
+      Multimodal.mediaChainSqlCtes + ",\n" +
+      Multimodal.selfDropSqlCtes("", _ => "TRUE") + ",\n" +
+    s"""idrop AS (
        |  SELECT doc_id FROM mpop
        |  WHERE doc_id % 10 = 3
        |    AND (doc_id - 1) IN (SELECT doc_id FROM mpop)),
@@ -3410,125 +3015,14 @@ object Curation {
     */
   private def multimodalIncrementalSql: String = {
     val livePop = s"doc_id >= $ContamBenchDocs AND text IS NOT NULL"
-    val vTau = Multimodal.VideoTauMilli
-    val vHam = Multimodal.VideoHamMax
-    val aTau = Multimodal.AudioTauMilli
-    val aHam = Multimodal.AudioHamMax
     // concatenated head (see pipelineSql's stripMargin note)
     "WITH mpop AS (SELECT doc_id FROM documents WHERE " + livePop +
       "),\n" +
-      Multimodal.videoChainSqlCtes("v", "mpop") + ",\n" +
-    s"""vmtc AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM vbands a JOIN vbands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vvc AS (
-       |  SELECT k.doc_id,
-       |    CAST(count(vmtc.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS dup_frac_milli,
-       |    min(vmtc.min_partner) AS min_partner
-       |  FROM vkfs k LEFT JOIN vmtc
-       |    ON vmtc.doc_a = k.doc_id AND vmtc.kf_a = k.kf
-       |  WHERE k.doc_id % 2 = 0
-       |  GROUP BY k.doc_id),
-       |vdropc AS (
-       |  SELECT doc_id FROM vvc
-       |  WHERE coalesce(dup_frac_milli >= $vTau
-       |    AND min_partner < doc_id, false)),
-       |vmcb AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a, true AS hit
-       |  FROM vbands a JOIN vbands c ON a.band_idx = c.band_idx
-       |    AND a.band_val = c.band_val
-       |  WHERE a.doc_id % 2 = 1 AND c.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, c.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vmbb AS (
-       |  SELECT a.doc_id AS doc_a, a.kf AS kf_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM vbands a JOIN vbands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 1
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $vHam
-       |  GROUP BY a.doc_id, a.kf),
-       |vvb AS (
-       |  SELECT k.doc_id,
-       |    CAST(count(vmcb.hit) AS BIGINT) * 1000 // count(*)
-       |      AS corpus_frac_milli,
-       |    CAST(count(vmbb.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS batch_frac_milli,
-       |    min(vmbb.min_partner) AS min_batch_partner
-       |  FROM vkfs k
-       |  LEFT JOIN vmcb ON vmcb.doc_a = k.doc_id AND vmcb.kf_a = k.kf
-       |  LEFT JOIN vmbb ON vmbb.doc_a = k.doc_id AND vmbb.kf_a = k.kf
-       |  WHERE k.doc_id % 2 = 1
-       |  GROUP BY k.doc_id),
-       |vdropb AS (
-       |  SELECT doc_id FROM vvb
-       |  WHERE corpus_frac_milli >= $vTau
-       |     OR (corpus_frac_milli < $vTau AND coalesce(
-       |       batch_frac_milli >= $vTau
-       |         AND min_batch_partner < doc_id, false))),""".stripMargin +
-      "\n" +
-      Multimodal.audioChainSqlCtes("x", "mpop") + ",\n" +
-    s"""xmtc AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM xabands a JOIN xabands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xvc AS (
-       |  SELECT h.doc_id,
-       |    CAST(count(xmtc.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS dup_frac_milli,
-       |    min(xmtc.min_partner) AS min_partner
-       |  FROM xah h LEFT JOIN xmtc
-       |    ON xmtc.doc_a = h.doc_id AND xmtc.seg_a = h.seg_idx
-       |  WHERE h.doc_id % 2 = 0
-       |  GROUP BY h.doc_id),
-       |xdropc AS (
-       |  SELECT doc_id FROM xvc
-       |  WHERE coalesce(dup_frac_milli >= $aTau
-       |    AND min_partner < doc_id, false)),
-       |xmcb AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a, true AS hit
-       |  FROM xabands a JOIN xabands c ON a.band_idx = c.band_idx
-       |    AND a.band_val = c.band_val
-       |  WHERE a.doc_id % 2 = 1 AND c.doc_id % 2 = 0
-       |    AND bit_count(xor(a.dhash, c.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xmbb AS (
-       |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a,
-       |    min(b.doc_id) AS min_partner
-       |  FROM xabands a JOIN xabands b ON a.band_idx = b.band_idx
-       |    AND a.band_val = b.band_val AND a.doc_id != b.doc_id
-       |  WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 1
-       |    AND bit_count(xor(a.dhash, b.dhash)) <= $aHam
-       |  GROUP BY a.doc_id, a.seg_idx),
-       |xvb AS (
-       |  SELECT h.doc_id,
-       |    CAST(count(xmcb.hit) AS BIGINT) * 1000 // count(*)
-       |      AS corpus_frac_milli,
-       |    CAST(count(xmbb.min_partner) AS BIGINT) * 1000 // count(*)
-       |      AS batch_frac_milli,
-       |    min(xmbb.min_partner) AS min_batch_partner
-       |  FROM xah h
-       |  LEFT JOIN xmcb ON xmcb.doc_a = h.doc_id AND xmcb.seg_a = h.seg_idx
-       |  LEFT JOIN xmbb ON xmbb.doc_a = h.doc_id AND xmbb.seg_a = h.seg_idx
-       |  WHERE h.doc_id % 2 = 1
-       |  GROUP BY h.doc_id),
-       |xdropb AS (
-       |  SELECT doc_id FROM xvb
-       |  WHERE corpus_frac_milli >= $aTau
-       |     OR (corpus_frac_milli < $aTau AND coalesce(
-       |       batch_frac_milli >= $aTau
-       |         AND min_batch_partner < doc_id, false))),
-       |idropb AS (
+      Multimodal.mediaChainSqlCtes + ",\n" +
+      Multimodal.selfDropSqlCtes("c", d => s"$d % 2 = 0") + ",\n" +
+      Multimodal.probeDropSqlCtes("b", d => s"$d % 2 = 1",
+        d => s"$d % 2 = 0") + ",\n" +
+    s"""idropb AS (
        |  SELECT doc_id FROM mpop
        |  WHERE doc_id % 2 = 1 AND doc_id % 10 = 3
        |    AND (doc_id - 1) IN (SELECT doc_id FROM mpop)),

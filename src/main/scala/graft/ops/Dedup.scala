@@ -1346,7 +1346,7 @@ object Dedup {
 
   /** INCREMENTAL LINE DEDUP — the crawl-batch shape at line granularity
     * (completing the incremental family: documents `dedupIncremental`,
-    * embeddings `dedupEmbedIncremental`, images `dedupImagesIncremental`):
+    * embeddings `dedupEmbedIncremental`, images `dedupImageIncremental`):
     * a NEW batch of documents is line-deduped against a MAINTAINED corpus
     * line census ([[lineCensus]]) plus its own lines, without touching
     * the corpus text. A batch line is boilerplate when its distinct-doc

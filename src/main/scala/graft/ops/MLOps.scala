@@ -222,13 +222,13 @@ object MLOps {
     */
   def rfClassifier(spark: SparkSession, sfDir: String): DataFrame = {
     val data = labeledEvents(spark, sfDir)
-    // one cached pass feeds the indexer fit and the multi-pass RF fit
-    val train = trainSlice(data).persist()
-    val indexerModel = labelIndexer.fit(train)
-    val model = rf().fit(assembler.transform(indexerModel.transform(train)))
-    // fits are eager, and the returned plan reads `data`, not `train` —
-    // safe to release the cache before returning
-    train.unpersist()
+    // one cached pass feeds the indexer fit and the multi-pass RF fit;
+    // fits are eager, and the returned plan reads `data`, not `train`
+    val train = trainSlice(data)
+    val (indexerModel, model) = withPersisted(train) {
+      val im = labelIndexer.fit(train)
+      (im, rf().fit(assembler.transform(im.transform(train))))
+    }
     model.transform(assembler.transform(indexerModel.transform(data)))
       .select(col("event_id"), col("label_idx"), col("prediction"))
       .orderBy(col("event_id"))
@@ -240,9 +240,9 @@ object MLOps {
     */
   def pipeline(spark: SparkSession, sfDir: String): DataFrame = {
     val data = labeledEvents(spark, sfDir)
-    val train = trainSlice(data).persist()
-    val model = fullPipeline().fit(train)
-    train.unpersist() // fit is eager; the returned plan reads `data`
+    val train = trainSlice(data)
+    // fit is eager; the returned plan reads `data`
+    val model = withPersisted(train)(fullPipeline().fit(train))
     model.transform(data)
       .select(col("event_id"), col("label_idx"), col("prediction"))
       .orderBy(col("event_id"))
@@ -259,10 +259,10 @@ object MLOps {
     // `/root/reference/MarchineLearningAlgorithm.txt:253,268-270`). Both
     // slices are cached around the multi-pass fit/evaluate.
     val data = labeledEvents(spark, sfDir)
-    val train = trainSlice(data).filter(col("event_id") % 5 =!= 0).persist()
-    val test = data.filter(col("event_id") % 5 === 0).persist()
-    val acc = evaluator.evaluate(fullPipeline().fit(train).transform(test))
-    train.unpersist(); test.unpersist()
+    val train = trainSlice(data).filter(col("event_id") % 5 =!= 0)
+    val test = data.filter(col("event_id") % 5 === 0)
+    val acc = withPersisted(train, test)(
+      evaluator.evaluate(fullPipeline().fit(train).transform(test)))
     spark.createDataFrame(Seq(Tuple1(acc))).toDF("accuracy")
   }
 
@@ -300,13 +300,13 @@ object MLOps {
   private[graft] def cvSlice(spark: SparkSession, sfDir: String): DataFrame =
     labeledEvents(spark, sfDir).filter(col("event_id") < cvCap)
 
-  /** Run `body` over the persisted [[cvSlice]]: every fold split and the
-    * winner's refit read it, so the parquet + JSON parse runs once.
+  /** Run `body` with `frames` persisted, releasing them when it returns
+    * or throws — the one cache owner of the single-fit keys, so a failed
+    * fit leaves no cache behind.
     */
-  private def withCvSlice[T](spark: SparkSession, sfDir: String)
-      (body: DataFrame => T): T = {
-    val data = cvSlice(spark, sfDir).persist()
-    try body(data) finally data.unpersist()
+  private[graft] def withPersisted[T](frames: DataFrame*)(body: => T): T = {
+    frames.foreach(_.persist())
+    try body finally frames.foreach(_.unpersist())
   }
 
   /** One seeded model selection: the pipeline whose RF stage the grid's
@@ -405,14 +405,18 @@ object MLOps {
     * impurity) rows aligned with `avgMetrics`.
     */
   private[graft] def fitCv(spark: SparkSession, sfDir: String)
-      : (CrossValidatorModel, Seq[(Int, String)]) =
-    withCvSlice(spark, sfDir) { data =>
+      : (CrossValidatorModel, Seq[(Int, String)]) = {
+    // every fold split and the winner's refit read the slice, so the
+    // parquet + JSON parse runs once
+    val data = cvSlice(spark, sfDir)
+    withPersisted(data) {
       val s = selectForest(spark, data)
       val best = s.avgMetrics.zipWithIndex.maxBy(_._1)._2
       val model = CvBridge.cvModel(s.pipe, s.eval, s.grid, NumFolds,
         SplitSeed, s.pipe.fit(data, s.grid(best)), s.avgMetrics)
       (model, s.rows)
     }
+  }
 
   /** 3-fold cross-validation over the pipeline, 2×2 grid = 12 model fits
     * (`/root/reference/MarchineLearningAlgorithm.txt:217-221`;
@@ -421,7 +425,8 @@ object MLOps {
     * capped [[cvSlice]]; the key reads no model, so nothing is refit.
     */
   def crossValidator(spark: SparkSession, sfDir: String): DataFrame = {
-    val s = withCvSlice(spark, sfDir)(selectForest(spark, _))
+    val data = cvSlice(spark, sfDir)
+    val s = withPersisted(data)(selectForest(spark, data))
     val rows = s.rows.zip(s.avgMetrics.toSeq).map { case ((d, i), m) =>
       (d, i, m)
     }
@@ -439,13 +444,11 @@ object MLOps {
     // two counts
     val Array(train, test) =
       labeledEvents(spark, sfDir).randomSplit(Array(0.8, 0.2), SplitSeed)
-    train.persist(); test.persist()
-    val model = fullPipeline().fit(train)
-    val acc = evaluator.evaluate(model.transform(test))
-    val out = spark.createDataFrame(Seq((acc, train.count(), test.count())))
-      .toDF("accuracy", "n_train", "n_test")
-    train.unpersist(); test.unpersist()
-    out
+    withPersisted(train, test) {
+      val acc = evaluator.evaluate(fullPipeline().fit(train).transform(test))
+      spark.createDataFrame(Seq((acc, train.count(), test.count())))
+        .toDF("accuracy", "n_train", "n_test")
+    }
   }
 
   /** The rebalance pipeline's post-union frame: filtered two-class events,
@@ -525,7 +528,7 @@ object MLOps {
     // the reference's rankDF: integer-cast projection of the index columns
     val rankDf = labeled.select(
       col("event_id") +: col("outcome_idx").cast(IntegerType).as("outcome_idx")
-        +: idxCols.map(c => col(c).cast(IntegerType).as(c)): _*)
+        +: idxCols.toSeq.map(c => col(c).cast(IntegerType).as(c)): _*)
     val encoded = new OneHotEncoder()
       .setInputCols(idxCols).setOutputCols(vecCols)
       .fit(rankDf).transform(rankDf)
@@ -545,7 +548,7 @@ object MLOps {
     trainData.unpersist()
     val out = model.transform(testData)
       .select(col("event_id") +: col("outcome_idx")
-        +: idxCols.map(col) :+ col("prediction"): _*)
+        +: idxCols.toSeq.map(col) :+ col("prediction"): _*)
       .orderBy(col("event_id"))
     out
   }
@@ -571,9 +574,8 @@ object MLOps {
   def saveFittedPipeline(spark: SparkSession, sfDir: String,
       path: String): Unit = {
     val data = labeledEvents(spark, sfDir)
-    val train = trainSlice(data).persist()
-    val model = fullPipeline().fit(train)
-    train.unpersist()
+    val train = trainSlice(data)
+    val model = withPersisted(train)(fullPipeline().fit(train))
     val dest = new java.io.File(path)
     val tmp = graft.LocalFs.stagingDir(dest, spark.sparkContext.applicationId)
     model.write.overwrite().save(tmp.getPath)

@@ -1314,7 +1314,7 @@ object Streams {
       .withColumn("ham_max",
         when(col("modality") === "video", lit(Multimodal.VideoHamMax))
           .when(col("modality") === "audio", lit(Multimodal.AudioHamMax))
-          .otherwise(lit(3L)))
+          .otherwise(lit(Multimodal.ImageHamMax)))
       .withColumn("hit", col("dh_c").isNotNull &&
         bit_count(col("dhash").bitwiseXOR(col("dh_c"))) <= col("ham_max"))
       .select(col("modality"), col("doc_id"), col("unit_idx"), col("hit"))
@@ -1348,7 +1348,7 @@ object Streams {
           val tau = modality match {
             case "video" => Multimodal.VideoTauMilli
             case "audio" => Multimodal.AudioTauMilli
-            case _ => 1L // image: one unit — any hit is a dup
+            case _ => Multimodal.ImageRung.tauMilli // one unit: any hit
           }
           Iterator.single(MediaVerdictOut(modality, docId, n, nHit, frac,
             frac >= tau))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (test scope): A/B-time query keys under a session conf
   * toggled per rep in ONE JVM — alternating A (conf unset/default) and
   * B (conf=value) so host-throttle weather hits both arms equally.
@@ -14,13 +12,7 @@ object ABMain {
     val value = args(2)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
     val reps = if (args.length > 4) args(4).toInt else 3
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     keys.foreach { key =>
       (1 to reps).foreach { i =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (test scope): dump formatted physical plans for selected query
   * keys so scan pruning / pushdown / broadcast / codegen spans can be
   * audited. Run: sbt "Test/runMain graft.ExplainMain q1 q2 ..."
@@ -9,13 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object ExplainMain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(8).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf = "/root/testdata/sf0.01"
     // optional session confs: leading args of the form conf:key=value

@@ -1389,6 +1389,23 @@ class ExtensionsSpec extends SparkSpec {
         "longer reaches the union read")
   }
 
+  test("the media gate's geometry is named only in Multimodal") {
+    // Curation places the media boundaries; the rungs' τ, hamming radii,
+    // window geometry and the banded hamming join belong to
+    // Multimodal.MediaBands and its SQL twins. A second copy in Curation
+    // would drift from the checked rungs.
+    val banned = Seq("TauMilli", "HamMax", "CutFrameBytes",
+      "CutThresholdMilli", "AudioFpWin", "AudioSegWin", "bit_count(")
+    val f = new java.io.File("src/main/scala/graft/ops/Curation.scala")
+    assert(f.isFile, s"run from the project root (no $f)")
+    val hits = for {
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
+        .map(_.toString).zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"${f.getPath}:${n + 1} contains '$b'"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("corpus_pipeline_learned_bpe: manifest equals the flagship except " +
       "the learned token pricing; seq arithmetic consistent") {
     import graft.ops.Curation

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (test scope): job-level timeline of one query key — every
   * Spark job's (start offset, duration, task count, call site), so a
@@ -19,14 +18,7 @@ object JobProbeMain {
     val key = rest(0)
     val sfDir = if (rest.length > 1) rest(1) else "/root/testdata/sf0.1"
     val reps = if (rest.length > 2) rest(2).toInt else 2
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val spark = Session.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     confArgs.foreach { c =>
       val kv = c.stripPrefix("conf:").split("=", 2)

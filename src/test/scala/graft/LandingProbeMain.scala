@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (test scope): wall-clock of the write-once landing builds
   * (text states, media bands, postings index) from a COLD cache — the
   * cost a graded bench's first rep pays before any query runs. Deletes
@@ -24,13 +22,7 @@ object LandingProbeMain {
           !f.getName.contains(".tmp."))
         .foreach(LocalFs.deleteRecursively)
     }
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def lap(name: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()

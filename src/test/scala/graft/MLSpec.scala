@@ -81,6 +81,19 @@ class MLSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.keySet == before)
   }
 
+  test("withPersisted releases its caches when the body throws") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val data = MLOps.cvSlice(spark, sf)
+    val e = intercept[IllegalStateException](MLOps.withPersisted(data) {
+      data.count() // materialize the cache, then fail like a bad fit
+      throw new IllegalStateException("fit failed")
+    })
+    assert(e.getMessage == "fit failed")
+    assert(sc.getPersistentRDDs.keySet == before)
+    assert(data.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("cross validation jobs carry the caller's job group, call after call") {
     val sc = spark.sparkContext
     for (group <- Seq("cv-call-a", "cv-call-b")) {

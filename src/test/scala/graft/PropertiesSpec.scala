@@ -1109,6 +1109,46 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("every band state holds exactly one band_idx = 0 row per unit") {
+    // the verdict spine reads units off the band_idx = 0 rows instead of
+    // a distinct() shuffle: sound only while each (doc, unit) has exactly
+    // four band rows, one per band — in-key states and the landed tables
+    import graft.ops.Multimodal
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id")).filter(col("doc_id") < 64)
+    val landing = Multimodal.mediaBandLanding(spark, sf)
+    def landed(side: String, m: String) =
+      spark.read.parquet(s"$landing/$side/$m")
+    val vids = Multimodal.videoStructured(docs).persist()
+    try {
+      val states = Seq(
+        "video" -> (Multimodal.videoBandState(vids, Multimodal.CutFrameBytes,
+          Multimodal.CutThresholdMilli), Seq("doc_id", "frame_idx")),
+        "audio" -> (Multimodal.audioBandState(
+          Multimodal.audioStructured(docs), Multimodal.AudioFpWin,
+          Multimodal.AudioSegWin), Seq("doc_id", "seg_idx")),
+        "image" -> (Multimodal.imageBandState(Multimodal.pairImages(docs)),
+          Seq("doc_id"))) ++
+        Seq("corpus", "odd").flatMap(side => Seq(
+          s"$side/video" -> (landed(side, "video"), Seq("doc_id", "frame_idx")),
+          s"$side/audio" -> (landed(side, "audio"), Seq("doc_id", "seg_idx")),
+          s"$side/image" -> (landed(side, "image"), Seq("doc_id"))))
+      for ((name, (bands, unit)) <- states) {
+        val perUnit = bands.groupBy(unit.map(col): _*)
+          .agg(count(lit(1)).as("n"),
+            count(when(col("band_idx") === 0, 1)).as("n0"),
+            countDistinct(col("band_idx")).as("nb"))
+        val bad = perUnit.filter(col("n") =!= 4 || col("n0") =!= 1 ||
+          col("nb") =!= 4).count()
+        assert(bad == 0, s"$name: $bad units without exactly 4 bands")
+        assert(perUnit.count() > 0, s"$name: empty")
+      }
+    } finally {
+      vids.unpersist(blocking = false)
+      spark.catalog.clearCache()
+    }
+  }
+
   test("audio band state merges by plain union and the maintained-table " +
       "probe equals the derive-in-key incremental form") {
     import graft.ops.Multimodal

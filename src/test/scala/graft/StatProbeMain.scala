@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (test scope): what size stats survive a localCheckpoint —
@@ -10,13 +9,7 @@ import org.apache.spark.sql.functions._
 object StatProbeMain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = Session.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def stats(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
       val s = df.queryExecution.optimizedPlan.stats
