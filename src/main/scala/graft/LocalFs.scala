@@ -42,8 +42,8 @@ object LocalFs {
     * | parquet sink      | session dir     | graft_sink_parquet_      | 1h   | Sources.sinkParquetPartitioned (sessionDir) |
     * | JSONL sink        | session dir     | graft_sink_jsonl_        | 1h   | Sources.sinkJsonlRoundTrip (sessionDir) |
     * | CDC replay work   | session dir     | graft_cdcrun_            | 1h   | Streams.replayToFeed (workDir) |
-    * | state-absorb work | session dir     | graft_states_absorb_     | 1h   | Curation.corpusStatesAbsorbOnState (workDir) |
-    * | state-compact work| session dir     | graft_states_compact_    | 1h   | Curation.corpusStatesCompact (workDir) |
+    * | state-absorb work | session dir     | graft_states_absorb_     | 1h   | Curation.corpusStatesAbsorbOnState (storedDayLoop) |
+    * | state-compact work| session dir     | graft_states_compact_    | 1h   | Curation.corpusStatesCompact (storedDayLoop) |
     * | media-absorb work | session dir     | graft_media_absorb_      | 1h   | Multimodal.dedupMediaAbsorbOnState (workDir) |
     *
     * Published caches (`<prefix><sfTag>_<fp>`) are built and published by

@@ -249,6 +249,31 @@ object Curation {
   private[graft] val PipelineDocsPerShard = 25L
   private[graft] val PipelineSeqBudget = 1024
 
+  /** The composed keys' corpus split, spelled once: the held-out
+    * benchmark (doc_id < [[ContamBenchDocs]]) and the live corpus, both
+    * text-bearing, plus the day-loop slices of the live corpus — even
+    * parity the shipped corpus, odd the crawl batch, `% 4 = 1` / `3` the
+    * day-1 / day-2 batches — and the replica-0 restriction of a slice
+    * (doc_id < [[Multimodal.ReplicaBound]], the fixed-batch contract).
+    */
+  private final case class Split(docs: DataFrame, embeddings: DataFrame) {
+    private def withText(id: Column): DataFrame =
+      docs.filter(id && col("text").isNotNull)
+    val live: DataFrame = withText(col("doc_id") >= ContamBenchDocs)
+    val benchmark: DataFrame = withText(col("doc_id") < ContamBenchDocs)
+    def corpus: DataFrame = live.filter(col("doc_id") % 2 === 0)
+    def batch: DataFrame = live.filter(col("doc_id") % 2 === 1)
+    def day1: DataFrame = live.filter(col("doc_id") % 4 === 1)
+    def day2: DataFrame = live.filter(col("doc_id") % 4 === 3)
+    def replica0(slice: DataFrame): DataFrame =
+      slice.filter(col("doc_id") < Multimodal.ReplicaBound)
+  }
+
+  private object Split {
+    def apply(spark: SparkSession, sfDir: String): Split =
+      Split(table(spark, sfDir, "documents"), table(spark, sfDir, "embeddings"))
+  }
+
   /** THE COMPOSED CRAWL→TRAINING FLAGSHIP — the full stage-0→shards chain
     * graded as ONE key, so cross-operator contract drift fails a single
     * hash gate. Every stage IS the checked single-operator implementation
@@ -293,11 +318,11 @@ object Curation {
       table(spark, sfDir, "embeddings"))
       .orderBy(col("shard_id"))
 
-  /** The checkpointed stage boundaries of one full-pipeline run — the
-    * frames the incremental composition reads its corpus-side states
-    * from (each is the INPUT population of the stage whose state it
-    * feeds: censuses count everything a stage saw, not just what it
-    * kept).
+  /** The checkpointed stage boundaries of one pass through the chain —
+    * the corpus run ([[runPipeline]]) or a batch's incremental pass
+    * ([[runBatch]]): each stateful stage's INPUT population (what its
+    * census counts — everything the stage saw, not just what it kept;
+    * [[censusesOf]]), the kept docs and the shard manifest.
     */
   private final case class PipelineRun(
       unblocked: DataFrame, // (doc_id, url) past the deny list → urlCensus
@@ -312,12 +337,10 @@ object Curation {
     */
   def corpusPipelineOn(docs0: DataFrame, embeddings: DataFrame): DataFrame = {
     // 1. benchmark holdout
-    val corpus = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
+    val split = Split(docs0, embeddings)
     Boundaries.scoped(docs0.sparkSession) { scope =>
-      scope.keep(runPipeline(corpus, benchmark, embeddings, scope).manifest)
+      scope.keep(runPipeline(split.live, split.benchmark, embeddings, scope)
+        .manifest)
     }
   }
 
@@ -419,16 +442,27 @@ object Curation {
     * pricing join instead of the pre-r21 two.
     */
   private def manifestTail(clean: DataFrame,
-      props: DataFrame => DataFrame): DataFrame = {
-    Packing
-      .shuffleDeterministicOn(clean, Packing.ShuffleSalt)
-      .join(props(clean), Seq("doc_id"))
-      .withColumn("shard_id", expr(s"pos div $PipelineDocsPerShard"))
+      props: DataFrame => DataFrame): DataFrame =
+    shardAggregate(
+      Packing.shuffleDeterministicOn(clean, Packing.ShuffleSalt)
+        .join(props(clean), Seq("doc_id")),
+      expr(s"pos div $PipelineDocsPerShard"), col("pos"))
+
+  /** The shard aggregate of a priced epoch order `(pos, doc_id, nt,
+    * n_tokens, …)`: docs grouped by `shard`, positions reported as `pos`
+    * (counts, token totals, sequence count, order digest). The
+    * generation-0 tail passes the raw shard and position; the appended
+    * batch tail ([[runBatch]]) passes both offset by the cursor.
+    */
+  private def shardAggregate(priced: DataFrame, shard: Column,
+      pos: Column): DataFrame =
+    priced
+      .withColumn("shard_id", shard)
       .groupBy(col("shard_id"))
       .agg(
         count(lit(1)).as("n_docs"),
-        min(col("pos")).as("first_pos"),
-        max(col("pos")).as("last_pos"),
+        min(pos).as("first_pos"),
+        max(pos).as("last_pos"),
         sum(col("nt")).as("n_ws_tokens"),
         sum(col("n_tokens")).as("n_bpe_tokens"),
         md5(array_join(
@@ -441,72 +475,7 @@ object Curation {
       .select(col("shard_id"), col("n_docs"), col("first_pos"),
         col("last_pos"), col("n_ws_tokens"), col("n_bpe_tokens"),
         col("n_seqs"), col("shard_digest"))
-  }
 
-  /** THE CRAWL-BATCH COMPOSED FLAGSHIP — [[corpusPipelineOn]]'s chain in
-    * the shape production runs it DAILY: the corpus ran the full pipeline
-    * once (its per-stage states are maintained — URL census, line census,
-    * span census, semantic cells, shard manifest), and a NEW crawl batch
-    * flows through the per-family INCREMENTAL operators against those
-    * FROZEN states, ending in an append-only shard manifest:
-    *
-    *   1. deny-list gate (stateless — [[Web.urlBlocklistOn]])
-    *   2. [[Web.dedupUrlIncrementalOn]] vs the corpus [[Web.urlCensus]]
-    *      (built over the corpus's unblocked URLs — every census is the
-    *      state of the stage's INPUT population in the corpus run)
-    *   3. [[TextAnalysis.extractMainTextOn]] (stateless)
-    *   4. [[Dedup.dedupLinesIncrementalOn]] vs the corpus [[Dedup.lineCensus]]
-    *   5. the Gopher gate (stateless)
-    *   6. [[Dedup.dedupSpansStripIncrementalOn]] vs the corpus
-    *      [[Dedup.spanCensus]] — corpus-held grams excise every batch
-    *      occurrence (the corpus holds the canonical copy), batch-only
-    *      duplicated grams keep their min batch doc
-    *   7. [[Dedup.dedupSemanticIncrementalOn]] — batch vectors vs the
-    *      corpus cells' members/centroids (drop-set anti-join, so batch
-    *      docs without embeddings pass, as in the batch flagship)
-    *   8. decontamination vs the held-out benchmark (stateless)
-    *   9. tokenize → salted batch order → APPENDED shards: batch shards
-    *      start after the corpus's last shard, positions continue after
-    *      the corpus's last doc — shipped corpus shards are IMMUTABLE
-    *      (a batch never rewrites a shard a trainer may already hold).
-    *
-    * Two stages of the corpus run are deliberately NOT re-applied to the
-    * batch: the per-host cap (a corpus-construction budget — re-applying
-    * it against full corpus host counts would reject every batch from
-    * hosts already at cap; production re-enforces it at periodic
-    * compaction) and URL dedup WITHIN the corpus (already done).
-    *
-    * FROZEN-STATE SEMANTICS, not recompute-over-union: each stage's
-    * decision equals recompute-over-union restricted to the batch (the
-    * per-family suite-pinned laws), but the COMPOSITION feeds each stage
-    * the corpus state of the corpus's OWN run — a batch can therefore
-    * never retroactively change what the corpus kept (the immutability
-    * production requires), at the price that a corpus line/span pushed
-    * over threshold only by batch occurrences stays in the corpus
-    * shards. (An empty-corpus run does NOT collapse to the batch
-    * flagship: the batch chain skips the host cap and the semantic
-    * stage's cold-cell fallback scores against missing corpus
-    * centroids, not the batch's own — bootstrap runs use
-    * [[corpusPipelineOn]].) ExtensionsSpec pins the laws that DO hold:
-    * the corpus rows of the output are byte-identical to
-    * [[corpusPipelineOn]] over the corpus alone, the append geometry is
-    * contiguous, the censuses demonstrably remove batch docs the
-    * standalone run keeps, and re-feeding the shipped corpus as a batch
-    * is fully absorbed at the frontier screen.
-    *
-    * Output: the full post-append manifest — corpus shards (`is_batch`
-    * 0, byte-identical to the corpus run's) then batch shards
-    * (`is_batch` 1). Unordered.
-    *
-    * Scale shape: corpus-side cost is the three censuses + cell state
-    * over the corpus's checkpointed stage frames (in production these
-    * are the MAINTAINED tables — bucket them by their hash key once and
-    * every batch probes shuffle-free; here they are derived because the
-    * harness grades one self-contained key); batch-side cost is the
-    * per-family incremental shapes, all batch-sized. The manifest append
-    * reads the corpus manifest only for its (max shard, doc count) — a
-    * one-row broadcast, never a corpus scan.
-    */
   /** THE MAINTAINED STATE TABLES of the incremental pipeline — one frame
     * per stateful stage, each the stage's additive census/state over the
     * populations it has absorbed so far: URL census (sum/min-mergeable),
@@ -524,15 +493,6 @@ object Curation {
       semMembers: DataFrame, // (vec_id, unit, cell)
       cursor: DataFrame)     // 1 row: (c_max_shard, c_n_docs)
 
-  /** A batch's pass through the incremental chain — the per-stage INPUT
-    * populations (what the next day's state merge absorbs: the exact
-    * counterparts of [[PipelineRun]]'s corpus frames) plus its appended
-    * shard manifest.
-    */
-  private final case class BatchRun(
-      unblocked: DataFrame, extracted: DataFrame, gated: DataFrame,
-      stripped: DataFrame, clean: DataFrame, manifest: DataFrame)
-
   /** The manifest append cursor: (max shard id, total docs) — a one-row
     * aggregate, broadcast into the batch manifest tail.
     */
@@ -541,26 +501,72 @@ object Curation {
       coalesce(max(col("shard_id")), lit(-1L)).as("c_max_shard"),
       coalesce(sum(col("n_docs")), lit(0L)).as("c_n_docs"))
 
-  /** Day-1 states from a corpus run: each census over the corpus
-    * frame that was the matching stage's INPUT population.
+  /** The day-0 world a day loop starts from: the maintained text states,
+    * the shipped clean corpus and its manifest — [[runPipeline]]'s
+    * outputs over the shipped corpus. Two sources, one shape: the
+    * parquet landing ([[landedDay0]], the graded keys) and an in-scope
+    * corpus run ([[derivedDay0]], the self-contained `…On` forms), so
+    * each day-loop body serves both.
     */
-  private def statesOf(run: PipelineRun, manifest: DataFrame,
-      embeddings: DataFrame): PipelineStates =
-    PipelineStates(
-      Web.urlCensus(run.unblocked),
-      Dedup.lineCensus(run.extracted),
-      Dedup.spanCensus(run.gated, Dedup.SpanGram),
-      Dedup.assignedUnits(
-        embeddings.join(run.stripped.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi"), 64),
-      cursorOf(manifest))
+  private final case class Day0(
+      states: PipelineStates, clean: DataFrame, manifest: DataFrame) {
+    /** The four families as ONE fused boundary (r21 #2) — for bodies
+      * that read each census twice (batch-1's probe and the day-2
+      * merge's union side).
+      */
+    def materialized(scope: Boundaries.Scope): Day0 = copy(states =
+      materializeStates(scope, Seq(states.urlCensus),
+        Seq(states.lineCensus), Seq(states.spanCensus),
+        Seq(states.semMembers), states.cursor))
+  }
+
+  /** Day 0 derived in `scope`: the corpus run, its manifest checkpointed
+    * and its states over the run's boundaries (lazy — [[Day0.materialized]]
+    * fuses them when a body needs it).
+    */
+  private def derivedDay0(corpus: DataFrame, benchmark: DataFrame,
+      embeddings: DataFrame, scope: Boundaries.Scope): Day0 = {
+    val run = runPipeline(corpus, benchmark, embeddings, scope)
+    val cman = scope.chk(run.manifest)
+    val d = censusesOf(run, embeddings)
+    Day0(PipelineStates(d.urlCensus, d.lineCensus, d.spanCensus,
+      d.semMembers, cursorOf(cman)), run.clean, cman)
+  }
+
+  /** Session conf key enabling [[mergeStatesBoundary]]'s disjointness guard
+    * (default false — the guard is a debug-mode action; the graded keys'
+    * splits are disjoint by construction).
+    */
+  private[graft] val CheckDisjointConf = "graft.state.checkDisjointness"
+
+  private def checkMergeDisjointness(st: PipelineStates,
+      br: PipelineRun): Unit = {
+    if (Boundaries.boolConf(br.unblocked.sparkSession, CheckDisjointConf,
+        default = false)) {
+      val batchIds = br.unblocked.select(col("doc_id"))
+        .unionByName(br.stripped.select(col("doc_id"))).distinct()
+      val absorbed = st.urlCensus.select(col("min_doc").as("doc_id"))
+        .unionByName(st.semMembers.select(col("vec_id").as("doc_id")))
+      val overlap = batchIds
+        .join(absorbed, Seq("doc_id"), "left_semi").count()
+      require(overlap == 0L,
+        s"mergeStates disjointness precondition violated: $overlap " +
+          "batch doc_ids collide with the ID-BEARING maintained states " +
+          "(URL-census min holders, semantic member vec_ids — the only " +
+          "state columns that carry doc ids; the content-hash line/span " +
+          "censuses cannot be probed, so a clean guard pass is " +
+          "NECESSARY, not sufficient) — re-absorbing an overlapping " +
+          "batch double-counts the censuses; each crawl batch must be " +
+          s"new documents (guard enabled by $CheckDisjointConf)")
+    }
+  }
 
   /** THE DAY-2 STATE MERGE — absorb a processed batch into the
     * maintained states, each by its family's suite-pinned additive law
     * (the loop production runs at every compaction): URL census merges
     * by per-url sum/min, line and span censuses by per-hash sum,
     * semantic members by plain union — every merge reads the batch's
-    * stage-INPUT populations ([[BatchRun]]), never corpus text. The
+    * stage-INPUT populations ([[PipelineRun]]), never corpus text. The
     * cursor is NOT merged here: it derives from the post-append
     * manifest ([[cursorOf]]), the artifact that already absorbed the
     * batch.
@@ -587,68 +593,39 @@ object Curation {
     * Scale shape: each merge is census ⊎ batch-census — at 100 TB an
     * append to the bucketed state table plus a sum/min compaction over
     * batch-sized key overlap; nothing corpus-sized moves.
+    *
+    * Materialized after the guard as ONE fused multi-family boundary
+    * through [[materializeStates]] (r21 verdict #2); the caller passes
+    * the cursor (post-append manifest or arithmetic).
     */
-  /** Session conf key enabling [[mergeStatesBoundary]]'s disjointness guard
-    * (default false — the guard is a debug-mode action; the graded keys'
-    * splits are disjoint by construction).
-    */
-  private[graft] val CheckDisjointConf = "graft.state.checkDisjointness"
-
-  private def checkMergeDisjointness(st: PipelineStates,
-      br: BatchRun): Unit = {
-    if (Boundaries.boolConf(br.unblocked.sparkSession, CheckDisjointConf,
-        default = false)) {
-      val batchIds = br.unblocked.select(col("doc_id"))
-        .unionByName(br.stripped.select(col("doc_id"))).distinct()
-      val absorbed = st.urlCensus.select(col("min_doc").as("doc_id"))
-        .unionByName(st.semMembers.select(col("vec_id").as("doc_id")))
-      val overlap = batchIds
-        .join(absorbed, Seq("doc_id"), "left_semi").count()
-      require(overlap == 0L,
-        s"mergeStates disjointness precondition violated: $overlap " +
-          "batch doc_ids collide with the ID-BEARING maintained states " +
-          "(URL-census min holders, semantic member vec_ids — the only " +
-          "state columns that carry doc ids; the content-hash line/span " +
-          "censuses cannot be probed, so a clean guard pass is " +
-          "NECESSARY, not sufficient) — re-absorbing an overlapping " +
-          "batch double-counts the censuses; each crawl batch must be " +
-          s"new documents (guard enabled by $CheckDisjointConf)")
-    }
-  }
-
-  /** THE DAY-2 STATE MERGE as a materialized stage boundary: the guard
-    * above, then every family absorbed by its additive law through
-    * [[materializeStates]] — ONE fused multi-family boundary (r21
-    * verdict #2). `cursor` is NOT merged here: it derives from the
-    * post-append manifest (or arithmetically), the artifact that
-    * already absorbed the batch.
-    */
-  private def mergeStatesBoundary(st: PipelineStates, br: BatchRun,
+  private def mergeStatesBoundary(st: PipelineStates, br: PipelineRun,
       embeddings: DataFrame, cursor: DataFrame,
       scope: Boundaries.Scope): PipelineStates = {
     checkMergeDisjointness(st, br)
-    val d = batchCensusesOf(br, embeddings)
+    val d = censusesOf(br, embeddings)
     materializeStates(scope,
       Seq(st.urlCensus, d.urlCensus), Seq(st.lineCensus, d.lineCensus),
       Seq(st.spanCensus, d.spanCensus), Seq(st.semMembers, d.semMembers),
       cursor)
   }
 
-  /** A processed batch's per-family census DELTAS — the exact frames the
-    * day-2 merge absorbs ([[mergeStatesBoundary]]' batch side, factored so the
-    * storage-append composition cannot drift from the in-memory merge).
+  /** A chain pass's per-family censuses — a corpus run's day-1 states
+    * ([[derivedDay0]]) or a processed batch's DELTAS, the exact frames
+    * the day-2 merge absorbs ([[mergeStatesBoundary]]' batch side), so
+    * the storage-append composition cannot drift from the in-memory
+    * merge.
     */
-  private final case class BatchCensuses(
+  private final case class Censuses(
       urlCensus: DataFrame, lineCensus: DataFrame, spanCensus: DataFrame,
       semMembers: DataFrame)
 
-  private def batchCensusesOf(br: BatchRun,
-      embeddings: DataFrame): BatchCensuses = BatchCensuses(
-    Web.urlCensus(br.unblocked),
-    Dedup.lineCensus(br.extracted),
-    Dedup.spanCensus(br.gated, Dedup.SpanGram),
+  private def censusesOf(run: PipelineRun,
+      embeddings: DataFrame): Censuses = Censuses(
+    Web.urlCensus(run.unblocked),
+    Dedup.lineCensus(run.extracted),
+    Dedup.spanCensus(run.gated, Dedup.SpanGram),
     Dedup.assignedUnits(
-      embeddings.join(br.stripped.select(col("doc_id").as("vec_id")),
+      embeddings.join(run.stripped.select(col("doc_id").as("vec_id")),
         Seq("vec_id"), "left_semi"), 64))
 
   /** The URL census' additive law: per-url variant SUM, holder MIN. */
@@ -716,7 +693,7 @@ object Curation {
     * absorb/compact keys write in ONE family-partitioned job. No
     * aggregate: the deltas are already per-family censuses.
     */
-  private def fusedCensusRows(d: BatchCensuses): DataFrame =
+  private def fusedCensusRows(d: Censuses): DataFrame =
     fusedUrlRows(d.urlCensus)
       .unionByName(fusedLineRows(d.lineCensus))
       .unionByName(fusedSpanRows(d.spanCensus))
@@ -780,7 +757,7 @@ object Curation {
     * under `base/states` (production appends one bucketed (family, key)
     * state table, not four).
     */
-  private def writeCensusDeltas(d: BatchCensuses, base: String): Unit =
+  private def writeCensusDeltas(d: Censuses, base: String): Unit =
     fusedCensusRows(d).write.mode("overwrite")
       .partitionBy("family").parquet(s"$base/states")
 
@@ -788,9 +765,9 @@ object Curation {
     * the one delta table.
     */
   private def readCensusDeltas(spark: SparkSession,
-      base: String): BatchCensuses = {
+      base: String): Censuses = {
     val f = spark.read.parquet(s"$base/states")
-    BatchCensuses(
+    Censuses(
       f.filter(col("family") === "url")
         .select(col("url_norm"), col("n_variants"), col("min_doc")),
       f.filter(col("family") === "line")
@@ -826,7 +803,7 @@ object Curation {
     */
   private def runBatch(states: PipelineStates, batch: DataFrame,
       benchmark: DataFrame, embeddings: DataFrame,
-      scope: Boundaries.Scope): BatchRun = {
+      scope: Boundaries.Scope): PipelineRun = {
     import scope.chk
     // 1-2. deny list + frontier screen vs the URL census
     val burls = chk(Web.urlStructured(batch))
@@ -871,42 +848,99 @@ object Curation {
     // 9. tokenize → salted batch order → appended shards (pricing
     // columns fused into one projection + one join — the manifestTail
     // discipline)
-    val bman = Packing
-      .shuffleDeterministicOn(bclean, Packing.ShuffleSalt)
-      .join(defaultManifestProps(bclean), Seq("doc_id"))
-      .crossJoin(broadcast(states.cursor))
-      .withColumn("shard_id",
-        col("c_max_shard") + 1 + expr(s"pos div $PipelineDocsPerShard"))
-      .groupBy(col("shard_id"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        min(col("pos") + col("c_n_docs")).as("first_pos"),
-        max(col("pos") + col("c_n_docs")).as("last_pos"),
-        sum(col("nt")).as("n_ws_tokens"),
-        sum(col("n_tokens")).as("n_bpe_tokens"),
-        md5(array_join(
-          transform(
-            array_sort(collect_list(struct(col("pos"), col("doc_id")))),
-            x => x.getField("doc_id").cast("string")),
-          ",")).as("shard_digest"))
-      .withColumn("n_seqs", expr(
-        s"(n_bpe_tokens + ${PipelineSeqBudget - 1}) div $PipelineSeqBudget"))
-      .select(col("shard_id"), col("n_docs"), col("first_pos"),
-        col("last_pos"), col("n_ws_tokens"), col("n_bpe_tokens"),
-        col("n_seqs"), col("shard_digest"))
-    BatchRun(bUnblocked, bextracted, bgated, bstripped, bclean, bman)
+    val bman = shardAggregate(
+      Packing.shuffleDeterministicOn(bclean, Packing.ShuffleSalt)
+        .join(defaultManifestProps(bclean), Seq("doc_id"))
+        .crossJoin(broadcast(states.cursor)),
+      col("c_max_shard") + 1 + expr(s"pos div $PipelineDocsPerShard"),
+      col("pos") + col("c_n_docs"))
+    PipelineRun(bUnblocked, bextracted, bgated, bstripped, bclean, bman)
   }
 
+  /** THE CRAWL-BATCH COMPOSED FLAGSHIP — [[corpusPipelineOn]]'s chain in
+    * the shape production runs it DAILY: the corpus ran the full pipeline
+    * once (its per-stage states are maintained — URL census, line census,
+    * span census, semantic cells, shard manifest), and a NEW crawl batch
+    * flows through the per-family INCREMENTAL operators against those
+    * FROZEN states, ending in an append-only shard manifest:
+    *
+    *   1. deny-list gate (stateless — [[Web.urlBlocklistOn]])
+    *   2. [[Web.dedupUrlIncrementalOn]] vs the corpus [[Web.urlCensus]]
+    *      (built over the corpus's unblocked URLs — every census is the
+    *      state of the stage's INPUT population in the corpus run)
+    *   3. [[TextAnalysis.extractMainTextOn]] (stateless)
+    *   4. [[Dedup.dedupLinesIncrementalOn]] vs the corpus [[Dedup.lineCensus]]
+    *   5. the Gopher gate (stateless)
+    *   6. [[Dedup.dedupSpansStripIncrementalOn]] vs the corpus
+    *      [[Dedup.spanCensus]] — corpus-held grams excise every batch
+    *      occurrence (the corpus holds the canonical copy), batch-only
+    *      duplicated grams keep their min batch doc
+    *   7. [[Dedup.dedupSemanticIncrementalOn]] — batch vectors vs the
+    *      corpus cells' members/centroids (drop-set anti-join, so batch
+    *      docs without embeddings pass, as in the batch flagship)
+    *   8. decontamination vs the held-out benchmark (stateless)
+    *   9. tokenize → salted batch order → APPENDED shards: batch shards
+    *      start after the corpus's last shard, positions continue after
+    *      the corpus's last doc — shipped corpus shards are IMMUTABLE
+    *      (a batch never rewrites a shard a trainer may already hold).
+    *
+    * Two stages of the corpus run are deliberately NOT re-applied to the
+    * batch: the per-host cap (a corpus-construction budget — re-applying
+    * it against full corpus host counts would reject every batch from
+    * hosts already at cap; production re-enforces it at periodic
+    * compaction) and URL dedup WITHIN the corpus (already done).
+    *
+    * FROZEN-STATE SEMANTICS, not recompute-over-union: each stage's
+    * decision equals recompute-over-union restricted to the batch (the
+    * per-family suite-pinned laws), but the COMPOSITION feeds each stage
+    * the corpus state of the corpus's OWN run — a batch can therefore
+    * never retroactively change what the corpus kept (the immutability
+    * production requires), at the price that a corpus line/span pushed
+    * over threshold only by batch occurrences stays in the corpus
+    * shards. (An empty-corpus run does NOT collapse to the batch
+    * flagship: the batch chain skips the host cap and the semantic
+    * stage's cold-cell fallback scores against missing corpus
+    * centroids, not the batch's own — bootstrap runs use
+    * [[corpusPipelineOn]].) ExtensionsSpec pins the laws that DO hold:
+    * the corpus rows of the output are byte-identical to
+    * [[corpusPipelineOn]] over the corpus alone, the append geometry is
+    * contiguous, the censuses demonstrably remove batch docs the
+    * standalone run keeps, and re-feeding the shipped corpus as a batch
+    * is fully absorbed at the frontier screen.
+    *
+    * Output: the full post-append manifest — corpus shards (`is_batch`
+    * 0, byte-identical to the corpus run's) then batch shards
+    * (`is_batch` 1). Unordered.
+    *
+    * Scale shape: corpus-side cost is the three censuses + cell state
+    * over the corpus's checkpointed stage frames (in production these
+    * are the MAINTAINED tables — bucket them by their hash key once and
+    * every batch probes shuffle-free; here they are derived because the
+    * harness grades one self-contained key); batch-side cost is the
+    * per-family incremental shapes, all batch-sized. The manifest append
+    * reads the corpus manifest only for its (max shard, doc count) — a
+    * one-row broadcast, never a corpus scan.
+    */
   def corpusPipelineIncrementalOn(corpus: DataFrame, batch: DataFrame,
       benchmark: DataFrame, embeddings: DataFrame): DataFrame =
     Boundaries.scoped(corpus.sparkSession) { scope =>
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = scope.chk(run.manifest)
-      val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
+      pipelineIncrementalFromDay0(
+        derivedDay0(corpus, benchmark, embeddings, scope), batch, benchmark,
         embeddings, scope)
-      scope.keep(cman.withColumn("is_batch", lit(0))
-        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
     }
+
+  /** One crawl batch screened against day 0's states, its shards
+    * appended after day 0's manifest (`is_batch` 0 then 1) — the body
+    * [[corpusPipelineIncrementalOn]], [[corpusPipelineIncremental]] and
+    * both multimodal incremental forms share. Kept in `scope`.
+    */
+  private def pipelineIncrementalFromDay0(day0: Day0, batch: DataFrame,
+      benchmark: DataFrame, embeddings: DataFrame,
+      scope: Boundaries.Scope): DataFrame = {
+    val br = runBatch(day0.states, batch, benchmark, embeddings, scope)
+    scope.keep(day0.manifest.withColumn("is_batch", lit(0))
+      .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+  }
 
   /** `corpus_pipeline_incremental` checked key: the family parity split
     * over the held-out-adjusted corpus (even doc_id ≥ 20 = shipped
@@ -921,17 +955,11 @@ object Curation {
     */
   def corpusPipelineIncremental(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
+    val split = Split(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
     Boundaries.scoped(spark) { scope =>
-      val br = runBatch(day0.states,
-        live.filter(col("doc_id") % 2 === 1),
-        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-        table(spark, sfDir, "embeddings"), scope)
-      scope.keep(day0.manifest.withColumn("is_batch", lit(0))
-        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+      pipelineIncrementalFromDay0(day0, split.batch, split.benchmark,
+        split.embeddings, scope)
     }.orderBy(col("shard_id"))
   }
 
@@ -971,20 +999,12 @@ object Curation {
       batch2: DataFrame, benchmark: DataFrame,
       embeddings: DataFrame): DataFrame =
     Boundaries.scoped(corpus.sparkSession) { scope =>
-      // day 0: the corpus run and its day-1 states — materialized per
-      // family up front: each census is consumed TWICE (batch-1's probe
-      // and the day-2 merge's union side), so the flat leaves compute it
-      // once; these ARE the maintained state tables of the day loop
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = scope.chk(run.manifest)
-      val st1raw = statesOf(run, cman, embeddings)
-      // the four family censuses are independent reads of the run's
-      // checkpointed stage frames — ONE fused boundary (r21 #2)
-      val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
-        Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
-        Seq(st1raw.semMembers), st1raw.cursor)
-      statesUpdateFromDay0(st1, cman, batch1, batch2, benchmark,
-        embeddings, scope)
+      // day 0: the corpus run and its day-1 states, fused up front: each
+      // census is consumed TWICE (batch-1's probe and the day-2 merge's
+      // union side); these ARE the maintained state tables of the loop
+      statesUpdateFromDay0(
+        derivedDay0(corpus, benchmark, embeddings, scope).materialized(scope),
+        batch1, batch2, benchmark, embeddings, scope)
     }
 
   /** Days 1-2 of the update loop over an EXPLICIT day-0 world — the
@@ -993,10 +1013,11 @@ object Curation {
     * landed form share one code path, so the two formulations cannot
     * drift. Returns the output manifest kept in `scope`.
     */
-  private def statesUpdateFromDay0(st1: PipelineStates, cman: DataFrame,
-      batch1: DataFrame, batch2: DataFrame, benchmark: DataFrame,
-      embeddings: DataFrame, scope: Boundaries.Scope): DataFrame = {
+  private def statesUpdateFromDay0(day0: Day0, batch1: DataFrame,
+      batch2: DataFrame, benchmark: DataFrame, embeddings: DataFrame,
+      scope: Boundaries.Scope): DataFrame = {
     import scope.chk
+    val (st1, cman) = (day0.states, day0.manifest)
     // day 1: batch-1 against the day-1 states
     val r1 = runBatch(st1, batch1, benchmark, embeddings, scope)
     val b1man = chk(r1.manifest)
@@ -1023,16 +1044,11 @@ object Curation {
     * form row-equal to [[corpusStatesUpdateOn]].
     */
   def corpusStatesUpdate(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
+    val split = Split(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
     Boundaries.scoped(spark) { scope =>
-      statesUpdateFromDay0(day0.states, day0.manifest,
-        live.filter(col("doc_id") % 4 === 1),
-        live.filter(col("doc_id") % 4 === 3),
-        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-        table(spark, sfDir, "embeddings"), scope)
+      statesUpdateFromDay0(day0, split.day1, split.day2, split.benchmark,
+        split.embeddings, scope)
     }.orderBy(col("shard_id"))
   }
 
@@ -1041,7 +1057,7 @@ object Curation {
     * (r18 verdict #2): the four pipeline states plus the append cursor,
     * materialized ONCE per corpus as a write-once parquet landing
     * (content-fingerprinted against documents AND embeddings —
-    * [[statesOf]]'s semantic members read both — atomically published).
+    * [[derivedDay0]]'s semantic members read both — atomically published).
     * This is what "the corpus is never re-read" MEANS in production:
     * the censuses are bucketed tables on durable storage that the day
     * loop's merges append to, not frames a batch screen re-derives per
@@ -1082,17 +1098,11 @@ object Curation {
       new File(s"$sfDir/documents.parquet"),
       new File(s"$sfDir/embeddings.parquet")) { tmpDir =>
       val tmp = tmpDir.getPath
-      val docs0 = table(spark, sfDir, "documents")
-      val live = docs0
-        .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-      val corpus = live.filter(col("doc_id") % 2 === 0)
-      val benchmark = docs0
-        .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-      val embeddings = table(spark, sfDir, "embeddings")
+      val split = Split(spark, sfDir)
       Boundaries.scoped(spark) { scope =>
-        val run = runPipeline(corpus, benchmark, embeddings, scope)
-        val cman = scope.chk(run.manifest)
-        val st = statesOf(run, cman, embeddings)
+        val day0 = derivedDay0(split.corpus, split.benchmark,
+          split.embeddings, scope)
+        val st = day0.states
         // seven independent reads of the run's checkpointed boundaries —
         // submitted concurrently (guide §2.6 via writeAll; the landing is
         // rep-1-only wall-clock, but the graded bench pays it once)
@@ -1102,8 +1112,8 @@ object Curation {
           "span_census" -> st.spanCensus,
           "sem_members" -> st.semMembers,
           "cursor" -> st.cursor,
-          "clean" -> run.clean,
-          "manifest" -> cman), tmp)
+          "clean" -> day0.clean,
+          "manifest" -> day0.manifest), tmp)
         // the STREAMING TEXT-INGEST GATE's probe rows (batch/ side, v2 —
         // the mediaBandLanding batch-side discipline on the text axis):
         // the replica-0 batch run through the incremental chain against
@@ -1112,15 +1122,9 @@ object Curation {
         // family's stage-input keys landed ONE FILE PER FAMILY with
         // ascending mtimes — probe keys are computed where text is
         // processed (ingest); the streaming gate consumes key rows
-        val stLanded = PipelineStates(
-          spark.read.parquet(s"$tmp/url_census"),
-          spark.read.parquet(s"$tmp/line_census"),
-          spark.read.parquet(s"$tmp/span_census"),
-          spark.read.parquet(s"$tmp/sem_members"),
-          spark.read.parquet(s"$tmp/cursor"))
-        val batch = live.filter(col("doc_id") % 2 === 1 &&
-          col("doc_id") < Multimodal.ReplicaBound)
-        val br = runBatch(stLanded, batch, benchmark, embeddings, scope)
+        val br = runBatch(landedStates(spark, tmp),
+          split.replica0(split.batch), split.benchmark, split.embeddings,
+          scope)
         val familySides = Seq(
           "url" -> Web.urlNormalizeOn(br.unblocked)
             .select(lit("url").as("family"), col("doc_id"),
@@ -1157,21 +1161,22 @@ object Curation {
     * over the even-parity live corpus as parquet scans. ONE reader so
     * the landing layout cannot drift between its consumers.
     */
-  private final case class LandedDay0(
-      states: PipelineStates, clean: DataFrame, manifest: DataFrame)
-
-  private def landedDay0(spark: SparkSession, sfDir: String): LandedDay0 = {
+  private def landedDay0(spark: SparkSession, sfDir: String): Day0 = {
     val landing = textStatesLanding(spark, sfDir)
-    LandedDay0(
-      PipelineStates(
-        spark.read.parquet(s"$landing/url_census"),
-        spark.read.parquet(s"$landing/line_census"),
-        spark.read.parquet(s"$landing/span_census"),
-        spark.read.parquet(s"$landing/sem_members"),
-        spark.read.parquet(s"$landing/cursor")),
+    Day0(landedStates(spark, landing),
       spark.read.parquet(s"$landing/clean"),
       spark.read.parquet(s"$landing/manifest"))
   }
+
+  /** The four state tables and the cursor of a text landing directory. */
+  private def landedStates(spark: SparkSession,
+      landing: String): PipelineStates =
+    PipelineStates(
+      spark.read.parquet(s"$landing/url_census"),
+      spark.read.parquet(s"$landing/line_census"),
+      spark.read.parquet(s"$landing/span_census"),
+      spark.read.parquet(s"$landing/sem_members"),
+      spark.read.parquet(s"$landing/cursor"))
 
   /** `corpus_states_onstate` checked key — THE PRODUCTION BATCH-SCREEN
     * SHAPE on the oracle board for the TEXT axis (the
@@ -1201,16 +1206,11 @@ object Curation {
     * corpus-sized term — is write-once, paid by the first run only.
     */
   def corpusStatesOnState(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
+    val split = Split(spark, sfDir)
     val states = landedDay0(spark, sfDir).states
     Boundaries.scoped(spark) { scope =>
-      scope.keep(runBatch(states,
-        live.filter(col("doc_id") % 2 === 1 &&
-          col("doc_id") < Multimodal.ReplicaBound),
-        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-        table(spark, sfDir, "embeddings"), scope).manifest)
+      scope.keep(runBatch(states, split.replica0(split.batch),
+        split.benchmark, split.embeddings, scope).manifest)
     }.orderBy(col("shard_id"))
   }
 
@@ -1222,7 +1222,7 @@ object Curation {
     * parquet landing ([[textStatesLanding]], outside the graded
     * region); batch-1 (doc_id % 4 = 1, replica-0 bounded) screens
     * against them and its per-family census DELTAS
-    * ([[batchCensusesOf]] — the exact frames [[mergeStatesBoundary]] absorbs)
+    * ([[censusesOf]] — the exact frames [[mergeStatesBoundary]] absorbs)
     * are APPENDED as parquet to a session work dir: the absorb is a
     * BATCH-SIZED WRITE, never a state rewrite (production appends to
     * the bucketed census table and compacts on its own schedule — a
@@ -1249,54 +1249,69 @@ object Curation {
     * term, write-once.
     */
   def corpusStatesAbsorbOnState(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val embeddings = table(spark, sfDir, "embeddings")
-    val bound = Multimodal.ReplicaBound
+      sfDir: String): DataFrame =
+    storedDayLoop(spark, sfDir, graft.LocalFs.Names.StatesAbsorb) { d1 =>
+      // day-2 states: landing ∪ appended delta, merged at probe build by
+      // the shared additive laws
+      PipelineStates(
+        mergeUrlCensus(d1.states.urlCensus, d1.deltas.urlCensus),
+        mergeHashCensus(d1.states.lineCensus, d1.deltas.lineCensus, "lh"),
+        mergeHashCensus(d1.states.spanCensus, d1.deltas.spanCensus, "gh"),
+        d1.states.semMembers.unionByName(d1.deltas.semMembers),
+        d1.cursor)
+    }
+
+  /** Day 1 of the day loop on storage, absorbed: the landed day-1
+    * states, batch-1's census deltas read back from their appended
+    * parquet, the cursor advanced arithmetically past batch-1's shards,
+    * and the session work dir the deltas live in.
+    */
+  private final case class StoredDay1(states: PipelineStates,
+      deltas: Censuses, cursor: DataFrame, work: String)
+
+  /** The day loop ON STORAGE shared by [[corpusStatesAbsorbOnState]] and
+    * [[corpusStatesCompact]]: batch-1 (doc_id % 4 = 1, replica-0
+    * bounded) screens against the landed states and its census deltas
+    * are APPENDED as ONE family-partitioned batch-sized parquet job
+    * (r21 #2 — production appends one bucketed (family, key) state
+    * table) to the session work dir `workName` (the replayToFeed
+    * allocation discipline); `day2` turns the absorbed day 1 into the
+    * states batch-2 (doc_id % 4 = 3, bounded) screens against. Output:
+    * batch-1's shards (`day` 1) then batch-2's (`day` 2).
+    */
+  private def storedDayLoop(spark: SparkSession, sfDir: String,
+      workName: String)(day2: StoredDay1 => PipelineStates): DataFrame = {
+    val split = Split(spark, sfDir)
     val st1 = landedDay0(spark, sfDir).states
     Boundaries.scoped(spark) { scope =>
-      // day 1: batch-1 against the landed states
-      val r1 = runBatch(st1,
-        live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
-        benchmark, embeddings, scope)
+      val r1 = runBatch(st1, split.replica0(split.day1), split.benchmark,
+        split.embeddings, scope)
       val b1man = scope.chk(r1.manifest)
-      // THE ABSORB: batch census deltas appended as parquet — a session
-      // work dir (the replayToFeed allocation discipline; production:
-      // an append to the bucketed state table)
-      val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesAbsorb,
-        spark.sparkContext.applicationId)
-      val d = batchCensusesOf(r1, embeddings)
-      // THE ABSORB WRITE: one family-partitioned batch-sized job (r21 #2
-      // — production appends ONE bucketed (family, key) state table)
-      writeCensusDeltas(d, work.getPath)
-      // day-2 states: landing ∪ appended delta, merged at probe build by
-      // the shared additive laws; cursor advanced arithmetically
-      val cursor2 = b1man
-        .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
-          coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
-        .crossJoin(broadcast(st1.cursor))
-        .select(greatest(col("b_max"), col("c_max_shard"))
-            .as("c_max_shard"),
-          (col("b_n") + col("c_n_docs")).as("c_n_docs"))
-      val dRead = readCensusDeltas(spark, work.getPath)
-      val st2 = PipelineStates(
-        mergeUrlCensus(st1.urlCensus, dRead.urlCensus),
-        mergeHashCensus(st1.lineCensus, dRead.lineCensus, "lh"),
-        mergeHashCensus(st1.spanCensus, dRead.spanCensus, "gh"),
-        st1.semMembers.unionByName(dRead.semMembers),
-        cursor2)
-      // day 2: batch-2 against the union-read states
-      val r2 = runBatch(st2,
-        live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
-        benchmark, embeddings, scope)
+      val work = graft.LocalFs.workDir(workName,
+        spark.sparkContext.applicationId).getPath
+      writeCensusDeltas(censusesOf(r1, split.embeddings), work)
+      val st2 = day2(StoredDay1(st1, readCensusDeltas(spark, work),
+        advanceCursor(st1.cursor, b1man), work))
+      val r2 = runBatch(st2, split.replica0(split.day2), split.benchmark,
+        split.embeddings, scope)
       scope.keep(b1man.withColumn("day", lit(1))
         .unionByName(r2.manifest.withColumn("day", lit(2))))
     }.orderBy(col("shard_id"))
   }
+
+  /** The append cursor advanced ARITHMETICALLY past `appended`'s shards
+    * (maintained-state arithmetic; batch shards always continue after
+    * the cursor's, so greatest+sum equals the recomputed post-append
+    * cursor).
+    */
+  private def advanceCursor(cursor: DataFrame,
+      appended: DataFrame): DataFrame =
+    appended
+      .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
+        coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
+      .crossJoin(broadcast(cursor))
+      .select(greatest(col("b_max"), col("c_max_shard")).as("c_max_shard"),
+        (col("b_n") + col("c_n_docs")).as("c_n_docs"))
 
   /** `corpus_states_compact` checked key — THE STATE-LANDING GENERATION
     * BUMP (r19 verdict #2), closing the absorb key's own docstring
@@ -1328,61 +1343,26 @@ object Curation {
     * shape `corpus_compact` grades for the shard tables.
     */
   def corpusStatesCompact(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val embeddings = table(spark, sfDir, "embeddings")
-    val bound = Multimodal.ReplicaBound
-    val st1 = landedDay0(spark, sfDir).states
-    Boundaries.scoped(spark) { scope =>
-      // day 1: batch-1 against the landed states, deltas appended
-      // (the corpusStatesAbsorbOnState shape)
-      val r1 = runBatch(st1,
-        live.filter(col("doc_id") % 4 === 1 && col("doc_id") < bound),
-        benchmark, embeddings, scope)
-      val b1man = scope.chk(r1.manifest)
-      val work = graft.LocalFs.workDir(graft.LocalFs.Names.StatesCompact,
-        spark.sparkContext.applicationId)
-      val d = batchCensusesOf(r1, embeddings)
-      // THE DELTA APPEND: one family-partitioned batch-sized job (r21 #2)
-      writeCensusDeltas(d, work.getPath)
-      // THE GENERATION BUMP: landing ∪ delta folded into the gen-1 state
-      // landing by the shared additive laws, written once; the cursor
-      // advances arithmetically (the absorb key's rule) and lands too
-      val gen1 = s"$work/gen1"
-      val cursor2 = b1man
-        .agg(coalesce(max(col("shard_id")), lit(-1L)).as("b_max"),
-          coalesce(sum(col("n_docs")), lit(0L)).as("b_n"))
-        .crossJoin(broadcast(st1.cursor))
-        .select(greatest(col("b_max"), col("c_max_shard"))
-            .as("c_max_shard"),
-          (col("b_n") + col("c_n_docs")).as("c_n_docs"))
-      val dRead = readCensusDeltas(spark, work.getPath)
-      // the fold: the three census merges share ONE exchange and the whole
-      // generation-1 state lands in ONE family-partitioned write + the
-      // one-row cursor (r21 #2); reads the published delta table
+      sfDir: String): DataFrame =
+    storedDayLoop(spark, sfDir, graft.LocalFs.Names.StatesCompact) { d1 =>
+      // THE GENERATION BUMP: landing ∪ delta folded by the shared
+      // additive laws — the three census merges share ONE exchange and
+      // the whole generation-1 state lands in ONE family-partitioned
+      // write + the one-row cursor (r21 #2)
+      val gen1 = s"${d1.work}/gen1"
       fuseStates(
-        Seq(st1.urlCensus, dRead.urlCensus),
-        Seq(st1.lineCensus, dRead.lineCensus),
-        Seq(st1.spanCensus, dRead.spanCensus),
-        Seq(st1.semMembers, dRead.semMembers))
+        Seq(d1.states.urlCensus, d1.deltas.urlCensus),
+        Seq(d1.states.lineCensus, d1.deltas.lineCensus),
+        Seq(d1.states.spanCensus, d1.deltas.spanCensus),
+        Seq(d1.states.semMembers, d1.deltas.semMembers))
         .write.mode("overwrite").partitionBy("family")
         .parquet(s"$gen1/states")
-      cursor2.write.mode("overwrite").parquet(s"$gen1/cursor")
-      // day 2: batch-2 against the COMPACTED landing alone — every state
-      // a family-pruned parquet scan of the generation-1 table
-      val st2 = sliceStates(spark.read.parquet(s"$gen1/states"),
+      d1.cursor.write.mode("overwrite").parquet(s"$gen1/cursor")
+      // day 2 screens the COMPACTED landing alone — every state a
+      // family-pruned parquet scan of the generation-1 table
+      sliceStates(spark.read.parquet(s"$gen1/states"),
         spark.read.parquet(s"$gen1/cursor"))
-      val r2 = runBatch(st2,
-        live.filter(col("doc_id") % 4 === 3 && col("doc_id") < bound),
-        benchmark, embeddings, scope)
-      scope.keep(b1man.withColumn("day", lit(1))
-        .unionByName(r2.manifest.withColumn("day", lit(2))))
-    }.orderBy(col("shard_id"))
-  }
+    }
 
   /** THE LEARNED-TOKENIZER FLAGSHIP — [[corpusPipelineOn]] with the
     * production bootstrap order for a NEW tokenizer: clean first, then
@@ -1403,12 +1383,9 @@ object Curation {
     */
   def corpusPipelineLearnedBpeOn(docs0: DataFrame,
       embeddings: DataFrame): DataFrame = {
-    val corpus = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
+    val split = Split(docs0, embeddings)
     Boundaries.scoped(docs0.sparkSession) { scope =>
-      scope.keep(runPipeline(corpus, benchmark, embeddings, scope,
+      scope.keep(runPipeline(split.live, split.benchmark, embeddings, scope,
         clean => TextAnalysis
           .bpePipelineOn(clean, TextAnalysis.BpeTrainRounds)
           .select(col("doc_id"), col("n_tokens"))
@@ -1462,21 +1439,44 @@ object Curation {
       benchmark: DataFrame, embeddings: DataFrame,
       hostCap: Int): DataFrame =
     Boundaries.scoped(corpus.sparkSession) { scope =>
-      // the shipped world: the corpus run + one absorbed daily batch
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = scope.chk(run.manifest)
-      val r1 = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
-        embeddings, scope)
-      val kept = scope.chk(run.clean.unionByName(r1.clean))
-      // re-enforce the per-host budget over the union's canonical URLs
-      // (unique across days: within-day keep-min + the frontier screen)
-      val capped = scope.chk(kept.join(
-        Web.capPerHostOn(Web.urlStructured(kept), hostCap)
-          .select(col("doc_id")),
-        Seq("doc_id"), "left_semi"))
-      // generation bump: survivors re-shard from position 0
-      scope.keep(manifestTail(capped, defaultManifestProps))
+      compactFromDay0(derivedDay0(corpus, benchmark, embeddings, scope),
+        batch, benchmark, embeddings, hostCap, scope)
     }
+
+  /** The shipped world — day 0 plus one absorbed daily batch —
+    * compacted at `hostCap`: the body [[corpusCompactOn]] and
+    * [[corpusCompact]] share. Returns the generation-1 manifest kept in
+    * `scope`.
+    */
+  private def compactFromDay0(day0: Day0, batch: DataFrame,
+      benchmark: DataFrame, embeddings: DataFrame, hostCap: Int,
+      scope: Boundaries.Scope): DataFrame = {
+    val r1 = runBatch(day0.states, batch, benchmark, embeddings, scope)
+    scope.keep(compactStep(day0.clean, r1.clean, hostCap, scope).manifest)
+  }
+
+  /** A generation bump's frames: the shipped union (`kept`), its
+    * per-host-capped survivors (`capped`) — both boundaries — and the
+    * generation-1 manifest over them (lazy; the caller keeps or
+    * checkpoints it).
+    */
+  private final case class Compaction(kept: DataFrame, capped: DataFrame,
+      manifest: DataFrame)
+
+  /** THE GENERATION BUMP, one body for every compacting key: the per-host
+    * budget re-enforced over the shipped union's canonical URLs (unique
+    * across days: within-day keep-min + the frontier screen) and the
+    * survivors re-sharded from position 0.
+    */
+  private def compactStep(clean0: DataFrame, batchClean: DataFrame,
+      hostCap: Int, scope: Boundaries.Scope): Compaction = {
+    val kept = scope.chk(clean0.unionByName(batchClean))
+    val capped = scope.chk(kept.join(
+      Web.capPerHostOn(Web.urlStructured(kept), hostCap)
+        .select(col("doc_id")),
+      Seq("doc_id"), "left_semi"))
+    Compaction(kept, capped, manifestTail(capped, defaultManifestProps))
+  }
 
   /** `corpus_compact` checked key: the incremental flagship's parity
     * split (even = shipped corpus, odd = the absorbed batch) compacted
@@ -1488,21 +1488,11 @@ object Curation {
     * twin recomputes everything from the base tables.
     */
   def corpusCompact(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
+    val split = Split(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
     Boundaries.scoped(spark) { scope =>
-      val r1 = runBatch(day0.states,
-        live.filter(col("doc_id") % 2 === 1),
-        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-        table(spark, sfDir, "embeddings"), scope)
-      val kept = scope.chk(day0.clean.unionByName(r1.clean))
-      val capped = scope.chk(kept.join(
-        Web.capPerHostOn(Web.urlStructured(kept), CompactHostCap)
-          .select(col("doc_id")),
-        Seq("doc_id"), "left_semi"))
-      scope.keep(manifestTail(capped, defaultManifestProps))
+      compactFromDay0(day0, split.batch, split.benchmark, split.embeddings,
+        CompactHostCap, scope)
     }.orderBy(col("shard_id"))
   }
 
@@ -1588,46 +1578,36 @@ object Curation {
       embeddings: DataFrame, hostCap: Int,
       materializeContract: Boolean): GenerationCycle =
     Boundaries.scoped(corpus.sparkSession) { scope =>
-      // day 0: the corpus run and its day-1 states (the
+      // day 0: the corpus run and its day-1 states, fused (the
       // corpusStatesUpdateOn discipline: each census is consumed twice —
       // batch-1's probe and the merge's union side)
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = scope.chk(run.manifest)
-      val st1raw = statesOf(run, cman, embeddings)
-      val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
-        Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
-        Seq(st1raw.semMembers), st1raw.cursor)
-      generationCycleFromDay0(st1, run.clean, batch1, batch2, benchmark,
-        embeddings, hostCap, materializeContract, scope)
+      generationCycleFromDay0(
+        derivedDay0(corpus, benchmark, embeddings, scope).materialized(scope),
+        batch1, batch2, benchmark, embeddings, hostCap, materializeContract,
+        scope)
     }
 
   /** The cycle's days 1-3 over an EXPLICIT day-0 world — the factored
     * core [[generationCycleOn]] (self-contained derivation) and the
     * graded landed form ([[corpusGenerationCycle]]) share, so the two
     * formulations cannot drift (the mergeUrlCensus/mergeHashCensus
-    * shared-law discipline applied to the whole cycle). `st1` members
-    * must be stable leaves (checkpointed frames or parquet scans);
-    * `clean0` is day-0's kept (doc_id, text). The output manifest (and
-    * the contract frames, when materialized) are kept in `scope`.
+    * shared-law discipline applied to the whole cycle). `day0`'s states
+    * must be stable leaves (checkpointed frames or parquet scans). The
+    * output manifest (and the contract frames, when materialized) are
+    * kept in `scope`.
     */
-  private def generationCycleFromDay0(st1: PipelineStates,
-      clean0: DataFrame, batch1: DataFrame, batch2: DataFrame,
-      benchmark: DataFrame, embeddings: DataFrame, hostCap: Int,
-      materializeContract: Boolean,
+  private def generationCycleFromDay0(day0: Day0, batch1: DataFrame,
+      batch2: DataFrame, benchmark: DataFrame, embeddings: DataFrame,
+      hostCap: Int, materializeContract: Boolean,
       scope: Boundaries.Scope): GenerationCycle = {
-    import scope.chk
+    val st1 = day0.states
     // day 1: batch-1 against the day-1 states, then absorbed into the
     // maintained states BEFORE compaction — retirement must not erase
     // what the states have seen
     val r1 = runBatch(st1, batch1, benchmark, embeddings, scope)
-    // the generation bump: per-host budget over the shipped union,
-    // survivors re-sharded from position 0 (the corpusCompactOn chain)
-    val kept = chk(clean0.unionByName(r1.clean))
-    val capped = chk(kept.join(
-      Web.capPerHostOn(Web.urlStructured(kept), hostCap)
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi"))
-    val g1man = chk(manifestTail(capped, defaultManifestProps))
+    // the generation bump (the corpusCompactOn step)
+    val gen1 = compactStep(day0.clean, r1.clean, hostCap, scope)
+    val g1man = scope.chk(gen1.manifest)
     // day 3: batch-1 absorbed into the CARRIED censuses — ONE fused
     // merge boundary (r21 #2) — plus the generation-1 cursor (the only
     // state the compaction rewrites)
@@ -1642,8 +1622,8 @@ object Curation {
     // graded manifest does not need
     GenerationCycle(out,
       if (materializeContract)
-        Some(CycleContract(scope.keep(kept.select(col("doc_id"))),
-          scope.keep(capped.select(col("doc_id"))),
+        Some(CycleContract(scope.keep(gen1.kept.select(col("doc_id"))),
+          scope.keep(gen1.capped.select(col("doc_id"))),
           scope.keep(st2.urlCensus), scope.keep(r2.clean)))
       else None)
   }
@@ -1675,17 +1655,12 @@ object Curation {
     */
   def corpusGenerationCycle(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
+    val split = Split(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
     Boundaries.scoped(spark) { scope =>
-      generationCycleFromDay0(day0.states, day0.clean,
-        live.filter(col("doc_id") % 4 === 1),
-        live.filter(col("doc_id") % 4 === 3),
-        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-        table(spark, sfDir, "embeddings"),
-        CompactHostCap, materializeContract = false, scope).manifest
+      generationCycleFromDay0(day0, split.day1, split.day2, split.benchmark,
+        split.embeddings, CompactHostCap, materializeContract = false,
+        scope).manifest
     }.orderBy(col("shard_id"))
   }
 
@@ -1730,10 +1705,7 @@ object Curation {
     */
   def corpusPipelineMultimodalOn(docs0: DataFrame,
       embeddings: DataFrame): DataFrame = {
-    val corpus0 = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
+    val split = Split(docs0, embeddings)
     Boundaries.scoped(docs0.sparkSession) { scope =>
       // the media side-ladders at ingest: each modality's band state
       // materialized in turn with its payload plant RELEASED before the
@@ -1741,12 +1713,19 @@ object Curation {
       // destabilizes the run: eviction → re-synthesis), then the three
       // self-verdicts as ONE drop boundary
       val mmDrop = mediaDropBoundary(scope,
-        MediaBands.hashed(corpus0, scope.chk).selfDrops)
-      val corpus = scope.chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
-      // the text flagship over the media survivors
-      scope.keep(runPipeline(corpus, benchmark, embeddings, scope)
-        .manifest)
+        MediaBands.hashed(split.live, scope.chk).selfDrops)
+      multimodalFlagship(split, mmDrop, scope)
     }
+  }
+
+  /** The text flagship over the live corpus minus the media drop set —
+    * the tail both multimodal flagship forms share. Kept in `scope`.
+    */
+  private def multimodalFlagship(split: Split, mmDrop: DataFrame,
+      scope: Boundaries.Scope): DataFrame = {
+    val corpus = scope.chk(split.live.join(mmDrop, Seq("doc_id"), "left_anti"))
+    scope.keep(runPipeline(corpus, split.benchmark, split.embeddings, scope)
+      .manifest)
   }
 
   /** `corpus_pipeline_multimodal` checked key: the flagship split with
@@ -1764,27 +1743,20 @@ object Curation {
     */
   def corpusPipelineMultimodal(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val embeddings = table(spark, sfDir, "embeddings")
+    val split = Split(spark, sfDir)
     val landingM = Multimodal.mediaBandLanding(spark, sfDir)
-    val corpus0 = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
     Boundaries.scoped(spark) { scope =>
       // full-population band tables: even corpus side ∪ odd ingest side,
       // restricted to the live corpus (text.isNotNull is not an id
       // predicate, so the slice is the landedBandsOf semi-join); the
       // three slices and then the three verdicts are independent (§2.6)
       def bands(side: String) = MediaBands.of(
-        Multimodal.landedBandsOf(spark, landingM, side, _, corpus0))
+        Multimodal.landedBandsOf(spark, landingM, side, _, split.live))
       // the three band slices fuse into ONE boundary, then the three
       // self-verdicts into ONE drop boundary (r21 #2)
       val mmDrop = mediaDropBoundary(scope, materializeBands(scope,
         bands("corpus").merge(bands("odd"))).selfDrops)
-      val corpus = scope.chk(corpus0.join(mmDrop, Seq("doc_id"), "left_anti"))
-      scope.keep(runPipeline(corpus, benchmark, embeddings, scope)
-        .manifest)
+      multimodalFlagship(split, mmDrop, scope)
     }.orderBy(col("shard_id"))
   }
 
@@ -1826,17 +1798,13 @@ object Curation {
       val mmDropC = mediaDropBoundary(scope, corpusBands.selfDrops)
       val corpus = scope.chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
       // the corpus text run and its day-1 states
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = scope.chk(run.manifest)
+      val day0 = derivedDay0(corpus, benchmark, embeddings, scope)
       // the batch's media screens against the MAINTAINED band tables
       val mmDropB = mediaDropBoundary(scope,
         corpusBands.probeDrops(MediaBands.hashed(batch0, scope.chk)))
       val batch = scope.chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
       // the text incremental chain over the media survivors
-      val br = runBatch(statesOf(run, cman, embeddings), batch, benchmark,
-        embeddings, scope)
-      scope.keep(cman.withColumn("is_batch", lit(0))
-        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+      pipelineIncrementalFromDay0(day0, batch, benchmark, embeddings, scope)
     }
 
   /** `corpus_multimodal_incremental` checked key: the family parity
@@ -1853,12 +1821,7 @@ object Curation {
     */
   def corpusMultimodalIncremental(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
-    val benchmark = docs0
-      .filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull)
-    val embeddings = table(spark, sfDir, "embeddings")
+    val split = Split(spark, sfDir)
     // day 0 arrives LANDED (r19 verdict #1a — the
     // corpusMultimodalGenerationCycle note applies verbatim: geometry-
     // empty corpus gates, landed text run, landed band tables, batch
@@ -1867,22 +1830,20 @@ object Curation {
     val landingM = Multimodal.mediaBandLanding(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
     Boundaries.scoped(spark) { scope =>
-      val corpusPop = live.filter(col("doc_id") % 2 === 0)
-      val batch0 = live.filter(col("doc_id") % 2 === 1)
+      val batch0 = split.batch
       // corpus band tables: single-consumer probes — lazy reads suffice;
       // batch bands feed three joins each ([[Multimodal.bandProbe]]) —
       // the three slices fuse into ONE boundary, then the three modality
       // probes into ONE drop boundary (r21 #2)
       def bandsOf(side: String, pop: DataFrame) = MediaBands.of(
         Multimodal.landedBandsOf(spark, landingM, side, _, pop))
-      val mmDropB = mediaDropBoundary(scope, bandsOf("corpus", corpusPop)
+      val mmDropB = mediaDropBoundary(scope, bandsOf("corpus", split.corpus)
         .probeDrops(materializeBands(scope, bandsOf("odd", batch0))))
       val batch = scope.chk(batch0.join(mmDropB, Seq("doc_id"), "left_anti"))
       // the text incremental chain over the media survivors, appending
       // after the landed corpus manifest
-      val br = runBatch(day0.states, batch, benchmark, embeddings, scope)
-      scope.keep(day0.manifest.withColumn("is_batch", lit(0))
-        .unionByName(br.manifest.withColumn("is_batch", lit(1))))
+      pipelineIncrementalFromDay0(day0, batch, split.benchmark,
+        split.embeddings, scope)
     }.orderBy(col("shard_id"))
   }
 
@@ -1984,23 +1945,17 @@ object Curation {
       val corpusBands = MediaBands.hashed(corpus0, scope.chk)
       val mmDropC = mediaDropBoundary(scope, corpusBands.selfDrops)
       val corpus = scope.chk(corpus0.join(mmDropC, Seq("doc_id"), "left_anti"))
-      // the corpus text run and its day-1 states (each census consumed
-      // twice — batch-1's probe and the merge's union side)
-      val run = runPipeline(corpus, benchmark, embeddings, scope)
-      val cman = scope.chk(run.manifest)
-      val st1raw = statesOf(run, cman, embeddings)
-      // the family censuses over checkpointed run frames — ONE fused
-      // boundary (r21 #2; no media plants are live here, so memory is
-      // batch-sized)
-      val st1 = materializeStates(scope, Seq(st1raw.urlCensus),
-        Seq(st1raw.lineCensus), Seq(st1raw.spanCensus),
-        Seq(st1raw.semMembers), st1raw.cursor)
+      // the corpus text run and its day-1 states, fused (each census
+      // consumed twice — batch-1's probe and the merge's union side; no
+      // media plants are live here, so memory is batch-sized)
+      val day0 = derivedDay0(corpus, benchmark, embeddings, scope)
+        .materialized(scope)
       // the batch band frames are hashed ONCE in-key (the self-contained
       // formulation's ingest; the graded key reads the landed plants) —
       // each feeds its probe AND the day-2 band-state merge
       val bands1 = MediaBands.hashed(batch1a, scope.chk)
       val bands2 = MediaBands.hashed(batch2a, scope.chk)
-      multimodalGenerationCycleFromDay0(st1, run.clean, corpusBands,
+      multimodalGenerationCycleFromDay0(day0, corpusBands,
         batch1a, bands1, batch2a, bands2,
         benchmark, embeddings, hostCap, materializeContract, scope)
     }
@@ -2010,18 +1965,19 @@ object Curation {
     * derivation and the graded landed form
     * ([[corpusMultimodalGenerationCycle]]) share (the
     * [[generationCycleFromDay0]] discipline on the media axis). All
-    * band frames must be stable ([[MediaBands]]); `st1`/`clean0` as in
+    * band frames must be stable ([[MediaBands]]); `day0` as in
     * [[generationCycleFromDay0]]. The output manifest (and the
     * contract frames, when materialized) are kept in `scope`.
     */
-  private def multimodalGenerationCycleFromDay0(st1: PipelineStates,
-      clean0: DataFrame, corpusBands: MediaBands,
+  private def multimodalGenerationCycleFromDay0(day0: Day0,
+      corpusBands: MediaBands,
       batch1a: DataFrame, bands1: MediaBands,
       batch2a: DataFrame, bands2: MediaBands,
       benchmark: DataFrame, embeddings: DataFrame, hostCap: Int,
       materializeContract: Boolean,
       scope: Boundaries.Scope): MultimodalGenerationCycle = {
     import scope.chk
+    val st1 = day0.states
     // day 1: batch-1 media against the maintained band tables — the
     // three modality probes fused into ONE drop boundary (r21 #2; AQE
     // runs the probes' independent stages concurrently inside the job)
@@ -2032,15 +1988,10 @@ object Curation {
     // by the union-merge laws (over batch-1's media INPUT population —
     // seen-ness counts what a stage SAW, media-dropped docs included)
     val r1 = runBatch(st1, batch1, benchmark, embeddings, scope)
-    // the generation bump: per-host budget over the shipped union,
-    // survivors re-sharded from position 0; the band tables are
-    // CARRIED, not recomputed over the retained set
-    val kept = chk(clean0.unionByName(r1.clean))
-    val capped = chk(kept.join(
-      Web.capPerHostOn(Web.urlStructured(kept), hostCap)
-        .select(col("doc_id")),
-      Seq("doc_id"), "left_semi"))
-    val g1man = chk(manifestTail(capped, defaultManifestProps))
+    // the generation bump; the band tables are CARRIED, not recomputed
+    // over the retained set
+    val gen1 = compactStep(day0.clean, r1.clean, hostCap, scope)
+    val g1man = chk(gen1.manifest)
     // day 3: batch-2 media against the CARRIED (merged) band tables —
     // the three probes fused into ONE drop boundary (r21 #2)
     val mmDropB2 = mediaDropBoundary(scope,
@@ -2057,8 +2008,8 @@ object Curation {
     // suite path only — the generationCycleFromDay0 discipline
     MultimodalGenerationCycle(out,
       if (materializeContract)
-        Some(MediaCycleContract(scope.keep(kept.select(col("doc_id"))),
-          scope.keep(capped.select(col("doc_id"))), scope.keep(mmDropB2),
+        Some(MediaCycleContract(scope.keep(gen1.kept.select(col("doc_id"))),
+          scope.keep(gen1.capped.select(col("doc_id"))), scope.keep(mmDropB2),
           scope.keep(r2.clean)))
       else None)
   }
@@ -2076,9 +2027,7 @@ object Curation {
     */
   def corpusMultimodalGenerationCycle(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val docs0 = table(spark, sfDir, "documents")
-    val live = docs0
-      .filter(col("doc_id") >= ContamBenchDocs && col("text").isNotNull)
+    val split = Split(spark, sfDir)
     // day 0 arrives LANDED (r19 verdict #1a), both state families: the
     // text states + shipped clean table ([[landedDay0]]) and the media
     // band tables ([[Multimodal.mediaBandLanding]]), each sliced to its
@@ -2095,9 +2044,7 @@ object Curation {
     // [[multimodalGenerationCycleOn]] derivation.
     val landingM = Multimodal.mediaBandLanding(spark, sfDir)
     val day0 = landedDay0(spark, sfDir)
-    val corpusPop = live.filter(col("doc_id") % 2 === 0)
-    val b1 = live.filter(col("doc_id") % 4 === 1)
-    val b2 = live.filter(col("doc_id") % 4 === 3)
+    val (b1, b2) = (split.day1, split.day2)
     Boundaries.scoped(spark) { scope =>
       // per-modality landed slices are independent parquet-scan +
       // semi-join subplans — each side's trio fuses into ONE boundary
@@ -2105,12 +2052,11 @@ object Curation {
       def bandsOf(side: String, pop: DataFrame) = materializeBands(scope,
         MediaBands.of(Multimodal.landedBandsOf(spark, landingM, side, _,
           pop)))
-      multimodalGenerationCycleFromDay0(day0.states, day0.clean,
-        bandsOf("corpus", corpusPop),
+      multimodalGenerationCycleFromDay0(day0,
+        bandsOf("corpus", split.corpus),
         b1, bandsOf("odd", b1),
         b2, bandsOf("odd", b2),
-        docs0.filter(col("doc_id") < ContamBenchDocs && col("text").isNotNull),
-        table(spark, sfDir, "embeddings"),
+        split.benchmark, split.embeddings,
         CompactHostCap, materializeContract = false, scope).manifest
     }.orderBy(col("shard_id"))
   }
@@ -2143,15 +2089,8 @@ object Curation {
     state.filter(col("gen") > lit(currentGen) - lit(ttlGenerations))
   }
 
-  /** The composed twin of [[corpusPipelineOn]] — ONE DuckDB statement
-    * chaining every stage's established oracle formulation (URL plant /
-    * blocklist rules / keep-min / host cap from [[Web]], the extract
-    * generation rule, the line census, the Gopher CTEs, the per-position
-    * span excision, the frozen-hyperplane semantic keep, the 5-gram
-    * decontamination, the generated BPE walk nested as a derived table,
-    * and the direct global row_number the two-phase ranking is pinned
-    * to). Hash equality of the final manifest proves the stages compose
-    * without contract drift.
+  /** The deny-list predicate over a `host`/`url_norm` row
+    * ([[Web.BlockedDomains]], [[Web.BlockedPrefixes]]).
     */
   private def blockCondSql: String =
     (Web.BlockedDomains.map(d =>
@@ -2357,27 +2296,70 @@ object Curation {
        |FROM $oN JOIN $btN USING (doc_id)
        |GROUP BY 1""".stripMargin
 
+  /** The composed twin of [[corpusPipelineOn]] — ONE DuckDB statement
+    * chaining every stage's established oracle formulation (URL plant /
+    * blocklist rules / keep-min / host cap from [[Web]], the extract
+    * generation rule, the line census, the Gopher CTEs, the per-position
+    * span excision, the frozen-hyperplane semantic keep, the 5-gram
+    * decontamination, the generated BPE walk nested as a derived table,
+    * and the direct global row_number the two-phase ranking is pinned
+    * to). Hash equality of the final manifest proves the stages compose
+    * without contract drift.
+    */
   // NOTE: the core/manifest fragments are CONCATENATED, never re-wrapped
   // in a stripMargin template — they contain lines that legitimately
   // begin with `||` (concat continuations), which a second margin strip
   // would corrupt into bitwise-or
   private def pipelineSql: String =
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND text IS NOT NULL") +
+    "WITH " + pipelineCoreCtes(liveSql()) +
       "\n" + manifestSelectSql + "\nORDER BY shard_id"
 
-  /** The composed twin of [[corpusPipelineIncrementalOn]] — the corpus
-    * core chain instantiated for the EVEN parity (deriving the frozen
-    * states: `unb` → URL census, `ep` → line census, `sg` → span census,
-    * `scell`/`smm` → semantic members/centroids, `cbg` → benchmark
-    * grams, `o`+`bt` → corpus manifest), then the batch chain (odd
-    * parity, `b`-prefixed CTEs) screening each stage against those
-    * states with independent SQL, ending in the appended manifest. Hash
-    * equality proves the maintained states COMPOSE — the one artifact
-    * the per-family incremental twins cannot give.
+  /** The live (text-bearing, non-benchmark) documents that also satisfy
+    * every one of `conds` — the SQL side of [[Split]].
     */
+  private def liveSql(conds: String*): String =
+    (Seq(s"doc_id >= $ContamBenchDocs", "text IS NOT NULL") ++ conds)
+      .mkString(" AND ")
+
+  /** Docs outside the media drop CTE `drop`. */
+  private def notInSql(drop: String): String =
+    s"doc_id NOT IN (SELECT doc_id FROM $drop)"
+
+  /** The day-0 head every day-loop twin starts from: the core chain over
+    * the corpus population `corpusCond` (default: the even-parity live
+    * corpus), its manifest `cman` and the day-1 state CTEs. Concatenated
+    * (see [[pipelineSql]]'s stripMargin note); no trailing comma.
+    */
+  private def day0HeadCtes(
+      corpusCond: String = liveSql("doc_id % 2 = 0")): String =
+    pipelineCoreCtes(corpusCond) +
+      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
+      day1StateCtes
+
+  /** The append cursor `(c_max_shard, c_n_docs)` over the union of the
+    * named manifest CTEs — the SQL mirror of [[cursorOf]].
+    */
+  private def cursorCte(name: String, manifests: String*): String =
+    s"""$name AS (
+       |  SELECT CAST(coalesce(max(shard_id), -1) AS BIGINT) AS c_max_shard,
+       |    CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS c_n_docs
+       |  FROM (""".stripMargin +
+      manifests.map(m => s"SELECT shard_id, n_docs FROM $m")
+        .mkString("\n        UNION ALL ") + ") mu)"
+
+  /** The manifest columns of every shard-manifest twin. */
+  private val manifestColsSql = "shard_id, n_docs, first_pos, last_pos, " +
+    "n_ws_tokens,\n  n_bpe_tokens, n_seqs, shard_digest"
+
+  /** The final SELECT of a multi-manifest twin: each `(value, cte)`
+    * manifest tagged with `value AS tag`, unioned, sorted by shard.
+    */
+  private def taggedManifestsSql(tag: String, parts: (Int, String)*): String =
+    parts.map { case (v, m) => s"SELECT $manifestColsSql, $v AS $tag FROM $m" }
+      .mkString("\nUNION ALL\n") + "\nORDER BY shard_id"
+
   /** Day-1 state CTEs over the core chain — the SQL mirror of
-    * [[statesOf]]: URL census from `unb`, line census from `ep`, span
+    * [[derivedDay0]]: URL census from `unb`, line census from `ep`, span
     * census from `sg` (the semantic member state is the core's `scell`/
     * `smm` pair directly), append cursor from `cman`.
     */
@@ -2392,10 +2374,7 @@ object Curation {
        |scens AS MATERIALIZED (
        |  SELECT gh, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
        |  FROM sg GROUP BY gh),
-       |cstat AS (
-       |  SELECT CAST(coalesce(max(shard_id), -1) AS BIGINT) AS c_max_shard,
-       |    CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS c_n_docs
-       |  FROM cman)""".stripMargin
+       |""".stripMargin + cursorCte("cstat", "cman")
 
   /** State CTE names a generated batch chain probes — day 1 points at
     * [[day1StateCtes]] + the core's `scell`/`smm`; day 2 at the merged
@@ -2590,22 +2569,20 @@ object Curation {
   private def day1OracleStates: OracleStates =
     OracleStates("ucens", "lcens", "scens", "scell", "smm", "cstat")
 
-  private def pipelineIncrementalSql: String = {
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 1 AND text IS NOT NULL", day1OracleStates) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 0 AS is_batch FROM cman
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 1 AS is_batch FROM bman
-       |ORDER BY shard_id""".stripMargin
-  }
+  /** The composed twin of [[corpusPipelineIncrementalOn]] — the corpus
+    * core chain instantiated for the EVEN parity (deriving the frozen
+    * states: `unb` → URL census, `ep` → line census, `sg` → span census,
+    * `scell`/`smm` → semantic members/centroids, `cbg` → benchmark
+    * grams, `o`+`bt` → corpus manifest), then the batch chain (odd
+    * parity, `b`-prefixed CTEs) screening each stage against those
+    * states with independent SQL, ending in the appended manifest. Hash
+    * equality proves the maintained states COMPOSE — the one artifact
+    * the per-family incremental twins cannot give.
+    */
+  private def pipelineIncrementalSql: String =
+    "WITH " + day0HeadCtes() + ",\n" +
+      batchChainCtes("b", liveSql("doc_id % 2 = 1"), day1OracleStates) +
+      "\n" + taggedManifestsSql("is_batch", 0 -> "cman", 1 -> "bman")
 
   /** The twin of [[corpusStatesOnState]]: the even-parity corpus core
     * re-derives the states the Spark side reads from the parquet
@@ -2615,32 +2592,12 @@ object Curation {
     * probe exactly like the derived-state form through a real storage
     * round-trip.
     */
-  private def statesOnStateSql: String = {
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 1 AND " +
-        s"doc_id < ${Multimodal.ReplicaBound} AND text IS NOT NULL",
-        day1OracleStates) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest FROM bman
-       |ORDER BY shard_id""".stripMargin
-  }
+  private def statesOnStateSql: String =
+    "WITH " + day0HeadCtes() + ",\n" +
+      batchChainCtes("b", liveSql("doc_id % 2 = 1",
+        s"doc_id < ${Multimodal.ReplicaBound}"), day1OracleStates) + "\n" +
+      s"SELECT $manifestColsSql FROM bman\nORDER BY shard_id"
 
-  /** The composed twin of [[corpusStatesUpdateOn]]: the even-parity
-    * corpus core, the day-1 states, batch-1's chain (`b` prefix,
-    * doc_id % 4 = 1), then the DAY-2 STATES RECOMPUTED OVER THE UNION
-    * INPUT POPULATIONS (`u2`/`l2`/`s2`/`mem2`+centroids/`cstat2` — the
-    * independent formulation of what the Spark side derives by additive
-    * MERGE), and batch-2's chain (`b2` prefix, doc_id % 4 = 3) probing
-    * them. Hash equality of the day-stamped manifest proves
-    * merge-equals-recompute-over-union composed through every stateful
-    * stage.
-    */
   /** The day-2 census/state CTEs recomputed over the UNION input
     * populations (`u2`/`l2`/`s2`/`mem2`+centroids) — the independent
     * formulation of what the Spark side derives by additive merge,
@@ -2689,33 +2646,11 @@ object Curation {
     * in one statement.
     */
   private def statesAbsorbOnStateSql: String = {
-    val day2 = OracleStates("u2", "l2", "s2", "mem2", "m2mm", "cstat2")
-    val bound = Multimodal.ReplicaBound
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        s"doc_id % 4 = 1 AND doc_id < $bound AND text IS NOT NULL",
-        day1OracleStates) + ",\n" +
-      day2CensusCtes + ",\n" +
-    s"""cstat2 AS (
-       |  SELECT CAST(coalesce(max(shard_id), -1) AS BIGINT) AS c_max_shard,
-       |    CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS c_n_docs
-       |  FROM (SELECT shard_id, n_docs FROM cman
-       |        UNION ALL SELECT shard_id, n_docs FROM bman) mu),""".stripMargin +
-      "\n" +
-      batchChainCtes("b2", s"doc_id >= $ContamBenchDocs AND " +
-        s"doc_id % 4 = 3 AND doc_id < $bound AND text IS NOT NULL",
-        day2) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 1 AS day FROM bman
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 2 AS day FROM b2man
-       |ORDER BY shard_id""".stripMargin
+    val bound = s"doc_id < ${Multimodal.ReplicaBound}"
+    "WITH " + day0HeadCtes() + ",\n" +
+      updateDaysCtes(liveSql("doc_id % 4 = 1", bound),
+        liveSql("doc_id % 4 = 3", bound)) +
+      "\n" + taggedManifestsSql("day", 1 -> "bman", 2 -> "b2man")
   }
 
   /** The twin of `stream_ingest_text` (the key lives in
@@ -2729,17 +2664,10 @@ object Curation {
     * verdicts equal a recompute-from-base-tables of the whole
     * state-probe surface.
     */
-  private[graft] def streamIngestTextSql: String = {
-    val bound = Multimodal.ReplicaBound
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        s"doc_id % 2 = 1 AND doc_id < $bound AND text IS NOT NULL",
-        day1OracleStates) + ",\n" +
+  private[graft] def streamIngestTextSql: String =
+    "WITH " + day0HeadCtes() + ",\n" +
+      batchChainCtes("b", liveSql("doc_id % 2 = 1",
+        s"doc_id < ${Multimodal.ReplicaBound}"), day1OracleStates) + ",\n" +
     s"""vu AS (
        |  SELECT 'url' AS family, doc_id,
        |    CAST(count(DISTINCT url_norm) AS BIGINT) AS n_units,
@@ -2767,43 +2695,37 @@ object Curation {
        |FROM (SELECT * FROM vu UNION ALL SELECT * FROM vl
        |      UNION ALL SELECT * FROM vs) v
        |ORDER BY family, doc_id""".stripMargin
-  }
 
-  private def statesUpdateSql: String = {
-    val day2 = OracleStates("u2", "l2", "s2", "mem2", "m2mm", "cstat2")
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 4 = 1 AND text IS NOT NULL", day1OracleStates) + ",\n" +
-      day2CensusCtes + ",\n" +
-    s"""cstat2 AS (
-       |  SELECT CAST(coalesce(max(shard_id), -1) AS BIGINT) AS c_max_shard,
-       |    CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS c_n_docs
-       |  FROM (SELECT shard_id, n_docs FROM cman
-       |        UNION ALL SELECT shard_id, n_docs FROM bman) mu),""".stripMargin +
-      "\n" +
-      batchChainCtes("b2", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 4 = 3 AND text IS NOT NULL", day2) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 0 AS day FROM cman
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 1 AS day FROM bman
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 2 AS day FROM b2man
-       |ORDER BY shard_id""".stripMargin
-  }
-
-  /** The composed twin of [[corpusCompactOn]]: the incremental twin's
-    * chain (corpus core + day-1 states + the b-prefixed batch chain),
-    * then the kept UNION, the per-host hash-rank cap at the compaction
-    * budget, and the generation-1 manifest from position 0.
+  /** The composed twin of [[corpusStatesUpdateOn]]: the even-parity
+    * corpus core, the day-1 states, batch-1's chain (`b` prefix,
+    * doc_id % 4 = 1), then the DAY-2 STATES RECOMPUTED OVER THE UNION
+    * INPUT POPULATIONS (`u2`/`l2`/`s2`/`mem2`+centroids/`cstat2` — the
+    * independent formulation of what the Spark side derives by additive
+    * MERGE), and batch-2's chain (`b2` prefix, doc_id % 4 = 3) probing
+    * them. Hash equality of the day-stamped manifest proves
+    * merge-equals-recompute-over-union composed through every stateful
+    * stage.
     */
+  private def statesUpdateSql: String =
+    "WITH " + day0HeadCtes() + ",\n" +
+      updateDaysCtes(liveSql("doc_id % 4 = 1"), liveSql("doc_id % 4 = 3")) +
+      "\n" + taggedManifestsSql("day", 0 -> "cman", 1 -> "bman", 2 -> "b2man")
+
+  /** Days 1-2 of the update twins after [[day0HeadCtes]]: batch-1's
+    * chain (`b` prefix, population `b1Cond`) against the day-1 states,
+    * the day-2 states recomputed over the union populations plus the
+    * post-append cursor `cstat2`, and batch-2's chain (`b2`, `b2Cond`)
+    * against them — ends in `bman`/`b2man`.
+    */
+  private def updateDaysCtes(b1Cond: String, b2Cond: String): String =
+    batchChainCtes("b", b1Cond, day1OracleStates) + ",\n" +
+      day2CensusCtes + ",\n" + cursorCte("cstat2", "cman", "bman") + ",\n" +
+      batchChainCtes("b2", b2Cond, day2OracleStates)
+
+  /** The day-2 state CTE names ([[day2CensusCtes]] + `cstat2`). */
+  private def day2OracleStates: OracleStates =
+    OracleStates("u2", "l2", "s2", "mem2", "m2mm", "cstat2")
+
   /** The compaction CTE chain — shipped union (`clean` ∪ `bclean`) →
     * per-host hash-rank cap at [[CompactHostCap]] → generation-1 epoch
     * order; ends in `ko`/`kbt`, the manifest aggregate's inputs. Shared
@@ -2841,18 +2763,16 @@ object Curation {
        |  FROM kdocs)""".stripMargin
   }
 
-  private def compactSql: String = {
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 1 AND text IS NOT NULL", day1OracleStates) + ",\n" +
-      compactionCoreCtes + "\n" +
+  /** The composed twin of [[corpusCompactOn]]: the incremental twin's
+    * chain (corpus core + day-1 states + the b-prefixed batch chain),
+    * then the kept UNION, the per-host hash-rank cap at the compaction
+    * budget, and the generation-1 manifest from position 0.
+    */
+  private def compactSql: String =
+    "WITH " + day0HeadCtes() + ",\n" +
+      batchChainCtes("b", liveSql("doc_id % 2 = 1"), day1OracleStates) +
+      ",\n" + compactionCoreCtes + "\n" +
       manifestSelectSqlFor("ko", "kbt") + "\nORDER BY shard_id"
-  }
 
   /** The composed twin of [[corpusGenerationCycleOn]]: the day-2 twin's
     * chain through batch-1 (corpus core, day-1 states, `b`-prefixed
@@ -2863,34 +2783,25 @@ object Curation {
     * merges survive the generation bump — seen-ness carries, only the
     * cursor resets.
     */
-  private def generationCycleSql: String = {
-    val g1states = OracleStates("u2", "l2", "s2", "mem2", "m2mm",
-      "g1stat")
-    // concatenated head (see pipelineSql's stripMargin note)
-    "WITH " +
-      pipelineCoreCtes(s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 2 = 0 AND text IS NOT NULL") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 4 = 1 AND text IS NOT NULL", day1OracleStates) + ",\n" +
+  private def generationCycleSql: String =
+    "WITH " + day0HeadCtes() + ",\n" +
+      generationCycleCtes(liveSql("doc_id % 4 = 1"),
+        liveSql("doc_id % 4 = 3")) +
+      "\n" + taggedManifestsSql("phase", 0 -> "g1man", 1 -> "gman")
+
+  /** Days 1-3 of the generation-cycle twins after [[day0HeadCtes]]:
+    * batch-1's chain (`b`, population `b1Cond`), the day-2 censuses
+    * recomputed over the union populations, the compaction to `g1man`
+    * and its cursor `g1stat`, and batch-2's chain (`g`, `b2Cond`)
+    * probing the carried censuses — ends in `g1man`/`gman`.
+    */
+  private def generationCycleCtes(b1Cond: String, b2Cond: String): String =
+    batchChainCtes("b", b1Cond, day1OracleStates) + ",\n" +
       day2CensusCtes + ",\n" +
       compactionCoreCtes + ",\n" +
-      "g1man AS MATERIALIZED (\n" +
-      manifestSelectSqlFor("ko", "kbt") + "),\n" +
-    s"""g1stat AS (
-       |  SELECT CAST(coalesce(max(shard_id), -1) AS BIGINT) AS c_max_shard,
-       |    CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS c_n_docs
-       |  FROM g1man),""".stripMargin + "\n" +
-      batchChainCtes("g", s"doc_id >= $ContamBenchDocs AND " +
-        "doc_id % 4 = 3 AND text IS NOT NULL", g1states) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 0 AS phase FROM g1man
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 1 AS phase FROM gman
-       |ORDER BY shard_id""".stripMargin
-  }
+      "g1man AS MATERIALIZED (\n" + manifestSelectSqlFor("ko", "kbt") +
+      "),\n" + cursorCte("g1stat", "g1man") + ",\n" +
+      batchChainCtes("g", b2Cond, day2OracleStates.copy(cstat = "g1stat"))
 
   /** The composed twin of [[multimodalGenerationCycleOn]]: the media
     * verdict CTEs from the planting rules for all three populations —
@@ -2904,11 +2815,8 @@ object Curation {
     * generation bump composed.
     */
   private def multimodalGenerationCycleSql: String = {
-    val livePop = s"doc_id >= $ContamBenchDocs AND text IS NOT NULL"
-    val g1states = OracleStates("u2", "l2", "s2", "mem2", "m2mm",
-      "g1stat")
     // concatenated head (see pipelineSql's stripMargin note)
-    "WITH mpop AS (SELECT doc_id FROM documents WHERE " + livePop +
+    "WITH mpop AS (SELECT doc_id FROM documents WHERE " + liveSql() +
       "),\n" +
       Multimodal.mediaChainSqlCtes + ",\n" +
       Multimodal.selfDropSqlCtes("c", d => s"$d % 2 = 0") + ",\n" +
@@ -2932,29 +2840,11 @@ object Curation {
        |mmdropb2 AS (
        |  SELECT doc_id FROM vdropb2 UNION SELECT doc_id FROM xdropb2
        |  UNION SELECT doc_id FROM idropb2),""".stripMargin + "\n" +
-      pipelineCoreCtes(livePop + " AND doc_id % 2 = 0 AND doc_id " +
-        "NOT IN (SELECT doc_id FROM mmdropc)") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", livePop + " AND doc_id % 4 = 1 AND doc_id " +
-        "NOT IN (SELECT doc_id FROM mmdropb1)", day1OracleStates) +
-      ",\n" +
-      day2CensusCtes + ",\n" +
-      compactionCoreCtes + ",\n" +
-      "g1man AS MATERIALIZED (\n" +
-      manifestSelectSqlFor("ko", "kbt") + "),\n" +
-    s"""g1stat AS (
-       |  SELECT CAST(coalesce(max(shard_id), -1) AS BIGINT) AS c_max_shard,
-       |    CAST(coalesce(sum(n_docs), 0) AS BIGINT) AS c_n_docs
-       |  FROM g1man),""".stripMargin + "\n" +
-      batchChainCtes("g", livePop + " AND doc_id % 4 = 3 AND doc_id " +
-        "NOT IN (SELECT doc_id FROM mmdropb2)", g1states) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 0 AS phase FROM g1man
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 1 AS phase FROM gman
-       |ORDER BY shard_id""".stripMargin
+      day0HeadCtes(liveSql("doc_id % 2 = 0", notInSql("mmdropc"))) +
+      ",\n" + generationCycleCtes(
+        liveSql("doc_id % 4 = 1", notInSql("mmdropb1")),
+        liveSql("doc_id % 4 = 3", notInSql("mmdropb2"))) +
+      "\n" + taggedManifestsSql("phase", 0 -> "g1man", 1 -> "gman")
   }
 
   /** The composed twin of [[corpusPipelineLearnedBpeOn]] — the flagship
@@ -2970,9 +2860,7 @@ object Curation {
          |    CAST(sum(len(lb$rounds.cs)) AS BIGINT) AS n_tokens
          |  FROM lbdp JOIN lb$rounds USING (piece)
          |  GROUP BY lbdp.doc_id)""".stripMargin
-    "WITH " +
-      pipelineCoreCtes(
-        s"doc_id >= $ContamBenchDocs AND text IS NOT NULL", btCtes) +
+    "WITH " + pipelineCoreCtes(liveSql(), btCtes) +
       "\n" + manifestSelectSql + "\nORDER BY shard_id"
   }
 
@@ -2984,9 +2872,8 @@ object Curation {
     * the flagship CTE chain instantiated over the media survivors.
     */
   private def multimodalSql: String = {
-    val pop = s"doc_id >= $ContamBenchDocs AND text IS NOT NULL"
     // concatenated head (see pipelineSql's stripMargin note)
-    "WITH mpop AS (SELECT doc_id FROM documents WHERE " + pop + "),\n" +
+    "WITH mpop AS (SELECT doc_id FROM documents WHERE " + liveSql() + "),\n" +
       Multimodal.mediaChainSqlCtes + ",\n" +
       Multimodal.selfDropSqlCtes("", _ => "TRUE") + ",\n" +
     s"""idrop AS (
@@ -2998,7 +2885,7 @@ object Curation {
        |  SELECT doc_id FROM xdrop UNION
        |  SELECT doc_id FROM idrop),""".stripMargin + "\n" +
       pipelineCoreCtes(
-        pop + " AND doc_id NOT IN (SELECT doc_id FROM mmdrop)") +
+        liveSql(notInSql("mmdrop"))) +
       "\n" + manifestSelectSql + "\nORDER BY shard_id"
   }
 
@@ -3014,9 +2901,8 @@ object Curation {
     * split), so only its batch-side rule appears.
     */
   private def multimodalIncrementalSql: String = {
-    val livePop = s"doc_id >= $ContamBenchDocs AND text IS NOT NULL"
     // concatenated head (see pipelineSql's stripMargin note)
-    "WITH mpop AS (SELECT doc_id FROM documents WHERE " + livePop +
+    "WITH mpop AS (SELECT doc_id FROM documents WHERE " + liveSql() +
       "),\n" +
       Multimodal.mediaChainSqlCtes + ",\n" +
       Multimodal.selfDropSqlCtes("c", d => s"$d % 2 = 0") + ",\n" +
@@ -3031,18 +2917,10 @@ object Curation {
        |mmdropb AS (
        |  SELECT doc_id FROM vdropb UNION SELECT doc_id FROM xdropb
        |  UNION SELECT doc_id FROM idropb),""".stripMargin + "\n" +
-      pipelineCoreCtes(livePop + " AND doc_id % 2 = 0 AND doc_id " +
-        "NOT IN (SELECT doc_id FROM mmdropc)") +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes + ",\n" +
-      batchChainCtes("b", livePop + " AND doc_id % 2 = 1 AND doc_id " +
-        "NOT IN (SELECT doc_id FROM mmdropb)", day1OracleStates) + "\n" +
-    s"""SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 0 AS is_batch FROM cman
-       |UNION ALL
-       |SELECT shard_id, n_docs, first_pos, last_pos, n_ws_tokens,
-       |  n_bpe_tokens, n_seqs, shard_digest, 1 AS is_batch FROM bman
-       |ORDER BY shard_id""".stripMargin
+      day0HeadCtes(liveSql("doc_id % 2 = 0", notInSql("mmdropc"))) +
+      ",\n" + batchChainCtes("b", liveSql("doc_id % 2 = 1",
+        notInSql("mmdropb")), day1OracleStates) +
+      "\n" + taggedManifestsSql("is_batch", 0 -> "cman", 1 -> "bman")
   }
 
   val oracleSql: Map[String, String] = Map(

@@ -4,7 +4,7 @@ import java.io.ByteArrayInputStream
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1565,7 +1565,15 @@ object Multimodal {
       .join(other.select(col("band_idx"), col("band_val"),
         col("doc_id").as("partner"), col("dhash").as("dh_b")),
         Seq("band_idx", "band_val"))
-      .filter(bit_count(col("dh_a").bitwiseXOR(col("dh_b"))) <= hamMax)
+      .filter(withinRadius(col("dh_a"), col("dh_b"), lit(hamMax)))
+
+  /** Two 64-bit hashes within `radius` differing bits — the one Spark
+    * spelling of the media rungs' hamming test (the SQL twins' is
+    * [[SqlRung]]).
+    */
+  private[graft] def withinRadius(a: Column, b: Column,
+      radius: Column): Column =
+    bit_count(a.bitwiseXOR(b)) <= radius
 
   /** Per unit of `banded`, its smallest matching OTHER document. */
   private def minPartners(banded: DataFrame, unit: Option[String],
@@ -1805,7 +1813,9 @@ object Multimodal {
     *    landing a file STREAM tails, each modality a real micro-batch;
     *    `stream_dedup_media` replays it. Landing batch bands is the
     *    production ingest shape: hashes are computed where media is
-    *    decoded (ingest), and the dedup gate consumes hash rows.
+    *    decoded (ingest), and the dedup gate consumes hash rows. The
+    *    batch is a sub-population of `odd/`, so its rows are sliced
+    *    from those tables rather than hashed a second time.
     *  - `odd/{video,audio,image}` (v4 — r19 verdict #1a): the
     *    UNBOUNDED odd-parity population's band tables in raw
     *    per-modality schemas — the landed ingest output the composed
@@ -1825,8 +1835,7 @@ object Multimodal {
       new File(s"$sfDir/documents.parquet")) { tmp =>
       val docs = table(spark, sfDir, "documents").select(col("doc_id"))
       val corpus = docs.filter(col("doc_id") % 2 === 0)
-      val batch = docs
-        .filter(col("doc_id") % 2 === 1 && col("doc_id") < ReplicaBound)
+      val odd = docs.filter(col("doc_id") % 2 === 1)
       // the corpus sides are BUCKETED tables on the probe keys (v3 —
       // SCALE.md r18's named fix: 8 buckets on (band_idx, band_val),
       // sortBy the same, via a throwaway external stage table whose
@@ -1842,27 +1851,15 @@ object Multimodal {
       // ones (one plant in memory at a time, the
       // corpusPipelineMultimodalOn memory discipline; the video plant
       // feeds cut detection + the keyframe slice, so it persists while
-      // its band state derives). The three populations' audio/image
-      // ladders have NO persisted plants (single consumers, streamed
-      // through tasks), so their six writes submit CONCURRENTLY after
-      // the video phase (guide §2.6 via Boundaries.runAll — the landing
-      // is rep-1-only wall-clock, but the driver's bench pays it once);
-      // each write's content is its own plan's. The batch side's replay
-      // order rides EXPLICIT ascending mtimes (promoteReplayFiles),
-      // never write order.
-      val odd = docs.filter(col("doc_id") % 2 === 1)
-      def writeWork(name: String, bands: DataFrame): Unit =
-        bands.coalesce(1).write.mode("overwrite")
-          .parquet(s"$tmp/work_$name")
+      // its band state derives). The audio/image ladders have NO
+      // persisted plants (single consumers, streamed through tasks), so
+      // their four writes submit CONCURRENTLY after the video phase
+      // (guide §2.6 via Boundaries.runAll — the landing is rep-1-only
+      // wall-clock, but the driver's bench pays it once).
       val vids = videoStructured(corpus).persist()
       writeBucketed(
         videoBandState(vids, CutFrameBytes, CutThresholdMilli), "video")
       vids.unpersist(blocking = false)
-      val bvids = videoStructured(batch).persist()
-      writeWork("video", normBands(
-        videoBandState(bvids, CutFrameBytes, CutThresholdMilli),
-        "video", Some("frame_idx")))
-      bvids.unpersist(blocking = false)
       val ovids = videoStructured(odd).persist()
       videoBandState(ovids, CutFrameBytes, CutThresholdMilli)
         .write.mode("overwrite").parquet(s"$tmp/odd/video")
@@ -1872,15 +1869,20 @@ object Multimodal {
           audioBandState(audioStructured(corpus), AudioFpWin,
             AudioSegWin), "audio"),
         () => writeBucketed(imageBandState(pairImages(corpus)), "image"),
-        () => writeWork("audio", normBands(
-          audioBandState(audioStructured(batch), AudioFpWin, AudioSegWin),
-          "audio", Some("seg_idx"))),
-        () => writeWork("image", normBands(imageBandState(pairImages(batch)),
-          "image", None)),
         () => audioBandState(audioStructured(odd), AudioFpWin, AudioSegWin)
           .write.mode("overwrite").parquet(s"$tmp/odd/audio"),
         () => imageBandState(pairImages(odd))
           .write.mode("overwrite").parquet(s"$tmp/odd/image")))
+      // the replica-0 batch is odd ∧ doc_id < ReplicaBound and band
+      // derivation is per-document, so its band rows ARE the odd
+      // tables' rows under the bound — sliced from the landed tables
+      // (no second decode+hash), normalized to bandRowSchema
+      Boundaries.writeAll(spark, Seq(("video", Some("frame_idx")),
+          ("audio", Some("seg_idx")), ("image", None)).map {
+        case (m, unit) => s"work_$m" -> normBands(
+          spark.read.parquet(s"$tmp/odd/$m")
+            .filter(col("doc_id") < ReplicaBound), m, unit).coalesce(1)
+      }, tmp.getPath)
       // the batch side: one file per modality, mtimes ascending so a
       // paced file stream replays modality-by-modality (coalesce(1) is
       // harness landing plumbing, not an operator plan)
@@ -2244,13 +2246,7 @@ object Multimodal {
     def probeVerdictCtes(s: String, batch: String => String,
         corpus: String => String): String = {
       val (mc, mb, v) = (s"${tag}mc$s", s"${tag}mb$s", s"${tag}v$s")
-      s"""$mc AS (
-         |  SELECT a.doc_id AS doc_a, a.$unit AS u_a, true AS hit
-         |  FROM $bands a JOIN $bands c ON a.band_idx = c.band_idx
-         |    AND a.band_val = c.band_val
-         |  WHERE ${batch("a.doc_id")} AND (${corpus("c.doc_id")})
-         |    AND bit_count(xor(a.dhash, c.dhash)) <= $hamMax
-         |  GROUP BY a.doc_id, a.$unit),
+      corpusHitCte(s, batch, corpus) + s""",
          |$mb AS (
          |  SELECT a.doc_id AS doc_a, a.$unit AS u_a,
          |    min(b.doc_id) AS min_partner
@@ -2272,6 +2268,38 @@ object Multimodal {
          |  FROM $units k
          |  LEFT JOIN $mc ON $mc.doc_a = k.doc_id AND $mc.u_a = k.$unit
          |  LEFT JOIN $mb ON $mb.doc_a = k.doc_id AND $mb.u_a = k.$unit
+         |  WHERE ${batch("k.doc_id")}
+         |  GROUP BY k.doc_id)""".stripMargin
+    }
+
+    /** The corpus half of [[probeVerdictCtes]]: `<tag>mc<s>`, each
+      * `batch` unit with a `corpus` band partner within the radius.
+      */
+    def corpusHitCte(s: String, batch: String => String,
+        corpus: String => String): String =
+      s"""${tag}mc$s AS (
+         |  SELECT a.doc_id AS doc_a, a.$unit AS u_a, true AS hit
+         |  FROM $bands a JOIN $bands c ON a.band_idx = c.band_idx
+         |    AND a.band_val = c.band_val
+         |  WHERE ${batch("a.doc_id")} AND (${corpus("c.doc_id")})
+         |    AND bit_count(xor(a.dhash, c.dhash)) <= $hamMax
+         |  GROUP BY a.doc_id, a.$unit)""".stripMargin
+
+    /** Per `batch` doc over [[corpusHitCte]]: `<tag>hit` — `n_units`,
+      * `n_hit_units`, `corpus_frac_milli`.
+      */
+    def corpusHitVerdictCtes(batch: String => String,
+        corpus: String => String): String = {
+      val mc = s"${tag}mc"
+      corpusHitCte("", batch, corpus) + s""",
+         |${tag}hit AS (
+         |  SELECT k.doc_id,
+         |    CAST(count(*) AS BIGINT) AS n_units,
+         |    CAST(count($mc.hit) AS BIGINT) AS n_hit_units,
+         |    CAST(count($mc.hit) AS BIGINT) * 1000 // count(*)
+         |      AS corpus_frac_milli
+         |  FROM $units k
+         |  LEFT JOIN $mc ON $mc.doc_a = k.doc_id AND $mc.u_a = k.$unit
          |  WHERE ${batch("k.doc_id")}
          |  GROUP BY k.doc_id)""".stripMargin
     }
@@ -2337,6 +2365,28 @@ object Multimodal {
          |${r.tag}drop$s AS (
          |  SELECT doc_id FROM ${r.tag}v$s WHERE ${r.probeDrop})""".stripMargin
     }.mkString(",\n")
+
+  /** The corpus-hit rows of the batch population CTE `bpop` against
+    * `corpus` for both unit-level rungs (over [[mediaChainSqlCtes]]):
+    * [[SqlRung.corpusHitVerdictCtes]] per rung, then — in
+    * [[corpusHitSelectSql]] — `(modality, doc_id, n_units, n_hit_units,
+    * corpus_frac_milli, is_dup_corpus)` per batch doc.
+    */
+  private[graft] def corpusHitSqlCtes(bpop: String,
+      corpus: String => String): String =
+    composedSqlRungs.map(_.corpusHitVerdictCtes(
+      d => s"$d IN (SELECT doc_id FROM $bpop)", corpus)).mkString(",\n")
+
+  /** The SELECT over [[corpusHitSqlCtes]]: one row per rung and batch
+    * doc, flagged at the rung's τ.
+    */
+  private[graft] def corpusHitSelectSql: String =
+    composedSqlRungs.zip(Seq("video", "audio")).map { case (r, m) =>
+      s"""SELECT '$m' AS modality, doc_id, n_units, n_hit_units,
+         |  corpus_frac_milli,
+         |  corpus_frac_milli >= ${r.tauMilli} AS is_dup_corpus
+         |FROM ${r.tag}hit""".stripMargin
+    }.mkString("\nUNION ALL\n")
 
   /** One batch population's verdict rows for the media state twins: the
     * video/audio probe flags over `vv<s>`/`xv<s>` (from

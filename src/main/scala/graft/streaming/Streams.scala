@@ -1316,7 +1316,7 @@ object Streams {
           .when(col("modality") === "audio", lit(Multimodal.AudioHamMax))
           .otherwise(lit(Multimodal.ImageHamMax)))
       .withColumn("hit", col("dh_c").isNotNull &&
-        bit_count(col("dhash").bitwiseXOR(col("dh_c"))) <= col("ham_max"))
+        Multimodal.withinRadius(col("dhash"), col("dh_c"), col("ham_max")))
       .select(col("modality"), col("doc_id"), col("unit_idx"), col("hit"))
       .as[BandProbeRow]
     joined
@@ -1514,65 +1514,17 @@ object Streams {
       // concatenated head (see the media twins' stripMargin note)
       "WITH mpop AS (SELECT doc_id FROM documents),\n" +
       "bpop AS (SELECT doc_id FROM mpop\n" +
-      "  WHERE doc_id % 2 = 1 AND doc_id < 1000000000),\n" +
-      Multimodal.videoChainSqlCtes("v", "mpop") + ",\n" +
-      s"""vmc AS (
-         |  SELECT a.doc_id AS doc_a, a.kf AS kf_a, true AS hit
-         |  FROM vbands a JOIN vbands c ON a.band_idx = c.band_idx
-         |    AND a.band_val = c.band_val
-         |  WHERE a.doc_id IN (SELECT doc_id FROM bpop)
-         |    AND c.doc_id % 2 = 0
-         |    AND bit_count(xor(a.dhash, c.dhash))
-         |      <= ${Multimodal.VideoHamMax}
-         |  GROUP BY a.doc_id, a.kf),
-         |vv AS (
-         |  SELECT k.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_units,
-         |    CAST(count(vmc.hit) AS BIGINT) AS n_hit_units,
-         |    CAST(count(vmc.hit) AS BIGINT) * 1000 // count(*)
-         |      AS corpus_frac_milli
-         |  FROM vkfs k
-         |  LEFT JOIN vmc ON vmc.doc_a = k.doc_id AND vmc.kf_a = k.kf
-         |  WHERE k.doc_id IN (SELECT doc_id FROM bpop)
-         |  GROUP BY k.doc_id),""".stripMargin + "\n" +
-      Multimodal.audioChainSqlCtes("x", "mpop") + ",\n" +
-      s"""xmc AS (
-         |  SELECT a.doc_id AS doc_a, a.seg_idx AS seg_a, true AS hit
-         |  FROM xabands a JOIN xabands c ON a.band_idx = c.band_idx
-         |    AND a.band_val = c.band_val
-         |  WHERE a.doc_id IN (SELECT doc_id FROM bpop)
-         |    AND c.doc_id % 2 = 0
-         |    AND bit_count(xor(a.dhash, c.dhash))
-         |      <= ${Multimodal.AudioHamMax}
-         |  GROUP BY a.doc_id, a.seg_idx),
-         |xv AS (
-         |  SELECT h.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_units,
-         |    CAST(count(xmc.hit) AS BIGINT) AS n_hit_units,
-         |    CAST(count(xmc.hit) AS BIGINT) * 1000 // count(*)
-         |      AS corpus_frac_milli
-         |  FROM xah h
-         |  LEFT JOIN xmc ON xmc.doc_a = h.doc_id AND xmc.seg_a = h.seg_idx
-         |  WHERE h.doc_id IN (SELECT doc_id FROM bpop)
-         |  GROUP BY h.doc_id),
-         |iv AS (
+      s"  WHERE doc_id % 2 = 1 AND doc_id < ${Multimodal.ReplicaBound}),\n" +
+      Multimodal.mediaChainSqlCtes + ",\n" +
+      Multimodal.corpusHitSqlCtes("bpop", d => s"$d % 2 = 0") + ",\n" +
+      s"""iv AS (
          |  SELECT doc_id,
          |    CAST(1 AS BIGINT) AS n_units,
          |    CAST(CASE WHEN doc_id % 10 = 3
          |      AND (doc_id - 1) IN (SELECT doc_id FROM mpop)
          |      THEN 1 ELSE 0 END AS BIGINT) AS n_hit_units
          |  FROM bpop)
-         |SELECT 'video' AS modality, doc_id, n_units, n_hit_units,
-         |  corpus_frac_milli,
-         |  corpus_frac_milli >= ${Multimodal.VideoTauMilli}
-         |    AS is_dup_corpus
-         |FROM vv
-         |UNION ALL
-         |SELECT 'audio' AS modality, doc_id, n_units, n_hit_units,
-         |  corpus_frac_milli,
-         |  corpus_frac_milli >= ${Multimodal.AudioTauMilli}
-         |    AS is_dup_corpus
-         |FROM xv
+         |""".stripMargin + Multimodal.corpusHitSelectSql + """
          |UNION ALL
          |SELECT 'image' AS modality, doc_id, n_units, n_hit_units,
          |  n_hit_units * 1000 AS corpus_frac_milli,

@@ -1394,16 +1394,42 @@ class ExtensionsSpec extends SparkSpec {
     // window geometry and the banded hamming join belong to
     // Multimodal.MediaBands and its SQL twins. A second copy in Curation
     // would drift from the checked rungs.
-    val banned = Seq("TauMilli", "HamMax", "CutFrameBytes",
-      "CutThresholdMilli", "AudioFpWin", "AudioSegWin", "bit_count(")
-    val f = new java.io.File("src/main/scala/graft/ops/Curation.scala")
-    assert(f.isFile, s"run from the project root (no $f)")
+    // The streaming probe names its per-modality radius and τ, but its
+    // hamming test (Spark and SQL twin) is Multimodal's too.
+    val banned = Map(
+      "ops/Curation.scala" -> Seq("TauMilli", "HamMax", "CutFrameBytes",
+        "CutThresholdMilli", "AudioFpWin", "AudioSegWin", "bit_count("),
+      "streaming/Streams.scala" -> Seq("bit_count("))
     val hits = for {
-      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
-        .map(_.toString).zipWithIndex
-      b <- banned if line.contains(b)
-    } yield s"${f.getPath}:${n + 1} contains '$b'"
+      (file, tokens) <- banned.toSeq
+      (line, n) <- mainSourceLines(file)
+      b <- tokens if line.contains(b)
+    } yield s"$file:${n + 1} contains '$b'"
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  /** `src/main/scala/graft/<file>`'s lines with their 0-based numbers. */
+  private def mainSourceLines(file: String): Seq[(String, Int)] = {
+    val f = new java.io.File(s"src/main/scala/graft/$file")
+    assert(f.isFile, s"run from the project root (no $f)")
+    java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
+      .map(_.toString).zipWithIndex
+  }
+
+  test("the composed text day loop spells its corpus split and its " +
+      "generation bump once") {
+    // Every composed key and its self-contained form take the split from
+    // Curation.Split and the per-host re-cap from compactStep; a second
+    // spelling is a day-loop step copied by hand, free to drift.
+    val once = Seq("&& col(\"text\").isNotNull",
+      "capPerHostOn(Web.urlStructured(")
+    val lines = mainSourceLines("ops/Curation.scala")
+    once.foreach { token =>
+      val at = lines.collect { case (l, n) if l.contains(token) => n + 1 }
+      assert(at.size == 1,
+        s"ops/Curation.scala spells '$token' at lines ${at.mkString(", ")}" +
+          " (expected exactly once)")
+    }
   }
 
   test("corpus_pipeline_learned_bpe: manifest equals the flagship except " +
