@@ -408,9 +408,11 @@ object SparkEntry {
   )
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables (168 of 176 keys). The approximate ANN keys
-    * (sim_search_lsh/ivf/quant, dedup_embed) are checked via pooled-recall
-    * certificates (Similarity.recallCertificate). Omitted keys —
+    * the same parquet tables (every key but the omitted ones below). The
+    * approximate ANN keys (sim_search_lsh/ivf/quant, dedup_embed,
+    * search_hybrid_ivf) are checked via pooled-recall certificates
+    * (Similarity.recallCertificate), dedup_embed_incremental/ivf via
+    * decision certificates (Similarity.decisionCertificate). Omitted keys —
     * Spark-RNG sampling (sample_fraction, random_split) and spark.ml
     * model internals (ml_rf_classifier, ml_pipeline, ml_evaluator,
     * ml_cross_validator, ml_fit_predict_eval, ml_rebalance_fit) — get the

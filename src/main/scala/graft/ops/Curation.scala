@@ -2203,47 +2203,10 @@ object Curation {
        |sdocs AS MATERIALIZED (
        |  SELECT doc_id, clean_text AS text FROM sagg
        |  WHERE kept_tokens > 0),
-       |sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-       |    SQRT(list_sum(list_transform(embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       |  FROM embeddings WHERE vec_id IN (SELECT doc_id FROM sdocs)),
-       |su AS (
-       |  SELECT vec_id, list_transform(emb, x -> x / nrm) AS unit
-       |  FROM sv WHERE nrm > 0),
-       |scell AS (
-       |  SELECT vec_id, unit,
-       |    CAST(${Dedup.semCellSqlExpr(64)} AS BIGINT) AS cell
-       |  FROM su),
-       |sdim AS (
-       |  SELECT cell, i AS dd, ROUND(avg(unit[i]), 9) AS m
-       |  FROM scell, UNNEST(range(1, 65)) AS td(i)
-       |  GROUP BY cell, i),
-       |smn AS (
-       |  SELECT cell, list(m ORDER BY dd) AS mean FROM sdim
-       |  GROUP BY cell),
-       |smm AS (
-       |  SELECT cell, mean,
-       |    SQRT(list_sum(list_transform(mean, x -> x * x))) AS mnrm
-       |  FROM smn),
-       |scs AS MATERIALIZED (
-       |  SELECT c.vec_id, c.cell, c.unit,
-       |    CASE WHEN m.mnrm > 0 THEN
-       |      ROUND(list_sum(list_transform(list_zip(c.unit, m.mean),
-       |        pz -> pz[1] * pz[2])) / m.mnrm, 6)
-       |    ELSE 0.0 END AS c_sim
-       |  FROM scell c JOIN smm m USING (cell)),
-       |spr AS (
-       |  SELECT a.vec_id AS id_a,
-       |    bool_or(b.c_sim < a.c_sim OR
-       |      (b.c_sim = a.c_sim AND b.vec_id < a.vec_id)) AS has_better
-       |  FROM scs a JOIN scs b ON a.cell = b.cell AND a.vec_id != b.vec_id
-       |  WHERE ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
-       |    pz -> pz[1] * pz[2])), 6) >= ${Dedup.IncrementalEmbedTau}
-       |  GROUP BY a.vec_id),
+       |${Dedup.semCellsSql("s", " WHERE vec_id IN (SELECT doc_id FROM sdocs)")},
+       |${Dedup.semVerdictSql("s", "smm")},
        |sdrop AS (
-       |  SELECT id_a AS doc_id FROM spr WHERE has_better),
+       |  SELECT id_a AS doc_id FROM spb WHERE has_better),
        |d2 AS MATERIALIZED (
        |  SELECT sdocs.* FROM sdocs
        |  WHERE doc_id NOT IN (SELECT doc_id FROM sdrop)),
@@ -2394,6 +2357,8 @@ object Curation {
       st: OracleStates): String = {
     val blockCond = blockCondSql
     val bpeB = graft.functions.BpeTokenizer.oracleSqlFor(s"${p}clean")
+    val semCells = Dedup.semCellsSql(s"${p}s",
+      s" WHERE vec_id IN (SELECT doc_id FROM ${p}sdocs)", mean = None)
     s"""${p}docs AS (
        |  SELECT doc_id, text, lang, source FROM documents
        |  WHERE $popCond),
@@ -2485,47 +2450,14 @@ object Curation {
        |${p}sdocs AS MATERIALIZED (
        |  SELECT doc_id, clean_text AS text FROM ${p}sagg
        |  WHERE kept_tokens > 0),
-       |${p}sv AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-       |    SQRT(list_sum(list_transform(embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       |  FROM embeddings WHERE vec_id IN (SELECT doc_id FROM ${p}sdocs)),
-       |${p}su AS (
-       |  SELECT vec_id, list_transform(emb, x -> x / nrm) AS unit
-       |  FROM ${p}sv WHERE nrm > 0),
-       |${p}scell AS (
-       |  SELECT vec_id, unit,
-       |    CAST(${Dedup.semCellSqlExpr(64)} AS BIGINT) AS cell
-       |  FROM ${p}su),
-       |${p}cs AS MATERIALIZED (
-       |  SELECT c.vec_id, c.cell, c.unit,
-       |    CASE WHEN m.mnrm > 0 THEN
-       |      ROUND(list_sum(list_transform(list_zip(c.unit, m.mean),
-       |        pz -> pz[1] * pz[2])) / m.mnrm, 6)
-       |    ELSE 0.0 END AS c_sim
-       |  FROM ${p}scell c LEFT JOIN ${st.smm} m USING (cell)),
-       |${p}pc AS (
-       |  SELECT a.vec_id AS id_a
-       |  FROM ${p}cs a JOIN ${st.members} b ON a.cell = b.cell
-       |  WHERE ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
-       |    pz -> pz[1] * pz[2])), 6) >= ${Dedup.IncrementalEmbedTau}
-       |  GROUP BY a.vec_id),
-       |${p}pb AS (
-       |  SELECT a.vec_id AS id_a,
-       |    bool_or(b.c_sim < a.c_sim OR
-       |      (b.c_sim = a.c_sim AND b.vec_id < a.vec_id)) AS has_better
-       |  FROM ${p}cs a JOIN ${p}cs b ON a.cell = b.cell
-       |    AND a.vec_id != b.vec_id
-       |  WHERE ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
-       |    pz -> pz[1] * pz[2])), 6) >= ${Dedup.IncrementalEmbedTau}
-       |  GROUP BY a.vec_id),
+       |$semCells,
+       |${Dedup.semVerdictSql(s"${p}s", st.smm, Some(st.members))},
        |${p}sdrop AS (
-       |  SELECT ${p}cs.vec_id AS doc_id FROM ${p}cs
-       |  LEFT JOIN ${p}pc ON ${p}pc.id_a = ${p}cs.vec_id
-       |  LEFT JOIN ${p}pb ON ${p}pb.id_a = ${p}cs.vec_id
-       |  WHERE ${p}pc.id_a IS NOT NULL
-       |    OR coalesce(${p}pb.has_better, false)),
+       |  SELECT ${p}scs.vec_id AS doc_id FROM ${p}scs
+       |  LEFT JOIN ${p}spc ON ${p}spc.id_a = ${p}scs.vec_id
+       |  LEFT JOIN ${p}spb ON ${p}spb.id_a = ${p}scs.vec_id
+       |  WHERE ${p}spc.id_a IS NOT NULL
+       |    OR coalesce(${p}spb.has_better, false)),
        |${p}d2 AS MATERIALIZED (
        |  SELECT ${p}sdocs.* FROM ${p}sdocs
        |  WHERE doc_id NOT IN (SELECT doc_id FROM ${p}sdrop)),
@@ -2624,17 +2556,7 @@ object Curation {
        |mem2 AS MATERIALIZED (
        |  SELECT vec_id, unit, cell FROM scell
        |  UNION ALL SELECT vec_id, unit, cell FROM bscell),
-       |m2dim AS (
-       |  SELECT cell, i AS dd, ROUND(avg(unit[i]), 9) AS m
-       |  FROM mem2, UNNEST(range(1, 65)) AS td2(i)
-       |  GROUP BY cell, i),
-       |m2mn AS (
-       |  SELECT cell, list(m ORDER BY dd) AS mean FROM m2dim
-       |  GROUP BY cell),
-       |m2mm AS (
-       |  SELECT cell, mean,
-       |    SQRT(list_sum(list_transform(mean, x -> x * x))) AS mnrm
-       |  FROM m2mn)""".stripMargin
+       |${Dedup.semMeansSql("m2", "mem2")}""".stripMargin
 
   /** The twin of [[corpusStatesAbsorbOnState]]: the
     * [[statesUpdateSql]] chain with replica-0-bounded batch

@@ -1,8 +1,6 @@
 package graft.ops
 
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, NGram,
-  BucketedRandomProjectionLSH}
-import org.apache.spark.ml.functions.array_to_vector
+import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, NGram}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -555,33 +553,16 @@ object Dedup {
     dedupEmbed(spark, sfDir, col("vec_id") < 100)
 
   /** Embedding near-dup report for an arbitrary probe predicate over the
-    * embeddings table (the default query probes vec_id < 100).
+    * embeddings table (the default query probes vec_id < 100): the
+    * family's one LSH body ([[Similarity.lshTopK]]) at the near-dup gate
+    * 1.2 and k = 1.
     */
   def dedupEmbed(spark: SparkSession, sfDir: String,
-      probe: org.apache.spark.sql.Column): DataFrame = {
-    // shared unit-vector prep + LSH config from Similarity — one source of
-    // truth for normalization, bucket length, tables, seed, dist→cosine
-    val v = Similarity.unitVectors(spark, sfDir).select(col("vec_id"), col("vec"))
-    val model = Similarity.fitBrpLsh(v)
-    // normalize+hash ONCE (persisted) for both self-join sides — same
-    // recompute-avoidance as dedupNear; approxSimilarityJoin skips its
-    // transform when the hash column is present
-    val hashed = model.transform(v).persist()
-    val probes = hashed.filter(probe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("nn_id"))
-    model.approxSimilarityJoin(probes, hashed, 1.2, "dist")
-      .filter(col("datasetA.vec_id") =!= col("datasetB.vec_id"))
-      .select(
-        col("datasetA.vec_id").as("q_id"),
-        col("datasetB.vec_id").as("nn_id"),
-        Similarity.cosineFromDist(col("dist")).as("cosine"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
+      probe: org.apache.spark.sql.Column): DataFrame =
+    Similarity.lshTopK(spark, sfDir, probe, gate = 1.2, k = 1)
+      .select(col("q_id"), col("c_id").as("nn_id"), col("sim").as("cosine"))
       .withColumn("is_dup", col("cosine") >= 0.9)
       .orderBy(col("q_id"))
-  }
 
   /** `dedup_embed` checked key: the LSH near-dup report's top-1 recall vs
     * the exact nearest neighbor, certified for the driver — pooled over
@@ -595,7 +576,7 @@ object Dedup {
     Similarity.recallCertificate(
       Similarity.simSearch(spark, sfDir, col("vec_id") < 100, k = 1),
       dedupEmbed(spark, sfDir).select(col("q_id"), col("nn_id").as("c_id")),
-      k = 1, floor = 0.8)
+      k = 1, Similarity.RecallFloor)
 
   /** INCREMENTAL EMBEDDING DEDUP — the ANN counterpart of
     * [[dedupIncremental]]: a daily batch of new vectors is screened
@@ -615,14 +596,14 @@ object Dedup {
     * connected components) exactly recomputable by the SQL oracle with
     * no recursion.
     *
-    * Production path = the int8 QUANTIZED prescan from
-    * [[Similarity.simSearchQuantized]]: stage 1 scores batch×(corpus ∪
+    * Production path = the int8 QUANTIZED prescan of
+    * [[Similarity.scoredPairs]]: stage 1 scores batch×(corpus ∪
     * earlier-batch) with the 1-byte-per-element kernel and keeps only the
     * top-`rerank` candidate ids per (probe, side) — no float arrays cross
     * the shuffle; stage 2 re-scores that sliver with the exact double
-    * kernel. At 100 TB the prescan input is itself fed by an IVF/LSH
-    * candidate stage (compose with [[Similarity.simSearchIvf]]); the keep
-    * logic is a per-probe max over ≤ 2·rerank rows either way.
+    * kernel. At 100 TB the prescan input is itself fed by an IVF
+    * candidate stage ([[dedupEmbedIncrementalIvf]]); the keep logic is a
+    * per-probe max over ≤ 2·rerank rows either way.
     *
     * τ defaults to 0.42 for the harness corpus: the generator plants no
     * embedding near-dup twins across the parity split (max any-pair
@@ -655,56 +636,16 @@ object Dedup {
       isNew: org.apache.spark.sql.Column, tau: Double,
       rerank: Int): DataFrame = {
     require(rerank >= 1, s"rerank must be >= 1, got $rerank")
-    val v = Similarity.quantize(Similarity.prepped(vectors), "demb")
-      .withColumn("is_new", isNew)
-    // stage 1: int8 scan — probes broadcast WITHOUT their float arrays,
-    // and only (q_id, c_id, side) survive the cut
-    val probesQ = v.filter(col("is_new"))
-      .select(col("vec_id").as("q_id"), col("q_vec").as("pq_vec"),
-        col("q_scale").as("pq_scale"), col("nrm").as("q_nrm"))
-    val candsQ = v.select(col("vec_id").as("c_id"), col("q_vec").as("cq_vec"),
-      col("q_scale").as("cq_scale"), col("nrm").as("c_nrm"),
-      col("is_new").as("c_new"))
-    val wPre = Window.partitionBy(col("q_id"), col("side"))
-      .orderBy(col("pre_sim").desc, col("c_id"))
-    val pool = candsQ.crossJoin(broadcast(probesQ))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("side", when(!col("c_new"), lit("corpus"))
-        .when(col("c_id") < col("q_id"), lit("prior")))
-      .filter(col("side").isNotNull)
-      .withColumn("pre_sim",
-        col("pq_scale") * col("cq_scale")
-          * graft.functions.VectorMath.dotInt8(col("pq_vec"), col("cq_vec"))
-          / (col("q_nrm") * col("c_nrm")))
-      .withColumn("pre_rnk", row_number().over(wPre))
-      .filter(col("pre_rnk") <= rerank)
-      .select(col("q_id"), col("c_id"), col("side"))
-    // stage 2: exact rerank of the sliver, then the keep rule (filter on
-    // the carried is_new flag, not the raw predicate — isNew may bind
-    // columns this projection drops)
-    val exact = v.select(col("vec_id"), col("demb"), col("nrm"),
-      col("is_new"))
-    val scored = pool
-      .join(exact.select(col("vec_id").as("c_id"), col("demb").as("c_emb"),
-        col("nrm").as("c_nrm")), "c_id")
-      .join(broadcast(exact.filter(col("is_new"))
-        .select(col("vec_id").as("q_id"),
-          col("demb").as("q_emb"), col("nrm").as("q_nrm"))), "q_id")
-      .withColumn("sim", round(
-        graft.functions.VectorMath.dot(col("q_emb"), col("c_emb"))
-          / (col("q_nrm") * col("c_nrm")), 6))
-      .select(col("q_id"), col("side"), col("sim"))
-    embedIncrementalFlags(v.filter(col("is_new")).select(col("vec_id")),
-      scored, tau)
+    embedKeepRule(Similarity.quantize(Similarity.prepped(vectors)), isNew,
+      Similarity.AllRows, Some(rerank), tau)
   }
 
   /** IVF-COMPOSED incremental embedding dedup — the 100 TB serving shape
-    * promised by [[dedupEmbedIncremental]]'s scaladoc, now as one runnable
-    * operator: the int8 prescan's candidate stage is
-    * [[Similarity.ivfAssign]]'s cluster layout instead of a full
-    * batch×corpus scan. Per new vector, stage 0 ranks the
-    * [[Similarity.IvfClusters]] centroids and keeps the `nProbe` nearest
-    * ([[Similarity.nearestClusters]] — centroid table broadcasts); stage 1
+    * promised by [[dedupEmbedIncremental]]'s scaladoc: the int8 prescan's
+    * candidate stage is [[Similarity.ivfAssign]]'s cluster layout instead
+    * of a full batch×corpus scan ([[Similarity.IvfCells]]). Per new
+    * vector, stage 0 ranks the [[Similarity.IvfClusters]] centroids and
+    * keeps the `nProbe` nearest (centroid table broadcasts); stage 1
     * int8-prescans ONLY corpus rows in those probed clusters (an equi-join
     * on `cluster` against the broadcast probe slivers — never a cross
     * join); stage 2 exact-reranks the per-(probe, side) top-`rerank` pool
@@ -727,56 +668,8 @@ object Dedup {
     require(rerank >= 1, s"rerank must be >= 1, got $rerank")
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
     val (assigned, centroids) = Similarity.ivfAssign(spark, sfDir)
-    val v = Similarity.quantize(assigned, "demb").withColumn("is_new", isNew)
-    // stage 0: each new vector's probed clusters, carrying its int8 form —
-    // the broadcast payload is (probes × nProbe) slim rows, no doubles
-    val probeClusters = Similarity.nearestClusters(
-      v.filter(col("is_new"))
-        .select(col("vec_id").as("q_id"), col("unit").as("q_unit")),
-      centroids, nProbe)
-      .join(v.filter(col("is_new"))
-        .select(col("vec_id").as("q_id"), col("q_vec").as("pq_vec"),
-          col("q_scale").as("pq_scale"), col("nrm").as("q_nrm")), "q_id")
-      .select(col("q_id"), col("cluster"), col("pq_vec"), col("pq_scale"),
-        col("q_nrm"))
-    // stage 1: int8 prescan over probed clusters only — an equi-join on
-    // the cluster id (BroadcastHashJoin), not a corpus-wide cross join
-    val candsQ = v.select(col("vec_id").as("c_id"), col("q_vec").as("cq_vec"),
-      col("q_scale").as("cq_scale"), col("nrm").as("c_nrm"),
-      col("is_new").as("c_new"), col("cluster"))
-    val wPre = Window.partitionBy(col("q_id"), col("side"))
-      .orderBy(col("pre_sim").desc, col("c_id"))
-    val pool = candsQ.join(broadcast(probeClusters), "cluster")
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("side", when(!col("c_new"), lit("corpus"))
-        .when(col("c_id") < col("q_id"), lit("prior")))
-      .filter(col("side").isNotNull)
-      // no pair-dedup needed: a candidate lives in exactly ONE cluster and
-      // probeClusters is unique on (q_id, cluster), so the equi-join emits
-      // each (q_id, c_id) at most once by construction
-      .withColumn("pre_sim",
-        col("pq_scale") * col("cq_scale")
-          * graft.functions.VectorMath.dotInt8(col("pq_vec"), col("cq_vec"))
-          / (col("q_nrm") * col("c_nrm")))
-      .withColumn("pre_rnk", row_number().over(wPre))
-      .filter(col("pre_rnk") <= rerank)
-      .select(col("q_id"), col("c_id"), col("side"))
-    // stage 2: exact rerank of the sliver + the shared keep rule (same
-    // kernel, rounding and flags as the quantized full-scan form)
-    val exact = v.select(col("vec_id"), col("demb"), col("nrm"),
-      col("is_new"))
-    val scored = pool
-      .join(exact.select(col("vec_id").as("c_id"), col("demb").as("c_emb"),
-        col("nrm").as("c_nrm")), "c_id")
-      .join(broadcast(exact.filter(col("is_new"))
-        .select(col("vec_id").as("q_id"),
-          col("demb").as("q_emb"), col("nrm").as("q_nrm"))), "q_id")
-      .withColumn("sim", round(
-        graft.functions.VectorMath.dot(col("q_emb"), col("c_emb"))
-          / (col("q_nrm") * col("c_nrm")), 6))
-      .select(col("q_id"), col("side"), col("sim"))
-    embedIncrementalFlags(v.filter(col("is_new")).select(col("vec_id")),
-      scored, tau)
+    embedKeepRule(Similarity.quantize(assigned), isNew,
+      Similarity.IvfCells(centroids, nProbe), Some(rerank), tau)
   }
 
   /** EXACT reference form of the incremental report: brute-force cosine
@@ -790,36 +683,29 @@ object Dedup {
 
   /** Generic frame form of the exact reference path. */
   def dedupEmbedIncrementalExact(vectors: DataFrame,
-      isNew: org.apache.spark.sql.Column, tau: Double): DataFrame = {
-    val v = Similarity.prepped(vectors).withColumn("is_new", isNew)
-    val probes = v.filter(col("is_new"))
-      .select(col("vec_id").as("q_id"), col("demb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val scored = v.select(col("vec_id").as("c_id"), col("demb").as("c_emb"),
-        col("nrm").as("c_nrm"), col("is_new").as("c_new"))
-      .crossJoin(broadcast(probes))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("side", when(!col("c_new"), lit("corpus"))
-        .when(col("c_id") < col("q_id"), lit("prior")))
-      .filter(col("side").isNotNull)
-      .withColumn("sim", round(
-        graft.functions.VectorMath.dot(col("q_emb"), col("c_emb"))
-          / (col("q_nrm") * col("c_nrm")), 6))
-      .select(col("q_id"), col("side"), col("sim"))
-    embedIncrementalFlags(v.filter(col("is_new")).select(col("vec_id")),
-      scored, tau)
-  }
+      isNew: org.apache.spark.sql.Column, tau: Double): DataFrame =
+    embedKeepRule(Similarity.prepped(vectors), isNew, Similarity.AllRows,
+      None, tau)
 
-  /** Shared keep-rule tail: per-probe max cosine per side → flags. The
-    * left join keeps new vectors with NO candidate pairs at all (their
-    * maxima are NULL → both flags false → keep).
+  /** The incremental report's one body: the batch (`isNew`) paired with
+    * its corpus and earlier-batch candidates through the scoring ladder
+    * ([[Similarity.scoredPairs]] under its side rule), then the keep rule
+    * — per-probe max cosine per side → flags. The left join keeps new
+    * vectors with NO candidate pairs at all (their maxima are NULL → both
+    * flags false → keep). The rule filters on the carried `is_new` flag,
+    * not the raw predicate — `isNew` may bind columns the ladder drops.
     */
-  private def embedIncrementalFlags(newIds: DataFrame, scored: DataFrame,
-      tau: Double): DataFrame = {
-    val maxes = scored.groupBy(col("q_id")).agg(
-      max(when(col("side") === "corpus", col("sim"))).as("max_corpus_cos"),
-      max(when(col("side") === "prior", col("sim"))).as("max_prior_cos"))
-    newIds.select(col("vec_id").as("q_id"))
+  private def embedKeepRule(prepped: DataFrame,
+      isNew: org.apache.spark.sql.Column, pairing: Similarity.Pairing,
+      prescan: Option[Int], tau: Double): DataFrame = {
+    val v = prepped.withColumn("is_new", isNew)
+    val maxes = Similarity.scoredPairs(v, _.filter(col("is_new")), pairing,
+        keepRule = true, prescan)
+      .select(col("q_id"), col("side"), col("sim"))
+      .groupBy(col("q_id")).agg(
+        max(when(col("side") === "corpus", col("sim"))).as("max_corpus_cos"),
+        max(when(col("side") === "prior", col("sim"))).as("max_prior_cos"))
+    v.filter(col("is_new")).select(col("vec_id").as("q_id"))
       .join(maxes, Seq("q_id"), "left")
       .withColumn("is_dup_corpus",
         coalesce(col("max_corpus_cos") >= tau, lit(false)))
@@ -836,32 +722,13 @@ object Dedup {
     * value recomputed brute-force by the DuckDB oracle — plus `quant_ok`,
     * the Spark-verified boolean that the quantized-prescan production
     * path reproduces the exact keep decision for EVERY new vector (the
-    * oracle pins it TRUE). Same grading pattern as
-    * [[Similarity.recallCertificate]], but over decisions, not recall:
-    * the keep rule itself is hash-checked, and the int8 path is certified
-    * decision-identical to it.
+    * oracle pins it TRUE): [[Similarity.decisionCertificate]] at floor
+    * 1.0. The keep rule itself is hash-checked, and the int8 path is
+    * certified decision-identical to it.
     */
   def dedupEmbedIncrementalChecked(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val isNew = col("vec_id") % 2 === 1
-    val exact = dedupEmbedIncrementalExact(spark, sfDir, isNew,
-      IncrementalEmbedTau)
-    val quant = dedupEmbedIncremental(spark, sfDir, isNew,
-      IncrementalEmbedTau, rerank = 8)
-    val agree = exact.select(col("q_id"), col("keep"))
-      .join(quant.select(col("q_id"), col("keep").as("keep_q")),
-        Seq("q_id"), "full_outer")
-      .agg(coalesce(
-        min(col("keep").isNotNull && col("keep_q").isNotNull &&
-          col("keep") === col("keep_q")), lit(false)).as("quant_ok"))
-    exact.agg(
-        count(lit(1)).as("n_new"),
-        count(when(col("is_dup_corpus"), lit(1))).as("n_dup_corpus"),
-        count(when(col("is_dup_batch"), lit(1))).as("n_dup_batch"),
-        count(when(col("keep"), lit(1))).as("n_keep"))
-      .withColumn("tau", lit(IncrementalEmbedTau))
-      .crossJoin(agree)
-  }
+      sfDir: String): DataFrame =
+    embedDecisionChecked(spark, sfDir, col("vec_id") % 2 === 1, ivf = false)
 
   /** Decision-agreement floor for the IVF-composed path's certificate:
     * unlike the quantized full-scan (which reads every candidate and is
@@ -884,25 +751,32 @@ object Dedup {
     * This is the end-to-end audit of the full ANN stack: IVF candidate
     * stage → int8 prescan → exact rerank → keep rule, graded as one key.
     */
-  def dedupEmbedIvfChecked(spark: SparkSession, sfDir: String): DataFrame = {
-    val isNew = col("vec_id") % 2 === 1
+  def dedupEmbedIvfChecked(spark: SparkSession, sfDir: String): DataFrame =
+    embedDecisionChecked(spark, sfDir, col("vec_id") % 2 === 1, ivf = true)
+
+  /** The checked embed keys' one body over batch `isNew`: the exact keep
+    * rule's counts and τ, crossed with the decision certificate of the
+    * quantized (floor 1.0, `quant_ok`) or IVF-composed ([[IvfAgreeFloor]],
+    * `ivf_ok`) serving path. An empty batch certifies nothing (`false`).
+    */
+  private[graft] def embedDecisionChecked(spark: SparkSession, sfDir: String,
+      isNew: org.apache.spark.sql.Column, ivf: Boolean): DataFrame = {
     val exact = dedupEmbedIncrementalExact(spark, sfDir, isNew,
       IncrementalEmbedTau)
-    val ivf = dedupEmbedIncrementalIvf(spark, sfDir, isNew,
-      IncrementalEmbedTau, rerank = 8)
-    val agree = exact.select(col("q_id"), col("keep"))
-      .join(ivf.select(col("q_id"), col("keep").as("keep_i")),
-        Seq("q_id"), "full_outer")
-      .agg((sum(when(col("keep").isNotNull && col("keep_i").isNotNull &&
-          col("keep") === col("keep_i"), 1L).otherwise(0L))
-        >= count(lit(1)) * IvfAgreeFloor).as("ivf_ok"))
+    val certificate =
+      if (ivf) Similarity.decisionCertificate(exact,
+        dedupEmbedIncrementalIvf(spark, sfDir, isNew, IncrementalEmbedTau,
+          rerank = 8), IvfAgreeFloor, "ivf_ok")
+      else Similarity.decisionCertificate(exact,
+        dedupEmbedIncremental(spark, sfDir, isNew, IncrementalEmbedTau,
+          rerank = 8), 1.0, "quant_ok")
     exact.agg(
         count(lit(1)).as("n_new"),
         count(when(col("is_dup_corpus"), lit(1))).as("n_dup_corpus"),
         count(when(col("is_dup_batch"), lit(1))).as("n_dup_batch"),
         count(when(col("keep"), lit(1))).as("n_keep"))
       .withColumn("tau", lit(IncrementalEmbedTau))
-      .crossJoin(agree)
+      .crossJoin(certificate)
   }
 
   /** Number of sign-bit cells for [[dedupSemanticOn]]: 5 frozen
@@ -923,6 +797,22 @@ object Dedup {
         .digest(s"sem:$j:$d".getBytes("UTF-8"))
       if ((hex(0) & 1) == 0) 1.0 else -1.0
     })
+
+  /** Frozen sign-cell id for a unit-vector column: SemBits in-row dots
+    * against [[semHyperplanes]], 6-dp-rounded before the sign test (both
+    * engines' folds agree far inside the grid). Shared by the batch and
+    * incremental semantic keys so the two cannot disagree on geometry.
+    */
+  private[graft] def semCellOf(unit: org.apache.spark.sql.Column,
+      dim: Int): org.apache.spark.sql.Column = {
+    import graft.functions.VectorMath
+    val planes = semHyperplanes(dim)
+    (0 until SemBits).map { j =>
+      val h = array(planes(j).map(lit(_)): _*)
+      when(round(VectorMath.dot(unit, h), 6) > 0.0, lit(1L << j))
+        .otherwise(lit(0L))
+    }.reduce(_ + _)
+  }
 
   /** SEMANTIC CLUSTER-REPRESENTATIVE DEDUP — the SemDeDup shape (Abbas
     * et al. 2023, "SemDeDup: Data-efficient learning at web-scale
@@ -963,59 +853,64 @@ object Dedup {
     * Unordered; zero-norm vectors are excluded by the family's prep
     * contract.
     */
-  /** Frozen sign-cell id for a unit-vector column: SemBits in-row dots
-    * against [[semHyperplanes]], 6-dp-rounded before the sign test (both
-    * engines' folds agree far inside the grid). Shared by the batch and
-    * incremental semantic keys so the two cannot disagree on geometry.
-    */
-  private[graft] def semCellOf(unit: org.apache.spark.sql.Column,
-      dim: Int): org.apache.spark.sql.Column = {
-    import graft.functions.VectorMath
-    val planes = semHyperplanes(dim)
-    (0 until SemBits).map { j =>
-      val h = array(planes(j).map(lit(_)): _*)
-      when(round(VectorMath.dot(unit, h), 6) > 0.0, lit(1L << j))
-        .otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
-
   def dedupSemanticOn(raw: DataFrame, dim: Int, tau: Double): DataFrame = {
-    import graft.functions.VectorMath
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val v = Similarity.prepped(raw)
-      .withColumn("unit", expr("transform(demb, x -> x / nrm)"))
-    val assigned = v.select(col("vec_id"), col("unit"))
-      .withColumn("cell", semCellOf(col("unit"), dim))
+    val assigned = assignedUnits(raw, dim)
     val meanAggs = (0 until dim).map(d =>
       round(avg(element_at(col("unit"), d + 1)), 9).as(s"m$d"))
     val means = assigned.groupBy(col("cell"))
       .agg(meanAggs.head, meanAggs.tail: _*)
       .select(col("cell"),
         array((0 until dim).map(d => col(s"m$d")): _*).as("mean"))
-      .withColumn("mnrm", sqrt(VectorMath.dot(col("mean"), col("mean"))))
-    val withSim = assigned.join(broadcast(means), Seq("cell"))
+    val withSim = centroidSim(assigned, means)
+    withSim.select(col("vec_id"), col("cell"), col("c_sim"))
+      .join(selfNeighbours(withSim, tau), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("cell"), col("c_sim"),
+        coalesce(col("n_self"), lit(0L)).as("n_dup_nbrs"),
+        coalesce(!col("has_better"), lit(true)).as("keep"))
+  }
+
+  /** The semantic verdict's centroid step, shared by the batch and
+    * incremental keys: each (vec_id, cell, unit) row's 6-dp cosine to its
+    * cell's `mean` (cell, mean) — 0.0 for a zero-norm or absent centroid
+    * (the cold-cell fallback). The means broadcast (one row per occupied
+    * cell).
+    */
+  private def centroidSim(assigned: DataFrame, means: DataFrame): DataFrame = {
+    import graft.functions.VectorMath
+    assigned
+      .join(broadcast(means
+        .withColumn("mnrm", sqrt(VectorMath.dot(col("mean"), col("mean"))))),
+        Seq("cell"), "left")
       .withColumn("c_sim", when(col("mnrm") > 0.0,
         round(VectorMath.dot(col("unit"), col("mean")) / col("mnrm"), 6))
         .otherwise(lit(0.0)))
       .select(col("vec_id"), col("cell"), col("unit"), col("c_sim"))
-    val a = withSim.select(col("cell"), col("vec_id").as("id_a"),
+  }
+
+  /** A within-cell τ-pair test on `u_a`/`u_b`: the 6-dp unit dot ≥ τ. */
+  private def semPair(tau: Double): org.apache.spark.sql.Column =
+    round(graft.functions.VectorMath.dot(col("u_a"), col("u_b")), 6) >= tau
+
+  /** The one-hop self-neighbour verdict of a [[centroidSim]] frame against
+    * itself (a cell-keyed equi-join): per `vec_id`, its τ-neighbour count
+    * `n_self` and `has_better` — some neighbour is a better representative
+    * under SemDeDup's low-centroid-similarity preference (strictly lower
+    * `c_sim`, ties to the lower vec_id). Rows without neighbours are absent.
+    */
+  private def selfNeighbours(cs: DataFrame, tau: Double): DataFrame = {
+    val a = cs.select(col("cell"), col("vec_id").as("id_a"),
       col("unit").as("u_a"), col("c_sim").as("cs_a"))
-    val b = withSim.select(col("cell"), col("vec_id").as("id_b"),
+    val b = cs.select(col("cell"), col("vec_id").as("id_b"),
       col("unit").as("u_b"), col("c_sim").as("cs_b"))
-    val nbrs = a.join(b, Seq("cell"))
+    a.join(b, Seq("cell"))
       .filter(col("id_a") =!= col("id_b"))
-      .filter(round(VectorMath.dot(col("u_a"), col("u_b")), 6) >= tau)
-      .groupBy(col("id_a"))
-      .agg(count(lit(1)).as("n_dup_nbrs"),
+      .filter(semPair(tau))
+      .groupBy(col("id_a").as("vec_id"))
+      .agg(count(lit(1)).as("n_self"),
         max(col("cs_b") < col("cs_a") ||
           (col("cs_b") === col("cs_a") && col("id_b") < col("id_a")))
           .as("has_better"))
-    withSim.select(col("vec_id"), col("cell"), col("c_sim"))
-      .join(nbrs.select(col("id_a").as("vec_id"), col("n_dup_nbrs"),
-        col("has_better")), Seq("vec_id"), "left")
-      .select(col("vec_id"), col("cell"), col("c_sim"),
-        coalesce(col("n_dup_nbrs"), lit(0L)).as("n_dup_nbrs"),
-        coalesce(!col("has_better"), lit(true)).as("keep"))
   }
 
   /** `dedup_semantic` checked key: [[dedupSemanticOn]] over the
@@ -1085,8 +980,7 @@ object Dedup {
       isNew: org.apache.spark.sql.Column, dim: Int,
       tau: Double): DataFrame = {
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val v = Similarity.prepped(vectors)
-      .withColumn("unit", expr("transform(demb, x -> x / nrm)"))
+    val v = Similarity.unitVectors(vectors)
       .withColumn("is_new", isNew)
       .select(col("vec_id"), col("unit"), col("is_new"))
       .withColumn("cell", semCellOf(col("unit"), dim))
@@ -1107,8 +1001,7 @@ object Dedup {
     * plain union — the family's additive law.
     */
   private[graft] def assignedUnits(vectors: DataFrame, dim: Int): DataFrame =
-    Similarity.prepped(vectors)
-      .withColumn("unit", expr("transform(demb, x -> x / nrm)"))
+    Similarity.unitVectors(vectors)
       .select(col("vec_id"), col("unit"))
       .withColumn("cell", semCellOf(col("unit"), dim))
 
@@ -1123,13 +1016,11 @@ object Dedup {
   def dedupSemanticIncrementalOnState(members: DataFrame,
       batchAssigned: DataFrame, dim: Int, tau: Double,
       materialize: DataFrame => DataFrame = identity): DataFrame = {
-    import graft.functions.VectorMath
     require(dim >= 1, s"dim must be >= 1, got $dim")
     val corpus = members
     val means = semanticCellStateFrom(corpus, dim)
       .select(col("cell"),
         expr("transform(sums, s -> round(s / n_members, 9))").as("mean"))
-      .withColumn("mnrm", sqrt(VectorMath.dot(col("mean"), col("mean"))))
     // `cs` is consumed FOUR times below (corpus-neighbor probe, both
     // batch self-join sides, the final verdict join) — without a
     // materialization hook the whole subtree, INCLUDING the corpus-state
@@ -1137,37 +1028,18 @@ object Dedup {
     // the physical plan (guide §7.2 duplicated subtrees / §3.3).
     // Composed chains pass their stage-boundary `chk`; `identity` keeps
     // the standalone key's one-shot plan unchanged.
-    val cs = materialize(batchAssigned
-      .join(broadcast(means), Seq("cell"), "left")
-      .withColumn("c_sim", when(col("mnrm") > 0.0,
-        round(VectorMath.dot(col("unit"), col("mean")) / col("mnrm"), 6))
-        .otherwise(lit(0.0)))
-      .select(col("vec_id"), col("cell"), col("unit"), col("c_sim")))
+    val cs = materialize(centroidSim(batchAssigned, means))
     val nbrCorpus = cs
       .select(col("cell"), col("vec_id").as("id_a"), col("unit").as("u_a"))
       .join(corpus.select(col("cell"), col("unit").as("u_b")), Seq("cell"))
-      .filter(round(VectorMath.dot(col("u_a"), col("u_b")), 6) >= tau)
-      .groupBy(col("id_a"))
+      .filter(semPair(tau))
+      .groupBy(col("id_a").as("vec_id"))
       .agg(count(lit(1)).as("n_nbr_corpus"))
-    val a = cs.select(col("cell"), col("vec_id").as("id_a"),
-      col("unit").as("u_a"), col("c_sim").as("cs_a"))
-    val b = cs.select(col("cell"), col("vec_id").as("id_b"),
-      col("unit").as("u_b"), col("c_sim").as("cs_b"))
-    val nbrBatch = a.join(b, Seq("cell"))
-      .filter(col("id_a") =!= col("id_b"))
-      .filter(round(VectorMath.dot(col("u_a"), col("u_b")), 6) >= tau)
-      .groupBy(col("id_a"))
-      .agg(count(lit(1)).as("n_nbr_batch"),
-        max(col("cs_b") < col("cs_a") ||
-          (col("cs_b") === col("cs_a") && col("id_b") < col("id_a")))
-          .as("has_better"))
     cs.select(col("vec_id"), col("cell"), col("c_sim"))
-      .join(nbrCorpus.withColumnRenamed("id_a", "vec_id"),
-        Seq("vec_id"), "left")
-      .join(nbrBatch.withColumnRenamed("id_a", "vec_id"),
-        Seq("vec_id"), "left")
+      .join(nbrCorpus, Seq("vec_id"), "left")
+      .join(selfNeighbours(cs, tau), Seq("vec_id"), "left")
       .withColumn("n_nbr_corpus", coalesce(col("n_nbr_corpus"), lit(0L)))
-      .withColumn("n_nbr_batch", coalesce(col("n_nbr_batch"), lit(0L)))
+      .withColumn("n_nbr_batch", coalesce(col("n_self"), lit(0L)))
       .withColumn("is_dup_corpus", col("n_nbr_corpus") > 0)
       .withColumn("is_dup_batch",
         !col("is_dup_corpus") && coalesce(col("has_better"), lit(false)))
@@ -1914,15 +1786,10 @@ object Dedup {
       |  SELECT u AS doc_id, LEAST(u, MIN(v)) AS cluster_id
       |  FROM reach GROUP BY u)""".stripMargin
 
-  /** Full recompute twin of `dedup_semantic`, generated from the same
-    * frozen hyperplane constants (cells → 9-dp-rounded cell means →
-    * centroid similarity → within-cell τ-pairs → one-hop keep rule).
-    */
   /** DuckDB sign-cell expression over a list column named `unit` —
-    * generated from the same frozen hyperplanes as [[semCellOf]]; shared
-    * by both semantic twins and `corpus_pipeline`'s composed twin.
+    * generated from the same frozen hyperplanes as [[semCellOf]].
     */
-  private[graft] def semCellSqlExpr(dim: Int): String = {
+  private def semCellSqlExpr(dim: Int): String = {
     val planes = semHyperplanes(dim)
     (0 until SemBits).map { j =>
       val h = planes(j).map(x => if (x > 0) "1.0" else "-1.0")
@@ -1934,124 +1801,146 @@ object Dedup {
     }.mkString(" +\n    ")
   }
 
-  private def semanticSql: String = {
-    val dim = 64
-    val cellExpr = semCellSqlExpr(dim)
-    s"""WITH v AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-       |    SQRT(list_sum(list_transform(embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       |  FROM embeddings),
-       |u AS (
-       |  SELECT vec_id, list_transform(emb, x -> x / nrm) AS unit
-       |  FROM v WHERE nrm > 0),
-       |cells AS (
-       |  SELECT vec_id, unit,
-       |    CAST($cellExpr AS BIGINT) AS cell
-       |  FROM u),
-       |dims AS (
-       |  SELECT cell, i AS d, ROUND(avg(unit[i]), 9) AS m
-       |  FROM cells, UNNEST(range(1, $dim + 1)) AS t(i)
-       |  GROUP BY cell, i),
-       |mn AS (
-       |  SELECT cell, list(m ORDER BY d) AS mean FROM dims GROUP BY cell),
-       |mm AS (
-       |  SELECT cell, mean,
-       |    SQRT(list_sum(list_transform(mean, x -> x * x))) AS mnrm
-       |  FROM mn),
-       |cs AS (
-       |  SELECT c.vec_id, c.cell, c.unit,
-       |    CASE WHEN m.mnrm > 0 THEN
-       |      ROUND(list_sum(list_transform(list_zip(c.unit, m.mean),
-       |        p -> p[1] * p[2])) / m.mnrm, 6)
-       |    ELSE 0.0 END AS c_sim
-       |  FROM cells c JOIN mm m USING (cell)),
-       |pairs AS (
-       |  SELECT a.vec_id AS id_a, a.c_sim AS cs_a,
-       |    b.vec_id AS id_b, b.c_sim AS cs_b
-       |  FROM cs a JOIN cs b ON a.cell = b.cell AND a.vec_id != b.vec_id
-       |  WHERE ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
-       |    p -> p[1] * p[2])), 6) >= $IncrementalEmbedTau),
-       |nb AS (
-       |  SELECT id_a, CAST(count(*) AS BIGINT) AS n_dup_nbrs,
-       |    bool_or(cs_b < cs_a OR (cs_b = cs_a AND id_b < id_a))
-       |      AS has_better
-       |  FROM pairs GROUP BY id_a)
-       |SELECT cs.vec_id, cs.cell, cs.c_sim,
-       |  coalesce(nb.n_dup_nbrs, 0) AS n_dup_nbrs,
-       |  coalesce(NOT nb.has_better, true) AS keep
-       |FROM cs LEFT JOIN nb ON nb.id_a = cs.vec_id
-       |ORDER BY cs.vec_id""".stripMargin
-  }
-
-  /** Full recompute twin of `dedup_semantic_incremental`: same frozen
-    * cells, corpus-only state means served as round(sum/n, 9), centroid
-    * similarity with the cold-cell 0.0 fallback, the corpus and batch
-    * neighbor joins, and the one-hop keep rule.
+  /** The semantic twins' mean formulas: the batch key's rounded cell
+    * average, and the incremental key's state serve, round(sum / n, 9).
     */
-  private def semanticIncrementalSql: String = {
-    val dim = 64
-    val cellExpr = semCellSqlExpr(dim)
-    s"""WITH v AS (
-       |  SELECT vec_id,
-       |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-       |    SQRT(list_sum(list_transform(embedding,
-       |      x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       |  FROM embeddings),
-       |u AS (
-       |  SELECT vec_id, list_transform(emb, x -> x / nrm) AS unit
-       |  FROM v WHERE nrm > 0),
-       |cells AS (
-       |  SELECT vec_id, unit,
-       |    CAST($cellExpr AS BIGINT) AS cell,
-       |    (vec_id % 2 = 1) AS is_new
-       |  FROM u),
-       |st AS (
-       |  SELECT cell, i AS d,
-       |    ROUND(sum(unit[i]) / count(*), 9) AS m
-       |  FROM cells, UNNEST(range(1, $dim + 1)) AS t(i)
-       |  WHERE NOT is_new GROUP BY cell, i),
-       |mn AS (
-       |  SELECT cell, list(m ORDER BY d) AS mean FROM st GROUP BY cell),
-       |mm AS (
+  private val SemAvgMeanSql = "ROUND(avg(unit[i]), 9)"
+  private val SemStateMeanSql = "ROUND(sum(unit[i]) / count(*), 9)"
+
+  /** Cell means of a (vec_id, unit, cell) CTE `cells` (64-dim): `${p}dim`
+    * → `${p}mn` → `${p}mm` = (cell, mean, mnrm), with the key's `mean`
+    * formula. Shared by the semantic twins and the composed day-2 state.
+    */
+  private[graft] def semMeansSql(p: String, cells: String,
+      mean: String = SemAvgMeanSql): String =
+    s"""${p}dim AS (
+       |  SELECT cell, i AS dd, $mean AS m
+       |  FROM $cells, UNNEST(range(1, 65)) AS ${p}td(i)
+       |  GROUP BY cell, i),
+       |${p}mn AS (
+       |  SELECT cell, list(m ORDER BY dd) AS mean FROM ${p}dim
+       |  GROUP BY cell),
+       |${p}mm AS (
        |  SELECT cell, mean,
        |    SQRT(list_sum(list_transform(mean, x -> x * x))) AS mnrm
-       |  FROM mn),
-       |cs AS (
+       |  FROM ${p}mn)""".stripMargin
+
+  /** The twin of [[assignedUnits]] (dim 64) over the embeddings filtered
+    * by `where`: `${p}v` → `${p}u` → `${p}cell` = (vec_id, unit, cell),
+    * plus the [[semMeansSql]] chain when a `mean` formula is given.
+    */
+  private[graft] def semCellsSql(p: String, where: String = "",
+      mean: Option[String] = Some(SemAvgMeanSql)): String =
+    (Seq(Similarity.preppedSql(s"${p}v", where),
+      Similarity.unitSql(s"${p}u", s"${p}v"),
+      s"""${p}cell AS (
+         |  SELECT vec_id, unit,
+         |    CAST(${semCellSqlExpr(64)} AS BIGINT) AS cell
+         |  FROM ${p}u)""".stripMargin) ++
+      mean.map(semMeansSql(p, s"${p}cell", _))).mkString(",\n")
+
+  /** The twin of [[centroidSim]] + [[selfNeighbours]] (+ the incremental
+    * key's corpus-neighbour count) over `${p}cell`: `${p}cs` (c_sim
+    * against the centroid CTE `mm`, 0.0 for a cold cell), `${p}pb` (the
+    * one-hop self pairs: n, has_better) and, with corpus `members`,
+    * `${p}pc` (n corpus τ-neighbours). The one semantic verdict of the
+    * semantic twins and the composed pipelines' twins.
+    */
+  private[graft] def semVerdictSql(p: String, mm: String,
+      members: Option[String] = None): String = {
+    val tau =
+      s"""ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
+         |    pz -> pz[1] * pz[2])), 6) >= $IncrementalEmbedTau""".stripMargin
+    s"""${p}cs AS MATERIALIZED (
        |  SELECT c.vec_id, c.cell, c.unit,
        |    CASE WHEN m.mnrm > 0 THEN
        |      ROUND(list_sum(list_transform(list_zip(c.unit, m.mean),
-       |        p -> p[1] * p[2])) / m.mnrm, 6)
+       |        pz -> pz[1] * pz[2])) / m.mnrm, 6)
        |    ELSE 0.0 END AS c_sim
-       |  FROM cells c LEFT JOIN mm m USING (cell)
-       |  WHERE c.is_new),
-       |pc AS (
-       |  SELECT a.vec_id AS id_a, CAST(count(*) AS BIGINT) AS n
-       |  FROM cs a JOIN cells b ON a.cell = b.cell AND NOT b.is_new
-       |  WHERE ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
-       |    p -> p[1] * p[2])), 6) >= $IncrementalEmbedTau
-       |  GROUP BY a.vec_id),
-       |pb AS (
+       |  FROM ${p}cell c LEFT JOIN $mm m USING (cell)),
+       |${p}pb AS (
        |  SELECT a.vec_id AS id_a, CAST(count(*) AS BIGINT) AS n,
        |    bool_or(b.c_sim < a.c_sim OR
        |      (b.c_sim = a.c_sim AND b.vec_id < a.vec_id)) AS has_better
-       |  FROM cs a JOIN cs b ON a.cell = b.cell AND a.vec_id != b.vec_id
-       |  WHERE ROUND(list_sum(list_transform(list_zip(a.unit, b.unit),
-       |    p -> p[1] * p[2])), 6) >= $IncrementalEmbedTau
-       |  GROUP BY a.vec_id)
-       |SELECT cs.vec_id, cs.cell, cs.c_sim,
-       |  coalesce(pc.n, 0) AS n_nbr_corpus,
-       |  coalesce(pb.n, 0) AS n_nbr_batch,
-       |  coalesce(pc.n, 0) > 0 AS is_dup_corpus,
-       |  (coalesce(pc.n, 0) = 0 AND coalesce(pb.has_better, false))
-       |    AS is_dup_batch,
-       |  (coalesce(pc.n, 0) = 0 AND NOT coalesce(pb.has_better, false))
-       |    AS keep
-       |FROM cs LEFT JOIN pc ON pc.id_a = cs.vec_id
-       |LEFT JOIN pb ON pb.id_a = cs.vec_id
-       |ORDER BY cs.vec_id""".stripMargin
+       |  FROM ${p}cs a JOIN ${p}cs b ON a.cell = b.cell
+       |    AND a.vec_id != b.vec_id
+       |  WHERE $tau
+       |  GROUP BY a.vec_id)""".stripMargin +
+      members.fold("")(m =>
+        s""",
+           |${p}pc AS (
+           |  SELECT a.vec_id AS id_a, CAST(count(*) AS BIGINT) AS n
+           |  FROM ${p}cs a JOIN $m b ON a.cell = b.cell
+           |  WHERE $tau
+           |  GROUP BY a.vec_id)""".stripMargin)
   }
+
+  /** Full recompute twin of `dedup_semantic`, generated from the same
+    * frozen hyperplane constants (cells → 9-dp-rounded cell means →
+    * centroid similarity → within-cell τ-pairs → one-hop keep rule).
+    */
+  private def semanticSql: String =
+    "WITH " + semCellsSql("s") + ",\n" + semVerdictSql("s", "smm") + "\n" +
+      """SELECT scs.vec_id, scs.cell, scs.c_sim,
+        |  coalesce(spb.n, 0) AS n_dup_nbrs,
+        |  coalesce(NOT spb.has_better, true) AS keep
+        |FROM scs LEFT JOIN spb ON spb.id_a = scs.vec_id
+        |ORDER BY scs.vec_id""".stripMargin
+
+  /** Full recompute twin of `dedup_semantic_incremental`: same frozen
+    * cells, corpus-only (`c`) state means served as round(sum/n, 9),
+    * centroid similarity with the cold-cell 0.0 fallback, the corpus and
+    * batch neighbor joins, and the one-hop keep rule.
+    */
+  private def semanticIncrementalSql: String =
+    "WITH " +
+      semCellsSql("c", " WHERE NOT (vec_id % 2 = 1)", Some(SemStateMeanSql)) +
+      ",\n" + semCellsSql("s", " WHERE vec_id % 2 = 1", None) + ",\n" +
+      semVerdictSql("s", "cmm", Some("ccell")) + "\n" +
+      """SELECT scs.vec_id, scs.cell, scs.c_sim,
+        |  coalesce(spc.n, 0) AS n_nbr_corpus,
+        |  coalesce(spb.n, 0) AS n_nbr_batch,
+        |  coalesce(spc.n, 0) > 0 AS is_dup_corpus,
+        |  (coalesce(spc.n, 0) = 0 AND coalesce(spb.has_better, false))
+        |    AS is_dup_batch,
+        |  (coalesce(spc.n, 0) = 0 AND NOT coalesce(spb.has_better, false))
+        |    AS keep
+        |FROM scs LEFT JOIN spc ON spc.id_a = scs.vec_id
+        |LEFT JOIN spb ON spb.id_a = scs.vec_id
+        |ORDER BY scs.vec_id""".stripMargin
+
+  /** EXACT brute-force recompute of the one-hop incremental keep rule
+    * (see [[embedDecisionChecked]]): every aggregate is engine-exact
+    * (6dp-rounded cosines on both sides make the τ comparison
+    * bit-stable); the certificate column `cert` — the serving path's
+    * decision agreement — is pinned TRUE. One text for the quantized
+    * (`quant_ok`) and IVF-composed (`ivf_ok`) keys.
+    */
+  private def embedIncrementalSql(cert: String): String =
+    s"""WITH ${Similarity.preppedSql("v")},
+       |n AS (SELECT vec_id, emb, nrm FROM v WHERE vec_id % 2 = 1),
+       |pairs AS (
+       |  SELECT n.vec_id AS q_id,
+       |    CASE WHEN v.vec_id % 2 = 0 THEN 'corpus' ELSE 'prior' END AS side,
+       |    ROUND(list_sum(list_transform(list_zip(n.emb, v.emb),
+       |      p -> p[1] * p[2])) / (n.nrm * v.nrm), 6) AS sim
+       |  FROM n, v
+       |  WHERE v.vec_id != n.vec_id
+       |    AND (v.vec_id % 2 = 0 OR v.vec_id < n.vec_id)),
+       |flags AS (
+       |  SELECT n.vec_id AS q_id,
+       |    COALESCE(MAX(CASE WHEN side = 'corpus' THEN sim END)
+       |      >= $IncrementalEmbedTau, false) AS dc,
+       |    COALESCE(MAX(CASE WHEN side = 'prior' THEN sim END)
+       |      >= $IncrementalEmbedTau, false) AS dp
+       |  FROM n LEFT JOIN pairs ON pairs.q_id = n.vec_id
+       |  GROUP BY n.vec_id)
+       |SELECT count(*) AS n_new,
+       |  count(*) FILTER (dc) AS n_dup_corpus,
+       |  count(*) FILTER (NOT dc AND dp) AS n_dup_batch,
+       |  count(*) FILTER (NOT dc AND NOT dp) AS n_keep,
+       |  CAST($IncrementalEmbedTau AS DOUBLE) AS tau, true AS $cert
+       |FROM flags""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
     "dedup_semantic" -> semanticSql,
@@ -2189,81 +2078,9 @@ object Dedup {
         |    FILTER (WHERE keep), '') AS clean_text
         |FROM k WHERE doc_id % 2 = 1
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // recall certificate — see Similarity.recallCertificate's scaladoc
-    "dedup_embed" ->
-      """SELECT count(*) AS n_probes, 1 AS k,
-        |  CAST(0.8 AS DOUBLE) AS min_recall, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 100
-        |  AND list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0""".stripMargin,
-    // EXACT brute-force recompute of the one-hop incremental keep rule
-    // (see dedupEmbedIncrementalChecked): every aggregate is engine-exact
-    // (6dp-rounded cosines on both sides make the τ comparison bit-stable);
-    // quant_ok — the int8 path's decision agreement — is pinned TRUE.
-    "dedup_embed_incremental" ->
-      """WITH v AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id,
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-        |           SQRT(list_sum(list_transform(embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-        |    FROM embeddings) WHERE nrm > 0),
-        |n AS (SELECT vec_id, emb, nrm FROM v WHERE vec_id % 2 = 1),
-        |pairs AS (
-        |  SELECT n.vec_id AS q_id,
-        |    CASE WHEN v.vec_id % 2 = 0 THEN 'corpus' ELSE 'prior' END AS side,
-        |    ROUND(list_sum(list_transform(list_zip(n.emb, v.emb),
-        |      p -> p[1] * p[2])) / (n.nrm * v.nrm), 6) AS sim
-        |  FROM n, v
-        |  WHERE v.vec_id != n.vec_id
-        |    AND (v.vec_id % 2 = 0 OR v.vec_id < n.vec_id)),
-        |flags AS (
-        |  SELECT n.vec_id AS q_id,
-        |    COALESCE(MAX(CASE WHEN side = 'corpus' THEN sim END) >= 0.42,
-        |             false) AS dc,
-        |    COALESCE(MAX(CASE WHEN side = 'prior' THEN sim END) >= 0.42,
-        |             false) AS dp
-        |  FROM n LEFT JOIN pairs ON pairs.q_id = n.vec_id
-        |  GROUP BY n.vec_id)
-        |SELECT count(*) AS n_new,
-        |  count(*) FILTER (dc) AS n_dup_corpus,
-        |  count(*) FILTER (NOT dc AND dp) AS n_dup_batch,
-        |  count(*) FILTER (NOT dc AND NOT dp) AS n_keep,
-        |  CAST(0.42 AS DOUBLE) AS tau, true AS quant_ok
-        |FROM flags""".stripMargin,
-    // same exact-rule recompute as dedup_embed_incremental; the pinned
-    // boolean is the IVF-composed path's decision-agreement certificate
-    "dedup_embed_ivf" ->
-      """WITH v AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id,
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-        |           SQRT(list_sum(list_transform(embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-        |    FROM embeddings) WHERE nrm > 0),
-        |n AS (SELECT vec_id, emb, nrm FROM v WHERE vec_id % 2 = 1),
-        |pairs AS (
-        |  SELECT n.vec_id AS q_id,
-        |    CASE WHEN v.vec_id % 2 = 0 THEN 'corpus' ELSE 'prior' END AS side,
-        |    ROUND(list_sum(list_transform(list_zip(n.emb, v.emb),
-        |      p -> p[1] * p[2])) / (n.nrm * v.nrm), 6) AS sim
-        |  FROM n, v
-        |  WHERE v.vec_id != n.vec_id
-        |    AND (v.vec_id % 2 = 0 OR v.vec_id < n.vec_id)),
-        |flags AS (
-        |  SELECT n.vec_id AS q_id,
-        |    COALESCE(MAX(CASE WHEN side = 'corpus' THEN sim END) >= 0.42,
-        |             false) AS dc,
-        |    COALESCE(MAX(CASE WHEN side = 'prior' THEN sim END) >= 0.42,
-        |             false) AS dp
-        |  FROM n LEFT JOIN pairs ON pairs.q_id = n.vec_id
-        |  GROUP BY n.vec_id)
-        |SELECT count(*) AS n_new,
-        |  count(*) FILTER (dc) AS n_dup_corpus,
-        |  count(*) FILTER (NOT dc AND dp) AS n_dup_batch,
-        |  count(*) FILTER (NOT dc AND NOT dp) AS n_keep,
-        |  CAST(0.42 AS DOUBLE) AS tau, true AS ivf_ok
-        |FROM flags""".stripMargin,
+    "dedup_embed" -> Similarity.probeRecallCertSql(1, "vec_id < 100"),
+    "dedup_embed_incremental" -> embedIncrementalSql("quant_ok"),
+    "dedup_embed_ivf" -> embedIncrementalSql("ivf_ok"),
     "dedup_exact" ->
       """SELECT doc_id, text, lang, source, n_chars, sha256(text) AS h
         |FROM documents

@@ -14,22 +14,33 @@ import graft.functions.VectorMath
 /** §2j similarity search over the embedding column (SURVEY §2j
   * `sim_search`).
   *
-  * Two paths:
-  *  - `simSearch` — exact brute-force cosine top-k for a small probe set.
-  *    The probe side is broadcast, so the big side streams through a
-  *    map-only stage computing one dot product per (row, probe). The
-  *    per-probe top-k runs as a rank-limited window: Spark's
-  *    WindowGroupLimit (verified in the plan) computes a partial top-k
-  *    per input partition BEFORE the exchange, so the shuffle carries at
-  *    most k·partitions rows per probe, not N. This is the correctness
-  *    baseline and is DuckDB-checkable bit-exactly.
-  *  - `simSearchLsh` — the scale path: random-hyperplane LSH buckets
-  *    restrict candidates to colliding buckets; exact cosine re-scores only
-  *    candidates. At 100 TB the bucket join replaces the full scan per probe.
+  * One scoring ladder, several entry points. Every path pairs probes
+  * with candidates, optionally cuts the pairs with an int8 pre-score,
+  * scores the survivors with the exact cosine and, for the checked keys,
+  * certifies the approximate result against the exact one:
+  *  - pairing ([[paired]]) — a broadcast cross join over every row, or
+  *    the IVF `cluster` equi-join over each probe's nearest clusters;
+  *  - int8 cut ([[scoredPairs]] with `prescan`) — the 1-byte kernel ranks
+  *    each probe's (or each (probe, side)'s) candidates and keeps the
+  *    top `prescan` ids, so no float arrays cross that shuffle;
+  *  - exact score ([[exactCosine]]) — float→double cast (exact), folded
+  *    sequentially, so Spark and DuckDB produce bit-identical doubles;
+  *    rounded to 6dp with doc-id tie-breaks so rank order is engine-stable;
+  *  - certificates — [[recallCertificate]] (pooled recall of a top-k) and
+  *    [[decisionCertificate]] (keep-decision agreement at a floor).
   *
-  * All vector math is float→double cast (exact) before multiplying, folded
-  * sequentially, so Spark and DuckDB produce bit-identical doubles; cosine
-  * is rounded to 6dp with doc-id tie-breaks so rank order is engine-stable.
+  * The entry points are projections of that ladder: exact top-k
+  * ([[simSearch]], [[knnClassify]], the hybrid's vector side), int8 scan
+  * + exact rerank ([[simSearchQuantized]]), IVF top-k ([[simSearchIvf]],
+  * with its own unit-dot score), and the incremental embedding dedup in
+  * [[Dedup]] (the corpus/prior side rule of [[paired]]). The LSH paths
+  * ([[simSearchLsh]], [[Dedup.dedupEmbed]]) take candidates from one
+  * random-hyperplane bucket join ([[lshTopK]]) instead.
+  *
+  * Every top-k runs as a rank-limited window: Spark's WindowGroupLimit
+  * (verified in the plan) computes a partial top-k per input partition
+  * BEFORE the exchange, so the shuffle carries at most k·partitions rows
+  * per probe, not N.
   */
 object Similarity {
 
@@ -43,9 +54,10 @@ object Similarity {
     */
   private def defaultProbe: Column = col("vec_id") < NProbes
 
-  /** embeddings with double-cast vector and precomputed L2 norm (computed
-    * once per row, not once per pair). Norm via the codegen'd native
-    * `dot_product` (same sequential fold as the HOF form → bit-identical).
+  /** embeddings with double-cast vector `emb` and precomputed L2 norm
+    * `nrm` (computed once per row, not once per pair). Norm via the
+    * codegen'd native `dot_product` (same sequential fold as the HOF form
+    * → bit-identical).
     *
     * Zero-norm vectors are EXCLUDED here, at the single prep chokepoint:
     * cosine is undefined for them, and downstream they would zero a
@@ -54,7 +66,8 @@ object Similarity {
     * At 100 TB an all-zeros embedding (a failed encoder call) is a
     * certainty, so the exclusion is the serving contract, not a test
     * nicety; the harness corpus contains none, so checked results are
-    * unchanged. The oracle twins carry the same `WHERE nrm > 0`.
+    * unchanged. The oracle twins carry the same `WHERE nrm > 0`
+    * ([[preppedSql]]).
     */
   private[ops] def prepped(spark: SparkSession, sfDir: String): DataFrame =
     prepped(table(spark, sfDir, "embeddings"))
@@ -64,60 +77,169 @@ object Similarity {
     */
   private[ops] def prepped(raw: DataFrame): DataFrame =
     raw
-      .withColumn("demb", transform(col("embedding"), x => x.cast(DoubleType)))
-      .withColumn("nrm", sqrt(VectorMath.dot(col("demb"), col("demb"))))
+      .withColumn("emb", transform(col("embedding"), x => x.cast(DoubleType)))
+      .withColumn("nrm", sqrt(VectorMath.dot(col("emb"), col("emb"))))
       .filter(col("nrm") > 0.0)
 
-  /** embeddings as L2-normalized unit vectors (array + ml Vector forms) —
-    * the shared prep for every LSH/ANN path (also used by
-    * [[Dedup.dedupEmbed]]); on unit vectors euclidean distance maps to
-    * cosine via ‖a−b‖² = 2−2cos.
+  /** [[prepped]] plus the L2-normalized `unit` array — the one unit prep
+    * of every LSH/IVF path and of the semantic dedup keys; on unit
+    * vectors euclidean distance maps to cosine via ‖a−b‖² = 2−2cos.
     */
-  private[ops] def unitVectors(spark: SparkSession, sfDir: String): DataFrame =
-    prepped(spark, sfDir)
-      .withColumn("unit", expr("transform(demb, x -> x / nrm)"))
+  private[ops] def unitVectors(raw: DataFrame): DataFrame =
+    prepped(raw).withColumn("unit", expr("transform(emb, x -> x / nrm)"))
+
+  /** The embeddings table as unit vectors in both array (`unit`) and
+    * ml Vector (`vec`) form — the input of the LSH and IVF models.
+    */
+  private def mlVectors(spark: SparkSession, sfDir: String): DataFrame =
+    unitVectors(table(spark, sfDir, "embeddings"))
       .withColumn("vec", array_to_vector(col("unit")))
 
-  /** The engine's standard random-hyperplane LSH config over unit vectors
-    * (single source of truth for bucket length / tables / seed).
-    */
-  private[ops] def fitBrpLsh(v: DataFrame) =
-    new BucketedRandomProjectionLSH()
-      .setInputCol("vec").setOutputCol("hashes")
-      .setBucketLength(1.0).setNumHashTables(10).setSeed(42L)
-      .fit(v)
+  // ---- the scoring ladder ----
 
-  /** cosine = 1 − d²/2 for euclidean distance d between unit vectors. */
-  private[ops] def cosineFromDist(dist: org.apache.spark.sql.Column) =
-    round(lit(1.0) - dist * dist / 2.0, 6)
+  /** The exact 6-dp cosine of a scored pair (`q_emb`/`q_nrm` against
+    * `c_emb`/`c_nrm`).
+    */
+  private val exactCosine: Column = round(
+    VectorMath.dot(col("q_emb"), col("c_emb"))
+      / (col("q_nrm") * col("c_nrm")), 6)
+
+  /** The int8 pre-score of a pair: the rescaled 1-byte dot product over
+    * the float norms ([[quantize]] forms on both sides).
+    */
+  private val int8Cosine: Column = (col("q_scale") * col("c_scale")
+    * VectorMath.dotInt8(col("q_i8"), col("c_i8"))
+    / (col("q_nrm") * col("c_nrm")))
+
+  /** INT8 QUANTIZATION of a prepped frame: symmetric per-vector `scale`
+    * (`maxabs/127`), vector stored as array<tinyint> `i8`. At 100 TB the
+    * quantized corpus is 4× smaller than float32 (8× smaller than the
+    * double-cast scoring form) — the difference between an in-memory
+    * candidate scan and a spilling one. Exact per-vector `scale` and the
+    * float norm ride along so scores rescale and the rerank stage can
+    * recover exactness. Requires positive-norm input (callers come through
+    * [[prepped]], which excludes zero vectors — there `maxabs > 0`, so the
+    * scale never zeroes and round(x/scale) ∈ [−127, 127] exactly).
+    */
+  private[ops] def quantize(v: DataFrame): DataFrame =
+    v.withColumn("scale",
+        aggregate(col("emb"), lit(0.0), (acc, x) => greatest(acc, abs(x)))
+          / 127.0)
+      .withColumn("i8",
+        transform(col("emb"), x => round(x / col("scale"), 0)
+          .cast(ByteType)))
+
+  /** One side of a pairing: `vec_id` → `<p>_id` and every payload column
+    * `c` → `<p>_<c>` (`q` probes, `c` candidates); `keep` columns pass
+    * through unrenamed.
+    */
+  private def side(v: DataFrame, p: String, payload: Seq[String],
+      keep: String*): DataFrame =
+    v.select((col("vec_id").as(s"${p}_id") +:
+      payload.map(c => col(c).as(s"${p}_$c"))) ++ keep.map(col): _*)
+
+  /** Where each probe's candidates come from. */
+  private[ops] sealed trait Pairing
+  /** Every corpus row: the probe side broadcasts into a cross join. */
+  private[ops] case object AllRows extends Pairing
+  /** The rows of each probe's `nProbe` nearest IVF clusters: a `cluster`
+    * equi-join against the broadcast probe cells ([[nearestClusters]];
+    * needs `cluster` on the corpus and `unit` on the probes).
+    */
+  private[ops] final case class IvfCells(centroids: DataFrame, nProbe: Int)
+      extends Pairing
+
+  /** The ladder's pairing step: candidate rows of `v` against the
+    * `probes` rows, both carrying `payload`, self pairs dropped. With
+    * `keepRule` (an `is_new` column on `v`) each pair gets its side —
+    * `corpus` for an existing candidate, `prior` for an earlier new one —
+    * and a later new candidate pairs with nothing (the incremental dedup's
+    * one-hop arrival order).
+    */
+  private def paired(v: DataFrame, probes: DataFrame, pairing: Pairing,
+      keepRule: Boolean, payload: String*): DataFrame = {
+    val newCol = if (keepRule) Seq("is_new") else Nil
+    val pairs = (pairing match {
+      case AllRows =>
+        side(v, "c", payload ++ newCol)
+          .crossJoin(broadcast(side(probes, "q", payload)))
+      case IvfCells(centroids, nProbe) =>
+        // no pair-dedup needed: a candidate lives in exactly ONE cluster
+        // and the probe cells are unique on (q_id, cluster), so the
+        // equi-join emits each (q_id, c_id) at most once by construction
+        side(v, "c", payload ++ newCol, "cluster")
+          .join(broadcast(nearestClusters(
+            side(probes, "q", (payload :+ "unit").distinct),
+            centroids, nProbe)), "cluster")
+    }).filter(col("c_id") =!= col("q_id"))
+    if (!keepRule) pairs
+    else pairs
+      .withColumn("side", when(!col("c_is_new"), lit("corpus"))
+        .when(col("c_id") < col("q_id"), lit("prior")))
+      .filter(col("side").isNotNull)
+  }
+
+  /** Rank-limited window: the top `n` rows by `score` (ties to the smaller
+    * `c_id`) per `by` group, ranked in column `rank`.
+    */
+  private def topN(df: DataFrame, score: String, rank: String, n: Int,
+      by: String*): DataFrame =
+    df.withColumn(rank, row_number().over(Window.partitionBy(by.map(col): _*)
+        .orderBy(col(score).desc, col("c_id"))))
+      .filter(col(rank) <= n)
+
+  /** The ladder: probes (`probesOf` over the prepped corpus `v`) paired
+    * with their candidates, scored with the exact cosine — (q_id, c_id,
+    * sim) plus `side` under `keepRule`.
+    *
+    * With `prescan = Some(n)` (`v` through [[quantize]]) the pairs are
+    * first int8-scored and cut to the top `n` per probe (per (probe,
+    * side) under `keepRule`); only those (q_id, c_id) ids cross the
+    * shuffle, and the exact rerank joins the candidates' double arrays by
+    * `c_id` and the broadcast probes' by `q_id`. The rerank applies the
+    * same kernel, rounding and tie-breaks as the exact pairing, so the
+    * result is IDENTICAL to it whenever the pool covers the true answer.
+    */
+  private[ops] def scoredPairs(v: DataFrame, probesOf: DataFrame => DataFrame,
+      pairing: Pairing = AllRows, keepRule: Boolean = false,
+      prescan: Option[Int] = None): DataFrame = {
+    val probes = probesOf(v)
+    prescan match {
+      case None =>
+        paired(v, probes, pairing, keepRule, "emb", "nrm")
+          .withColumn("sim", exactCosine)
+      case Some(n) =>
+        val keys = if (keepRule) Seq("q_id", "side") else Seq("q_id")
+        topN(paired(v, probes, pairing, keepRule, "i8", "scale", "nrm")
+            .withColumn("pre_sim", int8Cosine), "pre_sim", "pre_rnk", n,
+            keys: _*)
+          .select((keys :+ "c_id").map(col): _*)
+          .join(side(v, "c", Seq("emb", "nrm")), "c_id")
+          .join(broadcast(side(probes, "q", Seq("emb", "nrm"))), "q_id")
+          .withColumn("sim", exactCosine)
+    }
+  }
+
+  /** Top-`k` exact (or int8-prescanned) neighbors per probe: (q_id, c_id,
+    * sim, rnk), unordered.
+    */
+  private def topK(v: DataFrame, probesOf: DataFrame => DataFrame, k: Int,
+      prescan: Option[Int] = None): DataFrame =
+    topN(scoredPairs(v, probesOf, prescan = prescan), "sim", "rnk", k, "q_id")
+      .select(col("q_id"), col("c_id"), col("sim"), col("rnk"))
 
   /** Exact top-k cosine neighbors for the default probe set. */
   def simSearch(spark: SparkSession, sfDir: String): DataFrame =
     simSearch(spark, sfDir, defaultProbe)
 
   /** Exact top-k cosine neighbors for an arbitrary probe predicate over the
-    * embeddings table. `k` bounds neighbors per probe.
+    * embeddings table. `k` bounds neighbors per probe. This is the
+    * correctness baseline and is DuckDB-checkable bit-exactly.
     */
   def simSearch(spark: SparkSession, sfDir: String, probe: Column,
-      k: Int = K): DataFrame = {
-    val v = prepped(spark, sfDir)
-    val probes = v.filter(probe)
-      .select(col("vec_id").as("q_id"), col("demb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val cands = v.select(col("vec_id").as("c_id"), col("demb").as("c_emb"),
-      col("nrm").as("c_nrm"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    cands.crossJoin(broadcast(probes))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(
-        VectorMath.dot(col("q_emb"), col("c_emb"))
-          / (col("q_nrm") * col("c_nrm")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk"))
+      k: Int = K): DataFrame =
+    topK(prepped(spark, sfDir), _.filter(probe), k)
       .orderBy(col("q_id"), col("rnk"))
-  }
 
   /** IVF-style approximate top-k: a seeded k-means coarse quantizer
     * clusters the corpus once; each probe searches only its `nProbe`
@@ -172,7 +294,7 @@ object Similarity {
       org.apache.spark.ml.clustering.KMeansModel.load(modelPath))
   }
 
-  /** The corpus in IVF layout: every [[unitVectors]] column plus the
+  /** The corpus in IVF layout: every [[mlVectors]] column plus the
     * quantizer's `cluster` assignment, and the centroid table (IvfClusters
     * rows — broadcastable anywhere). At 100 TB `cluster` is a write-once
     * partitioning column; every IVF consumer (top-k search, incremental
@@ -180,7 +302,7 @@ object Similarity {
     */
   private[ops] def ivfAssign(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) = {
-    val v = unitVectors(spark, sfDir)
+    val v = mlVectors(spark, sfDir)
     val model = ivfQuantizer(spark, sfDir, v)
     val assigned = model.transform(v)
     val centroids = spark.createDataFrame(
@@ -191,11 +313,11 @@ object Similarity {
   }
 
   /** Each probe's `nProbe` nearest clusters by centroid similarity: input
-    * (q_id, q_unit), output (q_id, q_unit, cluster) — nProbe rows per
-    * probe. The centroid table broadcasts (IvfClusters rows), so this is a
-    * map-side ranking over the probe set.
+    * (q_id, q_unit, …), output the same columns plus `cluster` — nProbe
+    * rows per probe. The centroid table broadcasts (IvfClusters rows), so
+    * this is a map-side ranking over the probe set.
     */
-  private[ops] def nearestClusters(probes: DataFrame, centroids: DataFrame,
+  private def nearestClusters(probes: DataFrame, centroids: DataFrame,
       nProbe: Int): DataFrame = {
     val wC = Window.partitionBy(col("q_id"))
       .orderBy(col("c_sim").desc, col("cluster"))
@@ -222,92 +344,77 @@ object Similarity {
       _.join(broadcast(qIds.select(col("vec_id"))), Seq("vec_id")), k)
 
   /** The shared IVF top-k body: `probesOf` selects the probe rows from the
-    * assigned corpus (predicate filter or broadcast id-frame semi-join).
+    * assigned corpus (predicate filter or broadcast id-frame semi-join);
+    * candidates are the rows of the probed clusters only, scored by the
+    * 6-dp dot of the unit vectors.
     */
   private def simSearchIvfBy(spark: SparkSession, sfDir: String,
       probesOf: DataFrame => DataFrame, k: Int): DataFrame = {
     val (assignedAll, centroids) = ivfAssign(spark, sfDir)
     val assigned = assignedAll.select(col("vec_id"), col("unit"), col("cluster"))
-    // each probe picks its nProbe nearest centroids (32 rows → broadcast)
-    val probes = probesOf(assigned)
-      .select(col("vec_id").as("q_id"), col("unit").as("q_unit"))
-    val probeClusters = nearestClusters(probes, centroids, IvfNProbe)
-    // candidates = corpus rows in the probed clusters only
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    assigned.join(broadcast(probeClusters), "cluster")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("sim", round(VectorMath.dot(col("q_unit"), col("unit")), 6))
-      .select(col("q_id"), col("vec_id").as("c_id"), col("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
+    topN(paired(assigned, probesOf(assigned), IvfCells(centroids, IvfNProbe),
+        keepRule = false, "unit")
+        .withColumn("sim",
+          round(VectorMath.dot(col("q_unit"), col("c_unit")), 6))
+        .select(col("q_id"), col("c_id"), col("sim")), "sim", "rnk", k, "q_id")
       .orderBy(col("q_id"), col("rnk"))
   }
 
+  /** LSH-bucketed top-`k`: candidates come from the engine's standard
+    * random-hyperplane LSH (bucket length 1.0, 10 tables, seed 42 — one
+    * config for every LSH path) via `approxSimilarityJoin` on unit vectors
+    * at euclidean `gate`, scored by cosine = 1 − d²/2 (6dp). Output
+    * (q_id, c_id, sim, rnk), unordered. Both sides are normalized and
+    * hashed ONCE (persisted); approxSimilarityJoin skips its transform
+    * when the hash column is present.
+    */
+  private[ops] def lshTopK(spark: SparkSession, sfDir: String, probe: Column,
+      gate: Double, k: Int): DataFrame = {
+    val v = mlVectors(spark, sfDir).select(col("vec_id"), col("vec"))
+    val model = new BucketedRandomProjectionLSH()
+      .setInputCol("vec").setOutputCol("hashes")
+      .setBucketLength(1.0).setNumHashTables(10).setSeed(42L)
+      .fit(v)
+    val hashed = model.transform(v).persist()
+    val dist = col("dist")
+    topN(model.approxSimilarityJoin(hashed.filter(probe), hashed, gate, "dist")
+        .filter(col("datasetA.vec_id") =!= col("datasetB.vec_id"))
+        .select(
+          col("datasetA.vec_id").as("q_id"),
+          col("datasetB.vec_id").as("c_id"),
+          round(lit(1.0) - dist * dist / 2.0, 6).as("sim")),
+      "sim", "rnk", k, "q_id")
+  }
+
   /** LSH-bucketed approximate top-k: same output shape as `simSearch`, but
-    * candidates come from `approxSimilarityJoin` on unit vectors. The
-    * euclidean candidate threshold is 1.5 (⟺ cosine ≥ −0.125): a TOP-K
-    * search must not let the candidate gate truncate true neighbors, and
-    * on a corpus whose exact top-10 includes near-orthogonal vectors the
-    * old 1.2 (cos ≥ 0.28) capped pooled recall at ~0.6 no matter how many
-    * hash tables fired — the near-dup path ([[Dedup.dedupEmbed]]) keeps
-    * its tighter gate because its contract is duplicates, not top-k.
-    * Recall vs the exact path is certificate-graded; results are
-    * seed-deterministic, not SQL-checkable.
+    * candidates come from [[lshTopK]]. The euclidean candidate gate is 1.5
+    * (⟺ cosine ≥ −0.125): a TOP-K search must not let the candidate gate
+    * truncate true neighbors, and on a corpus whose exact top-10 includes
+    * near-orthogonal vectors the old 1.2 (cos ≥ 0.28) capped pooled recall
+    * at ~0.6 no matter how many hash tables fired — the near-dup path
+    * ([[Dedup.dedupEmbed]]) keeps its tighter gate because its contract
+    * is duplicates, not top-k. Recall vs the exact path is
+    * certificate-graded; results are seed-deterministic, not
+    * SQL-checkable.
     */
   def simSearchLsh(spark: SparkSession, sfDir: String): DataFrame =
     simSearchLsh(spark, sfDir, defaultProbe)
 
   /** LSH-bucketed search for an arbitrary probe predicate. */
   def simSearchLsh(spark: SparkSession, sfDir: String, probe: Column,
-      k: Int = K): DataFrame = {
-    val v = unitVectors(spark, sfDir).select(col("vec_id"), col("vec"))
-    val model = fitBrpLsh(v)
-    // normalize+hash once for both join sides (see Dedup.dedupNear)
-    val hashed = model.transform(v).persist()
-    val probes = hashed.filter(probe)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    model.approxSimilarityJoin(probes, hashed, 1.5, "dist")
-      .filter(col("datasetA.vec_id") =!= col("datasetB.vec_id"))
-      .select(
-        col("datasetA.vec_id").as("q_id"),
-        col("datasetB.vec_id").as("c_id"),
-        cosineFromDist(col("dist")).as("sim"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .orderBy(col("q_id"), col("rnk"))
-  }
-
-  /** INT8 QUANTIZATION of an embedding frame: symmetric per-vector scale
-    * (`maxabs/127`), vector stored as array<tinyint>. At 100 TB the
-    * quantized corpus is 4× smaller than float32 (8× smaller than the
-    * double-cast scoring form) — the difference between an in-memory
-    * candidate scan and a spilling one. Exact per-vector `q_scale` and the
-    * float norm ride along so scores rescale and the rerank stage can
-    * recover exactness. Requires positive-norm input (callers come through
-    * [[prepped]], which excludes zero vectors — there `maxabs > 0`, so the
-    * scale never zeroes and round(x/scale) ∈ [−127, 127] exactly).
-    */
-  private[ops] def quantize(v: DataFrame, vecCol: String): DataFrame =
-    v.withColumn("q_scale",
-        aggregate(col(vecCol), lit(0.0), (acc, x) => greatest(acc, abs(x)))
-          / 127.0)
-      .withColumn("q_vec",
-        transform(col(vecCol), x => round(x / col("q_scale"), 0)
-          .cast(ByteType)))
+      k: Int = K): DataFrame =
+    lshTopK(spark, sfDir, probe, gate = 1.5, k).orderBy(col("q_id"), col("rnk"))
 
   /** QUANTIZED-SCAN + EXACT-RERANK top-k: the two-stage serving layout
     * every production vector store uses. Stage 1 scores ALL candidates
     * with the int8 kernel ([[graft.functions.VectorMath.dotInt8]] — 1 byte
     * per element of memory traffic instead of 8) and keeps the top
-    * `k·rerank` per probe via the same WindowGroupLimit partial top-k as
-    * [[simSearch]]; stage 2 re-scores ONLY those survivors (k·rerank·
-    * probes rows — a broadcastable sliver) with the exact double kernel
-    * and cuts to k. Output schema/rounding/tie-breaks match [[simSearch]]
-    * exactly, so when the rerank pool covers the true top-k the result is
-    * IDENTICAL to the exact path — the suite pins pooled recall and the
-    * int8 pre-score's error envelope.
+    * `k·rerank` per probe; stage 2 re-scores ONLY those survivors
+    * (k·rerank·probes rows — a broadcastable sliver) with the exact double
+    * kernel and cuts to k ([[scoredPairs]]). Output schema/rounding/
+    * tie-breaks match [[simSearch]] exactly, so when the rerank pool
+    * covers the true top-k the result is IDENTICAL to the exact path — the
+    * suite pins pooled recall and the int8 pre-score's error envelope.
     *
     * Unlike LSH/IVF this path still reads every candidate once — it cuts
     * constant-factor memory bandwidth, not asymptotics — so at 100 TB it
@@ -318,77 +425,58 @@ object Similarity {
       probe: Column = defaultProbe, k: Int = K,
       rerank: Int = 3): DataFrame = {
     require(rerank >= 1, s"rerank must be >= 1, got $rerank")
-    val v = quantize(prepped(spark, sfDir), "demb")
-    // the probe predicate binds over embeddings-table columns, so filter
-    // BEFORE the q_-renames (same convention as simSearch)
-    val probesF = v.filter(probe)
-      .select(col("vec_id").as("q_id"), col("q_vec").as("pq_vec"),
-        col("q_scale").as("pq_scale"), col("nrm").as("q_nrm"),
-        col("demb").as("q_emb"))
-    val cands = v.select(col("vec_id").as("c_id"), col("q_vec").as("cq_vec"),
-      col("q_scale").as("cq_scale"), col("nrm").as("c_nrm"))
-    val wPre = Window.partitionBy(col("q_id"))
-      .orderBy(col("pre_sim").desc, col("c_id"))
-    // stage 1: int8 scan — no float arrays cross this stage's shuffle,
-    // only (q_id, c_id, pre-rank) survive
-    val pool = cands.crossJoin(broadcast(probesF.drop("q_emb")))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("pre_sim",
-        col("pq_scale") * col("cq_scale")
-          * VectorMath.dotInt8(col("pq_vec"), col("cq_vec"))
-          / (col("q_nrm") * col("c_nrm")))
-      .withColumn("pre_rnk", row_number().over(wPre))
-      .filter(col("pre_rnk") <= k * rerank)
-      .select(col("q_id"), col("c_id"))
-    // stage 2: exact rerank on the sliver only (same kernel, rounding and
-    // tie-break as simSearch → identical output when recall is total)
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    pool
-      .join(v.select(col("vec_id").as("c_id"), col("demb").as("c_emb"),
-        col("nrm").as("c_nrm")), "c_id")
-      .join(broadcast(probesF.select(col("q_id"), col("q_emb"),
-        col("q_nrm"))), "q_id")
-      .withColumn("sim", round(
-        VectorMath.dot(col("q_emb"), col("c_emb"))
-          / (col("q_nrm") * col("c_nrm")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("c_id"), col("sim"), col("rnk"))
+    // the probe predicate binds over embeddings-table columns, so it
+    // filters BEFORE the q_-renames (same convention as simSearch)
+    topK(quantize(prepped(spark, sfDir)), _.filter(probe), k,
+        prescan = Some(k * rerank))
       .orderBy(col("q_id"), col("rnk"))
   }
+
+  /** The family's recall floor: every top-k certificate promises pooled
+    * recall ≥ 0.8 (see [[recallCertificate]]'s floor sizing).
+    */
+  private[ops] val RecallFloor = 0.8
+
+  /** A certificate's verdict: `hits ≥ floor · n`, and `false` (nothing
+    * certified) when there is nothing to count — a global aggregate over
+    * no rows leaves `hits` NULL, and a certificate never reads NULL.
+    */
+  private def certified(hits: Column, n: Column, floor: Double): Column =
+    coalesce(hits >= n * floor, lit(false))
 
   /** POOLED-RECALL CERTIFICATE: one row summarizing an approximate result
     * against the exact path — (n_probes, k, floor, recall_ok) with
     * recall_ok ⟺ |approx ∩ exact| ≥ floor · |exact| pooled over all
-    * probes. Everything in the row except the Spark-verified boolean is
-    * recomputable by the oracle (probe count from the probe predicate,
-    * k and floor are the operator's contract), which turns the recall
-    * bound itself into a hash-checked driver entry — the same move as
-    * `quantile_approx`'s rank certificate. One pass: the exact result
-    * left-joins the approx (q_id, c_id) pairs and aggregates hit counts.
+    * probes (`false` on an empty exact result). Everything in the row
+    * except the Spark-verified boolean is recomputable by the oracle
+    * (probe count from the probe predicate, k and floor are the
+    * operator's contract), which turns the recall bound itself into a
+    * hash-checked driver entry — the same move as `quantile_approx`'s rank
+    * certificate. One pass: the exact result left-joins the approx
+    * (q_id, c_id) pairs and aggregates hit counts.
     *
     * Pooled, not per-probe: LSH/IVF recall is probe-dependent (a probe in
     * a sparse bucket can legitimately recall 1 of 10), so per-probe
     * booleans would pin corpus-specific noise; the pooled floor is the
     * operator's actual documented guarantee.
     *
-    * Floor sizing (RecallProbeMain, sf0.01): every certified path —
-    * LSH (10 tables, candidate gate 1.5), IVF (12 of 32 clusters probed),
-    * int8-rerank, embed top-1 — measures pooled recall 1.00 with per-probe
-    * MIN 1.00, so the 0.8 floors carry 25% headroom against corpus
-    * regeneration while still promising a user a strong (≥0.8) documented
-    * recall contract; the old 0.2 floors certified almost nothing.
+    * Floor sizing (RecallProbeMain, sf0.01): LSH (10 tables, candidate
+    * gate 1.5), int8-rerank and embed top-1 measure pooled recall 1.00;
+    * IVF ([[IvfNProbe]] of [[IvfClusters]] clusters probed) measures 0.94
+    * (see [[simSearchIvf]]). The 0.8 floor carries headroom against
+    * corpus regeneration while still promising a user a strong (≥0.8)
+    * documented recall contract; the old 0.2 floors certified almost
+    * nothing.
     */
   private[graft] def recallCertificate(exact: DataFrame, approx: DataFrame,
       k: Int, floor: Double): DataFrame =
     exact.select(col("q_id"), col("c_id"))
       // dropDuplicates: n_exact/n_hit are post-join row counts, so a
       // duplicate (q_id, c_id) pair on the approx side would multiply its
-      // matching exact row and inflate the pooled recall. Both current
+      // matching exact row and inflate the pooled recall. The five current
       // callers are unique-by-construction (approxSimilarityJoin dedups;
-      // IVF emits one row per pair) — this keeps the helper honest for
-      // any future caller.
+      // IVF, int8-rerank and the fused hybrid emit one row per pair) —
+      // this keeps the helper honest for any future caller.
       // the approx side is ≤ k·probes rows by the operator's contract, so
       // it broadcasts at any corpus scale — without the hint Spark
       // sort-merges two frames it has no stats for
@@ -399,7 +487,24 @@ object Similarity {
         count(lit(1)).as("n_exact"),
         sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
       .select(col("n_probes"), lit(k).as("k"), lit(floor).as("min_recall"),
-        (col("n_hit") >= col("n_exact") * floor).as("recall_ok"))
+        certified(col("n_hit"), col("n_exact"), floor).as("recall_ok"))
+
+  /** DECISION CERTIFICATE: one boolean column `name`, true iff the approx
+    * path reproduces at least `floor` of the exact path's per-`q_id`
+    * `keep` decisions (a q_id present on one side only disagrees; `false`
+    * when both are empty). Floor 1.0 demands every decision — the
+    * quantized full scan, decision-identical by construction when its pool
+    * is wide enough; the IVF composition certifies at a floor below 1.
+    */
+  private[ops] def decisionCertificate(exact: DataFrame, approx: DataFrame,
+      floor: Double, name: String): DataFrame =
+    exact.select(col("q_id"), col("keep"))
+      .join(approx.select(col("q_id"), col("keep").as("keep_a")),
+        Seq("q_id"), "full_outer")
+      .agg(certified(
+        sum(when(col("keep").isNotNull && col("keep_a").isNotNull &&
+          col("keep") === col("keep_a"), 1L).otherwise(0L)),
+        count(lit(1)), floor).as(name))
 
   /** `sim_search_lsh` checked key: the LSH path's pooled recall vs the
     * exact path, certified for the driver (the raw approximate neighbor
@@ -411,14 +516,14 @@ object Similarity {
     */
   def simSearchLshChecked(spark: SparkSession, sfDir: String): DataFrame =
     recallCertificate(simSearch(spark, sfDir),
-      simSearchLsh(spark, sfDir), K, floor = 0.8)
+      simSearchLsh(spark, sfDir), K, RecallFloor)
 
   /** `sim_search_ivf` checked key: IVF pooled recall vs exact, certified
     * (same contract as [[simSearchLshChecked]]).
     */
   def simSearchIvfChecked(spark: SparkSession, sfDir: String): DataFrame =
     recallCertificate(simSearch(spark, sfDir),
-      simSearchIvf(spark, sfDir), K, floor = 0.8)
+      simSearchIvf(spark, sfDir), K, RecallFloor)
 
   /** `sim_search_quant` checked key: the quantized-scan + exact-rerank
     * tier's pooled recall vs the exact path, certified (same contract as
@@ -429,7 +534,7 @@ object Similarity {
     */
   def simSearchQuantChecked(spark: SparkSession, sfDir: String): DataFrame =
     recallCertificate(simSearch(spark, sfDir),
-      simSearchQuantized(spark, sfDir), K, floor = 0.8)
+      simSearchQuantized(spark, sfDir), K, RecallFloor)
 
   /** kNN CLASSIFICATION over the embedding space: each probe vector
     * (vec_id < 50) takes the majority label of its 5 exact-cosine nearest
@@ -504,38 +609,27 @@ object Similarity {
       kCand: Int, k: Int): DataFrame = {
     require(qn >= 1 && kCand >= 1 && k >= 1,
       s"qn/kCand/k must be >= 1, got $qn/$kCand/$k")
+    hybridOn(docs, qn, kCand, k)(qIds =>
+      topK(prepped(embeddings), _.join(broadcast(qIds), Seq("vec_id")), kCand))
+  }
+
+  /** The hybrid body shared by the exact and IVF forms (one formulation,
+    * so the serving variant cannot drift from the graded one): the BM25
+    * lexical top-`kCand`, the query ids (the first `qn` text-bearing docs
+    * — the BM25 side's layout) handed to `vectorTopK` as a FRAME, and the
+    * RRF fusion — full-outer join of the two candidate frames (≤ qn·kCand
+    * rows each), integer reciprocal-rank scores, top-`k` per query.
+    */
+  private def hybridOn(docs: DataFrame, qn: Int, kCand: Int, k: Int)(
+      vectorTopK: DataFrame => DataFrame): DataFrame = {
     val lex = TextAnalysis.searchBm25On(docs, qn, kCand)
       .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
     val qIds = docs.filter(col("text").isNotNull)
       .orderBy(col("doc_id")).limit(qn)
       .select(col("doc_id").as("vec_id"))
-    val v = prepped(embeddings)
-    val probes = v.join(broadcast(qIds), Seq("vec_id"))
-      .select(col("vec_id").as("q_id"), col("demb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val wv = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("c_id"))
-    val vec = v
-      .select(col("vec_id").as("c_id"), col("demb").as("c_emb"),
-        col("nrm").as("c_nrm"))
-      .crossJoin(broadcast(probes))
-      .filter(col("c_id") =!= col("q_id"))
-      .withColumn("sim", round(
-        VectorMath.dot(col("q_emb"), col("c_emb"))
-          / (col("q_nrm") * col("c_nrm")), 6))
-      .withColumn("vec_rnk", row_number().over(wv))
-      .filter(col("vec_rnk") <= kCand)
+    val vec = vectorTopK(qIds)
       .select(col("q_id").as("query_id"), col("c_id").as("doc_id"),
-        col("vec_rnk"))
-    rrfFuse(lex, vec, k)
-  }
-
-  /** The RRF fusion tail shared by the exact and IVF hybrids (one
-    * formulation, so the serving variant cannot drift from the graded
-    * one): full-outer join of the two candidate frames (≤ qn·kCand rows
-    * each), integer reciprocal-rank scores, top-`k` per query.
-    */
-  private def rrfFuse(lex: DataFrame, vec: DataFrame, k: Int): DataFrame = {
+        col("rnk").as("vec_rnk"))
     val wf = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf_milli").desc, col("doc_id"))
     lex.join(vec, Seq("query_id", "doc_id"), "full_outer")
@@ -561,24 +655,14 @@ object Similarity {
       .orderBy(col("query_id"), col("rnk"))
 
   /** The scale-path variant — vector candidates from the IVF index
-    * instead of the exact scan, fusion unchanged ([[rrfFuse]]). The query
-    * ids (the first `qn` text-bearing docs — the BM25 side's layout) stay
-    * a FRAME through [[simSearchIvfForIds]]: no driver-side collect into
-    * a probe predicate.
+    * instead of the exact scan, fusion unchanged ([[hybridOn]]). The query
+    * ids stay a FRAME through [[simSearchIvfForIds]]: no driver-side
+    * collect into a probe predicate.
     */
   private[graft] def searchHybridIvf(spark: SparkSession, sfDir: String,
-      qn: Int, kCand: Int, k: Int): DataFrame = {
-    val docs = table(spark, sfDir, "documents")
-    val lex = TextAnalysis.searchBm25On(docs, qn, kCand)
-      .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val qIds = docs.filter(col("text").isNotNull)
-      .orderBy(col("doc_id")).limit(qn)
-      .select(col("doc_id").as("vec_id"))
-    val vec = simSearchIvfForIds(spark, sfDir, qIds, kCand)
-      .select(col("q_id").as("query_id"), col("c_id").as("doc_id"),
-        col("rnk").as("vec_rnk"))
-    rrfFuse(lex, vec, k)
-  }
+      qn: Int, kCand: Int, k: Int): DataFrame =
+    hybridOn(table(spark, sfDir, "documents"), qn, kCand, k)(
+      simSearchIvfForIds(spark, sfDir, _, kCand))
 
   /** `search_hybrid_ivf` checked key — the hybrid family's PRODUCTION
     * serving path on the oracle board (the `sim_search_ivf` /
@@ -598,7 +682,56 @@ object Similarity {
       searchHybridIvf(spark, sfDir, TextAnalysis.SearchQueries,
         HybridCandK, K)
         .select(col("query_id").as("q_id"), col("doc_id").as("c_id")),
-      K, floor = 0.8)
+      K, RecallFloor)
+
+  /** The DuckDB twin of [[prepped]] as CTE `name`: the embeddings table
+    * (filtered by `where`, carrying the `extra` columns) with the
+    * double-cast `emb`, its L2 `nrm`, zero-norm rows excluded. The one
+    * embedding prep of every oracle twin.
+    */
+  private[graft] def preppedSql(name: String, where: String = "",
+      extra: String = ""): String =
+    s"""$name AS (
+       |  SELECT * FROM (
+       |    SELECT vec_id,$extra
+       |      list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
+       |      SQRT(list_sum(list_transform(embedding,
+       |        x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
+       |    FROM embeddings$where) ${name}0 WHERE nrm > 0)""".stripMargin
+
+  /** The twin of [[unitVectors]]: CTE `name` = (vec_id, unit) over the
+    * prepped CTE `prep`.
+    */
+  private[graft] def unitSql(name: String, prep: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, list_transform(emb, x -> x / nrm) AS unit
+       |  FROM $prep)""".stripMargin
+
+  /** The twin of the exact pairing: `pairs` = every (probe `q`, corpus
+    * `v`) pair but the self pair, with its 6-dp cosine; `extra` carries
+    * corpus columns.
+    */
+  private def exactPairsSql(extra: String = ""): String =
+    s"""pairs AS (
+       |  SELECT q_id, v.vec_id AS c_id,$extra
+       |    ROUND(list_sum(list_transform(list_zip(q_emb, v.emb),
+       |      p -> p[1] * p[2])) / (q_nrm * v.nrm), 6) AS sim
+       |  FROM q, v WHERE v.vec_id != q_id)""".stripMargin
+
+  /** The certificate row's twin: every column but the Spark-verified
+    * recall boolean (pinned true) is exact cross-engine — the probe count
+    * `nProbes` over `from`, and k and the floor, the operator's published
+    * contract. See [[recallCertificate]].
+    */
+  private def recallCertSql(k: Int, from: String,
+      nProbes: String = "count(*)"): String =
+    s"""SELECT $nProbes AS n_probes, $k AS k,
+       |  CAST($RecallFloor AS DOUBLE) AS min_recall, true AS recall_ok
+       |FROM $from""".stripMargin
+
+  /** [[recallCertSql]] for a probe predicate over the prepped embeddings. */
+  private[graft] def probeRecallCertSql(k: Int, probe: String): String =
+    "WITH " + preppedSql("v") + "\n" + recallCertSql(k, s"v WHERE $probe")
 
   /** The fused-hybrid CTE chain shared by the `search_hybrid` and
     * `search_hybrid_ivf` twins: the [[TextAnalysis.bm25SqlCtes]] scoring
@@ -617,21 +750,11 @@ object Similarity {
        |        ORDER BY score DESC, doc_id) AS rnk
        |    FROM s WHERE score > 0) lr
        |  WHERE rnk <= $HybridCandK),
-       |v AS (
-       |  SELECT * FROM (
-       |    SELECT vec_id,
-       |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-       |           SQRT(list_sum(list_transform(embedding,
-       |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-       |    FROM embeddings) v0 WHERE nrm > 0),
+       |${preppedSql("v")},
        |q AS (
        |  SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm FROM v
        |  WHERE vec_id IN (SELECT query_id FROM qids)),
-       |pairs AS (
-       |  SELECT q_id, v.vec_id AS c_id,
-       |    ROUND(list_sum(list_transform(list_zip(q_emb, v.emb),
-       |      p -> p[1] * p[2])) / (q_nrm * v.nrm), 6) AS sim
-       |  FROM q, v WHERE v.vec_id != q_id),
+       |${exactPairsSql()},
        |vec AS (
        |  SELECT q_id AS query_id, c_id AS doc_id,
        |    CAST(rnk AS INTEGER) AS vec_rnk
@@ -662,50 +785,18 @@ object Similarity {
       s"""SELECT query_id, doc_id, lex_rnk, vec_rnk, rrf_milli, rnk
          |FROM fr WHERE rnk <= $K
          |ORDER BY query_id, rnk""".stripMargin),
-    // the certificate row: every column but the Spark-verified overlap
-    // boolean is recomputed — n_probes from the exact hybrid's own CTEs
+    // the certificate row: n_probes from the exact hybrid's own CTEs
     "search_hybrid_ivf" ->
-      (hybridFusedCtes + "\n" +
-      s"""SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_probes,
-         |  $K AS k, CAST(0.8 AS DOUBLE) AS min_recall, true AS recall_ok
-         |FROM fr WHERE rnk <= $K""".stripMargin),
-    // recall certificates: every column except the Spark-verified pooled
-    // recall boolean is exact cross-engine (probe count from the probe
-    // predicate; k and the floor are the operator's published contract) —
-    // see recallCertificate's scaladoc
-    "sim_search_lsh" ->
-      """SELECT count(*) AS n_probes, 10 AS k,
-        |  CAST(0.8 AS DOUBLE) AS min_recall, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 5
-        |  AND list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0""".stripMargin,
-    "sim_search_ivf" ->
-      """SELECT count(*) AS n_probes, 10 AS k,
-        |  CAST(0.8 AS DOUBLE) AS min_recall, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 5
-        |  AND list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0""".stripMargin,
-    "sim_search_quant" ->
-      """SELECT count(*) AS n_probes, 10 AS k,
-        |  CAST(0.8 AS DOUBLE) AS min_recall, true AS recall_ok
-        |FROM embeddings WHERE vec_id < 5
-        |  AND list_sum(list_transform(embedding,
-        |    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) > 0""".stripMargin,
+      (hybridFusedCtes + "\n" + recallCertSql(K, s"fr WHERE rnk <= $K",
+        "CAST(count(DISTINCT query_id) AS BIGINT)")),
+    "sim_search_lsh" -> probeRecallCertSql(K, s"vec_id < $NProbes"),
+    "sim_search_ivf" -> probeRecallCertSql(K, s"vec_id < $NProbes"),
+    "sim_search_quant" -> probeRecallCertSql(K, s"vec_id < $NProbes"),
     "knn_classify" ->
-      """WITH v AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id, label,
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-        |           SQRT(list_sum(list_transform(embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-        |    FROM embeddings) WHERE nrm > 0),
+      s"""WITH ${preppedSql("v", extra = " label,")},
         |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm
         |      FROM v WHERE vec_id < 50),
-        |pairs AS (
-        |  SELECT q_id, v.vec_id AS c_id, v.label,
-        |    ROUND(list_sum(list_transform(list_zip(q_emb, v.emb),
-        |      p -> p[1] * p[2])) / (q_nrm * v.nrm), 6) AS sim
-        |  FROM q, v WHERE v.vec_id != q_id),
+        |${exactPairsSql(" v.label,")},
         |nn AS (SELECT * FROM (
         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
         |      ORDER BY sim DESC, c_id) AS rnk FROM pairs) t
@@ -722,23 +813,13 @@ object Similarity {
         |FROM pred p JOIN v ON p.q_id = v.vec_id
         |ORDER BY p.q_id""".stripMargin,
     "sim_search" ->
-      """WITH v AS (
-        |  SELECT * FROM (
-        |    SELECT vec_id,
-        |           list_transform(embedding, x -> CAST(x AS DOUBLE)) AS emb,
-        |           SQRT(list_sum(list_transform(embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm
-        |    FROM embeddings) WHERE nrm > 0),
+      s"""WITH ${preppedSql("v")},
         |q AS (SELECT vec_id AS q_id, emb AS q_emb, nrm AS q_nrm
-        |      FROM v WHERE vec_id < 5),
-        |pairs AS (
-        |  SELECT q_id, v.vec_id AS c_id,
-        |    ROUND(list_sum(list_transform(list_zip(q_emb, v.emb),
-        |      p -> p[1] * p[2])) / (q_nrm * v.nrm), 6) AS sim
-        |  FROM q, v WHERE v.vec_id != q_id)
+        |      FROM v WHERE vec_id < $NProbes),
+        |${exactPairsSql()}
         |SELECT q_id, c_id, sim, CAST(rnk AS INTEGER) AS rnk FROM (
         |  SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
         |    ORDER BY sim DESC, c_id) AS rnk FROM pairs) t
-        |WHERE rnk <= 10 ORDER BY q_id, rnk""".stripMargin
+        |WHERE rnk <= $K ORDER BY q_id, rnk""".stripMargin
   )
 }

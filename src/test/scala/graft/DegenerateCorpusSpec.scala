@@ -110,6 +110,29 @@ class DegenerateCorpusSpec extends SparkSpec {
     }
   }
 
+  test("certificates never read NULL: an empty batch or probe set certifies nothing") {
+    // a global aggregate over no rows leaves its sums NULL; every
+    // certificate must still answer with a non-null false
+    val dir = degenerateSf()
+    Seq(false -> "quant_ok", true -> "ivf_ok").foreach { case (ivf, cert) =>
+      val rows = graft.ops.Dedup.embedDecisionChecked(spark, dir, lit(false),
+        ivf).collect()
+      assert(rows.length == 1, cert)
+      val r = rows.head
+      assert(r.getLong(r.fieldIndex("n_new")) == 0L, cert)
+      val i = r.fieldIndex(cert)
+      assert(!r.isNullAt(i) && !r.getBoolean(i), s"$cert on an empty batch")
+    }
+    val approx = Similarity.simSearch(spark, dir)
+    val rows = Similarity.recallCertificate(approx.filter(lit(false)),
+      approx, 10, 0.8).collect()
+    assert(rows.length == 1)
+    val r = rows.head
+    assert(r.getLong(r.fieldIndex("n_probes")) == 0L)
+    val i = r.fieldIndex("recall_ok")
+    assert(!r.isNullAt(i) && !r.getBoolean(i), "recall_ok on no probes")
+  }
+
   test("corpus_clean composes over a degenerate corpus, keeping the near-dup representative") {
     import spark.implicits._
     // composition is where degenerate rows resurface: the empty and

@@ -1432,6 +1432,56 @@ class ExtensionsSpec extends SparkSpec {
     }
   }
 
+  test("the embedding family's scoring ladder is spelled once, in Similarity") {
+    // Every vector-search and embedding-dedup entry point is a projection
+    // of one ladder (pairing → int8 cut → exact score → certificate), and
+    // the semantic keys share one verdict; a hand copy of any rung is
+    // free to drift from the checked keys. Banned outside Similarity: the
+    // int8 kernel call (its definition in VectorMath is not a call), the
+    // side rule and the unit prep.
+    val root = new java.io.File("src/main/scala/graft")
+    assert(root.isDirectory, s"run from the project root (no $root)")
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val lines = for {
+      f <- sources(root)
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
+        .map(_.toString).zipWithIndex
+    } yield (f.getPath.stripPrefix(root.getPath + "/"), n + 1, line)
+    assert(lines.exists(_._1 == "ops/Similarity.scala"))
+    val banned = Seq("dotInt8(", "lit(\"prior\")", "x -> x / nrm")
+    val strays = for {
+      (file, n, line) <- lines if file != "ops/Similarity.scala"
+      b <- banned if line.contains(b) && !line.contains("def dotInt8(")
+    } yield s"$file:$n contains '$b'"
+    assert(strays.isEmpty, strays.mkString("\n"))
+    val once = Seq(
+      // exact 6-dp cosine, int8 prescan, side rule, exact-rerank join
+      "VectorMath.dot(col(\"q_emb\"), col(\"c_emb\"))",
+      "VectorMath.dotInt8(col(",
+      "lit(\"prior\")",
+      ".join(side(v, \"c\", Seq(\"emb\", \"nrm\")), \"c_id\")",
+      // IVF probe join, LSH top-k, decision certificate
+      ".join(broadcast(nearestClusters(",
+      "approxSimilarityJoin(hashed.filter(probe)",
+      "col(\"keep\") === col(\"keep_a\")",
+      // unit prep (Spark and SQL), semantic c_sim and self-neighbour verdict
+      "expr(\"transform(emb, x -> x / nrm)\")",
+      "list_transform(emb, x -> x / nrm)",
+      "VectorMath.dot(col(\"unit\"), col(\"mean\")) / col(\"mnrm\")",
+      "col(\"cs_b\") < col(\"cs_a\")",
+      // embedding-prep SQL CTE and the semantic verdict SQL
+      "CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm",
+      "CASE WHEN m.mnrm > 0 THEN",
+      "bool_or(b.c_sim < a.c_sim")
+    once.foreach { token =>
+      val at = lines.collect { case (f, n, l) if l.contains(token) => s"$f:$n" }
+      assert(at.size == 1,
+        s"'$token' is spelled at ${at.mkString(", ")} (expected exactly once)")
+    }
+  }
+
   test("corpus_pipeline_learned_bpe: manifest equals the flagship except " +
       "the learned token pricing; seq arithmetic consistent") {
     import graft.ops.Curation
