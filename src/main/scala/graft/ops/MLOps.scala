@@ -9,6 +9,7 @@ import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.graftbridge.CvBridge
 import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.ml.tree.graftbridge.ForestBridge
 import org.apache.spark.ml.tuning.{CrossValidatorModel, ParamGridBuilder}
 import org.apache.spark.mllib.util.MLUtils
 import org.apache.spark.sql.{DataFrame, SparkSession, classic}
@@ -43,12 +44,12 @@ import graft.Tables
   *  - fit → transform → evaluate end-to-end (`:237,253,268-270`)
   *
   * Scale notes: indexer fit = one distinct-count aggregate; RF induction is
-  * distributed per-partition statistics aggregation (spark.ml); nothing here
-  * collects rows to the driver except the 4-row param grid and the scalar
-  * accuracy — both O(1) in data size. CV input is capped to a deterministic
-  * prefix (`cvCap`) because model *selection* doesn't need the full corpus;
-  * the selected model can then be fit at full scale (ml_fit_predict_eval
-  * trains on the uncapped 80% split).
+  * distributed per-partition statistics aggregation (spark.ml), over a
+  * per-fold training input the CV builds once for its four ParamMaps;
+  * nothing here collects rows to the driver except the 4-row param grid
+  * and the scalar accuracy — both O(1) in data size. CV input is capped to
+  * a deterministic prefix (`cvCap`): model *selection* doesn't need the
+  * full corpus, and ml_fit_predict_eval trains on the uncapped 80% split.
   */
 object MLOps {
 
@@ -341,18 +342,20 @@ object MLOps {
     * the per-ParamMap metrics `CrossValidator.fit` gives on `data`:
     *  - the same split (`MLUtils.kFold` over `data.rdd` with [[SplitSeed]],
     *    so fold rows and partitioning are CrossValidator's);
-    *  - per fold, the label indexer is fit ONCE on the training frame and
-    *    both frames are featurized and cached once, where the pipeline
-    *    fit inside CrossValidator refits the indexer for every ParamMap
-    *    (the fold-local fit matters: one indexer over the whole slice
-    *    changes the metrics);
-    *  - all folds × ParamMaps fits are submitted together on [[fitPool]],
-    *    each carrying the caller's local properties (job group, session);
+    *  - per fold, serially: the label indexer is fit ONCE on the training
+    *    frame (CrossValidator refits it per ParamMap; one indexer over the
+    *    whole slice would change the metrics), both frames are featurized
+    *    and cached once, and the forest's training input is built ONCE
+    *    ([[ForestBridge.prepare]]) for the ParamMaps, which vary only
+    *    maxDepth and impurity;
+    *  - all folds × ParamMaps fits (Spark's induction over the fold's input,
+    *    [[ForestBridge.fit]]) are submitted together on [[fitPool]], each
+    *    carrying the caller's local properties (job group, session);
     *  - `avgMetrics` = per-ParamMap `sum / NumFolds` in fold order,
     *    CrossValidator's arithmetic.
-    * A failed fit rethrows naming the key, fold and ParamMap; the fold
-    * caches are released on every path. No best-model refit: [[fitCv]]
-    * does that for the callers that need the model.
+    * A failed fit or shared build rethrows naming the key, fold and
+    * ParamMap; the fold caches and inputs are released on every path. No
+    * best-model refit: [[fitCv]] does that for the callers that need it.
     */
   private[graft] def selectForest(spark: SparkSession,
       data: DataFrame): Selection = {
@@ -361,6 +364,7 @@ object MLOps {
     val grid = forestGrid(rfStage)
     val eval = evaluator
     val caches = mutable.ArrayBuffer.empty[DataFrame]
+    val inputs = mutable.ArrayBuffer.empty[Try[ForestBridge.SharedInput]]
     def failed(what: String, e: Throwable) =
       new IllegalStateException(s"ml_cross_validator: $what failed: $e", e)
     try {
@@ -370,18 +374,19 @@ object MLOps {
           val indexer = try labelIndexer.fit(trainDf) catch {
             case e: Exception => throw failed(s"fold $fold label indexer fit", e)
           }
-          def featurize(df: DataFrame): DataFrame = {
-            val out = assembler.transform(indexer.transform(df)).persist()
-            caches += out
-            out
-          }
-          (featurize(trainDf),
-            featurize(spark.createDataFrame(valid, data.schema)))
+          val validDf = spark.createDataFrame(valid, data.schema)
+          val Seq(trainF, validF) = Seq(trainDf, validDf).map(df =>
+            assembler.transform(indexer.transform(df)).persist())
+          caches ++= Seq(trainF, validF)
+          inputs += Try(ForestBridge.prepare(rfStage, trainF))
+          (trainF, validF)
         }
       val session = spark.asInstanceOf[classic.SparkSession]
-      val fits = for ((train, valid) <- folds; pm <- grid) yield
-        SQLExecution.withThreadLocalCaptured(session, fitPool) {
-          eval.evaluate(rfStage.fit(train, pm).transform(valid, pm))
+      // a failed shared build fails its fold's fits: `input.get` rethrows
+      val fits = for (((train, valid), input) <- folds.zip(inputs); pm <- grid)
+        yield SQLExecution.withThreadLocalCaptured(session, fitPool) {
+          eval.evaluate(
+            ForestBridge.fit(rfStage, input.get, train, pm).transform(valid, pm))
         }
       // join every fit, failed or not, before the caches go
       val metrics = fits.map(f => Try(f.join())).zipWithIndex.map {
@@ -394,7 +399,10 @@ object MLOps {
       }
       Selection(pipe, rfStage, eval, grid,
         metrics.grouped(grid.length).toArray.transpose.map(_.sum / NumFolds))
-    } finally caches.foreach(_.unpersist())
+    } finally {
+      caches.foreach(_.unpersist())
+      inputs.foreach(_.foreach(_.release()))
+    }
   }
 
   /** [[selectForest]] plus CrossValidator's refit of the winning ParamMap
@@ -406,8 +414,7 @@ object MLOps {
     */
   private[graft] def fitCv(spark: SparkSession, sfDir: String)
       : (CrossValidatorModel, Seq[(Int, String)]) = {
-    // every fold split and the winner's refit read the slice, so the
-    // parquet + JSON parse runs once
+    // the folds and the winner's refit all read the slice: one parse
     val data = cvSlice(spark, sfDir)
     withPersisted(data) {
       val s = selectForest(spark, data)
@@ -427,9 +434,7 @@ object MLOps {
   def crossValidator(spark: SparkSession, sfDir: String): DataFrame = {
     val data = cvSlice(spark, sfDir)
     val s = withPersisted(data)(selectForest(spark, data))
-    val rows = s.rows.zip(s.avgMetrics.toSeq).map { case ((d, i), m) =>
-      (d, i, m)
-    }
+    val rows = s.rows.zip(s.avgMetrics).map { case ((d, i), m) => (d, i, m) }
     spark.createDataFrame(rows)
       .toDF("max_depth", "impurity", "avg_accuracy")
       .orderBy(col("max_depth"), col("impurity"))
@@ -474,27 +479,26 @@ object MLOps {
         (get_json_object(col("props"), "$.k").cast(IntegerType) % 5)
           .cast(StringType).as("k_cat"))
       .na.drop()
-      .persist()
-    val purchases = dataset.filter(col("event_type") === "purchase")
-    val views = dataset.filter(col("event_type") === "view")
-    val (nP, nV) = (purchases.count(), views.count())
-    // undersampling ratio = minority/MAJORITY (decided by actual counts, so
-    // the construction is valid at every scale factor), so the kept
-    // majority sample has the minority's expected size. The transcript
-    // divides by the WHOLE dataset — `A related code.txt:77` — which
-    // under-samples the majority below the minority count; a transcript
-    // bug fixed here like the duplicated assembler inputs, per SURVEY §0.
-    val (minority, majority, sampleRatio) =
-      if (nP <= nV) (purchases, views, nP.toDouble / nV)
-      else (views, purchases, nV.toDouble / nP)
-    val balanced = minority
-      .unionAll(majority.sample(withReplacement = false, sampleRatio, SplitSeed))
-      .persist()
-    // materialize the (small, pruned) union so the wide upstream projection
-    // cache can be released immediately — one cheap cached pass
-    balanced.count()
-    dataset.unpersist()
-    balanced
+    // the wide projection is cached until the small union is, or a count fails
+    withPersisted(dataset) {
+      val purchases = dataset.filter(col("event_type") === "purchase")
+      val views = dataset.filter(col("event_type") === "view")
+      val (nP, nV) = (purchases.count(), views.count())
+      // undersampling ratio = minority/MAJORITY (decided by actual counts,
+      // so the construction is valid at every scale factor), so the kept
+      // majority sample has the minority's expected size. The transcript
+      // divides by the WHOLE dataset — `A related code.txt:77` — which
+      // under-samples the majority below the minority count; a transcript
+      // bug fixed here like the duplicated assembler inputs, per SURVEY §0.
+      val (minority, majority, sampleRatio) =
+        if (nP <= nV) (purchases, views, nP.toDouble / nV)
+        else (views, purchases, nV.toDouble / nP)
+      val balanced = minority
+        .unionAll(majority.sample(withReplacement = false, sampleRatio, SplitSeed))
+        .persist()
+      balanced.count()
+      balanced
+    }
   }
 
   /** EP3 composed class-rebalance pipeline, the reference's third transcript
@@ -538,19 +542,15 @@ object MLOps {
       .transform(encoded)
     val Array(trainData, testData) =
       assembled.randomSplit(Array(0.8, 0.2), SplitSeed)
-    trainData.persist(); testData.persist()
-    val model = new RandomForestClassifier()
+    val model = withPersisted(trainData)(new RandomForestClassifier()
       .setFeaturesCol("assembled_features").setLabelCol("outcome_idx")
       .setSeed(RfSeed).setMaxDepth(4).setNumTrees(10)
-      .fit(trainData)
-    // the eager fit materialized the chain through `balanced`; the returned
-    // plan reads only the cached balanced/testData — release the rest
-    trainData.unpersist()
-    val out = model.transform(testData)
+      .fit(trainData))
+    // the returned plan reads the cached balanced and testData: both outlive it
+    model.transform(testData.persist())
       .select(col("event_id") +: col("outcome_idx")
         +: idxCols.toSeq.map(col) :+ col("prediction"): _*)
       .orderBy(col("event_id"))
-    out
   }
 
   /** MODEL PERSISTENCE CONTRACT — a pipeline that trains must ship its

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.ml.Pipeline
 import org.apache.spark.ml.classification.RandomForestClassifier
 import org.apache.spark.ml.feature.{StringIndexer, VectorAssembler}
+import org.apache.spark.ml.tree.graftbridge.ForestBridge
 import org.apache.spark.ml.tuning.CrossValidator
+import org.apache.spark.mllib.util.MLUtils
 import org.apache.spark.sql.functions._
 
 import graft.ops.MLOps
@@ -94,6 +96,62 @@ class MLSpec extends SparkSpec {
     assert(data.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
   }
 
+  test("the shared forest input fits tree for tree what stock fit fits") {
+    // the label carries no signal, so equal avgMetrics alone could hide a
+    // different forest: on every fold's training frame (featurized as
+    // selectForest does), each ParamMap's model over the fold's shared
+    // input must print and weigh its features as stock rfStage.fit does
+    val data = MLOps.cvSlice(spark, sf).persist()
+    try {
+      val Array(indexer: StringIndexer, assembler: VectorAssembler,
+        rf: RandomForestClassifier) = MLOps.fullPipeline().getStages
+      val grid = MLOps.forestGrid(rf)
+      val folds = MLUtils.kFold(data.rdd, MLOps.NumFolds, MLOps.SplitSeed)
+      for (((train, _), fold) <- folds.zipWithIndex) {
+        val trainDf = spark.createDataFrame(train, data.schema)
+        val featurized = assembler.transform(
+          indexer.fit(trainDf).transform(trainDf)).persist()
+        val input = ForestBridge.prepare(rf, featurized)
+        try grid.foreach { pm =>
+          val shared = ForestBridge.fit(rf, input, featurized, pm)
+          val stock = rf.fit(featurized, pm)
+          assert(shared.getNumTrees == 10)
+          assert(shared.toDebugString == stock.toDebugString,
+            s"fold $fold $pm: the forests differ")
+          assert(shared.featureImportances == stock.featureImportances,
+            s"fold $fold $pm: ${shared.featureImportances} != " +
+              s"stock ${stock.featureImportances}")
+        } finally {
+          input.release()
+          featurized.unpersist()
+        }
+      }
+    } finally data.unpersist()
+  }
+
+  test("forest internals are named only in the forest bridge") {
+    // RandomForest.run's steps before induction are called from one file,
+    // which calls them in run's order; a second caller would be a copy of
+    // run's orchestration, free to drift from Spark's
+    val banned = Seq("runBagged", "findSplits", "DecisionTreeMetadata",
+      "BaggedPoint", "TreePoint")
+    val bridge = "org/apache/spark/ml/tree/graftbridge/ForestBridge.scala"
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the project root (no $root)")
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val all = sources(root).map(f => f.getPath.stripPrefix(s"$root/") -> f)
+    assert(all.exists(_._1 == bridge))
+    val hits = for {
+      (path, f) <- all if path != bridge
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
+        .map(_.toString).zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"$path:${n + 1} contains '$b'"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("cross validation jobs carry the caller's job group, call after call") {
     val sc = spark.sparkContext
     for (group <- Seq("cv-call-a", "cv-call-b")) {
@@ -176,6 +234,20 @@ class MLSpec extends SparkSpec {
     // binary outcome (purchase/view) and binary predictions
     assert(a.forall(r => Set(0, 1).contains(r.getAs[Int]("outcome_idx"))))
     assert(a.forall(r => Set(0.0, 1.0).contains(r.getAs[Double]("prediction"))))
+  }
+
+  test("rebalanceFit leaves only the caches its returned plan reads") {
+    // the balanced union and the test split outlive the call; the wide
+    // projection and the train split are released
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    assert(MLOps.rebalanceFit(spark, sf).collect().nonEmpty)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 2, sc.getPersistentRDDs.filter(r => added(r._1))
+      .values.map(_.name).mkString("\n"))
+    spark.catalog.clearCache() // caller-side cache release (engine contract)
+    assert(sc.getPersistentRDDs.keySet == before)
   }
 
   test("model save/load round-trip: reloaded predictions are bit-equal") {
