@@ -624,8 +624,7 @@ object Similarity {
       vectorTopK: DataFrame => DataFrame): DataFrame = {
     val lex = TextAnalysis.searchBm25On(docs, qn, kCand)
       .select(col("query_id"), col("doc_id"), col("rnk").as("lex_rnk"))
-    val qIds = docs.filter(col("text").isNotNull)
-      .orderBy(col("doc_id")).limit(qn)
+    val qIds = TextAnalysis.queryDocs(docs, qn)
       .select(col("doc_id").as("vec_id"))
     val vec = vectorTopK(qIds)
       .select(col("q_id").as("query_id"), col("c_id").as("doc_id"),
@@ -743,12 +742,7 @@ object Similarity {
     "WITH " + TextAnalysis.bm25SqlCtes(TextAnalysis.SearchQueries) +
       ",\n" +
     s"""lex AS (
-       |  SELECT query_id, doc_id, CAST(rnk AS INTEGER) AS lex_rnk
-       |  FROM (
-       |    SELECT query_id, doc_id,
-       |      row_number() OVER (PARTITION BY query_id
-       |        ORDER BY score DESC, doc_id) AS rnk
-       |    FROM s WHERE score > 0) lr
+       |  SELECT query_id, doc_id, rnk AS lex_rnk FROM r
        |  WHERE rnk <= $HybridCandK),
        |${preppedSql("v")},
        |q AS (

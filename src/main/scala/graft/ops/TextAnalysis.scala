@@ -437,9 +437,7 @@ object TextAnalysis {
   /** API form: bucket + sample any `(doc_id, text)` frame — unordered.
     * NULL-text rows drop (the family convention).
     */
-  def sampleQualityBucketsOn(docs: DataFrame): DataFrame = {
-    val draw = conv(substring(md5(concat(col("doc_id").cast(StringType),
-      lit(":" + QBucketSalt))), 1, 15), 16, 10).cast(LongType) % 100
+  def sampleQualityBucketsOn(docs: DataFrame): DataFrame =
     docs.filter(col("text").isNotNull)
       .withColumn("tokens", split(col("text"), " "))
       // one fold, referenced by every derived column (the
@@ -449,13 +447,20 @@ object TextAnalysis {
         when(col("w_sum_milli") >= QBucketHeadMin, "head")
           .when(col("w_sum_milli") >= QBucketMidMin, "middle")
           .otherwise("tail"))
-      .withColumn("kept", draw <
-        when(col("bucket") === "head", QBucketHeadPct)
-          .when(col("bucket") === "middle", QBucketMidPct)
-          .otherwise(QBucketTailPct))
+      .withColumn("kept", qualityKept)
       .select(col("doc_id"), col("w_sum_milli"), col("bucket"),
         col("kept"))
-  }
+
+  /** The family's keep verdict over a `bucket` column: the
+    * `sample_stratified` md5-mod-100 draw, salted (`doc_id:ccnet_v1`),
+    * under the bucket's keep rate.
+    */
+  private def qualityKept: Column =
+    hashBucket(concat(col("doc_id").cast(StringType),
+      lit(":" + QBucketSalt)), 100) <
+      when(col("bucket") === "head", QBucketHeadPct)
+        .when(col("bucket") === "middle", QBucketMidPct)
+        .otherwise(QBucketTailPct)
 
   /** THE CCNET CHAIN COMPOSED — train → score → calibrate → sample as
     * ONE key (Wenzek et al. 2020's actual pipeline; the single-operator
@@ -510,8 +515,6 @@ object TextAnalysis {
       .withColumn("off", coalesce(sum(col("n")).over(
         Window.orderBy(col("vb"))
           .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-    val draw = conv(substring(md5(concat(col("doc_id").cast(StringType),
-      lit(":" + QBucketSalt))), 1, 15), 16, 10).cast(LongType) % 100
     ranged
       .join(broadcast(offsets.select(col("vb"), col("off"))), Seq("vb"))
       .withColumn("rank", col("off") +
@@ -522,10 +525,7 @@ object TextAnalysis {
         when(col("rank") * 3 < col("n_docs"), "head")
           .when(col("rank") * 3 < col("n_docs") * 2, "middle")
           .otherwise("tail"))
-      .withColumn("kept", draw <
-        when(col("bucket") === "head", QBucketHeadPct)
-          .when(col("bucket") === "middle", QBucketMidPct)
-          .otherwise(QBucketTailPct))
+      .withColumn("kept", qualityKept)
       .select(col("doc_id"), col("w_sum_milli"), col("rank"),
         col("bucket"), col("kept"))
   }
@@ -551,8 +551,7 @@ object TextAnalysis {
        |  SELECT lang, unnest(string_split(text, ' ')) AS tok
        |  FROM documents WHERE text IS NOT NULL),
        |bc AS (
-       |  SELECT CAST(concat('0x', substring(md5(tok), 1, 15)) AS BIGINT)
-       |      % $QualityLmBuckets AS bucket,
+       |  SELECT ${hashBucketSql("tok", QualityLmBuckets)} AS bucket,
        |    CAST(count(*) FILTER (WHERE lang = 'en') AS BIGINT) AS n_pos,
        |    CAST(count(*) FILTER (WHERE lang != 'en') AS BIGINT) AS n_neg
        |  FROM tk GROUP BY 1),
@@ -572,6 +571,15 @@ object TextAnalysis {
        |      CAST((n_neg + 1) * (p_tot + $QualityLmBuckets) AS DOUBLE),
        |      9)), 0) AS BIGINT) AS weight_milli
        |  FROM dense CROSS JOIN tot)""".stripMargin
+
+  /** The SQL twin of [[qualityKept]]: the salted draw under the
+    * bucket's rate, as column `kept`.
+    */
+  private def qualityKeptSql: String =
+    hashBucketSql(s"CAST(doc_id AS VARCHAR) || ':$QBucketSalt'", 100) +
+      s""" < (CASE bucket WHEN 'head' THEN $QBucketHeadPct
+         |      WHEN 'middle' THEN $QBucketMidPct
+         |      ELSE $QBucketTailPct END) AS kept""".stripMargin
 
   /** Merge rounds learned by the graded `bpe_train` key. */
   private[graft] val BpeTrainRounds = 8
@@ -803,8 +811,7 @@ object TextAnalysis {
     require(k >= 1, s"k must be >= 1, got $k")
     val docs = docsIn.filter(col("text").isNotNull)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+    val tf = tokens(docs)
       .groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val scored = tf.join(dfreq, "token").crossJoin(broadcast(nDocs))
@@ -903,6 +910,16 @@ object TextAnalysis {
     (java.lang.Long.parseLong(hex, 16) % QualityLmBuckets).toInt
   }
 
+  /** The engines' md5 60-bit bucket of a string column: first 15 hex
+    * chars of md5(s), mod `n` — in-row on executors.
+    */
+  private def hashBucket(s: Column, n: Long): Column =
+    pmod(conv(substring(md5(s), 1, 15), 16, 10).cast(LongType), lit(n))
+
+  /** The SQL twin of [[hashBucket]] over the SQL expression `s`. */
+  private def hashBucketSql(s: String, n: Int): String =
+    s"CAST(concat('0x', substring(md5($s), 1, 15)) AS BIGINT) % $n"
+
   /** In-row milli-weight sum of a tokens column under the frozen scorer:
     * one higher-order fold, each token hashed to its bucket and looked up
     * in the LITERAL weight array (a constant inside the plan — exactly
@@ -922,8 +939,7 @@ object TextAnalysis {
     val w = array(weights.map(lit(_)): _*)
     aggregate(tokens, lit(0L), (acc, t) =>
       acc + element_at(w,
-        (pmod(conv(substring(md5(t), 1, 15), 16, 10).cast(LongType),
-          lit(weights.size.toLong)) + 1).cast(IntegerType)))
+        (hashBucket(t, weights.size.toLong) + 1).cast(IntegerType)))
   }
 
   /** The logistic step over an ALREADY-COMPUTED milli sum — split from
@@ -1095,9 +1111,7 @@ object TextAnalysis {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     val toks = docs.filter(col("text").isNotNull)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .withColumn("bucket",
-        pmod(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast(LongType),
-          lit(nBuckets.toLong)))
+      .withColumn("bucket", hashBucket(col("tok"), nBuckets.toLong))
     val w = weights.select(col("bucket").cast(LongType).as("bucket"),
       col("weight_milli").cast(LongType).as("weight_milli"))
     toks.join(broadcast(w), Seq("bucket"), "left")
@@ -1167,9 +1181,7 @@ object TextAnalysis {
     val spark = docs.sparkSession
     val counts = docs.filter(col("text").isNotNull)
       .select(labelPos.as("pos"), explode(split(col("text"), " ")).as("tok"))
-      .withColumn("bucket",
-        pmod(conv(substring(md5(col("tok")), 1, 15), 16, 10).cast(LongType),
-          lit(nBuckets.toLong)))
+      .withColumn("bucket", hashBucket(col("tok"), nBuckets.toLong))
       .groupBy(col("bucket"))
       .agg(count(when(col("pos"), lit(1))).as("n_pos"),
         count(when(!col("pos"), lit(1))).as("n_neg"))
@@ -1209,28 +1221,31 @@ object TextAnalysis {
   // so a drifted vector or a wrong lookup index fails the hash; sums
   // are exact BIGINT milli-units, the division is rounded to 9 dp
   // before exp on both engines (the ngram_lm_score libm discipline)
+  // the CTE chain ends in `s (doc_id, n_tokens, w_sum_milli)`, shared
+  // with the `sample_quality_buckets` twin
+  private val qualityLmSqlCtes: String =
+    s"""sb AS (
+       |  SELECT DISTINCT ${hashBucketSql("s", QualityLmBuckets)} AS b
+       |  FROM (VALUES ('the'), ('a'), ('of'), ('and'), ('to'), ('in'),
+       |               ('is')) AS v(s)),
+       |tok AS (
+       |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
+       |    unnest(string_split(text, ' ')) AS tk
+       |  FROM documents WHERE text IS NOT NULL),
+       |tw AS (
+       |  SELECT doc_id, n_tokens,
+       |    CASE WHEN (${hashBucketSql("tk", QualityLmBuckets)})
+       |           IN (SELECT b FROM sb)
+       |         THEN 1000 ELSE -200 END AS wt
+       |  FROM tok),
+       |s AS (
+       |  SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+       |    CAST(SUM(wt) AS BIGINT) AS w_sum_milli
+       |  FROM tw GROUP BY doc_id, n_tokens)""".stripMargin
+
   private val qualityLmSql: String =
-    """WITH sb AS (
-      |  SELECT DISTINCT
-      |    CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 1024
-      |      AS b
-      |  FROM (VALUES ('the'), ('a'), ('of'), ('and'), ('to'), ('in'),
-      |               ('is')) AS v(s)),
-      |tok AS (
-      |  SELECT doc_id, len(string_split(text, ' ')) AS n_tokens,
-      |    unnest(string_split(text, ' ')) AS tk
-      |  FROM documents WHERE text IS NOT NULL),
-      |tw AS (
-      |  SELECT doc_id, n_tokens,
-      |    CASE WHEN (CAST(concat('0x', substring(md5(tk), 1, 15))
-      |                 AS BIGINT) % 1024) IN (SELECT b FROM sb)
-      |         THEN 1000 ELSE -200 END AS wt
-      |  FROM tok),
-      |s AS (
-      |  SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-      |    CAST(SUM(wt) AS BIGINT) AS w_sum_milli
-      |  FROM tw GROUP BY doc_id, n_tokens)
-      |SELECT doc_id, n_tokens, w_sum_milli,
+    "WITH " + qualityLmSqlCtes + "\n" +
+    """SELECT doc_id, n_tokens, w_sum_milli,
       |  ROUND(1.0 / (1.0 + EXP(-ROUND(
       |    CAST(w_sum_milli AS DOUBLE) * 4.0 / (n_tokens * 1000.0), 9))),
       |    6) AS quality_lm,
@@ -1240,54 +1255,70 @@ object TextAnalysis {
   /** Posting-head cap for [[buildPostings]]' graded key. */
   val PostingsCap = 8
 
-  /** INVERTED INDEX (posting stats + capped heads) — the search-side
-    * artifact of a corpus: per whitespace token (the `vocab_topk`
-    * tokenization), document frequency, total term frequency, and the
-    * first `cap` doc ids as the posting HEAD (comma-joined for hash
-    * stability). The head cut runs BEFORE any per-token list
-    * materializes: a row_number window over (token → doc_id) that
-    * InferWindowGroupLimit executes as map-side partial top-k, so a
-    * stopword appearing in every document ships ~cap rows per map
-    * partition, never its full posting list — the same skew discipline
-    * as `cap_per_host`. Stats aggregate separately with map-side
-    * partials and join the heads on token. A full positional index
-    * would sink per-token segments instead of heads; the graded surface
-    * is the stats + head shape those segments are built from.
-    */
-  def buildPostings(docs: DataFrame, cap: Int): DataFrame = {
-    require(cap >= 1, s"cap must be >= 1, got $cap")
-    val tok = docs.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("token"))
-    val stats = tok.groupBy(col("token"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"),
-        count(lit(1)).as("tf"))
-    val w = Window.partitionBy(col("token")).orderBy(col("doc_id"))
-    val heads = tok.select(col("token"), col("doc_id")).distinct()
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= cap)
-      .groupBy(col("token"))
-      .agg(array_join(sort_array(collect_list(col("doc_id"))), ",")
-        .as("posting_head"))
-    stats.join(heads, Seq("token"))
-  }
+  /** Query count / result depth for [[searchLexical]]'s graded key. */
+  val SearchQueries = 16
+  val SearchTopK = 5
 
-  /** `build_postings` checked key: [[buildPostings]] at [[PostingsCap]]
-    * over the documents corpus.
-    */
-  def buildPostingsQuery(spark: SparkSession, sfDir: String): DataFrame =
-    buildPostings(table(spark, sfDir, "documents"), PostingsCap)
-      .orderBy(col("token"))
+  // THE LEXICAL RETRIEVAL LADDER: every index and search form below is a
+  // projection of six rungs — 1 queryDocs/queryTokens, 2 tokens/
+  // docLengths, 3 postingsCensus, 4 queryWeights, 5 withTf/bm25Scores,
+  // 6 topK — and differs only in where its document frequencies and
+  // posting rows come from. The SQL twins share lexHeadSql, tokSql,
+  // bm25SqlCtes and rankedSql.
 
-  /** The postings census over ONE population in its MERGEABLE form —
-    * [[buildPostings]]' stats + head with the head kept as a SORTED
-    * LONG ARRAY (the first `cap` doc ids), the representation the
-    * additive merge can re-cut without parsing strings. Same plan
-    * shape as [[buildPostings]]: the head cut is the map-side partial
-    * top-k window, stats aggregate with map-side partials.
+  /** The lexical family's population: NULL text drops. */
+  private def textDocs(docs: DataFrame): DataFrame =
+    docs.filter(col("text").isNotNull)
+
+  /** Rung 1: the first `qn` text-bearing docs — the queries of every
+    * search form and the hybrid's vector probes. Deterministic and
+    * data-derived, so the twins regenerate them.
+    */
+  private[ops] def queryDocs(docs: DataFrame, qn: Int): DataFrame =
+    textDocs(docs).orderBy(col("doc_id")).limit(qn)
+
+  /** The query-by-example frame (query_id, token): each query doc's
+    * first 3 whitespace tokens, ≤ qn×3 rows.
+    */
+  private def queryTokens(docs: DataFrame, qn: Int): DataFrame =
+    queryDocs(docs, qn)
+      .select(col("doc_id").as("query_id"),
+        explode(slice(split(col("text"), " "), 1, 3)).as("token"))
+      .distinct()
+
+  /** Rung 2: the whitespace token stream (the `vocab_topk`
+    * tokenization); a NULL text explodes to no rows.
+    */
+  private def tokens(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
+
+  /** Each doc's token count, BM25's `dl`. */
+  private def docLengths(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      size(split(col("text"), " ")).cast(LongType).as("dl"))
+
+  /** BM25's global constants as ONE row (s_total = Σ dl, n_total = doc
+    * count), broadcast back into the scorer (the anomaly_zscore pattern:
+    * the corpus never shuffles for a global scalar).
+    */
+  private def bm25Stats(dl: DataFrame): DataFrame =
+    dl.agg(sum(col("dl")).as("s_total"), count(lit(1)).as("n_total"))
+
+  /** Rung 3: the postings census over ONE population — per whitespace
+    * token, document frequency `n_docs`, total term frequency `tf`, and
+    * the first `cap` doc ids as the posting head `head_ids`, a SORTED
+    * LONG ARRAY the additive merge can re-cut without parsing strings.
+    * The head cut runs BEFORE any per-token list materializes: a
+    * row_number window over (token → doc_id) that InferWindowGroupLimit
+    * executes as map-side partial top-k, so a stopword appearing in
+    * every document ships ~cap rows per map partition, never its full
+    * posting list — the same skew discipline as `cap_per_host`. Stats
+    * aggregate separately with map-side partials and join the heads on
+    * token.
     */
   private def postingsCensus(docs: DataFrame, cap: Int): DataFrame = {
-    val tok = docs.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("token"))
+    require(cap >= 1, s"cap must be >= 1, got $cap")
+    val tok = tokens(docs)
     val stats = tok.groupBy(col("token"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("tf"))
@@ -1299,6 +1330,29 @@ object TextAnalysis {
       .agg(sort_array(collect_list(col("doc_id"))).as("head_ids"))
     stats.join(heads, Seq("token"))
   }
+
+  /** The census rendered to the graded index surface: the head
+    * comma-joined for hash stability.
+    */
+  private def renderPostings(census: DataFrame): DataFrame =
+    census.select(col("token"), col("n_docs"), col("tf"),
+      array_join(col("head_ids"), ",").as("posting_head"))
+
+  /** INVERTED INDEX (posting stats + capped heads) — the search-side
+    * artifact of a corpus: the [[postingsCensus]] rendered. A full
+    * positional index would sink per-token segments instead of heads;
+    * the graded surface is the stats + head shape those segments are
+    * built from.
+    */
+  def buildPostings(docs: DataFrame, cap: Int): DataFrame =
+    renderPostings(postingsCensus(docs, cap))
+
+  /** `build_postings` checked key: [[buildPostings]] at [[PostingsCap]]
+    * over the documents corpus.
+    */
+  def buildPostingsQuery(spark: SparkSession, sfDir: String): DataFrame =
+    buildPostings(table(spark, sfDir, "documents"), PostingsCap)
+      .orderBy(col("token"))
 
   /** THE POSTINGS MERGE — absorb a crawl batch's census into the
     * maintained one by the family's additive laws (the `lineCensus`
@@ -1324,11 +1378,6 @@ object TextAnalysis {
         slice(array_sort(flatten(collect_list(col("head_ids")))), 1, cap)
           .as("head_ids"))
   }
-
-  /** The census rendered to [[buildPostings]]' graded surface. */
-  private def renderPostings(census: DataFrame): DataFrame =
-    census.select(col("token"), col("n_docs"), col("tf"),
-      array_join(col("head_ids"), ",").as("posting_head"))
 
   /** The incremental index build: the maintained census absorbed a
     * doc-disjoint batch ([[mergePostings]]) and rendered. INPUT
@@ -1357,59 +1406,108 @@ object TextAnalysis {
       .orderBy(col("token"))
   }
 
-  /** Query count / result depth for [[searchLexical]]'s graded key. */
-  val SearchQueries = 16
-  val SearchTopK = 5
+  /** Rung 4: the query weights (query_id, token, wt) — each query term's
+    * EXACT-INTEGER idf surrogate ⌊10^6 / df⌋ (truncating division on
+    * non-negative BIGINTs — identical in Spark `div` and DuckDB `//`;
+    * the page_rank fixed-point discipline applied to the BM25 slot,
+    * trading the transcendental log for cross-engine bit-stability),
+    * df taken from a (token, df) source.
+    */
+  private def queryWeights(qtok: DataFrame, df: DataFrame): DataFrame =
+    qtok.join(df, Seq("token"))
+      .withColumn("wt", expr("CAST(1000000 AS BIGINT) div df"))
+      .select(col("query_id"), col("token"), col("wt"))
+
+  /** df source of the derived forms: the corpus aggregate restricted to
+    * query terms — the broadcast semi-filter keeps the aggregate's key
+    * space at ≤ qn×3 tokens, so the full-corpus token aggregate never
+    * runs.
+    */
+  private def queryTermDf(tok: DataFrame, qtok: DataFrame): DataFrame =
+    tok.join(broadcast(qtok.select(col("token")).distinct()), Seq("token"))
+      .groupBy(col("token"))
+      .agg(countDistinct(col("doc_id")).as("df"))
+
+  /** df source of the census-fed and landed forms: a maintained census's
+    * n_docs, the corpus df for every token a query can contain.
+    */
+  private def censusDf(census: DataFrame): DataFrame =
+    census.select(col("token"), col("n_docs").as("df"))
+
+  /** Posting rows with their term frequency and inline doc length:
+    * `rows` counted per `keys` (which include doc_id), joined to `dl`.
+    * The derived forms pass the token stream ALREADY filtered by the
+    * broadcast query weights, so the tf aggregate never sees a token no
+    * query contains; the landing passes the whole stream.
+    */
+  private def withTf(rows: DataFrame, dl: DataFrame, keys: String*)
+      : DataFrame =
+    rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("tf"))
+      .join(dl, Seq("doc_id"))
+
+  /** Rung 5: BM25 (Robertson & Zaragoza 2009) at the standard k1 = 1.2,
+    * b = 0.75 over posting rows (query_id, doc_id, token, wt, tf, dl) and
+    * the one-row [[bm25Stats]]. The whole formula runs in EXACT INTEGER
+    * fixed-point: with S = Σ doc lengths and N = doc count (so avgdl =
+    * S/N), multiplying numerator and denominator of
+    *
+    *   wt · tf·(k1+1) / (tf + k1·(1−b) + k1·b·dl/avgdl)
+    *
+    * by 10·S clears every fractional constant exactly:
+    *
+    *   term_score = (wt·tf·22·S) div (10·S·tf + 3·S + 9·dl·N)
+    *
+    * — truncating BIGINT division, identical in Spark `div` and DuckDB
+    * `//`. (Headroom: wt·tf·22·S stays under 2^63 up to ~10^9-token
+    * corpora per retrieval shard; a larger deployment rescales wt or
+    * buckets S — the page_rank truncation-discipline note.) Zero-score
+    * candidates never occupy rank slots (ADVICE r14): at large df or
+    * long docs every term_score can truncate to 0, and a candidate that
+    * matched only such terms is indistinguishable from a non-match —
+    * rank real scores only (mirrored in the twin).
+    */
+  private def bm25Scores(postings: DataFrame, stats: DataFrame): DataFrame =
+    postings.crossJoin(broadcast(stats))
+      .withColumn("term_score", expr(
+        "(wt * tf * 22 * s_total) div " +
+          "(10 * s_total * tf + 3 * s_total + 9 * dl * n_total)"))
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(sum(col("term_score")).as("score"))
+      .filter(col("score") > 0)
+
+  /** Rung 6: the top-`k` page per query over (query_id, doc_id, score) —
+    * a row_number window over ≤ qn partitions of already-aggregated
+    * scores (InferWindowGroupLimit's partial top-k); ties break to the
+    * smaller doc_id.
+    */
+  private def topK(scores: DataFrame, k: Int): DataFrame =
+    scores
+      .withColumn("rnk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("score").desc, col("doc_id"))))
+      .filter(col("rnk") <= k)
+      .select(col("query_id"), col("doc_id"), col("score"), col("rnk"))
 
   /** LEXICAL TOP-K RETRIEVAL — the query-side consumer of the
     * `build_postings` substrate: rank documents for a query by summed
-    * term weights, rarer terms weighing more. Queries are
-    * query-by-example (the first 3 whitespace tokens of the `qn`
-    * lowest doc_ids — deterministic and data-derived, so the twin
-    * regenerates them); the weight is the EXACT-INTEGER idf surrogate
-    * `1000000 div df` (truncating division on non-negative BIGINTs —
-    * identical in Spark `div` and DuckDB `//`; the page_rank
-    * fixed-point discipline applied to the BM25 slot, trading the
-    * transcendental log for cross-engine bit-stability), and
-    * score(q, d) = Σ over matched token OCCURRENCES of wt(token)
-    * = Σ_t tf(d,t)·wt(t). Ties break to the smaller doc_id; the query
-    * document itself may rank (and usually tops) its own result — the
-    * query-by-example convention, kept deliberately.
+    * term weights, rarer terms weighing more: score(q, d) = Σ over
+    * matched token OCCURRENCES of wt(token) = Σ_t tf(d,t)·wt(t). The
+    * query document itself may rank (and usually tops) its own result —
+    * the query-by-example convention, kept deliberately.
     *
-    * Scale shape: the query frame is ≤ qn×3 rows and RIDES A BROADCAST
-    * both times it is used — df is computed only for query terms (the
-    * full-corpus token aggregate never runs), and the scoring join
-    * filters the token stream map-side before the single
-    * (query_id, doc_id) score aggregate. The top-k cut is a
-    * row_number window over ≤ qn partitions of already-aggregated
-    * scores. Nothing driver-side exceeds qn×k rows.
+    * Scale shape: the ≤ qn×3 query frame RIDES A BROADCAST both times it
+    * is used — df is computed only for query terms, and the scoring
+    * join filters the token stream map-side before the single
+    * (query_id, doc_id) score aggregate. Nothing driver-side exceeds
+    * qn×k rows.
     */
   def searchLexicalOn(docs: DataFrame, qn: Int, k: Int): DataFrame = {
     require(qn >= 1 && k >= 1, s"qn/k must be >= 1, got $qn/$k")
-    val d = docs.filter(col("text").isNotNull)
-    val qtok = d.orderBy(col("doc_id")).limit(qn)
-      .select(col("doc_id").as("query_id"),
-        explode(slice(split(col("text"), " "), 1, 3)).as("token"))
-      .distinct()
-    val tok = d.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("token"))
-    // df restricted to query terms: the broadcast semi-filter keeps the
-    // aggregate's key space at <= qn*3 tokens
-    val qdf = tok.join(broadcast(qtok.select(col("token")).distinct()),
-        Seq("token"))
-      .groupBy(col("token"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-    val qwt = qtok.join(qdf, Seq("token"))
-      .withColumn("wt", expr("CAST(1000000 AS BIGINT) div n_docs"))
-      .select(col("query_id"), col("token"), col("wt"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    tok.join(broadcast(qwt), Seq("token"))
+    val qtok = queryTokens(docs, qn)
+    val tok = tokens(textDocs(docs))
+    val qwt = queryWeights(qtok, queryTermDf(tok, qtok))
+    topK(tok.join(broadcast(qwt), Seq("token"))
       .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("wt")).as("score"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rnk"))
+      .agg(sum(col("wt")).as("score")), k)
   }
 
   /** `search_lexical` checked key: [[searchLexicalOn]] at
@@ -1420,76 +1518,30 @@ object TextAnalysis {
       SearchTopK)
       .orderBy(col("query_id"), col("rnk"))
 
-  /** BM25 RETRIEVAL — `search_lexical`'s idf surrogate completed with the
-    * two terms a search consumer actually wants: TF SATURATION and
-    * DOC-LENGTH NORMALIZATION (Robertson & Zaragoza 2009, the BM25
-    * ranking function), at the standard k1 = 1.2, b = 0.75. The whole
-    * formula runs in EXACT INTEGER fixed-point (the page_rank/
-    * search_lexical discipline — trading the transcendental idf for
-    * cross-engine bit-stability): with S = Σ doc lengths and N = doc
-    * count (so avgdl = S/N), multiplying numerator and denominator of
-    *
-    *   wt · tf·(k1+1) / (tf + k1·(1−b) + k1·b·dl/avgdl)
-    *
-    * by 10·S clears every fractional constant exactly:
-    *
-    *   term_score = (wt·tf·22·S) div (10·S·tf + 3·S + 9·dl·N)
-    *
-    * — truncating BIGINT division, identical in Spark `div` and DuckDB
-    * `//`. wt is the family's integer idf surrogate `1000000 div df`.
-    * (Headroom: wt·tf·22·S stays under 2^63 up to ~10^9-token corpora
-    * per retrieval shard; a larger deployment rescales wt or buckets S —
-    * the page_rank truncation-discipline note.)
-    *
-    * Scale shape: identical to [[searchLexicalOn]] — the ≤ qn×3 query
-    * frame broadcasts into the token stream, df is computed for query
-    * terms only, and (S, N) is a ONE-ROW stats frame broadcast back
-    * (the anomaly_zscore pattern: the corpus never shuffles for a global
-    * scalar). The per-(query, doc, term) tf aggregate and the final
-    * score aggregate both combine map-side; the top-k cut is a
-    * row_number window over ≤ qn partitions of aggregated scores.
+  /** The derived BM25 body: posting rows from the broadcast-filtered
+    * token stream, weights over the df source `df(tok, qtok)`.
     */
-  def searchBm25On(docs: DataFrame, qn: Int, k: Int): DataFrame = {
+  private def bm25On(docs: DataFrame, qn: Int, k: Int)(
+      df: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     require(qn >= 1 && k >= 1, s"qn/k must be >= 1, got $qn/$k")
-    val d = docs.filter(col("text").isNotNull)
-    val dl = d.select(col("doc_id"),
-      size(split(col("text"), " ")).cast(LongType).as("dl"))
-    val stats = dl.agg(sum(col("dl")).as("s_total"),
-      count(lit(1)).as("n_total"))
-    val qtok = d.orderBy(col("doc_id")).limit(qn)
-      .select(col("doc_id").as("query_id"),
-        explode(slice(split(col("text"), " "), 1, 3)).as("token"))
-      .distinct()
-    val tok = d.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("token"))
-    val qdf = tok.join(broadcast(qtok.select(col("token")).distinct()),
-        Seq("token"))
-      .groupBy(col("token"))
-      .agg(countDistinct(col("doc_id")).as("df"))
-    val qwt = qtok.join(qdf, Seq("token"))
-      .withColumn("wt", expr("CAST(1000000 AS BIGINT) div df"))
-      .select(col("query_id"), col("token"), col("wt"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    tok.join(broadcast(qwt), Seq("token"))
-      .groupBy(col("query_id"), col("doc_id"), col("token"), col("wt"))
-      .agg(count(lit(1)).as("tf"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score", expr(
-        "(wt * tf * 22 * s_total) div " +
-          "(10 * s_total * tf + 3 * s_total + 9 * dl * n_total)"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("term_score")).as("score"))
-      // zero-score candidates never occupy rank slots (ADVICE r14): at
-      // large df or long docs every term_score can truncate to 0, and a
-      // candidate that matched only such terms is indistinguishable from
-      // a non-match — rank real scores only (mirrored in the twin)
-      .filter(col("score") > 0)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rnk"))
+    val d = textDocs(docs)
+    val qtok = queryTokens(docs, qn)
+    val (tok, dl) = (tokens(d), docLengths(d))
+    val qwt = queryWeights(qtok, df(tok, qtok))
+    topK(bm25Scores(
+      withTf(tok.join(broadcast(qwt), Seq("token")), dl,
+        "query_id", "doc_id", "token", "wt"),
+      bm25Stats(dl)), k)
   }
+
+  /** BM25 RETRIEVAL — `search_lexical`'s idf surrogate completed with
+    * the two terms a search consumer actually wants: TF SATURATION and
+    * DOC-LENGTH NORMALIZATION ([[bm25Scores]]). The per-(query, doc,
+    * term) tf aggregate and the final score aggregate both combine
+    * map-side.
+    */
+  def searchBm25On(docs: DataFrame, qn: Int, k: Int): DataFrame =
+    bm25On(docs, qn, k)(queryTermDf)
 
   /** `search_bm25` checked key: [[searchBm25On]] at
     * [[SearchQueries]]×[[SearchTopK]] over the documents corpus (the
@@ -1506,52 +1558,13 @@ object TextAnalysis {
     * re-index feeds retrieval through the census table; the query never
     * aggregates corpus tokens for df). `census` is any
     * (token, n_docs, …) frame whose n_docs is the corpus df —
-    * [[buildPostingsIncrementalOn]]'s output qualifies directly. The
-    * census frame is query-term-filtered THEN broadcast (vocab-sized →
-    * ≤ qn×3 rows), so the scoring plan is [[searchBm25On]]'s
-    * broadcast shape with one corpus aggregate removed. Identical
-    * output by construction (census df == corpus df for every token a
-    * query can contain); PropertiesSpec pins the equality over a
-    * MERGED census.
+    * [[buildPostingsIncrementalOn]]'s output qualifies directly; the
+    * query-term join cuts it to ≤ qn×3 rows before the weights
+    * broadcast. PropertiesSpec pins the equality over a MERGED census.
     */
   private[graft] def searchBm25FromStats(census: DataFrame,
-      docs: DataFrame, qn: Int, k: Int): DataFrame = {
-    require(qn >= 1 && k >= 1, s"qn/k must be >= 1, got $qn/$k")
-    val d = docs.filter(col("text").isNotNull)
-    val dl = d.select(col("doc_id"),
-      size(split(col("text"), " ")).cast(LongType).as("dl"))
-    val stats = dl.agg(sum(col("dl")).as("s_total"),
-      count(lit(1)).as("n_total"))
-    val qtok = d.orderBy(col("doc_id")).limit(qn)
-      .select(col("doc_id").as("query_id"),
-        explode(slice(split(col("text"), " "), 1, 3)).as("token"))
-      .distinct()
-    val tok = d.select(col("doc_id"),
-      explode(split(col("text"), " ")).as("token"))
-    // the one structural change vs searchBm25On: df arrives from the
-    // maintained census, not a corpus token aggregate
-    val qwt = qtok
-      .join(census.select(col("token"), col("n_docs").as("df")),
-        Seq("token"))
-      .withColumn("wt", expr("CAST(1000000 AS BIGINT) div df"))
-      .select(col("query_id"), col("token"), col("wt"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    tok.join(broadcast(qwt), Seq("token"))
-      .groupBy(col("query_id"), col("doc_id"), col("token"), col("wt"))
-      .agg(count(lit(1)).as("tf"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score", expr(
-        "(wt * tf * 22 * s_total) div " +
-          "(10 * s_total * tf + 3 * s_total + 9 * dl * n_total)"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("term_score")).as("score"))
-      .filter(col("score") > 0)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rnk"))
-  }
+      docs: DataFrame, qn: Int, k: Int): DataFrame =
+    bm25On(docs, qn, k)((_, _) => censusDf(census))
 
   /** THE LANDED INVERTED INDEX — the index family's maintained state AS
     * TABLES (r19 verdict #3: the `dedup_media_onstate` /
@@ -1584,28 +1597,19 @@ object TextAnalysis {
     graft.LocalFs.landOnce(spark.sparkContext.applicationId,
       graft.LocalFs.Names.PostingsCache, sfDir,
       new File(s"$sfDir/documents.parquet")) { tmp =>
-      val d = table(spark, sfDir, "documents")
-        .filter(col("text").isNotNull)
-      val dl = d.select(col("doc_id"),
-        size(split(col("text"), " ")).cast(LongType).as("dl"))
-      val tok = d.select(col("doc_id"),
-        explode(split(col("text"), " ")).as("token"))
+      val d = textDocs(table(spark, sfDir, "documents"))
+      val dl = docLengths(d)
       def writeBucketed(df: DataFrame, name: String): Unit =
         graft.Tables.writeBucketed(df, s"$tmp/$name", s"postings_$name",
           "token")
       // three independent derivations of the same source scan —
       // submitted concurrently (guide §2.6 via Boundaries.runAll)
       Boundaries.runAll(spark, Seq(
-        () => writeBucketed(
-          tok.groupBy(col("token"), col("doc_id"))
-            .agg(count(lit(1)).as("tf"))
-            .join(dl, Seq("doc_id"))
+        () => writeBucketed(withTf(tokens(d), dl, "token", "doc_id")
             .select(col("token"), col("doc_id"), col("tf"), col("dl")),
           "postings"),
         () => writeBucketed(postingsCensus(d, PostingsCap), "census"),
-        () => dl.agg(sum(col("dl")).as("s_total"),
-            count(lit(1)).as("n_total"))
-          .write.mode("overwrite").parquet(s"$tmp/stats")))
+        () => bm25Stats(dl).write.mode("overwrite").parquet(s"$tmp/stats")))
     }
   }
 
@@ -1613,15 +1617,12 @@ object TextAnalysis {
     * INDEX ALONE (r19 verdict #3, the index family's
     * `dedup_media_onstate`): the postings/census/stats tables arrive
     * from [[postingsLanding]] (outside the graded region) and the
-    * graded cost is the QUERY's — the query-by-example frame (the
-    * `search_lexical` convention: first 3 tokens of the `qn` lowest
-    * doc_ids), df looked up in the landed census, candidates from one
-    * broadcast-filtered pass over the landed postings (norms inline —
-    * no doc-length join, no token-stream aggregate, the corpus text
-    * never re-read for scoring), the exact-integer BM25 formula
-    * ([[searchBm25On]]'s fixed point, unchanged), one candidate-sized
-    * aggregate and the top-k window. Identical output to `search_bm25`
-    * by construction — the DuckDB twin is the SAME recompute-from-
+    * graded cost is the QUERY's — df looked up in the landed census,
+    * posting rows from one broadcast-filtered pass over the landed
+    * postings (norms inline — no doc-length join, no token-stream
+    * aggregate, the corpus text never re-read for scoring), then the
+    * shared scorer and page cut. Identical output to `search_bm25` by
+    * construction — the DuckDB twin is the SAME recompute-from-
     * documents SQL, so hash equality proves the landed index serves
     * exactly like the derived form. PlanSpec pins the serving plan:
     * parquet scans, broadcast-keyed equi-joins, no Exchange on the
@@ -1632,39 +1633,16 @@ object TextAnalysis {
     */
   def searchBm25OnState(spark: SparkSession, sfDir: String): DataFrame = {
     val landing = postingsLanding(spark, sfDir)
-    val census = spark.read.parquet(s"$landing/census")
-    val postings = spark.read.parquet(s"$landing/postings")
-    val stats = spark.read.parquet(s"$landing/stats")
-    val qn = SearchQueries
-    val k = SearchTopK
-    val d = table(spark, sfDir, "documents")
-      .filter(col("text").isNotNull)
-    val qtok = d.orderBy(col("doc_id")).limit(qn)
-      .select(col("doc_id").as("query_id"),
-        explode(slice(split(col("text"), " "), 1, 3)).as("token"))
-      .distinct()
-    // df from the LANDED census — the serve pin build_postings_
-    // incremental carries, here through a real storage round-trip; the
-    // ≤ qn×3 query frame is the BROADCAST side of both landed-table
+    // the ≤ qn×3 query frame is the BROADCAST side of both landed-table
     // joins, so neither landed scan ever sits under an Exchange
-    val qwt = broadcast(qtok)
-      .join(census.select(col("token"), col("n_docs").as("df")),
-        Seq("token"))
-      .withColumn("wt", expr("CAST(1000000 AS BIGINT) div df"))
-      .select(col("query_id"), col("token"), col("wt"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    postings.join(broadcast(qwt), Seq("token"))
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score", expr(
-        "(wt * tf * 22 * s_total) div " +
-          "(10 * s_total * tf + 3 * s_total + 9 * dl * n_total)"))
-      .groupBy(col("query_id"), col("doc_id"))
-      .agg(sum(col("term_score")).as("score"))
-      .filter(col("score") > 0)
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rnk"))
+    val qwt = queryWeights(
+      broadcast(queryTokens(table(spark, sfDir, "documents"),
+        SearchQueries)),
+      censusDf(spark.read.parquet(s"$landing/census")))
+    topK(bm25Scores(
+      spark.read.parquet(s"$landing/postings")
+        .join(broadcast(qwt), Seq("token")),
+      spark.read.parquet(s"$landing/stats")), SearchTopK)
       .orderBy(col("query_id"), col("rnk"))
   }
 
@@ -1950,39 +1928,69 @@ object TextAnalysis {
        |ORDER BY round""".stripMargin
   }
 
-  /** The BM25 scoring CTE chain shared by the `search_bm25` twin and the
-    * hybrid-retrieval twins in [[Similarity]] (ADVICE r17 — ONE
-    * formulation, so a scoring change cannot silently drift the twins
-    * apart): query-by-example layout (`qids` = the first `qn`
-    * text-bearing docs, 3-token queries), exact-integer fixed-point
-    * saturation/normalization; ends in `s (query_id, doc_id, score)`.
-    * Pre-stripped — concatenate, never re-wrap in a stripMargin template.
+  /** The query head of every lexical twin (rungs 1, 2 and 4): `d` the
+    * text-bearing docs, `qids` the first `qn` of them, `qt` their
+    * 3-token queries, `tok` the token stream, `df` the query-term-only
+    * df and `w` the integer idf surrogate. Pre-stripped — concatenate,
+    * never re-wrap in a stripMargin template.
     */
-  private[ops] def bm25SqlCtes(qn: Int): String =
+  private def lexHeadSql(qn: Int): String =
     s"""d AS (
        |  SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
        |qids AS (
        |  SELECT doc_id AS query_id FROM d ORDER BY doc_id
        |  LIMIT $qn),
-       |dl AS (
+       |qt AS (
+       |  SELECT DISTINCT query_id, token FROM (
+       |    SELECT d.doc_id AS query_id,
+       |      unnest(string_split(text, ' ')[1:3]) AS token
+       |    FROM d JOIN qids ON d.doc_id = qids.query_id) q1),
+       |${tokSql("d")},
+       |df AS (
+       |  SELECT token, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+       |  FROM tok WHERE token IN (SELECT DISTINCT token FROM qt)
+       |  GROUP BY token),
+       |w AS (SELECT token, 1000000 // df AS wt FROM df)""".stripMargin
+
+  /** The token stream's twin (rung 2): CTE `tok (doc_id, token)` over
+    * `from`.
+    */
+  private def tokSql(from: String): String =
+    s"""tok AS (
+       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
+       |  FROM $from)""".stripMargin
+
+  /** The ranked tail (rung 6): CTE `r` ranks `s (query_id, doc_id,
+    * score)` per query by (score DESC, doc_id), `where` filtering `s`.
+    */
+  private def rankedSql(where: String): String =
+    s"""r AS (
+       |  SELECT query_id, doc_id, score,
+       |    CAST(row_number() OVER (PARTITION BY query_id
+       |      ORDER BY score DESC, doc_id) AS INTEGER) AS rnk
+       |  FROM s$where)""".stripMargin
+
+  /** The search keys' page over `r`. */
+  private val searchPageSql: String =
+    s"""SELECT query_id, doc_id, score, rnk FROM r
+       |WHERE rnk <= $SearchTopK
+       |ORDER BY query_id, rnk""".stripMargin
+
+  /** The BM25 scoring CTE chain shared by the `search_bm25` twins and the
+    * hybrid-retrieval twins in [[Similarity]] (ADVICE r17 — ONE
+    * formulation, so a scoring change cannot silently drift the twins
+    * apart): [[lexHeadSql]], exact-integer fixed-point
+    * saturation/normalization, positive scores ranked; ends in
+    * `r (query_id, doc_id, score, rnk)`. Pre-stripped.
+    */
+  private[ops] def bm25SqlCtes(qn: Int): String =
+    lexHeadSql(qn) + ",\n" +
+    s"""dl AS (
        |  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT)
        |    AS dl FROM d),
        |st AS (
        |  SELECT CAST(sum(dl) AS BIGINT) AS s_total,
        |    CAST(count(*) AS BIGINT) AS n_total FROM dl),
-       |qt AS (
-       |  SELECT DISTINCT query_id, token FROM (
-       |    SELECT d.doc_id AS query_id,
-       |      unnest(string_split(d.text, ' ')[1:3]) AS token
-       |    FROM d JOIN qids ON d.doc_id = qids.query_id) q1),
-       |tok AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-       |  FROM d),
-       |df AS (
-       |  SELECT token, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-       |  FROM tok WHERE token IN (SELECT DISTINCT token FROM qt)
-       |  GROUP BY token),
-       |w AS (SELECT token, 1000000 // df AS wt FROM df),
        |tf AS (
        |  SELECT qt.query_id, tok.doc_id, qt.token,
        |    CAST(count(*) AS BIGINT) AS tf
@@ -1996,16 +2004,24 @@ object TextAnalysis {
        |  FROM tf JOIN w USING (token)
        |    JOIN dl ON tf.doc_id = dl.doc_id
        |    CROSS JOIN st
-       |  GROUP BY tf.query_id, tf.doc_id)""".stripMargin
+       |  GROUP BY tf.query_id, tf.doc_id),
+       |""".stripMargin + rankedSql(" WHERE score > 0")
+
+  /** The BM25 twin: identical exact-integer fixed point (`//` == `div`
+    * on non-negative BIGINTs, so every term score is bit-identical).
+    * Graded by `search_bm25` and, by design, by `search_bm25_onstate`:
+    * BM25 served from the landed postings/census/stats tables must equal
+    * the recompute-from-documents form row for row.
+    */
+  private val bm25Sql: String =
+    "WITH " + bm25SqlCtes(SearchQueries) + "\n" + searchPageSql
 
   /** The inverted-index twin — shared verbatim by `build_postings`
     * (direct) and `build_postings_incremental` (whose merged census
     * must equal exactly this direct recompute over the union corpus).
     */
   private def postingsSql: String =
-    s"""WITH tok AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-       |  FROM documents),
+    s"""WITH ${tokSql("documents")},
        |stats AS (
        |  SELECT token,
        |    CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
@@ -2030,38 +2046,15 @@ object TextAnalysis {
     // membership re-derived from the generating rule), the identical
     // frozen thresholds/rates, and the identical salted mod-100 draw
     "sample_quality_buckets" ->
-      s"""WITH sb AS (
-         |  SELECT DISTINCT
-         |    CAST(concat('0x', substring(md5(s), 1, 15)) AS BIGINT) % 1024
-         |      AS b
-         |  FROM (VALUES ('the'), ('a'), ('of'), ('and'), ('to'), ('in'),
-         |               ('is')) AS v(s)),
-         |tok AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS tk
-         |  FROM documents WHERE text IS NOT NULL),
-         |tw AS (
-         |  SELECT doc_id,
-         |    CASE WHEN (CAST(concat('0x', substring(md5(tk), 1, 15))
-         |                 AS BIGINT) % 1024) IN (SELECT b FROM sb)
-         |         THEN 1000 ELSE -200 END AS wt
-         |  FROM tok),
-         |s AS (
-         |  SELECT doc_id, CAST(sum(wt) AS BIGINT) AS w_sum_milli
-         |  FROM tw GROUP BY doc_id),
-         |k AS (
+      ("WITH " + qualityLmSqlCtes + ",\n" +
+      s"""k AS (
          |  SELECT doc_id, w_sum_milli,
          |    CASE WHEN w_sum_milli >= $QBucketHeadMin THEN 'head'
          |         WHEN w_sum_milli >= $QBucketMidMin THEN 'middle'
-         |         ELSE 'tail' END AS bucket,
-         |    CAST(concat('0x', substring(md5(
-         |      CAST(doc_id AS VARCHAR) || ':$QBucketSalt'), 1, 15))
-         |      AS BIGINT) % 100 AS draw
+         |         ELSE 'tail' END AS bucket
          |  FROM s)
-         |SELECT doc_id, w_sum_milli, bucket,
-         |  draw < (CASE bucket WHEN 'head' THEN $QBucketHeadPct
-         |          WHEN 'middle' THEN $QBucketMidPct
-         |          ELSE $QBucketTailPct END) AS kept
-         |FROM k ORDER BY doc_id""".stripMargin,
+         |SELECT doc_id, w_sum_milli, bucket, $qualityKeptSql
+         |FROM k ORDER BY doc_id""".stripMargin),
     "bpe_train" -> bpeTrainSql,
     "bpe_pipeline" -> bpePipelineSql,
     "gopher_rules" ->
@@ -2070,31 +2063,8 @@ object TextAnalysis {
          |  symbol_ratio, bullet_line_frac, ellipsis_line_frac, stop_hits,
          |  keep_gopher
          |FROM gk ORDER BY doc_id""".stripMargin,
-    // identical exact-integer fixed-point BM25: `//` == `div` on
-    // non-negative BIGINTs, so every term score is bit-identical
-    "search_bm25" ->
-      ("WITH " + bm25SqlCtes(SearchQueries) + ",\n" +
-      s"""r AS (
-         |  SELECT query_id, doc_id, score,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, doc_id) AS INTEGER) AS rnk
-         |  FROM s WHERE score > 0)
-         |SELECT query_id, doc_id, score, rnk FROM r
-         |WHERE rnk <= $SearchTopK
-         |ORDER BY query_id, rnk""".stripMargin),
-    // IDENTICAL twin by design (see the key's docstring): BM25 served
-    // from the landed postings/census/stats tables must equal the
-    // recompute-from-documents form row for row
-    "search_bm25_onstate" ->
-      ("WITH " + bm25SqlCtes(SearchQueries) + ",\n" +
-      s"""r AS (
-         |  SELECT query_id, doc_id, score,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, doc_id) AS INTEGER) AS rnk
-         |  FROM s WHERE score > 0)
-         |SELECT query_id, doc_id, score, rnk FROM r
-         |WHERE rnk <= $SearchTopK
-         |ORDER BY query_id, rnk""".stripMargin),
+    "search_bm25" -> bm25Sql,
+    "search_bm25_onstate" -> bm25Sql,
     "build_postings" -> postingsSql,
     // the merged census must equal the DIRECT index over the whole
     // corpus: the parity split is doc-disjoint and even ∪ odd = all
@@ -2102,38 +2072,16 @@ object TextAnalysis {
     // formulation — hash equality grades the merge law independently
     "build_postings_incremental" -> postingsSql,
     // full twin: query regeneration, query-term-only df, the identical
-    // truncating idf surrogate (`//` == `div` on non-negative BIGINTs),
-    // occurrence-summed scores, (score DESC, doc_id) top-k
+    // truncating idf surrogate, occurrence-summed scores, the shared
+    // (score DESC, doc_id) page
     "search_lexical" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-         |qt AS (
-         |  SELECT DISTINCT query_id, token FROM (
-         |    SELECT doc_id AS query_id,
-         |      unnest(string_split(text, ' ')[1:3]) AS token
-         |    FROM (SELECT doc_id, text FROM d
-         |          ORDER BY doc_id LIMIT $SearchQueries) q0) q1),
-         |tok AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS token
-         |  FROM d),
-         |df AS (
-         |  SELECT token, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-         |  FROM tok WHERE token IN (SELECT DISTINCT token FROM qt)
-         |  GROUP BY token),
-         |w AS (SELECT token, 1000000 // n_docs AS wt FROM df),
-         |s AS (
+      ("WITH " + lexHeadSql(SearchQueries) + ",\n" +
+      s"""s AS (
          |  SELECT qt.query_id, tok.doc_id,
          |    CAST(sum(w.wt) AS BIGINT) AS score
          |  FROM tok JOIN qt USING (token) JOIN w USING (token)
          |  GROUP BY qt.query_id, tok.doc_id),
-         |r AS (
-         |  SELECT query_id, doc_id, score,
-         |    CAST(row_number() OVER (PARTITION BY query_id
-         |      ORDER BY score DESC, doc_id) AS INTEGER) AS rnk
-         |  FROM s)
-         |SELECT query_id, doc_id, score, rnk FROM r
-         |WHERE rnk <= $SearchTopK
-         |ORDER BY query_id, rnk""".stripMargin,
+         |""".stripMargin + rankedSql("") + "\n" + searchPageSql),
     // the full merge-walk recompute, GENERATED from the same frozen
     // merge table and vocabulary as the Spark expression (one list_reduce
     // scan per rule — see BpeTokenizer.oracleSqlFor)
@@ -2158,9 +2106,8 @@ object TextAnalysis {
     "quality_pipeline" ->
       ("WITH " + qualityTrainSqlCtes + ",\n" +
         s"""dtk AS (
-           |  SELECT doc_id,
-           |    CAST(concat('0x', substring(md5(tok), 1, 15)) AS BIGINT)
-           |      % $QualityLmBuckets AS bucket
+           |  SELECT doc_id, ${hashBucketSql("tok", QualityLmBuckets)}
+           |    AS bucket
            |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
            |        FROM documents WHERE text IS NOT NULL) t0),
            |sc AS (
@@ -2178,15 +2125,9 @@ object TextAnalysis {
            |  SELECT doc_id, w_sum_milli, rank,
            |    CASE WHEN rank * 3 < n THEN 'head'
            |         WHEN rank * 3 < n * 2 THEN 'middle'
-           |         ELSE 'tail' END AS bucket,
-           |    CAST(concat('0x', substring(md5(
-           |      CAST(doc_id AS VARCHAR) || ':$QBucketSalt'), 1, 15))
-           |      AS BIGINT) % 100 AS draw
+           |         ELSE 'tail' END AS bucket
            |  FROM rk)
-           |SELECT doc_id, w_sum_milli, rank, bucket,
-           |  draw < (CASE bucket WHEN 'head' THEN $QBucketHeadPct
-           |                      WHEN 'middle' THEN $QBucketMidPct
-           |                      ELSE $QBucketTailPct END) AS kept
+           |SELECT doc_id, w_sum_milli, rank, bucket, $qualityKeptSql
            |FROM vd ORDER BY doc_id""".stripMargin),
     // generation-rule twin: no regex, no markup — the expected output is
     // rebuilt directly from the planting arithmetic (first-3-token

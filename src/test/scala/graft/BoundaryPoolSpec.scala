@@ -1,7 +1,5 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
 import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -68,19 +66,10 @@ class BoundaryPoolSpec extends SparkSpec {
     // LogicalRDD name is banned so prose may still say "LogicalRDD".
     val banned = Seq("execution.LogicalRDD", "withExactSize(",
       "getCheckpointDir", "checkpoint(eager")
-    val root = new File("src/main/scala/graft")
-    assert(root.isDirectory, s"run from the project root (no $root)")
-    def sources(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val all = sources(root)
-    assert(all.exists(_.getName == "Boundaries.scala"))
-    val hits = for {
-      f <- all if f.getName != "Boundaries.scala"
-      (line, n) <- Files.readAllLines(f.toPath).toArray.toSeq
-        .map(_.toString).zipWithIndex
-      b <- banned if line.contains(b)
-    } yield s"${f.getPath}:${n + 1} contains '$b'"
+    val owner = "graft/Boundaries.scala"
+    assert(MainSources.exists(owner))
+    val hits = MainSources.strays(banned,
+      f => f.startsWith("graft/") && f != owner)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -199,6 +199,47 @@ class DegenerateCorpusSpec extends SparkSpec {
     } finally spark.catalog.clearCache()
   }
 
+  test("lexical index and search survive empty, all-NULL and " +
+      "fewer-docs-than-queries corpora") {
+    import spark.implicits._
+    import TextAnalysis.{PostingsCap, SearchQueries => qn, SearchTopK => k}
+    def corpus(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def byParity(d: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.buildPostingsIncrementalOn(d.filter($"doc_id" % 2 === 0),
+        d.filter($"doc_id" % 2 === 1), PostingsCap)
+    def run(d: org.apache.spark.sql.DataFrame) = Seq(
+      TextAnalysis.buildPostings(d, PostingsCap), byParity(d),
+      TextAnalysis.searchLexicalOn(d, qn, k),
+      TextAnalysis.searchBm25On(d, qn, k)).map(_.collect().toSeq)
+    // nothing to index or to ask: every form is empty, none throws
+    val nul: String = null
+    Seq(corpus(), corpus(0L -> nul, 1L -> nul)).foreach { d =>
+      assert(run(d).forall(_.isEmpty))
+    }
+    // 3 text-bearing docs < qn queries: every doc present is a query with
+    // at most one page, and the index is the brute-force one
+    val docs = Seq(1L -> "alpha beta alpha gamma", 2L -> "beta beta delta",
+      3L -> "gamma alpha", 4L -> nul)
+    val Seq(index, merged, lexical, bm25) = run(corpus(docs: _*))
+    val want = docs.filter(_._2 != null)
+      .flatMap { case (id, t) => t.split(" ").map(_ -> id) }
+      .groupBy(_._1).map { case (tok, occ) =>
+        val ids = occ.map(_._2)
+        (tok, ids.distinct.size.toLong, ids.size.toLong,
+          ids.distinct.sorted.take(PostingsCap).mkString(","))
+      }.toSet
+    def rows(r: Seq[org.apache.spark.sql.Row]) = r.map(x =>
+      (x.getString(0), x.getLong(1), x.getLong(2), x.getString(3))).toSet
+    assert(rows(index) == want)
+    assert(rows(merged) == want)
+    Seq(lexical, bm25).foreach { page =>
+      val byQuery = page.groupBy(_.getLong(0))
+      assert(byQuery.keySet == Set(1L, 2L, 3L), page)
+      byQuery.values.foreach(q =>
+        assert(q.map(_.getInt(3)).sorted == (1 to q.size) && q.size <= k, q))
+    }
+  }
+
   test("round-12 ops survive the degenerate corpus (nulls, empties)") {
     import spark.implicits._
     import graft.ops.{Dedup, Multimodal, TextAnalysis}

@@ -1397,23 +1397,27 @@ class ExtensionsSpec extends SparkSpec {
     // The streaming probe names its per-modality radius and τ, but its
     // hamming test (Spark and SQL twin) is Multimodal's too.
     val banned = Map(
-      "ops/Curation.scala" -> Seq("TauMilli", "HamMax", "CutFrameBytes",
-        "CutThresholdMilli", "AudioFpWin", "AudioSegWin", "bit_count("),
-      "streaming/Streams.scala" -> Seq("bit_count("))
-    val hits = for {
-      (file, tokens) <- banned.toSeq
-      (line, n) <- mainSourceLines(file)
-      b <- tokens if line.contains(b)
-    } yield s"$file:${n + 1} contains '$b'"
+      "graft/ops/Curation.scala" -> Seq("TauMilli", "HamMax",
+        "CutFrameBytes", "CutThresholdMilli", "AudioFpWin", "AudioSegWin",
+        "bit_count("),
+      "graft/streaming/Streams.scala" -> Seq("bit_count("))
+    val hits = banned.toSeq.flatMap { case (file, tokens) =>
+      assert(MainSources.exists(file))
+      MainSources.strays(tokens, _ == file)
+    }
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
-  /** `src/main/scala/graft/<file>`'s lines with their 0-based numbers. */
-  private def mainSourceLines(file: String): Seq[(String, Int)] = {
-    val f = new java.io.File(s"src/main/scala/graft/$file")
-    assert(f.isFile, s"run from the project root (no $f)")
-    java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
-      .map(_.toString).zipWithIndex
+  /** Fails naming every spelling of each `once` token that is not the
+    * only one in the main files `where` takes.
+    */
+  private def assertSpelledOnce(once: Seq[String],
+      where: String => Boolean = _ => true): Unit = {
+    val off = once.map(t => t -> MainSources.spelledAt(t, where))
+      .filter(_._2.size != 1)
+    assert(off.isEmpty, off.map { case (t, at) =>
+      s"'$t' is spelled at ${at.mkString(", ")} (expected exactly once)"
+    }.mkString("\n"))
   }
 
   test("the composed text day loop spells its corpus split and its " +
@@ -1421,15 +1425,8 @@ class ExtensionsSpec extends SparkSpec {
     // Every composed key and its self-contained form take the split from
     // Curation.Split and the per-host re-cap from compactStep; a second
     // spelling is a day-loop step copied by hand, free to drift.
-    val once = Seq("&& col(\"text\").isNotNull",
-      "capPerHostOn(Web.urlStructured(")
-    val lines = mainSourceLines("ops/Curation.scala")
-    once.foreach { token =>
-      val at = lines.collect { case (l, n) if l.contains(token) => n + 1 }
-      assert(at.size == 1,
-        s"ops/Curation.scala spells '$token' at lines ${at.mkString(", ")}" +
-          " (expected exactly once)")
-    }
+    assertSpelledOnce(Seq("&& col(\"text\").isNotNull",
+      "capPerHostOn(Web.urlStructured("), _ == "graft/ops/Curation.scala")
   }
 
   test("the embedding family's scoring ladder is spelled once, in Similarity") {
@@ -1439,24 +1436,14 @@ class ExtensionsSpec extends SparkSpec {
     // free to drift from the checked keys. Banned outside Similarity: the
     // int8 kernel call (its definition in VectorMath is not a call), the
     // side rule and the unit prep.
-    val root = new java.io.File("src/main/scala/graft")
-    assert(root.isDirectory, s"run from the project root (no $root)")
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val lines = for {
-      f <- sources(root)
-      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
-        .map(_.toString).zipWithIndex
-    } yield (f.getPath.stripPrefix(root.getPath + "/"), n + 1, line)
-    assert(lines.exists(_._1 == "ops/Similarity.scala"))
-    val banned = Seq("dotInt8(", "lit(\"prior\")", "x -> x / nrm")
-    val strays = for {
-      (file, n, line) <- lines if file != "ops/Similarity.scala"
-      b <- banned if line.contains(b) && !line.contains("def dotInt8(")
-    } yield s"$file:$n contains '$b'"
+    val owner = "graft/ops/Similarity.scala"
+    assert(MainSources.exists(owner))
+    val defn = MainSources.spelledAt("def dotInt8(").map(_ + " ")
+    val strays = MainSources.strays(
+      Seq("dotInt8(", "lit(\"prior\")", "x -> x / nrm"), _ != owner)
+      .filterNot(s => defn.exists(s.startsWith))
     assert(strays.isEmpty, strays.mkString("\n"))
-    val once = Seq(
+    assertSpelledOnce(Seq(
       // exact 6-dp cosine, int8 prescan, side rule, exact-rerank join
       "VectorMath.dot(col(\"q_emb\"), col(\"c_emb\"))",
       "VectorMath.dotInt8(col(",
@@ -1474,12 +1461,36 @@ class ExtensionsSpec extends SparkSpec {
       // embedding-prep SQL CTE and the semantic verdict SQL
       "CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm",
       "CASE WHEN m.mnrm > 0 THEN",
-      "bool_or(b.c_sim < a.c_sim")
-    once.foreach { token =>
-      val at = lines.collect { case (f, n, l) if l.contains(token) => s"$f:$n" }
-      assert(at.size == 1,
-        s"'$token' is spelled at ${at.mkString(", ")} (expected exactly once)")
-    }
+      "bool_or(b.c_sim < a.c_sim"))
+  }
+
+  test("the lexical search family's ladder is spelled once, in TextAnalysis") {
+    // Every index and search form (derived, census-fed, landed, and the
+    // hybrid's lexical side) is a projection of one ladder: query frame,
+    // token stream, census, query weights, BM25 score, top-k cut. The
+    // quality family shares one hashed bucket, one salted draw and one
+    // rate chain. A hand copy of any rung, Spark or SQL, is free to
+    // drift from the checked keys.
+    assertSpelledOnce(Seq(
+      // query docs and the 3-token query frame
+      ".orderBy(col(\"doc_id\")).limit(",
+      "explode(slice(split(col(\"text\"), \" \"), 1, 3))",
+      "string_split(text, ' ')[1:3]",
+      // token stream, doc length, census head
+      "col(\"doc_id\"), explode(split(col(\"text\"), \" \")).as(\"token\")",
+      "size(split(col(\"text\"), \" \")).cast(LongType).as(\"dl\")",
+      "sort_array(collect_list(col(\"doc_id\")))",
+      // idf surrogate, BM25 term score, top-k cut
+      "div df", "// df",
+      "22 * s_total", "22 * st.s_total",
+      ".orderBy(col(\"score\").desc, col(\"doc_id\"))",
+      "ORDER BY score DESC, doc_id"))
+    // other families hash with md5 too; the quality family's bucket,
+    // stopword buckets, draw and rates are TextAnalysis's own
+    assertSpelledOnce(Seq("1, 15), 16, 10)", "concat('0x', substring(md5(",
+      "AS v(s)", "lit(\":\" + QBucketSalt)", "':$QBucketSalt'",
+      "=== \"head\", QBucketHeadPct)", "WHEN 'head' THEN $QBucketHeadPct"),
+      _ == "graft/ops/TextAnalysis.scala")
   }
 
   test("corpus_pipeline_learned_bpe: manifest equals the flagship except " +

@@ -310,19 +310,9 @@ class LocalFsSpec extends AnyFunSuite {
     // primitives or a `.tmp.` staging name
     val banned = Seq("java.io.tmpdir", "_SUCCESS", "publishDir(",
       "sweepAged(", ".tmp.")
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root (no $root)")
-    def sources(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val all = sources(root)
-    assert(all.exists(_.getName == "LocalFs.scala"))
-    val hits = for {
-      f <- all if f.getName != "LocalFs.scala"
-      (line, n) <- Files.readAllLines(f.toPath).toArray.toSeq
-        .map(_.toString).zipWithIndex
-      b <- banned if line.contains(b)
-    } yield s"${f.getPath}:${n + 1} contains '$b'"
+    val owner = "graft/LocalFs.scala"
+    assert(MainSources.exists(owner))
+    val hits = MainSources.strays(banned, _ != owner)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

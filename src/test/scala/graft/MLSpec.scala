@@ -136,19 +136,8 @@ class MLSpec extends SparkSpec {
     val banned = Seq("runBagged", "findSplits", "DecisionTreeMetadata",
       "BaggedPoint", "TreePoint")
     val bridge = "org/apache/spark/ml/tree/graftbridge/ForestBridge.scala"
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the project root (no $root)")
-    def sources(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val all = sources(root).map(f => f.getPath.stripPrefix(s"$root/") -> f)
-    assert(all.exists(_._1 == bridge))
-    val hits = for {
-      (path, f) <- all if path != bridge
-      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq
-        .map(_.toString).zipWithIndex
-      b <- banned if line.contains(b)
-    } yield s"$path:${n + 1} contains '$b'"
+    assert(MainSources.exists(bridge))
+    val hits = MainSources.strays(banned, _ != bridge)
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -1325,6 +1325,39 @@ class PropertiesSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
+  test("BM25 served from the landed index equals the derived scorer, row " +
+      "for row") {
+    import java.io.File
+    import java.nio.file.Files
+    import graft.ops.TextAnalysis
+    // a throwaway copy of the documents table: the landing is keyed on
+    // its sf dir, so this build's postingsLanding builds it instead of
+    // serving a landing of the suite's dir that older code left behind
+    val dir = Files.createTempDirectory("graft_bm25_landed_sf").toFile
+    val docs = new File(dir, "documents.parquet")
+    Files.copy(new File(s"$sf/documents.parquet").toPath, docs.toPath)
+    val landing = new File(LocalFs.cachePath(LocalFs.Names.PostingsCache,
+      dir.getPath, docs))
+    assert(!landing.exists())
+    try {
+      val served = TextAnalysis.searchBm25OnState(spark, dir.getPath)
+        .collect().toSeq
+      assert(landing.isDirectory, "the landing was not built here")
+      val derived = TextAnalysis.searchBm25On(
+          Tables.table(spark, dir.getPath, "documents"),
+          TextAnalysis.SearchQueries, TextAnalysis.SearchTopK)
+        .orderBy(col("query_id"), col("rnk")).collect().toSeq
+      assert(served == derived,
+        "the landed index serves BM25 differently from the derived form")
+      assert(served.map(_.getLong(0)).distinct.size ==
+        TextAnalysis.SearchQueries, "some query found no candidate")
+    } finally {
+      spark.catalog.clearCache()
+      LocalFs.deleteRecursively(landing)
+      LocalFs.deleteRecursively(dir)
+    }
+  }
+
   test("bandStateTtl: an in-window TTL keeps screening, an expired TTL " +
       "re-admits a re-upload (the visible policy trade), and the guards " +
       "fail named") {
