@@ -186,21 +186,23 @@ object Curation {
           .as("is_contaminated"))
   }
 
-  // identical gram layout: DuckDB lists are 1-based with inclusive
-  // slice bounds, so w[i : i + n − 1] is the n-gram Spark builds with
-  // slice(w, i + 1, n) over its 0-based sequence
+  /** The 5-word grams of a token list `w`, in the identical layout:
+    * DuckDB lists are 1-based with inclusive slice bounds, so
+    * w[i : i + n − 1] is the n-gram Spark builds with slice(w, i + 1, n)
+    * over its 0-based sequence.
+    */
+  private val gram5Sql = "list_transform(range(1, len(w) - 3),\n" +
+    "    i -> array_to_string(w[i : i + 4], ' '))"
+
   private val contamSqlCtes: String =
-    """d AS (
+    s"""d AS (
       |  SELECT doc_id, text, string_split(text, ' ') AS w FROM documents
       |  WHERE text IS NOT NULL),
       |bg AS (
-      |  SELECT DISTINCT unnest(list_transform(range(1, len(w) - 3),
-      |    i -> array_to_string(w[i : i + 4], ' '))) AS gram
+      |  SELECT DISTINCT unnest($gram5Sql) AS gram
       |  FROM d WHERE doc_id < 20 AND len(w) >= 5),
       |dg AS (
-      |  SELECT doc_id, unnest(list_distinct(
-      |    list_transform(range(1, len(w) - 3),
-      |      i -> array_to_string(w[i : i + 4], ' ')))) AS gram
+      |  SELECT doc_id, unnest(list_distinct($gram5Sql)) AS gram
       |  FROM d WHERE doc_id >= 20 AND len(w) >= 5),
       |h AS (
       |  SELECT doc_id, count(*) AS n_hits
@@ -367,7 +369,9 @@ object Curation {
     clean.select(col("doc_id"),
       size(split(col("text"), " ")).cast("long").as("nt"))
 
-  /** The stage chain shared by the batch and incremental flagships.
+  /** THE CRAWL CHAIN — stages 2–9 of one pass, the corpus run
+    * ([[runPipeline]]) and every batch pass ([[runBatch]]) alike; a
+    * [[Pass]] supplies the rungs where they differ.
     * LINEAGE-TRUNCATED STAGE BOUNDARIES: each macro-stage output is an
     * eager [[Boundaries]] boundary, so every stage is planned over a flat
     * LogicalRDD leaf instead of the whole upstream lineage. This is
@@ -383,57 +387,83 @@ object Curation {
     * cluster the same boundaries become reliable checkpoints
     * ([[Boundaries]] reliable mode) or intermediate tables.
     */
-  private def runPipeline(corpus: DataFrame, benchmark: DataFrame,
+  private def runChain(docs: DataFrame, benchmark: DataFrame,
       embeddings: DataFrame, scope: Boundaries.Scope,
-      props: DataFrame => DataFrame = defaultManifestProps): PipelineRun = {
+      pass: Pass): PipelineRun = {
     import scope.chk
-    // 2. URL surface: deny-list → URL dedup → per-host cap
-    val urls = chk(Web.urlStructured(corpus))
+    // 2. URL surface: deny list → the pass's URL keep
+    val urls = chk(Web.urlStructured(docs))
     val unblocked = urls.join(
       Web.urlBlocklistOn(urls, Web.BlockedDomains, Web.BlockedPrefixes)
         .filter(col("blocked") === 0).select(col("doc_id")),
       Seq("doc_id"), "left_semi")
-    val urlDeduped = unblocked.join(
-      Web.dedupUrlOn(unblocked).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val docs1 = chk(corpus.join(
-      Web.capPerHostOn(urlDeduped, Web.HostCap).select(col("doc_id")),
-      Seq("doc_id"), "left_semi"))
+    val docs1 = chk(docs.join(pass.urlKeep(unblocked), Seq("doc_id"),
+      "left_semi"))
     // 3. main-content extraction (empty bodies drop)
     val extracted = chk(TextAnalysis.extractMainTextOn(
         TextAnalysis.htmlStructured(docs1))
       .filter(col("n_paragraphs") > 0)
       .select(col("doc_id"), col("main_text").as("text")))
     // 4. cross-document line dedup over the extracted paragraphs
-    val flat = Dedup.dedupLinesOn(extracted, PipelineLineMinDocs)
+    val flat = Dedup.dedupLinesIncrementalOn(pass.lineCensus, extracted,
+        PipelineLineMinDocs)
       .select(col("doc_id"),
         regexp_replace(col("clean_text"), "\n", " ").as("text"))
       .filter(col("text") =!= "")
     // 5. Gopher quality gate
     val gated = chk(flat.filter(TextAnalysis.gopherKeep))
     // 6. span excision (fully-excised docs drop)
-    val stripped = chk(Dedup.dedupSpansStripOn(gated, Dedup.SpanGram)
+    val stripped = chk(Dedup.dedupSpansStripIncrementalOn(pass.spanCensus,
+        gated, Dedup.SpanGram)
       .filter(col("kept_tokens") > 0)
       .select(col("doc_id"), col("clean_text").as("text")))
-    // 7. semantic representative keep over the survivors' embeddings.
-    // Framed as an ANTI-join against the DROP set (not a semi-join
-    // against the keep set): a survivor with no embedding row cannot be
-    // semantically judged and PASSES — the stage only ever removes docs
-    // it positively identified as non-representatives (the harness's
-    // sf0.1 tables make this branch real: 5000 docs, 2000 embeddings)
-    val semDrop = Dedup.dedupSemanticOn(
+    // 7. semantic screen over the survivors' embeddings. Framed as an
+    // ANTI-join against the DROP set (not a semi-join against the keep
+    // set): a survivor with no embedding row cannot be semantically
+    // judged and PASSES — the stage only ever removes docs it positively
+    // identified as non-representatives (the harness's sf0.1 tables make
+    // this branch real: 5000 docs, 2000 embeddings)
+    val semDrop = pass.semantic(
         embeddings.join(stripped.select(col("doc_id").as("vec_id")),
-          Seq("vec_id"), "left_semi"),
-        64, Dedup.IncrementalEmbedTau)
+          Seq("vec_id"), "left_semi"))
       .filter(!col("keep"))
       .select(col("vec_id").as("doc_id"))
     val docs2 = chk(stripped.join(semDrop, Seq("doc_id"), "left_anti"))
     // 8. decontamination against the held-out benchmark
     val clean = chk(contaminationStripOn(docs2, benchmark, ContamGramN))
-    // 9. tokenize → epoch-0 order → loader manifest
+    // 9. tokenize → epoch order → loader manifest
     PipelineRun(unblocked, extracted, gated, stripped, clean,
-      manifestTail(clean, props))
+      pass.tail(clean))
   }
+
+  /** The rungs a pass supplies to [[runChain]] — the only places the
+    * corpus run and a batch pass differ. The line and span rungs read
+    * `lineCensus`/`spanCensus` (the corpus run's are EMPTY: its own
+    * documents are the whole census, and Catalyst plans the empty
+    * census join away).
+    */
+  private final case class Pass(
+      urlKeep: DataFrame => DataFrame,  // unblocked (doc_id, url…) → doc_id
+      lineCensus: DataFrame,            // (lh, n_docs)
+      spanCensus: DataFrame,            // (gh, n_docs)
+      semantic: DataFrame => DataFrame, // survivor vectors → (vec_id, keep)
+      tail: DataFrame => DataFrame)     // clean docs → shard manifest
+
+  /** The corpus run: URL keep-min plus the per-host cap, a self-contained
+    * semantic keep, the generation-0 manifest priced by `props`.
+    */
+  private def runPipeline(corpus: DataFrame, benchmark: DataFrame,
+      embeddings: DataFrame, scope: Boundaries.Scope,
+      props: DataFrame => DataFrame = defaultManifestProps): PipelineRun =
+    runChain(corpus, benchmark, embeddings, scope, Pass(
+      unblocked => Web.capPerHostOn(
+          unblocked.join(Web.dedupUrlOn(unblocked).select(col("doc_id")),
+            Seq("doc_id"), "left_semi"), Web.HostCap)
+        .select(col("doc_id")),
+      Dedup.noLineCensus(corpus.sparkSession),
+      Dedup.noSpanCensus(corpus.sparkSession),
+      Dedup.dedupSemanticOn(_, 64, Dedup.IncrementalEmbedTau),
+      manifestTail(_, props)))
 
   /** The generation-0 manifest tail shared by the flagship run and
     * compaction: deterministic epoch-0 order → fixed-size shards →
@@ -795,67 +825,31 @@ object Curation {
       bands: MediaBands): MediaBands =
     bands.unfuse(scope.chk(bands.fused))
 
-  /** One crawl batch through the incremental chain against EXPLICIT
-    * state frames — the factored batch side of
-    * [[corpusPipelineIncrementalOn]] (same stages, same semantics), so
+  /** One crawl batch through the chain against EXPLICIT state frames —
+    * the factored batch side of [[corpusPipelineIncrementalOn]], so
     * day-2 compositions can feed MERGED states and the batch-only cost
-    * is its own measurable unit.
+    * is its own measurable unit: the frontier screen against the URL
+    * census (no host cap), the line and span censuses, the semantic
+    * screen against the maintained cell members, and shards appended
+    * after the cursor (pricing fused into one projection + one join —
+    * the [[manifestTail]] discipline).
     */
   private def runBatch(states: PipelineStates, batch: DataFrame,
       benchmark: DataFrame, embeddings: DataFrame,
-      scope: Boundaries.Scope): PipelineRun = {
-    import scope.chk
-    // 1-2. deny list + frontier screen vs the URL census
-    val burls = chk(Web.urlStructured(batch))
-    val bUnblocked = burls.join(
-      Web.urlBlocklistOn(burls, Web.BlockedDomains, Web.BlockedPrefixes)
-        .filter(col("blocked") === 0).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val bKeep = Web.dedupUrlIncrementalOn(states.urlCensus, bUnblocked)
-      .filter(col("keep")).select(col("doc_id"))
-    val bdocs1 = chk(batch.join(bKeep, Seq("doc_id"), "left_semi"))
-    // 3. main-content extraction
-    val bextracted = chk(TextAnalysis.extractMainTextOn(
-        TextAnalysis.htmlStructured(bdocs1))
-      .filter(col("n_paragraphs") > 0)
-      .select(col("doc_id"), col("main_text").as("text")))
-    // 4. line dedup vs the line census
-    val bflat = Dedup.dedupLinesIncrementalOn(
-        states.lineCensus, bextracted, PipelineLineMinDocs)
-      .select(col("doc_id"),
-        regexp_replace(col("clean_text"), "\n", " ").as("text"))
-      .filter(col("text") =!= "")
-    // 5. Gopher gate
-    val bgated = chk(bflat.filter(TextAnalysis.gopherKeep))
-    // 6. span excision vs the span census
-    val bstripped = chk(Dedup.dedupSpansStripIncrementalOn(
-        states.spanCensus, bgated, Dedup.SpanGram)
-      .filter(col("kept_tokens") > 0)
-      .select(col("doc_id"), col("clean_text").as("text")))
-    // 7. semantic screen vs the maintained cell members (drop-set
-    // anti-join, so batch docs without embeddings pass)
-    val bAssigned = Dedup.assignedUnits(
-      embeddings.join(bstripped.select(col("doc_id").as("vec_id")),
-        Seq("vec_id"), "left_semi"), 64)
-    val semDrop = Dedup.dedupSemanticIncrementalOnState(
-        states.semMembers, bAssigned, 64, Dedup.IncrementalEmbedTau,
-        materialize = chk)
-      .filter(!col("keep"))
-      .select(col("vec_id").as("doc_id"))
-    val bdocs2 = chk(bstripped.join(semDrop, Seq("doc_id"), "left_anti"))
-    // 8. decontamination
-    val bclean = chk(contaminationStripOn(bdocs2, benchmark, ContamGramN))
-    // 9. tokenize → salted batch order → appended shards (pricing
-    // columns fused into one projection + one join — the manifestTail
-    // discipline)
-    val bman = shardAggregate(
-      Packing.shuffleDeterministicOn(bclean, Packing.ShuffleSalt)
-        .join(defaultManifestProps(bclean), Seq("doc_id"))
-        .crossJoin(broadcast(states.cursor)),
-      col("c_max_shard") + 1 + expr(s"pos div $PipelineDocsPerShard"),
-      col("pos") + col("c_n_docs"))
-    PipelineRun(bUnblocked, bextracted, bgated, bstripped, bclean, bman)
-  }
+      scope: Boundaries.Scope): PipelineRun =
+    runChain(batch, benchmark, embeddings, scope, Pass(
+      Web.dedupUrlIncrementalOn(states.urlCensus, _)
+        .filter(col("keep")).select(col("doc_id")),
+      states.lineCensus, states.spanCensus,
+      vecs => Dedup.dedupSemanticIncrementalOnState(states.semMembers,
+        Dedup.assignedUnits(vecs, 64), 64, Dedup.IncrementalEmbedTau,
+        materialize = scope.chk),
+      clean => shardAggregate(
+        Packing.shuffleDeterministicOn(clean, Packing.ShuffleSalt)
+          .join(defaultManifestProps(clean), Seq("doc_id"))
+          .crossJoin(broadcast(states.cursor)),
+        col("c_max_shard") + 1 + expr(s"pos div $PipelineDocsPerShard"),
+        col("pos") + col("c_n_docs"))))
 
   /** THE CRAWL-BATCH COMPOSED FLAGSHIP — [[corpusPipelineOn]]'s chain in
     * the shape production runs it DAILY: the corpus ran the full pipeline
@@ -2100,164 +2094,234 @@ object Curation {
         s"url_norm LIKE '${Web.likeLit(p)}%' ESCAPE '\\'"))
       .mkString("\n        OR ")
 
-  /** The corpus-run CTE chain (pdocs … o, bt) parameterized by the base
-    * population predicate, so the batch twin ([[pipelineIncrementalSql]])
-    * can instantiate it for the even-parity corpus and chain the batch
-    * CTEs after it.
+  /** The SQL mirror of [[Pass]]: the censuses a chain pass's line and
+    * span rungs probe (a state CTE, or [[noCensusSql]] for the corpus
+    * run) and its own rungs as CTE text over its prefix `p` — `urlKeep`
+    * ending in `${p}ukept (doc_id)` over `${p}ukeep`, `semDrop` ending
+    * in `${p}sdrop (doc_id)` over `${p}sdocs`, `bt` ending in
+    * `${p}bt (doc_id, n_tokens)` over `${p}clean`, and the append
+    * `cursor` the manifest continues after (none for the corpus run).
     */
-  private def pipelineCoreCtes(popCond: String): String =
-    pipelineCoreCtes(popCond,
-      "bt AS (SELECT doc_id, n_tokens FROM (" +
-        graft.functions.BpeTokenizer.oracleSqlFor("clean") + ") bq)")
+  private final case class PassSql(lcens: String, scens: String,
+      urlKeep: String, semDrop: String, bt: String, cursor: Option[String])
 
-  /** `btCtes`-parameterized form: the caller supplies the CTE block
-    * (pre-stripped, no trailing comma) ending in `bt (doc_id,
-    * n_tokens)` — the frozen-table walk by default, the generated
-    * learn-then-encode rounds for the learned-tokenizer twin.
+  /** The census of no documents: an empty `(key, n_docs)` derived table. */
+  private def noCensusSql(key: String, keyType: String): String =
+    s"(SELECT CAST(NULL AS $keyType) AS $key, CAST(0 AS BIGINT) AS n_docs" +
+      " WHERE FALSE)"
+
+  /** THE CRAWL CHAIN's twin — the SQL mirror of [[runChain]]: one CTE
+    * chain with prefix `p` over the population `popCond`, for the corpus
+    * run ([[corpusChainCtes]], `p` = "") and every batch pass
+    * ([[batchChainCtes]]). The decontamination rung reads the benchmark
+    * grams `cbg` of [[corpusChainCtes]]; the chain ends in `${p}man`, the
+    * pass's manifest.
     */
-  private def pipelineCoreCtes(popCond: String, btCtes: String): String = {
-    val blockCond = blockCondSql
-    val bpe = btCtes
-    s"""pdocs AS (
+  // NOTE: the bt/order/manifest fragments are CONCATENATED, never
+  // re-wrapped in a stripMargin template — they contain lines that
+  // legitimately begin with `||` (concat continuations), which a second
+  // margin strip would corrupt into bitwise-or
+  private def chainCtes(p: String, popCond: String, pass: PassSql): String = {
+    val spanDup =
+      s"""${p}sc AS (
+         |  SELECT gh, CAST(count(DISTINCT doc_id) AS BIGINT) AS nb,
+         |    min(doc_id) AS bkeeper
+         |  FROM ${p}sg GROUP BY gh),
+         |${p}dup AS (
+         |  SELECT ${p}b3.gh,
+         |    CASE WHEN coalesce(c3.n_docs, 0) > 0 THEN -1
+         |         ELSE ${p}b3.bkeeper END AS keeper
+         |  FROM ${p}sc ${p}b3 LEFT JOIN ${pass.scens} c3 USING (gh)
+         |  WHERE ${p}b3.nb + coalesce(c3.n_docs, 0) >= 2)""".stripMargin
+    s"""${p}docs AS (
        |  SELECT doc_id, text, lang, source FROM documents
        |  WHERE $popCond),
-       |bench AS (
-       |  SELECT doc_id, text FROM documents
-       |  WHERE doc_id < $ContamBenchDocs AND text IS NOT NULL),
-       |${Web.plantSqlFrom("pdocs")},
-       |hosts AS (
-       |  SELECT doc_id, url_norm,
-       |    regexp_extract(url_norm,
-       |      '^[a-z][a-z0-9+.-]*://([^/:?]+)', 1) AS host
-       |  FROM canon),
-       |unb AS (
-       |  SELECT * FROM hosts
-       |  WHERE NOT ($blockCond)),
-       |ukeep AS MATERIALIZED (
-       |  SELECT doc_id, host FROM (
-       |    SELECT doc_id, host,
+       |${hostsSqlCtes(p, s"${p}docs")},
+       |${p}unb AS (
+       |  SELECT * FROM ${p}hosts
+       |  WHERE NOT ($blockCondSql)),
+       |${p}ukeep AS MATERIALIZED (
+       |  SELECT doc_id, url_norm, host FROM (
+       |    SELECT doc_id, url_norm, host,
        |      row_number() OVER (PARTITION BY url_norm ORDER BY doc_id)
        |        AS rn
-       |    FROM unb) u1
+       |    FROM ${p}unb) ${p}u1
        |  WHERE rn = 1),
-       |capped AS MATERIALIZED (
+       |${pass.urlKeep},
+       |${p}d1 AS (SELECT ${p}docs.* FROM ${p}docs
+       |  JOIN ${p}ukept USING (doc_id)),
+       |${p}ed AS (
+       |  SELECT doc_id, string_split(text, ' ') AS t,
+       |    greatest(CAST(ceil(len(string_split(text, ' ')) / 10.0)
+       |      AS BIGINT), 1) AS nc
+       |  FROM ${p}d1),
+       |${p}ep AS MATERIALIZED (
+       |  SELECT doc_id, i,
+       |    array_to_string(t[(i*10+1) : (i*10+10)], ' ') AS para
+       |  FROM ${p}ed, UNNEST(range(0, nc)) AS ue(i)
+       |  WHERE doc_id % 13 != 0),
+       |${p}lbp AS (
+       |  SELECT ${p}b2.lh FROM (
+       |    SELECT md5(para) AS lh,
+       |      CAST(count(DISTINCT doc_id) AS BIGINT) AS nb
+       |    FROM ${p}ep GROUP BY 1) ${p}b2
+       |  LEFT JOIN ${pass.lcens} c2 USING (lh)
+       |  WHERE ${p}b2.nb + coalesce(c2.n_docs, 0)
+       |    >= $PipelineLineMinDocs),
+       |${p}lkept AS (
+       |  SELECT ${p}ep.doc_id, ${p}ep.i, ${p}ep.para
+       |  FROM ${p}ep LEFT JOIN ${p}lbp ON md5(${p}ep.para) = ${p}lbp.lh
+       |  WHERE ${p}lbp.lh IS NULL),
+       |${p}flat AS MATERIALIZED (
+       |  SELECT doc_id, string_agg(para, ' ' ORDER BY i) AS text
+       |  FROM ${p}lkept GROUP BY doc_id),
+       |${TextAnalysis.gopherSqlCtes(s"${p}flat", p)},
+       |${p}gated AS MATERIALIZED (
+       |  SELECT f.doc_id, f.text FROM ${p}flat f
+       |  JOIN ${p}gk ON ${p}gk.doc_id = f.doc_id AND ${p}gk.keep_gopher),
+       |${Dedup.spanSqlCtes(p, s"${p}gated", spanDup)},
+       |${p}sdocs AS MATERIALIZED (
+       |  SELECT doc_id, clean_text AS text FROM ${p}sagg
+       |  WHERE kept_tokens > 0),
+       |${pass.semDrop},
+       |${p}d2 AS MATERIALIZED (
+       |  SELECT ${p}sdocs.* FROM ${p}sdocs
+       |  WHERE doc_id NOT IN (SELECT doc_id FROM ${p}sdrop)),
+       |${p}cdg AS (
+       |  SELECT doc_id, unnest(list_distinct($gram5Sql)) AS gram
+       |  FROM (SELECT doc_id, string_split(text, ' ') AS w
+       |        FROM ${p}d2) ${p}b4
+       |  WHERE len(w) >= 5),
+       |${p}cflag AS (
+       |  SELECT DISTINCT doc_id FROM ${p}cdg JOIN cbg USING (gram)),
+       |${p}clean AS MATERIALIZED (
+       |  SELECT ${p}d2.doc_id, ${p}d2.text FROM ${p}d2
+       |  WHERE ${p}d2.doc_id NOT IN (SELECT doc_id FROM ${p}cflag)),
+       |""".stripMargin + pass.bt + ",\n" +
+      epochOrderSql(s"${p}o", s"${p}clean") + s",\n${p}man AS MATERIALIZED (\n" +
+      manifestSql(s"${p}o", s"${p}bt", pass.cursor) + ")"
+  }
+
+  /** The corpus run's twin (the SQL [[runPipeline]]): the benchmark and
+    * its 5-gram set `cbg`, then the chain with prefix "" over `popCond` —
+    * URL keep-min plus the per-host cap, empty censuses, the
+    * self-contained semantic keep and the generation-0 manifest `man`
+    * priced by `bt` (the frozen-table walk by default; the
+    * learned-tokenizer twin passes its generated rounds).
+    */
+  private def corpusChainCtes(popCond: String,
+      bt: String = frozenBtSql("bt", "clean")): String =
+    s"""bench AS (
+       |  SELECT doc_id, text FROM documents
+       |  WHERE doc_id < $ContamBenchDocs AND text IS NOT NULL),
+       |cbg AS (
+       |  SELECT DISTINCT unnest($gram5Sql) AS gram
+       |  FROM (SELECT string_split(text, ' ') AS w FROM bench) b1
+       |  WHERE len(w) >= 5),
+       |""".stripMargin + chainCtes("", popCond, PassSql(
+      noCensusSql("lh", "VARCHAR"), noCensusSql("gh", "BIGINT"),
+      hostCapSql("ukept", "ukeep", Web.HostCap),
+      Dedup.semCellsSql("s", " WHERE vec_id IN (SELECT doc_id FROM sdocs)") +
+        ",\n" + Dedup.semVerdictSql("s", "smm") +
+        ",\nsdrop AS (\n  SELECT id_a AS doc_id FROM spb WHERE has_better)",
+      bt, None))
+
+  /** A batch pass's twin (the SQL [[runBatch]]), prefix `p`, population
+    * `popCond`, against the state CTEs `st`: the frontier screen against
+    * the URL census (no host cap), the line/span censuses, the semantic
+    * screen against the maintained members, and the shards appended
+    * after the cursor `st.cstat`.
+    */
+  private def batchChainCtes(p: String, popCond: String,
+      st: OracleStates): String =
+    chainCtes(p, popCond, PassSql(st.lcens, st.scens,
+      s"""${p}ukept AS (
+         |  SELECT doc_id FROM ${p}ukeep
+         |  WHERE url_norm NOT IN (SELECT url_norm FROM ${st.ucens}))"""
+        .stripMargin,
+      Dedup.semCellsSql(s"${p}s",
+        s" WHERE vec_id IN (SELECT doc_id FROM ${p}sdocs)", mean = None) +
+        ",\n" + Dedup.semVerdictSql(s"${p}s", st.smm, Some(st.members)) +
+        s""",
+           |${p}sdrop AS (
+           |  SELECT ${p}scs.vec_id AS doc_id FROM ${p}scs
+           |  LEFT JOIN ${p}spc ON ${p}spc.id_a = ${p}scs.vec_id
+           |  LEFT JOIN ${p}spb ON ${p}spb.id_a = ${p}scs.vec_id
+           |  WHERE ${p}spc.id_a IS NOT NULL
+           |    OR coalesce(${p}spb.has_better, false))""".stripMargin,
+      frozenBtSql(s"${p}bt", s"${p}clean"), Some(st.cstat)))
+
+  /** The planted URL surface of `src` with each URL's host: the prefixed
+    * [[Web]] plant, then `${p}hosts (doc_id, url_norm, host)`.
+    */
+  private def hostsSqlCtes(p: String, src: String): String =
+    Web.plantSqlP(p, src) + ",\n" +
+      s"""${p}hosts AS (
+         |  SELECT doc_id, url_norm,
+         |    regexp_extract(url_norm,
+         |      '^[a-z][a-z0-9+.-]*://([^/:?]+)', 1) AS host
+         |  FROM ${p}canon)""".stripMargin
+
+  /** The hash-uniform per-host cap over `src (doc_id, host)` as
+    * `name (doc_id)` — the SQL mirror of [[Web.capPerHostOn]].
+    */
+  private def hostCapSql(name: String, src: String, cap: Int): String =
+    s"""$name AS MATERIALIZED (
        |  SELECT doc_id FROM (
        |    SELECT doc_id,
        |      row_number() OVER (PARTITION BY host
        |        ORDER BY md5(host || ':' || CAST(doc_id AS VARCHAR)),
        |          doc_id) AS hr
-       |    FROM ukeep) u2
-       |  WHERE hr <= ${Web.HostCap}),
-       |d1 AS (SELECT pdocs.* FROM pdocs JOIN capped USING (doc_id)),
-       |ed AS (
-       |  SELECT doc_id, string_split(text, ' ') AS t,
-       |    greatest(CAST(ceil(len(string_split(text, ' ')) / 10.0)
-       |      AS BIGINT), 1) AS nc
-       |  FROM d1),
-       |ep AS MATERIALIZED (
-       |  SELECT doc_id, i,
-       |    array_to_string(t[(i*10+1) : (i*10+10)], ' ') AS para
-       |  FROM ed, UNNEST(range(0, nc)) AS ue(i)
-       |  WHERE doc_id % 13 != 0),
-       |lbp AS (
-       |  SELECT md5(para) AS lh FROM ep
-       |  GROUP BY 1 HAVING count(DISTINCT doc_id) >= $PipelineLineMinDocs),
-       |lkept AS (
-       |  SELECT ep.doc_id, ep.i, ep.para
-       |  FROM ep LEFT JOIN lbp ON md5(ep.para) = lbp.lh
-       |  WHERE lbp.lh IS NULL),
-       |flat AS MATERIALIZED (
-       |  SELECT doc_id, string_agg(para, ' ' ORDER BY i) AS text
-       |  FROM lkept GROUP BY doc_id),
-       |${TextAnalysis.gopherSqlCtes("flat")},
-       |gated AS MATERIALIZED (
-       |  SELECT f.doc_id, f.text FROM flat f
-       |  JOIN gk ON gk.doc_id = f.doc_id AND gk.keep_gopher),
-       |sd AS MATERIALIZED (
-       |  SELECT doc_id, string_split(text, ' ') AS w,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-       |  FROM gated),
-       |sg AS MATERIALIZED (
-       |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-       |    CAST(concat('0x', substring(md5(
-       |      array_to_string(w[i : i + 7], ' ')), 1, 15)) AS BIGINT) AS gh
-       |  FROM sd, UNNEST(range(1, CAST(len(w) AS BIGINT) - 6)) AS us(i)
-       |  WHERE len(w) >= 8),
-       |sc AS (
-       |  SELECT gh, min(doc_id) AS keeper FROM sg GROUP BY gh
-       |  HAVING count(DISTINCT doc_id) >= 2),
-       |ss AS MATERIALIZED (
-       |  SELECT sg.doc_id, sg.pos FROM sg JOIN sc USING (gh)
-       |  WHERE sg.doc_id != sc.keeper),
-       |spos AS (
-       |  SELECT sd.doc_id, t.p, w[t.p + 1] AS tok,
-       |    EXISTS (SELECT 1 FROM ss WHERE ss.doc_id = sd.doc_id
-       |            AND ss.pos <= t.p AND t.p <= ss.pos + 7) AS covered
-       |  FROM sd CROSS JOIN UNNEST(range(0, sd.n_toks)) AS t(p)),
-       |sagg AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    count(*) FILTER (WHERE NOT covered) AS kept_tokens,
-       |    coalesce(string_agg(tok, ' ' ORDER BY p)
-       |      FILTER (WHERE NOT covered), '') AS clean_text
-       |  FROM spos GROUP BY doc_id),
-       |sdocs AS MATERIALIZED (
-       |  SELECT doc_id, clean_text AS text FROM sagg
-       |  WHERE kept_tokens > 0),
-       |${Dedup.semCellsSql("s", " WHERE vec_id IN (SELECT doc_id FROM sdocs)")},
-       |${Dedup.semVerdictSql("s", "smm")},
-       |sdrop AS (
-       |  SELECT id_a AS doc_id FROM spb WHERE has_better),
-       |d2 AS MATERIALIZED (
-       |  SELECT sdocs.* FROM sdocs
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM sdrop)),
-       |cbg AS (
-       |  SELECT DISTINCT unnest(list_transform(range(1, len(w) - 3),
-       |    i -> array_to_string(w[i : i + 4], ' '))) AS gram
-       |  FROM (SELECT string_split(text, ' ') AS w FROM bench) b1
-       |  WHERE len(w) >= 5),
-       |cdg AS (
-       |  SELECT doc_id, unnest(list_distinct(
-       |    list_transform(range(1, len(w) - 3),
-       |      i -> array_to_string(w[i : i + 4], ' ')))) AS gram
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w FROM d2) b2
-       |  WHERE len(w) >= 5),
-       |cflag AS (SELECT DISTINCT doc_id FROM cdg JOIN cbg USING (gram)),
-       |clean AS MATERIALIZED (
-       |  SELECT d2.doc_id, d2.text FROM d2
-       |  WHERE d2.doc_id NOT IN (SELECT doc_id FROM cflag)),""".stripMargin +
-    // CONCATENATED seam: btCtes is pre-stripped (the stripMargin note
-    // below) and may span generated round CTEs
-    "\n" + bpe + ",\n" +
-    s"""o AS (
+       |    FROM $src) ${name}r
+       |  WHERE hr <= $cap)""".stripMargin
+
+  /** The frozen-table BPE walk over `src` as `bt (doc_id, n_tokens)`. */
+  private def frozenBtSql(bt: String, src: String): String =
+    s"$bt AS (SELECT doc_id, n_tokens FROM (" +
+      graft.functions.BpeTokenizer.oracleSqlFor(src) + s") ${bt}q)"
+
+  /** The deterministic epoch order of `src` as `o (pos, doc_id, nt)` —
+    * the SQL mirror of [[Packing.shuffleDeterministicOn]] plus the
+    * whitespace token count.
+    */
+  private def epochOrderSql(o: String, src: String): String =
+    s"""$o AS (
        |  SELECT
        |    CAST(row_number() OVER (
        |      ORDER BY md5('${Packing.ShuffleSalt}:'
        |        || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS BIGINT) AS pos,
        |    doc_id,
        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
-       |  FROM clean)""".stripMargin
-  }
+       |  FROM $src)""".stripMargin
 
-  /** The corpus-run manifest aggregate over the core chain's `o`/`bt`. */
-  private def manifestSelectSql: String = manifestSelectSqlFor("o", "bt")
-
-  /** The generation-0 manifest aggregate parameterized by the epoch
-    * order (`oN`: pos, doc_id, nt) and token-count (`btN`: doc_id,
-    * n_tokens) CTE names — shared with the compaction twin.
+  /** The shard aggregate of an epoch order `oN` priced by `btN` — the SQL
+    * mirror of [[shardAggregate]]: generation-0 shards from position 0,
+    * or, with an append `cursor` `(c_max_shard, c_n_docs)`, shards and
+    * positions continuing after it.
     */
-  private def manifestSelectSqlFor(oN: String, btN: String): String =
-    s"""SELECT pos // $PipelineDocsPerShard AS shard_id,
+  private def manifestSql(oN: String, btN: String,
+      cursor: Option[String]): String = {
+    val (shard, at, join) = cursor.fold(("", "pos", "")) { c =>
+      (s"$c.c_max_shard + 1 + ", s"pos + $c.c_n_docs", s" CROSS JOIN $c") }
+    s"""SELECT ${shard}pos // $PipelineDocsPerShard AS shard_id,
        |  count(*) AS n_docs,
-       |  min(pos) AS first_pos,
-       |  max(pos) AS last_pos,
+       |  min($at) AS first_pos,
+       |  max($at) AS last_pos,
        |  CAST(sum($oN.nt) AS BIGINT) AS n_ws_tokens,
        |  CAST(sum($btN.n_tokens) AS BIGINT) AS n_bpe_tokens,
        |  (CAST(sum($btN.n_tokens) AS BIGINT) + ${PipelineSeqBudget - 1})
        |    // $PipelineSeqBudget AS n_seqs,
        |  md5(string_agg(CAST($oN.doc_id AS VARCHAR), ',' ORDER BY pos))
        |    AS shard_digest
-       |FROM $oN JOIN $btN USING (doc_id)
+       |FROM $oN JOIN $btN USING (doc_id)$join
        |GROUP BY 1""".stripMargin
+  }
+
+  /** A manifest CTE `m`'s shards, sorted — a single-manifest twin's
+    * final SELECT.
+    */
+  private def manifestOutSql(m: String): String =
+    s"SELECT $manifestColsSql FROM $m\nORDER BY shard_id"
 
   /** The composed twin of [[corpusPipelineOn]] — ONE DuckDB statement
     * chaining every stage's established oracle formulation (URL plant /
@@ -2269,13 +2333,8 @@ object Curation {
     * to). Hash equality of the final manifest proves the stages compose
     * without contract drift.
     */
-  // NOTE: the core/manifest fragments are CONCATENATED, never re-wrapped
-  // in a stripMargin template — they contain lines that legitimately
-  // begin with `||` (concat continuations), which a second margin strip
-  // would corrupt into bitwise-or
   private def pipelineSql: String =
-    "WITH " + pipelineCoreCtes(liveSql()) +
-      "\n" + manifestSelectSql + "\nORDER BY shard_id"
+    "WITH " + corpusChainCtes(liveSql()) + "\n" + manifestOutSql("man")
 
   /** The live (text-bearing, non-benchmark) documents that also satisfy
     * every one of `conds` — the SQL side of [[Split]].
@@ -2288,16 +2347,15 @@ object Curation {
   private def notInSql(drop: String): String =
     s"doc_id NOT IN (SELECT doc_id FROM $drop)"
 
-  /** The day-0 head every day-loop twin starts from: the core chain over
-    * the corpus population `corpusCond` (default: the even-parity live
-    * corpus), its manifest `cman` and the day-1 state CTEs. Concatenated
-    * (see [[pipelineSql]]'s stripMargin note); no trailing comma.
+  /** The day-0 head every day-loop twin starts from: the corpus run over
+    * the population `corpusCond` (default: the even-parity live corpus)
+    * with its manifest `man`, the day-1 states and their cursor `cstat`
+    * — the SQL mirror of [[derivedDay0]]. No trailing comma.
     */
   private def day0HeadCtes(
       corpusCond: String = liveSql("doc_id % 2 = 0")): String =
-    pipelineCoreCtes(corpusCond) +
-      ",\ncman AS MATERIALIZED (\n" + manifestSelectSql + "),\n" +
-      day1StateCtes
+    corpusChainCtes(corpusCond) + ",\n" + censusSqlCtes(1, Seq("")) +
+      ",\n" + cursorCte("cstat", "man")
 
   /** The append cursor `(c_max_shard, c_n_docs)` over the union of the
     * named manifest CTEs — the SQL mirror of [[cursorOf]].
@@ -2321,185 +2379,45 @@ object Curation {
     parts.map { case (v, m) => s"SELECT $manifestColsSql, $v AS $tag FROM $m" }
       .mkString("\nUNION ALL\n") + "\nORDER BY shard_id"
 
-  /** Day-1 state CTEs over the core chain — the SQL mirror of
-    * [[derivedDay0]]: URL census from `unb`, line census from `ep`, span
-    * census from `sg` (the semantic member state is the core's `scell`/
-    * `smm` pair directly), append cursor from `cman`.
+  /** The maintained states RECOMPUTED over the stage-input populations of
+    * the chain passes `ps` — the day-`n` states the Spark side derives
+    * ([[derivedDay0]]) or merges additively ([[mergeStatesBoundary]]):
+    * the URL census `url$n` from `unb`, the line census `line$n` from
+    * `ep`, the span census `span$n` from `sg`, the semantic members
+    * `mem$n` from `scell` and their centroids `m${n}mm`. Day 1 reads the
+    * corpus run (`Seq("")`), day 2 the corpus run and batch 1
+    * (`Seq("", "b")`), so hash equality proves merge ==
+    * recompute-over-union.
     */
-  private def day1StateCtes: String =
-    s"""ucens AS MATERIALIZED (
+  private def censusSqlCtes(n: Int, ps: Seq[String]): String = {
+    def union(cols: String, cte: String): String =
+      ps.map(p => s"SELECT $cols FROM $p$cte").mkString("\n    UNION ALL ")
+    s"""url$n AS MATERIALIZED (
        |  SELECT url_norm, CAST(count(*) AS BIGINT) AS n_corpus
-       |  FROM unb GROUP BY url_norm),
-       |lcens AS MATERIALIZED (
+       |  FROM (${union("url_norm", "unb")}) uu
+       |  GROUP BY url_norm),
+       |line$n AS MATERIALIZED (
        |  SELECT md5(para) AS lh,
        |    CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-       |  FROM ep GROUP BY 1),
-       |scens AS MATERIALIZED (
+       |  FROM (${union("doc_id, para", "ep")}) lu
+       |  GROUP BY 1),
+       |span$n AS MATERIALIZED (
        |  SELECT gh, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-       |  FROM sg GROUP BY gh),
-       |""".stripMargin + cursorCte("cstat", "cman")
+       |  FROM (${union("doc_id, gh", "sg")}) su
+       |  GROUP BY gh),
+       |mem$n AS MATERIALIZED (
+       |  ${union("vec_id, unit, cell", "scell")}),
+       |${Dedup.semMeansSql(s"m$n", s"mem$n")}""".stripMargin
+  }
 
-  /** State CTE names a generated batch chain probes — day 1 points at
-    * [[day1StateCtes]] + the core's `scell`/`smm`; day 2 at the merged
-    * recompute-over-union CTEs.
-    */
+  /** State CTE names a batch chain probes ([[censusSqlCtes]] + a cursor). */
   private final case class OracleStates(ucens: String, lcens: String,
       scens: String, members: String, smm: String, cstat: String)
 
-  /** The batch-side CTE chain of the incremental twin, generated with
-    * prefix `p` over population `popCond` against the named state CTEs
-    * — the SQL mirror of [[runBatch]], shared by the day-1 twin
-    * (`corpus_pipeline_incremental`) and both batches of the day-2 twin
-    * (`corpus_states_update`) so the batch formulation cannot drift.
-    * Ends in `${p}man`, the batch's appended manifest.
-    */
-  private def batchChainCtes(p: String, popCond: String,
-      st: OracleStates): String = {
-    val blockCond = blockCondSql
-    val bpeB = graft.functions.BpeTokenizer.oracleSqlFor(s"${p}clean")
-    val semCells = Dedup.semCellsSql(s"${p}s",
-      s" WHERE vec_id IN (SELECT doc_id FROM ${p}sdocs)", mean = None)
-    s"""${p}docs AS (
-       |  SELECT doc_id, text, lang, source FROM documents
-       |  WHERE $popCond),
-       |${Web.plantSqlP(p, s"${p}docs")},
-       |${p}hosts AS (
-       |  SELECT doc_id, url_norm,
-       |    regexp_extract(url_norm,
-       |      '^[a-z][a-z0-9+.-]*://([^/:?]+)', 1) AS host
-       |  FROM ${p}canon),
-       |${p}unb AS (
-       |  SELECT * FROM ${p}hosts
-       |  WHERE NOT ($blockCond)),
-       |${p}ukeep AS MATERIALIZED (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, url_norm,
-       |      row_number() OVER (PARTITION BY url_norm ORDER BY doc_id)
-       |        AS rn
-       |    FROM ${p}unb) ${p}u1
-       |  WHERE rn = 1
-       |    AND url_norm NOT IN (SELECT url_norm FROM ${st.ucens})),
-       |${p}d1 AS (SELECT ${p}docs.* FROM ${p}docs
-       |  JOIN ${p}ukeep USING (doc_id)),
-       |${p}ed AS (
-       |  SELECT doc_id, string_split(text, ' ') AS t,
-       |    greatest(CAST(ceil(len(string_split(text, ' ')) / 10.0)
-       |      AS BIGINT), 1) AS nc
-       |  FROM ${p}d1),
-       |${p}ep AS MATERIALIZED (
-       |  SELECT doc_id, i,
-       |    array_to_string(t[(i*10+1) : (i*10+10)], ' ') AS para
-       |  FROM ${p}ed, UNNEST(range(0, nc)) AS ue(i)
-       |  WHERE doc_id % 13 != 0),
-       |${p}lbp AS (
-       |  SELECT ${p}b2.lh FROM (
-       |    SELECT md5(para) AS lh,
-       |      CAST(count(DISTINCT doc_id) AS BIGINT) AS nb
-       |    FROM ${p}ep GROUP BY 1) ${p}b2
-       |  LEFT JOIN ${st.lcens} c2 USING (lh)
-       |  WHERE ${p}b2.nb + coalesce(c2.n_docs, 0)
-       |    >= $PipelineLineMinDocs),
-       |${p}lkept AS (
-       |  SELECT ${p}ep.doc_id, ${p}ep.i, ${p}ep.para
-       |  FROM ${p}ep LEFT JOIN ${p}lbp ON md5(${p}ep.para) = ${p}lbp.lh
-       |  WHERE ${p}lbp.lh IS NULL),
-       |${p}flat AS MATERIALIZED (
-       |  SELECT doc_id, string_agg(para, ' ' ORDER BY i) AS text
-       |  FROM ${p}lkept GROUP BY doc_id),
-       |${TextAnalysis.gopherSqlCtes(s"${p}flat", p)},
-       |${p}gated AS MATERIALIZED (
-       |  SELECT f.doc_id, f.text FROM ${p}flat f
-       |  JOIN ${p}gk ON ${p}gk.doc_id = f.doc_id AND ${p}gk.keep_gopher),
-       |${p}sd AS MATERIALIZED (
-       |  SELECT doc_id, string_split(text, ' ') AS w,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-       |  FROM ${p}gated),
-       |${p}sg AS MATERIALIZED (
-       |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-       |    CAST(concat('0x', substring(md5(
-       |      array_to_string(w[i : i + 7], ' ')), 1, 15)) AS BIGINT) AS gh
-       |  FROM ${p}sd, UNNEST(range(1, CAST(len(w) AS BIGINT) - 6))
-       |    AS us(i)
-       |  WHERE len(w) >= 8),
-       |${p}sc AS (
-       |  SELECT gh, CAST(count(DISTINCT doc_id) AS BIGINT) AS nb,
-       |    min(doc_id) AS bkeeper
-       |  FROM ${p}sg GROUP BY gh),
-       |${p}dup AS (
-       |  SELECT ${p}b3.gh,
-       |    CASE WHEN coalesce(c3.n_docs, 0) > 0 THEN -1
-       |         ELSE ${p}b3.bkeeper END AS keeper
-       |  FROM ${p}sc ${p}b3 LEFT JOIN ${st.scens} c3 USING (gh)
-       |  WHERE ${p}b3.nb + coalesce(c3.n_docs, 0) >= 2),
-       |${p}ss AS MATERIALIZED (
-       |  SELECT ${p}sg.doc_id, ${p}sg.pos FROM ${p}sg
-       |  JOIN ${p}dup USING (gh)
-       |  WHERE ${p}sg.doc_id != ${p}dup.keeper),
-       |${p}spos AS (
-       |  SELECT ${p}sd.doc_id, t.p, w[t.p + 1] AS tok,
-       |    EXISTS (SELECT 1 FROM ${p}ss WHERE ${p}ss.doc_id = ${p}sd.doc_id
-       |            AND ${p}ss.pos <= t.p AND t.p <= ${p}ss.pos + 7)
-       |      AS covered
-       |  FROM ${p}sd CROSS JOIN UNNEST(range(0, ${p}sd.n_toks)) AS t(p)),
-       |${p}sagg AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    count(*) FILTER (WHERE NOT covered) AS kept_tokens,
-       |    coalesce(string_agg(tok, ' ' ORDER BY p)
-       |      FILTER (WHERE NOT covered), '') AS clean_text
-       |  FROM ${p}spos GROUP BY doc_id),
-       |${p}sdocs AS MATERIALIZED (
-       |  SELECT doc_id, clean_text AS text FROM ${p}sagg
-       |  WHERE kept_tokens > 0),
-       |$semCells,
-       |${Dedup.semVerdictSql(s"${p}s", st.smm, Some(st.members))},
-       |${p}sdrop AS (
-       |  SELECT ${p}scs.vec_id AS doc_id FROM ${p}scs
-       |  LEFT JOIN ${p}spc ON ${p}spc.id_a = ${p}scs.vec_id
-       |  LEFT JOIN ${p}spb ON ${p}spb.id_a = ${p}scs.vec_id
-       |  WHERE ${p}spc.id_a IS NOT NULL
-       |    OR coalesce(${p}spb.has_better, false)),
-       |${p}d2 AS MATERIALIZED (
-       |  SELECT ${p}sdocs.* FROM ${p}sdocs
-       |  WHERE doc_id NOT IN (SELECT doc_id FROM ${p}sdrop)),
-       |${p}cdg AS (
-       |  SELECT doc_id, unnest(list_distinct(
-       |    list_transform(range(1, len(w) - 3),
-       |      i -> array_to_string(w[i : i + 4], ' ')))) AS gram
-       |  FROM (SELECT doc_id, string_split(text, ' ') AS w
-       |        FROM ${p}d2) ${p}b4
-       |  WHERE len(w) >= 5),
-       |${p}cflag AS (
-       |  SELECT DISTINCT doc_id FROM ${p}cdg JOIN cbg USING (gram)),
-       |${p}clean AS MATERIALIZED (
-       |  SELECT ${p}d2.doc_id, ${p}d2.text FROM ${p}d2
-       |  WHERE ${p}d2.doc_id NOT IN (SELECT doc_id FROM ${p}cflag)),
-       |${p}bt AS (SELECT doc_id, n_tokens FROM ($bpeB) ${p}q2),
-       |${p}o AS (
-       |  SELECT
-       |    CAST(row_number() OVER (
-       |      ORDER BY md5('${Packing.ShuffleSalt}:'
-       |        || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS BIGINT) AS bpos,
-       |    doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
-       |  FROM ${p}clean),
-       |${p}man AS MATERIALIZED (
-       |  SELECT ${st.cstat}.c_max_shard + 1
-       |      + bpos // $PipelineDocsPerShard AS shard_id,
-       |    count(*) AS n_docs,
-       |    min(bpos + ${st.cstat}.c_n_docs) AS first_pos,
-       |    max(bpos + ${st.cstat}.c_n_docs) AS last_pos,
-       |    CAST(sum(${p}o.nt) AS BIGINT) AS n_ws_tokens,
-       |    CAST(sum(${p}bt.n_tokens) AS BIGINT) AS n_bpe_tokens,
-       |    (CAST(sum(${p}bt.n_tokens) AS BIGINT) + ${PipelineSeqBudget - 1})
-       |      // $PipelineSeqBudget AS n_seqs,
-       |    md5(string_agg(CAST(${p}o.doc_id AS VARCHAR), ','
-       |      ORDER BY bpos)) AS shard_digest
-       |  FROM ${p}o JOIN ${p}bt USING (doc_id) CROSS JOIN ${st.cstat}
-       |  GROUP BY 1)""".stripMargin
-  }
+  private def censusStates(n: Int, cstat: String): OracleStates =
+    OracleStates(s"url$n", s"line$n", s"span$n", s"mem$n", s"m${n}mm", cstat)
 
-  private def day1OracleStates: OracleStates =
-    OracleStates("ucens", "lcens", "scens", "scell", "smm", "cstat")
+  private def day1OracleStates: OracleStates = censusStates(1, "cstat")
 
   /** The composed twin of [[corpusPipelineIncrementalOn]] — the corpus
     * core chain instantiated for the EVEN parity (deriving the frozen
@@ -2514,7 +2432,7 @@ object Curation {
   private def pipelineIncrementalSql: String =
     "WITH " + day0HeadCtes() + ",\n" +
       batchChainCtes("b", liveSql("doc_id % 2 = 1"), day1OracleStates) +
-      "\n" + taggedManifestsSql("is_batch", 0 -> "cman", 1 -> "bman")
+      "\n" + taggedManifestsSql("is_batch", 0 -> "man", 1 -> "bman")
 
   /** The twin of [[corpusStatesOnState]]: the even-parity corpus core
     * re-derives the states the Spark side reads from the parquet
@@ -2528,35 +2446,7 @@ object Curation {
     "WITH " + day0HeadCtes() + ",\n" +
       batchChainCtes("b", liveSql("doc_id % 2 = 1",
         s"doc_id < ${Multimodal.ReplicaBound}"), day1OracleStates) + "\n" +
-      s"SELECT $manifestColsSql FROM bman\nORDER BY shard_id"
-
-  /** The day-2 census/state CTEs recomputed over the UNION input
-    * populations (`u2`/`l2`/`s2`/`mem2`+centroids) — the independent
-    * formulation of what the Spark side derives by additive merge,
-    * shared by the day-2 twin and the generation-cycle twin (whose
-    * append cursor differs: post-append vs post-compaction).
-    */
-  private def day2CensusCtes: String =
-    s"""u2 AS MATERIALIZED (
-       |  SELECT url_norm, CAST(count(*) AS BIGINT) AS n_corpus
-       |  FROM (SELECT url_norm FROM unb
-       |        UNION ALL SELECT url_norm FROM bunb) uu
-       |  GROUP BY url_norm),
-       |l2 AS MATERIALIZED (
-       |  SELECT md5(para) AS lh,
-       |    CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-       |  FROM (SELECT doc_id, para FROM ep
-       |        UNION ALL SELECT doc_id, para FROM bep) lu
-       |  GROUP BY 1),
-       |s2 AS MATERIALIZED (
-       |  SELECT gh, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-       |  FROM (SELECT doc_id, gh FROM sg
-       |        UNION ALL SELECT doc_id, gh FROM bsg) su2
-       |  GROUP BY gh),
-       |mem2 AS MATERIALIZED (
-       |  SELECT vec_id, unit, cell FROM scell
-       |  UNION ALL SELECT vec_id, unit, cell FROM bscell),
-       |${Dedup.semMeansSql("m2", "mem2")}""".stripMargin
+      manifestOutSql("bman")
 
   /** The twin of [[corpusStatesAbsorbOnState]]: the
     * [[statesUpdateSql]] chain with replica-0-bounded batch
@@ -2594,21 +2484,21 @@ object Curation {
        |  SELECT 'url' AS family, doc_id,
        |    CAST(count(DISTINCT url_norm) AS BIGINT) AS n_units,
        |    CAST(count(DISTINCT CASE WHEN url_norm IN
-       |      (SELECT url_norm FROM ucens) THEN url_norm END) AS BIGINT)
+       |      (SELECT url_norm FROM url1) THEN url_norm END) AS BIGINT)
        |      AS n_hit_units
        |  FROM bunb GROUP BY doc_id),
        |vl AS (
        |  SELECT 'line' AS family, doc_id,
        |    CAST(count(DISTINCT md5(para)) AS BIGINT) AS n_units,
        |    CAST(count(DISTINCT CASE WHEN md5(para) IN
-       |      (SELECT lh FROM lcens) THEN md5(para) END) AS BIGINT)
+       |      (SELECT lh FROM line1) THEN md5(para) END) AS BIGINT)
        |      AS n_hit_units
        |  FROM bep GROUP BY doc_id),
        |vs AS (
        |  SELECT 'span' AS family, doc_id,
        |    CAST(count(DISTINCT gh) AS BIGINT) AS n_units,
        |    CAST(count(DISTINCT CASE WHEN gh IN
-       |      (SELECT gh FROM scens) THEN gh END) AS BIGINT)
+       |      (SELECT gh FROM span1) THEN gh END) AS BIGINT)
        |      AS n_hit_units
        |  FROM bsg GROUP BY doc_id)
        |SELECT family, doc_id, n_units, n_hit_units,
@@ -2631,7 +2521,7 @@ object Curation {
   private def statesUpdateSql: String =
     "WITH " + day0HeadCtes() + ",\n" +
       updateDaysCtes(liveSql("doc_id % 4 = 1"), liveSql("doc_id % 4 = 3")) +
-      "\n" + taggedManifestsSql("day", 0 -> "cman", 1 -> "bman", 2 -> "b2man")
+      "\n" + taggedManifestsSql("day", 0 -> "man", 1 -> "bman", 2 -> "b2man")
 
   /** Days 1-2 of the update twins after [[day0HeadCtes]]: batch-1's
     * chain (`b` prefix, population `b1Cond`) against the day-1 states,
@@ -2641,49 +2531,27 @@ object Curation {
     */
   private def updateDaysCtes(b1Cond: String, b2Cond: String): String =
     batchChainCtes("b", b1Cond, day1OracleStates) + ",\n" +
-      day2CensusCtes + ",\n" + cursorCte("cstat2", "cman", "bman") + ",\n" +
+      censusSqlCtes(2, Seq("", "b")) + ",\n" +
+      cursorCte("cstat2", "man", "bman") + ",\n" +
       batchChainCtes("b2", b2Cond, day2OracleStates)
 
-  /** The day-2 state CTE names ([[day2CensusCtes]] + `cstat2`). */
-  private def day2OracleStates: OracleStates =
-    OracleStates("u2", "l2", "s2", "mem2", "m2mm", "cstat2")
+  private def day2OracleStates: OracleStates = censusStates(2, "cstat2")
 
   /** The compaction CTE chain — shipped union (`clean` ∪ `bclean`) →
     * per-host hash-rank cap at [[CompactHostCap]] → generation-1 epoch
     * order; ends in `ko`/`kbt`, the manifest aggregate's inputs. Shared
     * by the compaction twin and the generation-cycle twin.
     */
-  private def compactionCoreCtes: String = {
-    val kbt = graft.functions.BpeTokenizer.oracleSqlFor("kdocs")
+  private def compactionCoreCtes: String =
     s"""allkept AS MATERIALIZED (
        |  SELECT doc_id, text FROM clean
        |  UNION ALL SELECT doc_id, text FROM bclean),
-       |${Web.plantSqlP("k", "allkept")},
-       |khosts AS (
-       |  SELECT doc_id, url_norm,
-       |    regexp_extract(url_norm,
-       |      '^[a-z][a-z0-9+.-]*://([^/:?]+)', 1) AS host
-       |  FROM kcanon),
-       |kcap AS MATERIALIZED (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id,
-       |      row_number() OVER (PARTITION BY host
-       |        ORDER BY md5(host || ':' || CAST(doc_id AS VARCHAR)),
-       |          doc_id) AS hr
-       |    FROM khosts) k2
-       |  WHERE hr <= $CompactHostCap),
+       |${hostsSqlCtes("k", "allkept")},
+       |${hostCapSql("kcap", "khosts", CompactHostCap)},
        |kdocs AS MATERIALIZED (
        |  SELECT allkept.* FROM allkept JOIN kcap USING (doc_id)),
-       |kbt AS (SELECT doc_id, n_tokens FROM ($kbt) kq),
-       |ko AS (
-       |  SELECT
-       |    CAST(row_number() OVER (
-       |      ORDER BY md5('${Packing.ShuffleSalt}:'
-       |        || CAST(doc_id AS VARCHAR)), doc_id) - 1 AS BIGINT) AS pos,
-       |    doc_id,
-       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS nt
-       |  FROM kdocs)""".stripMargin
-  }
+       |""".stripMargin + frozenBtSql("kbt", "kdocs") + ",\n" +
+      epochOrderSql("ko", "kdocs")
 
   /** The composed twin of [[corpusCompactOn]]: the incremental twin's
     * chain (corpus core + day-1 states + the b-prefixed batch chain),
@@ -2694,7 +2562,7 @@ object Curation {
     "WITH " + day0HeadCtes() + ",\n" +
       batchChainCtes("b", liveSql("doc_id % 2 = 1"), day1OracleStates) +
       ",\n" + compactionCoreCtes + "\n" +
-      manifestSelectSqlFor("ko", "kbt") + "\nORDER BY shard_id"
+      manifestSql("ko", "kbt", None) + "\nORDER BY shard_id"
 
   /** The composed twin of [[corpusGenerationCycleOn]]: the day-2 twin's
     * chain through batch-1 (corpus core, day-1 states, `b`-prefixed
@@ -2719,9 +2587,9 @@ object Curation {
     */
   private def generationCycleCtes(b1Cond: String, b2Cond: String): String =
     batchChainCtes("b", b1Cond, day1OracleStates) + ",\n" +
-      day2CensusCtes + ",\n" +
+      censusSqlCtes(2, Seq("", "b")) + ",\n" +
       compactionCoreCtes + ",\n" +
-      "g1man AS MATERIALIZED (\n" + manifestSelectSqlFor("ko", "kbt") +
+      "g1man AS MATERIALIZED (\n" + manifestSql("ko", "kbt", None) +
       "),\n" + cursorCte("g1stat", "g1man") + ",\n" +
       batchChainCtes("g", b2Cond, day2OracleStates.copy(cstat = "g1stat"))
 
@@ -2782,8 +2650,8 @@ object Curation {
          |    CAST(sum(len(lb$rounds.cs)) AS BIGINT) AS n_tokens
          |  FROM lbdp JOIN lb$rounds USING (piece)
          |  GROUP BY lbdp.doc_id)""".stripMargin
-    "WITH " + pipelineCoreCtes(liveSql(), btCtes) +
-      "\n" + manifestSelectSql + "\nORDER BY shard_id"
+    "WITH " + corpusChainCtes(liveSql(), btCtes) + "\n" +
+      manifestOutSql("man")
   }
 
   /** The composed twin of [[corpusPipelineMultimodalOn]]: the three
@@ -2806,9 +2674,8 @@ object Curation {
        |  SELECT doc_id FROM vdrop UNION
        |  SELECT doc_id FROM xdrop UNION
        |  SELECT doc_id FROM idrop),""".stripMargin + "\n" +
-      pipelineCoreCtes(
-        liveSql(notInSql("mmdrop"))) +
-      "\n" + manifestSelectSql + "\nORDER BY shard_id"
+      corpusChainCtes(liveSql(notInSql("mmdrop"))) + "\n" +
+      manifestOutSql("man")
   }
 
   /** The composed twin of [[corpusMultimodalIncrementalOn]]: the
@@ -2842,7 +2709,7 @@ object Curation {
       day0HeadCtes(liveSql("doc_id % 2 = 0", notInSql("mmdropc"))) +
       ",\n" + batchChainCtes("b", liveSql("doc_id % 2 = 1",
         notInSql("mmdropb")), day1OracleStates) +
-      "\n" + taggedManifestsSql("is_batch", 0 -> "cman", 1 -> "bman")
+      "\n" + taggedManifestsSql("is_batch", 0 -> "man", 1 -> "bman")
   }
 
   val oracleSql: Map[String, String] = Map(

@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, NGram}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1147,18 +1147,32 @@ object Dedup {
     * Output per input document: (doc_id, n_lines_in, n_lines_kept,
     * clean_text). Documents whose every line is boilerplate survive with
     * clean_text = '' (the caller decides whether to drop empties — that's
-    * a quality gate, not dedup). Unordered.
+    * a quality gate, not dedup). Unordered. The self form IS
+    * [[dedupLinesIncrementalOn]] over the census of no documents
+    * ([[noLineCensus]]).
     */
-  def dedupLinesOn(docs: DataFrame, minDocs: Long): DataFrame = {
-    require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val lines = docLines(docs)
-    val boiler = lines
-      .groupBy(col("lh"))
-      .agg(countDistinct(col("doc_id")).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
-      .select(col("lh"), lit(true).as("__graft_bp"))
-    rebuildLines(lines, boiler)
-  }
+  def dedupLinesOn(docs: DataFrame, minDocs: Long): DataFrame =
+    dedupLinesIncrementalOn(noLineCensus(docs.sparkSession), docs, minDocs)
+
+  /** The census of no documents for a content-hash family keyed by `key`
+    * (`(key, n_docs)`, no rows) — an EMPTY LocalRelation, so a self form
+    * is its incremental form over it and Catalyst's
+    * `PropagateEmptyRelation` plans the census join away (PlanSpec pins
+    * it; a LogicalRDD-backed empty frame would keep the join).
+    */
+  private def noCensus(spark: SparkSession, key: String,
+      keyType: DataType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      StructType(Seq(StructField(key, keyType),
+        StructField("n_docs", LongType))))
+
+  /** The empty [[lineCensus]] / [[spanCensus]]: what a corpus run's line
+    * and span rungs probe (its own documents are the whole census).
+    */
+  private[graft] def noLineCensus(spark: SparkSession): DataFrame =
+    noCensus(spark, "lh", StringType)
+  private[graft] def noSpanCensus(spark: SparkSession): DataFrame =
+    noCensus(spark, "gh", LongType)
 
   /** Exploded line view shared by the line-dedup family: one
     * `(doc_id, pos, line, lh)` row per line, `lh` the line's 128-bit md5.
@@ -1172,28 +1186,6 @@ object Dedup {
       .select(col("doc_id"),
         posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
       .withColumn("lh", md5(col("line")))
-
-  /** Shared rebuild: anti-lookup the boilerplate set (`(lh, __graft_bp)`,
-    * tiny by construction → AQE broadcasts it), then ONE doc_id shuffle
-    * reuniting each document's surviving lines with the per-doc order
-    * restored by sorting the collected (pos, line) structs in-row.
-    */
-  private def rebuildLines(lines: DataFrame, boiler: DataFrame): DataFrame =
-    lines
-      .join(boiler, Seq("lh"), "left")
-      .withColumn("keep", col("__graft_bp").isNull)
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_lines_in"),
-        count(when(col("keep"), lit(1))).as("n_lines_kept"),
-        array_join(
-          transform(
-            filter(
-              array_sort(collect_list(
-                struct(col("pos"), col("line"), col("keep")))),
-              x => x.getField("keep")),
-            x => x.getField("line")),
-          "\n").as("clean_text"))
 
   /** The line family's PROBE KEYS — one `(doc_id, lh)` row per DISTINCT
     * line hash of each document: the rows the streaming text-ingest gate
@@ -1249,7 +1241,25 @@ object Dedup {
         Seq("lh"), "left")
       .filter(col("n_batch") + coalesce(col("n_corpus"), lit(0L)) >= minDocs)
       .select(col("lh"), lit(true).as("__graft_bp"))
-    rebuildLines(lines, boiler)
+    // anti-lookup the boilerplate set (tiny by construction → AQE
+    // broadcasts it), then ONE doc_id shuffle reuniting each document's
+    // surviving lines, the per-doc order restored by sorting the
+    // collected (pos, line) structs in-row
+    lines
+      .join(boiler, Seq("lh"), "left")
+      .withColumn("keep", col("__graft_bp").isNull)
+      .groupBy(col("doc_id"))
+      .agg(
+        count(lit(1)).as("n_lines_in"),
+        count(when(col("keep"), lit(1))).as("n_lines_kept"),
+        array_join(
+          transform(
+            filter(
+              array_sort(collect_list(
+                struct(col("pos"), col("line"), col("keep")))),
+              x => x.getField("keep")),
+            x => x.getField("line")),
+          "\n").as("clean_text"))
   }
 
   /** `dedup_lines_incremental` checked key: the parity split (even doc_id
@@ -1390,51 +1400,12 @@ object Dedup {
 
   /** API form over any `(doc_id, text)` frame and gram length —
     * unordered. NULL-text rows are dropped (the family convention);
-    * docs shorter than `n` tokens carry zero grams and fraction 0.
+    * docs shorter than `n` tokens carry zero grams and fraction 0. The
+    * self form IS [[dedupSpansIncrementalOn]] over the census of no
+    * documents ([[noSpanCensus]]).
     */
-  def dedupSpansOn(docs: DataFrame, n: Int): DataFrame = {
-    require(n >= 2, s"span gram length must be >= 2, got $n")
-    val base = spanBase(docs)
-    val grams = spanGrams(base, n)
-    val census = grams.groupBy(col("gh"))
-      .agg(countDistinct(col("doc_id")).as("nd"))
-      .filter(col("nd") >= 2)
-      .select(col("gh"), lit(true).as("__graft_dup"))
-    spanCoverage(base, grams, census, n)
-  }
-
-  /** Shared span-family tail: dup-flag the grams against `dupSet`
-    * (`(gh, __graft_dup)`), reduce per doc to counts + sorted dup start
-    * positions, and take the interval-union length of [s, s+n−1] as one
-    * in-row linear fold — never a per-position scan.
-    */
-  private def spanCoverage(base: DataFrame, grams: DataFrame,
-      dupSet: DataFrame, n: Int): DataFrame = {
-    val perDoc = grams.join(dupSet, Seq("gh"), "left")
-      .groupBy(col("doc_id"))
-      .agg(
-        count(lit(1)).as("n_grams"),
-        count(when(col("__graft_dup"), lit(1))).as("n_dup_grams"),
-        sort_array(collect_list(when(col("__graft_dup"), col("pos"))))
-          .as("starts"))
-    val covered = expr(
-      s"""aggregate(starts,
-         |  struct(0L AS cov, -${n}L AS fin),
-         |  (acc, s) -> struct(
-         |    acc.cov + CASE WHEN s > acc.fin THEN ${n}L
-         |      ELSE greatest(s + ${n - 1}L - acc.fin, 0L) END AS cov,
-         |    greatest(acc.fin, s + ${n - 1}L) AS fin),
-         |  acc -> acc.cov)""".stripMargin)
-    base.select(col("doc_id"), col("n_toks"))
-      .join(perDoc, Seq("doc_id"), "left")
-      .withColumn("covered_tokens", coalesce(covered, lit(0L)))
-      .select(col("doc_id"), col("n_toks"),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
-        coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"),
-        col("covered_tokens"),
-        round(col("covered_tokens").cast(DoubleType) / col("n_toks"), 6)
-          .as("dup_frac"))
-  }
+  def dedupSpansOn(docs: DataFrame, n: Int): DataFrame =
+    dedupSpansIncrementalOn(noSpanCensus(docs.sparkSession), docs, n)
 
   /** SPAN CENSUS — the maintained corpus-side state of incremental span
     * dedup: `(gh, n_docs)`, distinct documents per 60-bit gram hash. An
@@ -1469,7 +1440,33 @@ object Dedup {
         Seq("gh"), "left")
       .filter(col("nb") + coalesce(col("nc"), lit(0L)) >= 2)
       .select(col("gh"), lit(true).as("__graft_dup"))
-    spanCoverage(base, grams, dupSet, n)
+    // dup-flag the grams, reduce per doc to counts + sorted dup start
+    // positions, and take the interval-union length of [s, s+n−1] as one
+    // in-row linear fold — never a per-position scan
+    val perDoc = grams.join(dupSet, Seq("gh"), "left")
+      .groupBy(col("doc_id"))
+      .agg(
+        count(lit(1)).as("n_grams"),
+        count(when(col("__graft_dup"), lit(1))).as("n_dup_grams"),
+        sort_array(collect_list(when(col("__graft_dup"), col("pos"))))
+          .as("starts"))
+    val covered = expr(
+      s"""aggregate(starts,
+         |  struct(0L AS cov, -${n}L AS fin),
+         |  (acc, s) -> struct(
+         |    acc.cov + CASE WHEN s > acc.fin THEN ${n}L
+         |      ELSE greatest(s + ${n - 1}L - acc.fin, 0L) END AS cov,
+         |    greatest(acc.fin, s + ${n - 1}L) AS fin),
+         |  acc -> acc.cov)""".stripMargin)
+    base.select(col("doc_id"), col("n_toks"))
+      .join(perDoc, Seq("doc_id"), "left")
+      .withColumn("covered_tokens", coalesce(covered, lit(0L)))
+      .select(col("doc_id"), col("n_toks"),
+        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+        coalesce(col("n_dup_grams"), lit(0L)).as("n_dup_grams"),
+        col("covered_tokens"),
+        round(col("covered_tokens").cast(DoubleType) / col("n_toks"), 6)
+          .as("dup_frac"))
   }
 
   /** `dedup_spans_incremental` checked key: the family parity split
@@ -1545,19 +1542,11 @@ object Dedup {
     * filter probes those MERGED intervals (bounded count, typically a
     * handful) rather than the raw starts — never a per-position
     * per-start scan. The per-position formulation exists only as the
-    * DuckDB oracle twin, which is exactly right.
+    * DuckDB oracle twin, which is exactly right. The self form IS
+    * [[dedupSpansStripIncrementalOn]] over [[noSpanCensus]].
     */
-  def dedupSpansStripOn(docs: DataFrame, n: Int): DataFrame = {
-    require(n >= 2, s"span gram length must be >= 2, got $n")
-    val base = spanBase(docs)
-    val grams = spanGrams(base, n)
-    val census = grams.groupBy(col("gh"))
-      .agg(countDistinct(col("doc_id")).as("nd"),
-        min(col("doc_id")).as("keeper"))
-      .filter(col("nd") >= 2)
-      .select(col("gh"), col("keeper"))
-    spanStripFrom(base, grams, census, n)
-  }
+  def dedupSpansStripOn(docs: DataFrame, n: Int): DataFrame =
+    dedupSpansStripIncrementalOn(noSpanCensus(docs.sparkSession), docs, n)
 
   /** INCREMENTAL SPAN EXCISION — the ACT form of [[dedupSpansIncrementalOn]]
     * (completing the measure/act pair at span granularity the way
@@ -1586,15 +1575,6 @@ object Dedup {
       .select(col("gh"),
         when(coalesce(col("nc"), lit(0L)) > 0, lit(-1L))
           .otherwise(col("bkeeper")).as("keeper"))
-    spanStripFrom(base, grams, census, n)
-  }
-
-  /** Shared excision tail of the span-strip pair: strip starts from the
-    * duplicated-gram `census` (`(gh, keeper)`), merged excision intervals,
-    * complement rebuild.
-    */
-  private def spanStripFrom(base: DataFrame, grams: DataFrame,
-      census: DataFrame, n: Int): DataFrame = {
     // merged excision intervals [lo, hi] from the sorted starts — one
     // linear fold, run BEFORE the rebuild join so the join ships one
     // bounded interval list per duplicated doc (never per-start rows).
@@ -1695,38 +1675,78 @@ object Dedup {
        |  FROM v)""".stripMargin
   }
 
-  /** Shared span-family CTE chain for the twins: full-corpus 8-gram
-    * hashes, ≥2-distinct-doc census, dup flags, per-doc counts, and the
-    * per-position coverage count (the ORTHOGONAL formulation of the
-    * Spark side's interval-union fold).
+  /** The span family's SQL ladder over CTE prefix `p` — every span twin's
+    * (and the composed chain's) one spelling of the 8-gram hash and the
+    * per-position excision: `${p}sd` (doc_id, w, n_toks) over `src` (a
+    * relation, with its own WHERE), `${p}sg` the in-row 8-gram md5
+    * hashes, the caller's `dup` CTEs ending in `${p}dup (gh, keeper)`,
+    * then `${p}ss` (every duplicated gram start but the keeper's),
+    * `${p}spos` (each token position flagged covered by a per-position
+    * EXISTS over those starts — the ORTHOGONAL formulation of the Spark
+    * side's interval fold) and `${p}sagg` (doc_id, stripped_tokens,
+    * kept_tokens, clean_text). A keeper of −1 strips every holder.
     */
-  private val spanSqlCtes: String =
-    """d AS (
-      |  SELECT doc_id, string_split(text, ' ') AS w,
-      |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-      |  FROM documents WHERE text IS NOT NULL),
-      |g AS (
-      |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-      |    CAST(concat('0x', substring(md5(
-      |      array_to_string(w[i : i + 7], ' ')), 1, 15)) AS BIGINT) AS gh
-      |  FROM d, UNNEST(range(1, CAST(len(w) AS BIGINT) - 6)) AS u(i)
-      |  WHERE len(w) >= 8),
-      |c AS (
-      |  SELECT gh FROM g GROUP BY gh HAVING count(DISTINCT doc_id) >= 2),
-      |h AS (
-      |  SELECT g.doc_id, g.pos, c.gh IS NOT NULL AS dup
-      |  FROM g LEFT JOIN c USING (gh)),
-      |per AS (
-      |  SELECT doc_id, count(*) AS n_grams,
-      |    count(*) FILTER (WHERE dup) AS n_dup_grams
-      |  FROM h GROUP BY doc_id),
-      |cov AS (
-      |  SELECT d.doc_id, count(DISTINCT t.p) AS covered
-      |  FROM d
-      |  CROSS JOIN UNNEST(range(0, d.n_toks)) AS t(p)
-      |  JOIN h ON h.doc_id = d.doc_id AND h.dup
-      |        AND h.pos <= t.p AND t.p <= h.pos + 7
-      |  GROUP BY d.doc_id)""".stripMargin
+  private[graft] def spanSqlCtes(p: String, src: String,
+      dup: String): String =
+    s"""${p}sd AS MATERIALIZED (
+       |  SELECT doc_id, string_split(text, ' ') AS w,
+       |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
+       |  FROM $src),
+       |${p}sg AS MATERIALIZED (
+       |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+       |    CAST(concat('0x', substring(md5(
+       |      array_to_string(w[i : i + 7], ' ')), 1, 15)) AS BIGINT) AS gh
+       |  FROM ${p}sd, UNNEST(range(1, CAST(len(w) AS BIGINT) - 6))
+       |    AS us(i)
+       |  WHERE len(w) >= 8),
+       |$dup,
+       |${p}ss AS MATERIALIZED (
+       |  SELECT ${p}sg.doc_id, ${p}sg.pos FROM ${p}sg
+       |  JOIN ${p}dup USING (gh)
+       |  WHERE ${p}sg.doc_id != ${p}dup.keeper),
+       |${p}spos AS (
+       |  SELECT ${p}sd.doc_id, t.p, w[t.p + 1] AS tok,
+       |    EXISTS (SELECT 1 FROM ${p}ss WHERE ${p}ss.doc_id = ${p}sd.doc_id
+       |            AND ${p}ss.pos <= t.p AND t.p <= ${p}ss.pos + 7)
+       |      AS covered
+       |  FROM ${p}sd CROSS JOIN UNNEST(range(0, ${p}sd.n_toks)) AS t(p)),
+       |${p}sagg AS MATERIALIZED (
+       |  SELECT doc_id,
+       |    count(*) FILTER (WHERE covered) AS stripped_tokens,
+       |    count(*) FILTER (WHERE NOT covered) AS kept_tokens,
+       |    coalesce(string_agg(tok, ' ' ORDER BY p)
+       |      FILTER (WHERE NOT covered), '') AS clean_text
+       |  FROM ${p}spos GROUP BY doc_id)""".stripMargin
+
+  /** [[spanSqlCtes]] over the whole corpus, each gram duplicated in ≥ 2
+    * distinct docs kept by `keeper` (an aggregate over its holders).
+    */
+  private def spanSelfSqlCtes(keeper: String): String =
+    spanSqlCtes("", "documents WHERE text IS NOT NULL",
+      s"""dup AS (
+         |  SELECT gh, $keeper AS keeper FROM sg GROUP BY gh
+         |  HAVING count(DISTINCT doc_id) >= 2)""".stripMargin)
+
+  /** The span statistics twin over the whole corpus: every duplicated
+    * gram (≥ 2 distinct docs) strips every holder (keeper −1), so
+    * `sagg.stripped_tokens` counts the covered positions; `per` holds the
+    * per-doc gram and dup-gram counts. Restricted to docs `where`.
+    */
+  private def spanStatsSql(where: String): String =
+    "WITH " + spanSelfSqlCtes("-1") + ",\n" +
+    s"""per AS (
+       |  SELECT doc_id, count(*) AS n_grams,
+       |    count(*) FILTER (WHERE dup.gh IS NOT NULL) AS n_dup_grams
+       |  FROM sg LEFT JOIN dup USING (gh) GROUP BY doc_id)
+       |SELECT sd.doc_id, sd.n_toks,
+       |  coalesce(per.n_grams, 0) AS n_grams,
+       |  coalesce(per.n_dup_grams, 0) AS n_dup_grams,
+       |  sagg.stripped_tokens AS covered_tokens,
+       |  round(CAST(sagg.stripped_tokens AS DOUBLE) / sd.n_toks, 6)
+       |    AS dup_frac
+       |FROM sd JOIN sagg USING (doc_id) LEFT JOIN per USING (doc_id)
+       |WHERE $where
+       |ORDER BY sd.doc_id""".stripMargin
 
   /** Shared CTE chain rebuilding the planted line structure, censusing
     * lines by md5 with the distinct-doc threshold, and flagging keeps —
@@ -1950,69 +1970,23 @@ object Dedup {
     // recomputed the INDEPENDENT way — a per-token-position EXISTS scan
     // over the dup starts (the Spark side folds an interval union; both
     // count exactly the positions lying under >= 1 duplicated gram)
-    "dedup_spans" ->
-      s"""WITH $spanSqlCtes
-        |SELECT d.doc_id, d.n_toks,
-        |  coalesce(per.n_grams, 0) AS n_grams,
-        |  coalesce(per.n_dup_grams, 0) AS n_dup_grams,
-        |  coalesce(cov.covered, 0) AS covered_tokens,
-        |  round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / d.n_toks, 6)
-        |    AS dup_frac
-        |FROM d LEFT JOIN per USING (doc_id) LEFT JOIN cov USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+    "dedup_spans" -> spanStatsSql("TRUE"),
     // the incremental contract IS recompute-over-union restricted to the
     // batch (span-census additivity over disjoint doc sets), so the twin
     // runs the identical full-corpus census and keeps only odd docs —
     // an independent proof of the corpus+batch census-merge rule
-    "dedup_spans_incremental" ->
-      s"""WITH $spanSqlCtes
-        |SELECT d.doc_id, d.n_toks,
-        |  coalesce(per.n_grams, 0) AS n_grams,
-        |  coalesce(per.n_dup_grams, 0) AS n_dup_grams,
-        |  coalesce(cov.covered, 0) AS covered_tokens,
-        |  round(CAST(coalesce(cov.covered, 0) AS DOUBLE) / d.n_toks, 6)
-        |    AS dup_frac
-        |FROM d LEFT JOIN per USING (doc_id) LEFT JOIN cov USING (doc_id)
-        |WHERE d.doc_id % 2 = 1
-        |ORDER BY d.doc_id""".stripMargin,
+    "dedup_spans_incremental" -> spanStatsSql("sd.doc_id % 2 = 1"),
     // independent recompute of the excision: same gram hashes, census +
     // min-doc keeper, then the rebuild done the ORTHOGONAL way — covered
     // flags from a per-position EXISTS over the raw strip starts (the
     // Spark side folds merged intervals and filters in-row) and
     // string_agg reassembly in position order
     "dedup_spans_strip" ->
-      """WITH d AS (
-        |  SELECT doc_id, string_split(text, ' ') AS w,
-        |    CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |g AS (
-        |  SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |    CAST(concat('0x', substring(md5(
-        |      array_to_string(w[i : i + 7], ' ')), 1, 15)) AS BIGINT) AS gh
-        |  FROM d, UNNEST(range(1, CAST(len(w) AS BIGINT) - 6)) AS u(i)
-        |  WHERE len(w) >= 8),
-        |c AS (
-        |  SELECT gh, min(doc_id) AS keeper FROM g GROUP BY gh
-        |  HAVING count(DISTINCT doc_id) >= 2),
-        |s AS (
-        |  SELECT g.doc_id, g.pos FROM g JOIN c USING (gh)
-        |  WHERE g.doc_id != c.keeper),
-        |pos AS (
-        |  SELECT d.doc_id, t.p, w[t.p + 1] AS tok,
-        |    EXISTS (SELECT 1 FROM s WHERE s.doc_id = d.doc_id
-        |            AND s.pos <= t.p AND t.p <= s.pos + 7) AS covered
-        |  FROM d CROSS JOIN UNNEST(range(0, d.n_toks)) AS t(p)),
-        |agg AS (
-        |  SELECT doc_id,
-        |    count(*) FILTER (WHERE covered) AS stripped_tokens,
-        |    count(*) FILTER (WHERE NOT covered) AS kept_tokens,
-        |    coalesce(string_agg(tok, ' ' ORDER BY p)
-        |      FILTER (WHERE NOT covered), '') AS clean_text
-        |  FROM pos GROUP BY doc_id)
-        |SELECT d.doc_id, d.n_toks, agg.stripped_tokens, agg.kept_tokens,
-        |  agg.clean_text
-        |FROM d JOIN agg USING (doc_id)
-        |ORDER BY d.doc_id""".stripMargin,
+      ("WITH " + spanSelfSqlCtes("min(doc_id)") + "\n" +
+      """SELECT sd.doc_id, sd.n_toks, sagg.stripped_tokens,
+        |  sagg.kept_tokens, sagg.clean_text
+        |FROM sd JOIN sagg USING (doc_id)
+        |ORDER BY sd.doc_id""".stripMargin),
     // exact independent formulation of the whole line-dedup chain: rebuild
     // the planted line structure (header / 10-token chunks / footer — the
     // same arithmetic as lineStructured, DuckDB's 1-based inclusive slice

@@ -1960,6 +1960,17 @@ object Multimodal {
     ()
   }
 
+  /** One landed band table sliced by a pure-id predicate — the
+    * [[landedBandsOf]] restriction without the semi-join spine (band
+    * derivation is per-document, so a doc_id filter of the landed
+    * table IS the filtered population's band state, and a plain
+    * predicate pushes into the parquet scan).
+    */
+  private def landedBandsWhere(spark: SparkSession, landing: String,
+      side: String, modality: String,
+      pred: org.apache.spark.sql.Column): DataFrame =
+    spark.read.parquet(s"$landing/$side/$modality").filter(pred)
+
   /** `dedup_media_onstate` checked key — THE PRODUCTION PROBE SHAPE on
     * the oracle board (r17 verdict #3: the flat-probe claim graded, not
     * just BandProbeMain-measured): the corpus band states are
@@ -1987,17 +1998,6 @@ object Multimodal {
     * parquet filter — the graded plan is probe joins over two band
     * scans, no synthesis subtree.
     */
-  /** One landed band table sliced by a pure-id predicate — the
-    * [[landedBandsOf]] restriction without the semi-join spine (band
-    * derivation is per-document, so a doc_id filter of the landed
-    * table IS the filtered population's band state, and a plain
-    * predicate pushes into the parquet scan).
-    */
-  private def landedBandsWhere(spark: SparkSession, landing: String,
-      side: String, modality: String,
-      pred: org.apache.spark.sql.Column): DataFrame =
-    spark.read.parquet(s"$landing/$side/$modality").filter(pred)
-
   def dedupMediaOnState(spark: SparkSession, sfDir: String): DataFrame = {
     val landing = mediaBandLanding(spark, sfDir)
     val batchPred = col("doc_id") % 2 === 1 && col("doc_id") < ReplicaBound

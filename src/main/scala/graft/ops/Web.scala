@@ -527,17 +527,11 @@ object Web {
     sqlLit(s).replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
 
   /** Shared planting CTE for the twins — page identity + the raw URL,
-    * mirrored from [[urlStructured]]'s arithmetic. Parameterized by the
-    * source CTE/table so `corpus_pipeline`'s composed twin can plant over
-    * its own base set.
-    */
-  private[graft] def plantSqlFrom(src: String): String =
-    plantSqlP("", src)
-
-  /** Prefixed plant: every CTE name (`p`/`u`/`norm`/`canon`) gets `pre`,
-    * so two plants can coexist in one composed statement — the
-    * incremental-pipeline twin plants the corpus and the batch side by
-    * side (callers reference `${pre}canon`).
+    * mirrored from [[urlStructured]]'s arithmetic — over the source
+    * CTE/table `src`, every CTE name (`p`/`u`/`norm`/`canon`) prefixed
+    * with `pre` so several plants can coexist in one composed statement
+    * (the composed twins plant each chain pass's own population; callers
+    * reference `${pre}canon`).
     */
   private[graft] def plantSqlP(pre: String, src: String): String =
     plantRawTemplate

@@ -578,15 +578,6 @@ object Streams {
     }
   }
 
-  /** Run a streaming Dataset to completion (AvailableNow) into a fresh
-    * per-invocation parquet feed dir; returns the feed read back as a
-    * batch frame. Crashed-session leftovers swept like the Sources sinks.
-    * The work-dir prefix (`LocalFs.Names.CdcReplay`) is DISJOINT from the
-    * landing cache's (`Names.CdcLandingCache`): round 6 shipped them
-    * sharing `graft_cdc_`, so a replay ≥1h after the landing was published
-    * swept the landing itself out from under the stream (StreamingSpec
-    * pins the regression by backdating the landing past the TTL).
-    */
   /** State-partition count for the REPLAY harness. A streaming query's
     * state partitioning binds to `spark.sql.shuffle.partitions` at first
     * start (recorded in its checkpoint), and every state partition costs
@@ -602,6 +593,15 @@ object Streams {
     */
   private val ReplayPartitions = 8
 
+  /** Run a streaming Dataset to completion (AvailableNow) into a fresh
+    * per-invocation parquet feed dir; returns the feed read back as a
+    * batch frame. Crashed-session leftovers swept like the Sources sinks.
+    * The work-dir prefix (`LocalFs.Names.CdcReplay`) is DISJOINT from the
+    * landing cache's (`Names.CdcLandingCache`): round 6 shipped them
+    * sharing `graft_cdc_`, so a replay ≥1h after the landing was published
+    * swept the landing itself out from under the stream (StreamingSpec
+    * pins the regression by backdating the landing past the TTL).
+    */
   private def replayToFeed(spark: SparkSession, out: Dataset[_],
       check: org.apache.spark.sql.streaming.StreamingQuery => Unit =
         _ => ()): DataFrame = {
@@ -611,8 +611,6 @@ object Streams {
     val work = graft.LocalFs.workDir(graft.LocalFs.Names.CdcReplay,
       spark.sparkContext.applicationId)
     val feedDir = new File(work, "feed").getPath
-    val partKey = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(partKey)
     // SINGLE-THREADED ASSUMPTION: this scoped override mutates the shared
     // session's conf for the replay's duration, so any query PLANNED
     // concurrently on the same SparkSession would silently bind 8 shuffle
@@ -621,18 +619,45 @@ object Streams {
     // multi-threaded driver must serialize them (or use a dedicated
     // session via spark.newSession()) — the conf is recorded into the
     // streaming checkpoint, so a cross-talk bind would persist.
-    try {
-      spark.conf.set(partKey, ReplayPartitions.toString)
+    withConf(spark, "spark.sql.shuffle.partitions",
+        ReplayPartitions.toString) {
       val q = out.writeStream.format("parquet").option("path", feedDir)
         .option("checkpointLocation", new File(work, "ck").getPath)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       check(q)
-    } finally prev match {
-      case Some(v) => spark.conf.set(partKey, v)
-      case None => spark.conf.unset(partKey)
     }
     spark.read.parquet(feedDir)
+  }
+
+  /** Run `body` with the session conf `key` set to `value`, restoring
+    * the previous value (or unsetting it) afterwards, on failure too.
+    */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, value)
+      body
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  /** The paced-replay certificate: at least two data-carrying
+    * micro-batches (`what` replay — pacing held) and state rows
+    * genuinely REMOVED (else fail with `noEviction`).
+    */
+  private def requirePacedEviction(
+      progress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress],
+      what: String, noEviction: String): Unit = {
+    val dataBatches = progress.count(_.numInputRows > 0)
+    require(dataBatches >= 2,
+      s"$what replay ran $dataBatches data micro-batches — pacing collapsed")
+    val removed = progress.flatMap(_.stateOperators)
+      .map(_.numRowsRemoved).sum
+    require(removed > 0, noEviction)
   }
 
   /** `cdc_snapshot` checked key: the STREAMING latest-wins upsert
@@ -696,26 +721,20 @@ object Streams {
     * already-written feed and is conf-independent).
     */
   def cdcSnapshotRocksdbQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
     val rocks = "org.apache.spark.sql.execution.streaming.state." +
       "RocksDBStateStoreProvider"
-    val prev = spark.conf.getOption(provKey)
-    val feed =
-      try {
-        spark.conf.set(provKey, rocks)
-        replayToFeed(spark,
-          upsertStream(spark, readEvents(spark, landedEvents(spark, sfDir))),
-          check = q => {
-            val engaged = q.recentProgress.flatMap(_.stateOperators)
-              .flatMap(_.customMetrics.keySet.toArray(Array.empty[String]))
-              .exists(_.startsWith("rocksdb"))
-            require(engaged,
-              "RocksDB state store provider did not engage for the replay")
-          })
-      } finally prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
+    val feed = withConf(spark,
+        "spark.sql.streaming.stateStore.providerClass", rocks) {
+      replayToFeed(spark,
+        upsertStream(spark, readEvents(spark, landedEvents(spark, sfDir))),
+        check = q => {
+          val engaged = q.recentProgress.flatMap(_.stateOperators)
+            .flatMap(_.customMetrics.keySet.toArray(Array.empty[String]))
+            .exists(_.startsWith("rocksdb"))
+          require(engaged,
+            "RocksDB state store provider did not engage for the replay")
+        })
+    }
     snapshotFromFeed(feed)
   }
 
@@ -961,15 +980,11 @@ object Streams {
     */
   def streamRangeJoinPacedQuery(spark: SparkSession, sfDir: String): DataFrame =
     streamRangeJoinPaced(spark, sfDir, progress => {
-      val dataBatches = progress.count(_.numInputRows > 0)
-      require(dataBatches >= 2,
-        s"paced replay ran $dataBatches data micro-batches — pacing collapsed")
+      requirePacedEviction(progress, "paced",
+        "state horizon never evicted a row — watermark eviction did not fire")
       val ops = progress.flatMap(_.stateOperators)
       val added = ops.map(_.numRowsUpdated).sum
-      val removed = ops.map(_.numRowsRemoved).sum
       val peak = if (ops.isEmpty) 0L else ops.map(_.numRowsTotal).max
-      require(removed > 0,
-        "state horizon never evicted a row — watermark eviction did not fire")
       require(peak < added,
         s"peak state $peak not below total buffered $added — state unbounded")
     })
@@ -1043,16 +1058,6 @@ object Streams {
         unix_millis(col("end")).as("end_ms"))
       .orderBy(col("user_id"), col("start_ms"))
 
-  /** Batch twin of [[sessionize]]: the same session definition — maximal
-    * runs of per-user events where consecutive gaps are ≤ `gapMinutes` —
-    * computed with window functions over data at rest (`lag` + cumulative
-    * session-start counter, the classic formulation). One output row per
-    * session, same columns as [[SessionOut]].
-    *
-    * Exists both as the batch API for the operator AND as the independent
-    * formulation the suite pins the streaming interval-merge against:
-    * stream(corpus) replayed to completion must equal batch(corpus).
-    */
   /** `sessionize_batch` query key: 30-minute-gap sessions over the harness
     * events table. The double sum is rounded to 6dp only here (the oracle
     * engine's sum order is unknown; the raw [[sessionizeBatch]] keeps full
@@ -1109,15 +1114,8 @@ object Streams {
     * runnable forever, the whole 100 TB point of the watermark).
     */
   def streamWindowAggQuery(spark: SparkSession, sfDir: String): DataFrame =
-    streamWindowAggPaced(spark, sfDir, progress => {
-      val dataBatches = progress.count(_.numInputRows > 0)
-      require(dataBatches >= 2,
-        s"flush replay ran $dataBatches data micro-batches — pacing collapsed")
-      val removed = progress.flatMap(_.stateOperators)
-        .map(_.numRowsRemoved).sum
-      require(removed > 0,
-        "watermark advance never evicted a closed window from state")
-    })
+    streamWindowAggPaced(spark, sfDir, requirePacedEviction(_, "flush",
+      "watermark advance never evicted a closed window from state"))
 
   /** Leaderboard depth for the graded streaming top-k key. */
   val StreamTopK = 3
@@ -1157,17 +1155,8 @@ object Streams {
     val feed = replayToFeed(spark,
       windowedUserCounts(
         readEventsPaced(spark, landedEventsFlush(spark, sfDir))),
-      check = q => {
-        val progress = q.recentProgress
-        val dataBatches = progress.count(_.numInputRows > 0)
-        require(dataBatches >= 2,
-          s"flush replay ran $dataBatches data micro-batches — pacing" +
-            " collapsed")
-        val removed = progress.flatMap(_.stateOperators)
-          .map(_.numRowsRemoved).sum
-        require(removed > 0,
-          "watermark advance never evicted a closed window from state")
-      })
+      check = q => requirePacedEviction(q.recentProgress, "flush",
+        "watermark advance never evicted a closed window from state"))
     val w = Window.partitionBy(col("ws"))
       .orderBy(col("n_events").desc, col("user_id"))
     feed.filter(col("user_id") >= 0)
@@ -1715,6 +1704,16 @@ object Streams {
         |ORDER BY user_id, start_ms""".stripMargin
   )
 
+  /** Batch twin of [[sessionize]]: the same session definition — maximal
+    * runs of per-user events where consecutive gaps are ≤ `gapMinutes` —
+    * computed with window functions over data at rest (`lag` + cumulative
+    * session-start counter, the classic formulation). One output row per
+    * session, same columns as [[SessionOut]].
+    *
+    * Exists both as the batch API for the operator AND as the independent
+    * formulation the suite pins the streaming interval-merge against:
+    * stream(corpus) replayed to completion must equal batch(corpus).
+    */
   def sessionizeBatch(events: DataFrame, gapMinutes: Int = 30): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val gapMs = gapMinutes * 60L * 1000L

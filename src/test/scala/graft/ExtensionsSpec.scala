@@ -1429,6 +1429,40 @@ class ExtensionsSpec extends SparkSpec {
       "capPerHostOn(Web.urlStructured("), _ == "graft/ops/Curation.scala")
   }
 
+  test("the crawl chain is spelled once, in Curation") {
+    // The corpus run and every batch pass are one nine-stage body
+    // (runChain, and chainCtes for the SQL twins); a pass supplies only
+    // its URL keep, censuses, semantic rung and manifest tail. A second
+    // call of a chain stage in Curation is the chain copied by hand, free
+    // to drift. contaminationStripOn is also called by its own graded
+    // key, contamination_strip.
+    val curation = "graft/ops/Curation.scala"
+    assert(MainSources.exists(curation))
+    val expected = Map("extractMainTextOn(" -> 1, "gopherKeep" -> 1,
+      "contaminationStripOn(" -> 2, "dedupLinesIncrementalOn(" -> 1,
+      "dedupSpansStripIncrementalOn(" -> 1, "gopherSqlCtes(" -> 1,
+      "plantSqlP(" -> 1)
+    val off = expected.toSeq.sorted.flatMap { case (t, n) =>
+      val at = MainSources.calledAt(t, _ == curation)
+      if (at.size == n) None
+      else Some(s"'$t' is called at ${at.mkString(", ")} (expected $n)")
+    }
+    assert(off.isEmpty, off.mkString("\n"))
+    // the span family's SQL 8-gram hash and per-position excision belong
+    // to Dedup.spanSqlCtes alone
+    assertSpelledOnce(Seq("array_to_string(w[i : i + 7], ' ')",
+      "pos <= t.p AND t.p <= "))
+  }
+
+  test("every scaladoc block sits on its own definition") {
+    // a doc block followed by another doc block (blank lines between at
+    // most) documents nothing: the definition it describes moved away
+    val stacked = MainSources.stackedDocs
+    assert(stacked.isEmpty,
+      "doc blocks directly after another doc block:\n" +
+        stacked.mkString("\n"))
+  }
+
   test("the embedding family's scoring ladder is spelled once, in Similarity") {
     // Every vector-search and embedding-dedup entry point is a projection
     // of one ladder (pairing → int8 cut → exact score → certificate), and

@@ -34,6 +34,32 @@ object MainSources {
     lines.collect { case (f, n, l) if where(f) && l.contains(token) =>
       s"$f:$n" }
 
+  /** `path:line` of every CODE line spelling `token` in a file `where`
+    * takes: scaladoc, comment and `def` lines are not calls.
+    */
+  def calledAt(token: String, where: String => Boolean): Seq[String] =
+    lines.collect { case (f, n, l) if where(f) && l.contains(token) &&
+        !Seq("*", "/*", "//").exists(l.trim.startsWith) &&
+        !l.contains("def ") => s"$f:$n" }
+
+  /** `path:line` of every scaladoc block opening after nothing but blank
+    * lines since the end of another scaladoc block: the earlier block
+    * then documents nothing (its definition moved away from it).
+    */
+  lazy val stackedDocs: Seq[String] =
+    lines.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (f, ls) =>
+      // (inside a doc block, only blank lines since one ended, hits)
+      ls.foldLeft((false, false, Seq.empty[String])) {
+        case ((inDoc, afterDoc, hits), (_, n, l)) =>
+          val t = l.trim
+          if (inDoc) (!t.contains("*/"), t.contains("*/"), hits)
+          else if (t.startsWith("/**"))
+            (!t.contains("*/"), t.contains("*/"),
+              if (afterDoc) hits :+ s"$f:$n" else hits)
+          else (false, afterDoc && t.isEmpty, hits)
+      }._3
+    }
+
   /** `path:line contains 'b'` for every `banned` token in a file `where`
     * takes — empty when the owners alone spell them.
     */

@@ -400,6 +400,25 @@ class PlanSpec extends SparkSpec {
       !p.contains("BroadcastNestedLoop"), p)
   }
 
+  test("the line and span self forms plan their empty census away") {
+    // dedup_lines / dedup_spans / dedup_spans_strip are their incremental
+    // forms over the census of no documents, an EMPTY LocalRelation:
+    // PropagateEmptyRelation must drop that join from the optimized plan,
+    // leaving the self forms' own join and exchange counts (pinned)
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
+    Seq("dedup_lines" -> (5, 1), "dedup_spans" -> (6, 2),
+        "dedup_spans_strip" -> (6, 2)).foreach { case (key, (ex, jn)) =>
+      val qe = SparkEntry.queries(key)(spark, sf).queryExecution
+      val o = qe.optimizedPlan
+      assert(o.collect { case r: LocalRelation => r }.isEmpty &&
+        o.collect { case j: Join => j }.size == jn,
+        s"$key still joins its census:\n$o")
+      val p = qe.executedPlan.toString
+      assert("Exchange".r.findAllIn(p).size == ex, s"$key exchanges:\n$p")
+      assert("\\w*Join\\b".r.findAllIn(p).size == jn, s"$key joins:\n$p")
+    }
+  }
+
   test("quality_score_lm is a scan-stage projection: zero Exchange") {
     // the frozen scorer (literal weight vector + in-row fold) must stay
     // in the scan's codegen pipeline — no shuffle on the unordered form
